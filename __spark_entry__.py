@@ -1440,10 +1440,10 @@ def _x_links_oracle() -> str:
 
 def _g_degree_dist_oracle() -> str:
     """Degree histogram over the same inlined kernel-derived edges."""
-    from ocr_pipeline_spark.operators.textstats import token_hash48
+    from ocr_pipeline_spark.operators.hashing import md5_int_py
 
     edges = ", ".join(
-        f"({token_hash48(u)}, {token_hash48(r)})"
+        f"({md5_int_py(u)}, {md5_int_py(r)})"
         for u, _, _, r in _links_expected()
         if r is not None
     )
@@ -1467,10 +1467,10 @@ def _g_degree_dist_oracle() -> str:
 def _g_components_oracle() -> str:
     """Recursive-CTE connected components over the SAME inlined
     kernel-derived edge list as the web pagerank oracle."""
-    from ocr_pipeline_spark.operators.textstats import token_hash48
+    from ocr_pipeline_spark.operators.hashing import md5_int_py
 
     edges = ", ".join(
-        f"({token_hash48(u)}, {token_hash48(r)})"
+        f"({md5_int_py(u)}, {md5_int_py(r)})"
         for u, _, _, r in _links_expected()
         if r is not None
     )
@@ -1489,10 +1489,10 @@ def _g_components_oracle() -> str:
 
 
 def _g_pagerank_web_oracle() -> str:
-    from ocr_pipeline_spark.operators.textstats import token_hash48
+    from ocr_pipeline_spark.operators.hashing import md5_int_py
 
     edges = ", ".join(
-        f"({token_hash48(u)}, {token_hash48(r)})"
+        f"({md5_int_py(u)}, {md5_int_py(r)})"
         for u, _, _, r in _links_expected()
         if r is not None
     )
@@ -4764,11 +4764,12 @@ def oracle_sql() -> dict[str, str]:
                    cast(t3 as bigint) AS t3
             FROM s3 ORDER BY user_id
         """,
-        # t_retention: integer epoch-week cohorts (no calendar dialect)
+        # t_retention: integer epoch-week cohorts (no calendar dialect),
+        # floored (DuckDB's // truncates): e minus its positive remainder
         "t_retention": """
-            WITH b AS (SELECT user_id AS k,
-                              floor(epoch(ts))::BIGINT // 604800 AS w
-                       FROM events),
+            WITH b AS (SELECT k, (e - (e % 604800 + 604800) % 604800) // 604800 AS w
+                       FROM (SELECT user_id AS k, floor(epoch(ts))::BIGINT AS e
+                             FROM events)),
             c AS (SELECT k, min(w) AS cw FROM b GROUP BY k),
             a AS (SELECT DISTINCT k, w FROM b)
             SELECT cast(c.cw as bigint) AS cohort_week,

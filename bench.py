@@ -177,7 +177,7 @@ def _pages_path_n(n: int) -> tuple[str, int]:
 
 def _pages_path(sf: float) -> tuple[str, int]:
     """Synthetic pages parquet for the extraction benchmark; page count
-    scales with sf (sf0.1 → 4000 pages, ~170 MB of HTML/PDF payloads)."""
+    scales with sf (sf0.1 → 4000 pages, 8.75 MB of HTML/PDF payloads)."""
     return _pages_path_n(max(200, int(40_000 * sf)))
 
 

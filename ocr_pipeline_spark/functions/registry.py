@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from ..operators.hashing import md5_hex_sql, md5_int_sql
+
 _NORM_BODY = "trim(regexp_replace(lower(coalesce({s}, '')), '\\\\s+', ' '))"
 
 _SQL_FUNCTIONS: dict[str, str] = {
@@ -42,14 +44,14 @@ _SQL_FUNCTIONS: dict[str, str] = {
     # fingerprints (identical to operators.textstats)
     "fingerprint16": (
         "(s STRING) RETURNS STRING RETURN "
-        "substring(md5(encode(" + _NORM_BODY.format(s="s") + ", 'UTF-8')), 1, 16)"
+        + md5_hex_sql(_NORM_BODY.format(s="s"), 16)
     ),
     "rolling_hash31": (
         "(s STRING) RETURNS BIGINT RETURN "
         "aggregate(split(" + _NORM_BODY.format(s="s") + ", ' '), "
         "cast(0 as bigint), (acc, t) -> (acc * 31 + "
-        "cast(conv(substring(md5(encode(t, 'UTF-8')), 1, 12), 16, 10) as bigint)"
-        ") % 2147483648)"
+        + md5_int_sql("t")
+        + ") % 2147483648)"
     ),
     # similarity (sequential fold — same op order as operators.similarity)
     "cos_sim": (

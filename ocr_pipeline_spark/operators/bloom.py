@@ -12,7 +12,7 @@ seen" with a tunable false-positive rate, no store roundtrip.
 Spark has a private BloomFilterAggregate (runtime join pruning) but no
 public, portable one — and its hash (xxhash64) differs from every other
 engine. This module is the engine-portable version, on the repo's one
-md5-48-bit hash recipe (textstats._token_hash):
+md5-48-bit hash recipe (hashing.md5_int):
 
     position_i(v) = hash48(v || '#b' || i)  mod  m_bits      i < n_hashes
 
@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import _token_hash
+from .hashing import md5_int
 
 __all__ = [
     "bloom_build",
@@ -75,7 +75,7 @@ def _positions(value: Column, m_bits: int, n_hashes: int) -> Column:
     is pinned free of size()>0 filters in tests/test_plans.py."""
     return F.array(
         *[
-            _token_hash(F.concat(value, F.lit(f"#b{i}"))) % m_bits
+            md5_int(F.concat(value, F.lit(f"#b{i}"))) % m_bits
             for i in range(n_hashes)
         ]
     )

@@ -37,7 +37,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import _token_hash, annotate_quality, tokens
+from .hashing import md5_int
+from .textstats import annotate_quality, tokens
 
 __all__ = [
     "QC_SCALE",
@@ -69,7 +70,7 @@ def _bucketed(docs: DataFrame, n_buckets: int, text_col: str) -> DataFrame:
         .select(
             "doc_id",
             "is_quality",
-            (_token_hash(F.col("tok")) % F.lit(n_buckets)).alias("bucket"),
+            (md5_int(F.col("tok")) % F.lit(n_buckets)).alias("bucket"),
         )
     )
 

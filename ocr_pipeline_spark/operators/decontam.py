@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import _shingles_from
+from .hashing import md5_hex
 from .textstats import norm_text, tokens
 
 __all__ = [
@@ -48,7 +49,7 @@ def gram_keys(col: Column, n: int = DEFAULT_NGRAM) -> Column:
     their whole normalized text as one gram)."""
     return F.transform(
         _shingles_from(tokens(col), norm_text(col), n),
-        lambda g: F.substring(F.md5(F.encode(g, "UTF-8")), 1, 16),
+        lambda g: md5_hex(g, 16),
     )
 
 

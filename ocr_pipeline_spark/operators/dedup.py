@@ -22,12 +22,12 @@ reproduce signatures bit-for-bit.
 
 from __future__ import annotations
 
-import hashlib
 import logging
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .hashing import md5_hex, md5_int, md5_int_py, md5_int_sql
 from .textstats import fingerprint, norm_text, tokens
 
 __all__ = [
@@ -38,7 +38,6 @@ __all__ = [
     "exact_dedup",
     "shingles",
     "shingle_sets",
-    "shingle_hash",
     "MINHASH_P",
     "minhash_perm_constants",
     "minhash_signatures",
@@ -64,16 +63,13 @@ MINHASH_P = 2147483647
 def minhash_perm_constants(num_hashes: int) -> list[tuple[int, int]]:
     """(a_i, b_i) for the permutation family h_i(x) = (a_i*x + b_i) mod P —
     md5-derived so both engines (and any future one) regenerate them."""
-    out = []
-    for i in range(num_hashes):
-        a = (
-            int(hashlib.md5(f"mh_a_{i}".encode()).hexdigest()[:12], 16)
-            % (MINHASH_P - 1)
-            + 1
+    return [
+        (
+            md5_int_py(f"mh_a_{i}") % (MINHASH_P - 1) + 1,
+            md5_int_py(f"mh_b_{i}") % MINHASH_P,
         )
-        b = int(hashlib.md5(f"mh_b_{i}".encode()).hexdigest()[:12], 16) % MINHASH_P
-        out.append((a, b))
-    return out
+        for i in range(num_hashes)
+    ]
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -126,17 +122,6 @@ def shingle_sets(
     )
 
 
-def shingle_hash(s: Column) -> Column:
-    """31-bit shingle hash: first 12 md5 hex chars mod P. Portable:
-    DuckDB ('0x' || substr(md5(s), 1, 12))::BIGINT % P."""
-    return (
-        F.conv(F.substring(F.md5(F.encode(s, "UTF-8")), 1, 12), 16, 10).cast(
-            "long"
-        )
-        % MINHASH_P
-    )
-
-
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
@@ -144,7 +129,9 @@ def minhash_signatures(
     shingle_n: int = DEFAULT_SHINGLE,
 ) -> DataFrame:
     """Per-doc MinHash signature: bigint columns sig_0..sig_{num_hashes-1},
-    sig_i = min over shingles of (a_i * h(shingle) + b_i) mod P.
+    sig_i = min over shingles of (a_i * h(shingle) + b_i) mod P, where
+    h = md5_int(shingle) mod P (DuckDB:
+    ('0x' || substr(md5(s), 1, 12))::BIGINT % P).
 
     Scale design: the md5 shingle hash is computed ONCE per shingle; each
     of the num_hashes signatures is 3 integer ops per shingle on top —
@@ -156,7 +143,8 @@ def minhash_signatures(
     (non-cheap, multiply-referenced producers)."""
     sh_df = shingle_sets(docs, text_col, shingle_n)
     h_df = sh_df.select(
-        "doc_id", F.transform(F.col("_sh"), shingle_hash).alias("_h")
+        "doc_id",
+        F.transform(F.col("_sh"), lambda s: md5_int(s) % MINHASH_P).alias("_h"),
     )
     consts = minhash_perm_constants(num_hashes)
 
@@ -189,18 +177,15 @@ def lsh_candidate_pairs(
                 *[
                     F.struct(
                         F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.encode(
-                                F.concat_ws(
-                                    "|",
-                                    *[
-                                        F.col(
-                                            f"sig_{b * rows_per_band + r}"
-                                        ).cast("string")
-                                        for r in range(rows_per_band)
-                                    ],
-                                ),
-                                "UTF-8",
+                        md5_hex(
+                            F.concat_ws(
+                                "|",
+                                *[
+                                    F.col(f"sig_{b * rows_per_band + r}").cast(
+                                        "string"
+                                    )
+                                    for r in range(rows_per_band)
+                                ],
                             )
                         ).alias("band_key"),
                     )
@@ -364,11 +349,7 @@ def _simhash_token_hashes(text_col_sql: str) -> str:
     """SQL fragment: text column → array of 60-bit token hashes (first 15
     md5 hex chars; engine-portable: DuckDB ('0x'||substr(md5(t),1,15))::BIGINT)."""
     norm = f"trim(regexp_replace(lower({text_col_sql}), '\\\\s+', ' '))"
-    return (
-        f"transform(split({norm}, ' '), "
-        "t -> cast(conv(substring(md5(encode(t, 'UTF-8')), 1, 15), 16, 10)"
-        " as bigint))"
-    )
+    return f"transform(split({norm}, ' '), t -> {md5_int_sql('t', 15)})"
 
 
 def _simhash_fold(hashes_sql: str) -> str:
@@ -439,11 +420,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 norm = _ws.sub(" ", t.lower()).strip()
                 toks = norm.split(" ")
                 hs = np.array(
-                    [
-                        int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:15], 16)
-                        for tok in toks
-                    ],
-                    dtype=np.uint64,
+                    [md5_int_py(tok, 15) for tok in toks], dtype=np.uint64
                 )
                 bits = (hs[:, None] >> shifts) & np.uint64(1)
                 votes = 2 * bits.sum(0, dtype=np.int64) - len(hs)
@@ -610,8 +587,6 @@ def dup_spans(
     """
     from pyspark.sql.window import Window
 
-    from .textstats import _token_hash
-
     t_df = docs.select(F.col("doc_id"), tokens(F.col(text_col)).alias("_t"))
     # the gram-hash array staged as its own projection (no logical CSE;
     # the transform is the expensive multi-referenced producer)
@@ -619,9 +594,7 @@ def dup_spans(
         F.size("_t") >= n,
         F.transform(
             F.sequence(F.lit(0), F.size("_t") - n),
-            lambda i: _token_hash(
-                F.array_join(F.slice(F.col("_t"), i + 1, n), " ")
-            ),
+            lambda i: md5_int(F.array_join(F.slice(F.col("_t"), i + 1, n), " ")),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     h_df = t_df.select(
@@ -765,8 +738,7 @@ def _chunk_stages(
         .select(
             "doc_id",
             "chunk_idx",
-            F.substring(F.md5(F.encode(F.col("chunk"), "UTF-8")), 1, 16)
-            .alias("chash"),
+            md5_hex(F.col("chunk"), 16).alias("chash"),
         )
         .localCheckpoint(eager=False)
     )
@@ -1047,12 +1019,7 @@ def template_report(
             F.explode_outer("chunks").alias("chunk_text"),
         )
         .filter(F.col("chunk_text").isNotNull())
-        .filter(
-            F.substring(
-                F.md5(F.encode(F.col("chunk_text"), "UTF-8")), 1, 16
-            )
-            == F.col("chash")
-        )
+        .filter(md5_hex(F.col("chunk_text"), 16) == F.col("chash"))
         .groupBy("chash")
         .agg(F.min("chunk_text").alias("chunk_text"))
     )

@@ -44,7 +44,6 @@ __all__ = [
     "segment_pages",
     "explode_blocks",
     "regroup_blocks",
-    "regroup_blocks_grouped",
     "refine_sentence_spans",
     "debug_overlay_pages",
 ]
@@ -169,31 +168,6 @@ def regroup_blocks(blocks: DataFrame, sep: str = "\n\n") -> DataFrame:
             ).alias("text"),
             F.count(F.lit(1)).alias("n_content_blocks"),
         )
-    )
-
-
-def regroup_blocks_grouped(blocks: DataFrame, sep: str = "\n\n") -> DataFrame:
-    """J3 as a grouped-map pandas UDF (``applyInPandas`` — SURVEY.md §2.7
-    form (c): all of a doc's blocks together in one Python call after the
-    shuffle). Same contract as regroup_blocks; use when the per-document
-    step needs real Python (e.g. a model over the block sequence) —
-    otherwise the expression form wins (no Python worker hop)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("block_idx")
-        return pd.DataFrame(
-            {
-                "url": [pdf["url"].iloc[0]],
-                "text": [sep.join(pdf["block_text"])],
-                "n_content_blocks": [len(pdf)],
-            }
-        )
-
-    return (
-        blocks.filter(F.col("is_content"))
-        .select("url", "block_idx", "block_text")
-        .groupBy("url")
-        .applyInPandas(fn, schema="url string, text string, n_content_blocks long")
     )
 
 

@@ -142,7 +142,11 @@ def bm25_search(
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     terms = sorted({t.lower() for t in query_terms})
-    staged = docs.select("doc_id", tokens(F.col(text_col)).alias("toks"))
+    # lazy checkpoint: staged feeds both the term filter and the (N, L)
+    # scalars — without it the corpus is scanned and tokenized twice
+    staged = docs.select(
+        "doc_id", tokens(F.col(text_col)).alias("toks")
+    ).localCheckpoint(eager=False)
     base = (
         staged.select(
             "doc_id",

@@ -12,7 +12,7 @@ scan are exactly the per-row Python the kernel exception covers). The
 output rows are (src url, link_idx, href, resolved) SHORT strings; at
 10^12 pages the link table is written bucketed by hash(src) like the
 extraction output, and the page-graph edges derive from it with ids
-hashed scan-locally (textstats._token_hash) so the PageRank joins move
+hashed scan-locally (hashing.md5_int) so the PageRank joins move
 bigints only.
 
 Kernel-is-spec: kernels/linkkit.py computes the same values in the
@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ..kernels.extract import DEFAULT_MAX_PAYLOAD_BYTES
 from ..kernels.htmlkit import decode_payload
 from ..kernels.linkkit import extract_links, resolve_href
-from .textstats import _token_hash
+from .hashing import md5_int
 
 __all__ = ["link_rows", "page_edges"]
 
@@ -77,6 +77,6 @@ def page_edges(pages: DataFrame) -> DataFrame:
     iteration joins never move url text."""
     rows = link_rows(pages).filter(F.col("resolved").isNotNull())
     return rows.select(
-        _token_hash(F.col("src")).alias("src"),
-        _token_hash(F.col("resolved")).alias("dst"),
+        md5_int(F.col("src")).alias("src"),
+        md5_int(F.col("resolved")).alias("dst"),
     )

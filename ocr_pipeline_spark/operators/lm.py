@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .hashing import md5_hex
 from .textstats import tokens
 
 __all__ = [
@@ -68,16 +69,12 @@ __all__ = [
 SCALE_BP = 10_000
 
 
-def _thash(tok: Column) -> Column:
-    """16-hex md5 of a token — the fixed-width join/group key (house
-    style: chunk_dedup's chash). Collision odds at 64 bits are
-    negligible and, because both engines key on the same hash, any
-    collision folds identically on the Spark and oracle sides."""
-    return F.substring(F.md5(F.encode(tok, "UTF-8")), 1, 16)
-
-
 def _keyed_tokens(docs: DataFrame, text_col: str) -> DataFrame:
-    """(doc_id, thash) per token occurrence. explode_outer + isNotNull
+    """(doc_id, thash) per token occurrence; thash is the 16-hex md5 of
+    the token — the fixed-width join/group key (house style:
+    chunk_dedup's chash). Collision odds at 64 bits are negligible and,
+    because both engines key on the same hash, any collision folds
+    identically on the Spark and oracle sides. explode_outer + isNotNull
     per the InferFiltersFromGenerate rule (CLAUDE.md); the md5 of a
     non-null string is non-nullable, so no inferred-isnotnull pushdown
     disease on the downstream joins."""
@@ -85,7 +82,7 @@ def _keyed_tokens(docs: DataFrame, text_col: str) -> DataFrame:
         docs.select("doc_id", tokens(F.col(text_col)).alias("toks"))
         .select("doc_id", F.explode_outer("toks").alias("tok"))
         .filter(F.col("tok").isNotNull())
-        .select("doc_id", _thash(F.col("tok")).alias("thash"))
+        .select("doc_id", md5_hex(F.col("tok"), 16).alias("thash"))
     )
 
 
@@ -167,9 +164,9 @@ def _hash_arrays(docs: DataFrame, text_col: str) -> DataFrame:
     per-doc scoring read the materialized arrays (no logical CSE)."""
     return docs.select(
         "doc_id",
-        F.transform(
-            tokens(F.col(text_col)), lambda t: _thash(t)
-        ).alias("_h"),
+        F.transform(tokens(F.col(text_col)), lambda t: md5_hex(t, 16)).alias(
+            "_h"
+        ),
     ).localCheckpoint(eager=False)
 
 

@@ -23,10 +23,10 @@ reproduces them bit-for-bit.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .hashing import md5_int, md5_int_py
 
 __all__ = [
     "cosine",
@@ -38,8 +38,13 @@ __all__ = [
     "ivf_topk",
     "rp_project",
     "semantic_dedup",
+    "EMBED_DIM",
     "hashed_embedding",
 ]
+
+# Width of hashed_embedding's vectors. A power of two, so the token
+# hash's low bits pick the index and the next bit up picks the sign.
+EMBED_DIM = 16
 
 
 def _dbl(col: Column) -> Column:
@@ -208,8 +213,8 @@ def _plane_constants(n_planes: int, dim: int, seed: int = 0) -> list[list[float]
     for p in range(n_planes):
         row = []
         for d in range(dim):
-            h = hashlib.md5(f"{seed}_{p}_{d}".encode()).hexdigest()
-            row.append(int(h[:15], 16) / float(1 << 59) - 1.0)
+            h = md5_int_py(f"{seed}_{p}_{d}", 15)
+            row.append(h / float(1 << 59) - 1.0)
         planes.append(row)
     return planes
 
@@ -237,8 +242,8 @@ def _centroids(n_cells: int, dim: int, seed: int = 0) -> list[list[float]]:
     for c in range(n_cells):
         row = []
         for d in range(dim):
-            h = hashlib.md5(f"ivf_{seed}_{c}_{d}".encode()).hexdigest()
-            row.append(int(h[:15], 16) / float(1 << 59) - 1.0)
+            h = md5_int_py(f"ivf_{seed}_{c}_{d}", 15)
+            row.append(h / float(1 << 59) - 1.0)
         norm = sum(x * x for x in row) ** 0.5
         cells.append([x / norm for x in row])
     return cells
@@ -574,24 +579,23 @@ def semantic_dedup(
     )
 
 
-def hashed_embedding(
-    docs: DataFrame, dim: int = 16, text_col: str = "text"
-) -> DataFrame:
+def hashed_embedding(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Feature-hashing document embeddings (Weinberger et al. 2009,
     ICML, "Feature Hashing for Large Scale Multitask Learning") — the
     deterministic, training-free featurizer that lets the embedding
     layer (ANN top-k, SemDeDup, near-dup cosine) run on TEXT corpora
     with no model in the loop: token t adds sign(t) at index(t), where
-    index = h48(t) mod dim and sign = parity of bit 4 (disjoint bits of
-    the one 48-bit md5-prefix hash — textstats._token_hash, the ONE
-    hash recipe), then the count vector is L2-normalized.
+    index = h48(t) mod EMBED_DIM and sign = parity of h48(t) div
+    EMBED_DIM (the bit just above the index bits of the one 48-bit
+    md5-prefix hash, hashing.md5_int), then the count vector is
+    L2-normalized.
 
     Output: (doc_id, n_toks, embed) with embed the ','-joined '%.4f'
     string of the normalized vector — packed per the house array rule
     (the driver canonicalizer cannot hash list columns); unpack with
     ``transform(split(embed, ','), x -> cast(x as double))`` to feed
     cosine/ANN operators. An all-cancelled (zero-norm) vector packs as
-    dim zeros rather than NaNs.
+    EMBED_DIM zeros rather than NaNs.
 
     Cross-engine float recipe: components are INTEGER sign-counts
     (exact); norm = sqrt of their integer square-sum and the division
@@ -599,21 +603,17 @@ def hashed_embedding(
     normalization) then '%.4f' — the media_features_packed formula.
 
     Scale shape: entirely SCAN-LOCAL — one staged hash-array projection
-    (the CSE rule: the array is referenced 2*dim times by the
+    (the CSE rule: the array is referenced 2*EMBED_DIM times by the
     interpreted higher-order filters), one staged component projection,
-    no shuffle, no Python. Cost is O(dim * tokens) per doc.
+    no shuffle, no Python. Cost is O(EMBED_DIM * tokens) per doc.
 
     DuckDB oracle: `q: sim_hash_embed` (same bit-split, same formula).
     """
-    if dim < 1:
-        raise ValueError(f"dim must be >= 1, got {dim}")
-    from .textstats import _token_hash, tokens
+    from .textstats import tokens
 
     staged = docs.select(
         "doc_id",
-        F.transform(
-            tokens(F.col(text_col)), lambda t: _token_hash(t)
-        ).alias("_h48"),
+        F.transform(tokens(F.col(text_col)), lambda t: md5_int(t)).alias("_h48"),
     )
     comps = staged.select(
         "doc_id",
@@ -621,20 +621,20 @@ def hashed_embedding(
         *[
             (
                 F.expr(
-                    f"size(filter(_h48, h -> h % {dim} = {i}"
-                    " AND (h div 16) % 2 = 1))"
+                    f"size(filter(_h48, h -> h % {EMBED_DIM} = {i}"
+                    f" AND (h div {EMBED_DIM}) % 2 = 1))"
                 )
                 - F.expr(
-                    f"size(filter(_h48, h -> h % {dim} = {i}"
-                    " AND (h div 16) % 2 = 0))"
+                    f"size(filter(_h48, h -> h % {EMBED_DIM} = {i}"
+                    f" AND (h div {EMBED_DIM}) % 2 = 0))"
                 )
             )
             .cast("long")
             .alias(f"_v{i}")
-            for i in range(dim)
+            for i in range(EMBED_DIM)
         ],
     )
-    sq = " + ".join(f"_v{i} * _v{i}" for i in range(dim))
+    sq = " + ".join(f"_v{i} * _v{i}" for i in range(EMBED_DIM))
     normed = comps.withColumn("_norm", F.expr(f"sqrt({sq})"))
     embed = F.concat_ws(
         ",",
@@ -645,7 +645,7 @@ def hashed_embedding(
                     F.round(F.col(f"_v{i}") / F.col("_norm"), 4) + F.lit(0.0),
                 )
             )
-            for i in range(dim)
+            for i in range(EMBED_DIM)
         ],
     )
     return normed.select("doc_id", "n_toks", embed.alias("embed"))

@@ -33,9 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import _token_hash
+from .hashing import md5_int, md5_int_py
 
-# Hash range of _token_hash (first 12 md5 hex chars → [0, 2^48)).
+# Hash range of md5_int (first 12 md5 hex chars → [0, 2^48)).
 HASH_RANGE = 1 << 48
 
 __all__ = [
@@ -67,7 +67,7 @@ def kmv_state(df: DataFrame, group_col: str, value_col: str, k: int = 128) -> Da
     hashes = (
         df.select(
             F.col(group_col).alias("grp"),
-            _token_hash(F.col(value_col).cast("string")).alias("h"),
+            md5_int(F.col(value_col).cast("string")).alias("h"),
         )
         .filter(F.col("h").isNotNull())
         .groupBy("grp", "h")
@@ -181,9 +181,7 @@ def cms_state(
                     F.struct(
                         F.lit(r).alias("row_idx"),
                         (
-                            _token_hash(
-                                F.concat(F.lit(f"cms{r}_"), F.col("v"))
-                            )
+                            md5_int(F.concat(F.lit(f"cms{r}_"), F.col("v")))
                             % F.lit(width)
                         ).alias("col_idx"),
                     )
@@ -210,11 +208,9 @@ def cms_estimate(
     the true count, within eN/width with probability 1 - (1/2)^depth.
     Output: (value, est). The query list is a small driver-side literal
     (the sketch's point-lookup API); missing cells count 0."""
-    from .textstats import token_hash48
-
     spark = state.sparkSession
     cells = [
-        (v, r, token_hash48(f"cms{r}_{v}") % width)
+        (v, r, md5_int_py(f"cms{r}_{v}") % width)
         for v in queries
         for r in range(depth)
     ]

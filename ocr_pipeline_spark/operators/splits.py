@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import _token_hash
+from .hashing import hex_int, md5_hex, md5_int
 
 __all__ = [
     "temperature_shares",
@@ -45,9 +45,9 @@ def split_label(
     """Label column: deterministic assignment of ``key`` to a named split
     with the given fractions (must sum to ≤ 1; remainder → 'rest').
     Hash = the engine's shared portable 48-bit md5 recipe
-    (textstats._token_hash) over '{seed}_{key}', mod 10_000."""
+    (hashing.md5_int) over '{seed}_{key}', mod 10_000."""
     bucket = (
-        _token_hash(F.concat(F.lit(f"{seed}_"), key.cast("string"))) % _MOD
+        md5_int(F.concat(F.lit(f"{seed}_"), key.cast("string"))) % _MOD
     )
     expr: Column | None = None
     acc = 0
@@ -90,7 +90,7 @@ def stratified_sample(
     keeps it at the source when the stratum column is a partition key.
     """
     bucket = (
-        _token_hash(F.concat(F.lit(f"{seed}_"), F.col(id_col).cast("string")))
+        md5_int(F.concat(F.lit(f"{seed}_"), F.col(id_col).cast("string")))
         % _MOD
     )
     thr: Column | None = None
@@ -126,9 +126,7 @@ def reservoir_per_stratum(
     downstream (CLAUDE.md shuffle rule). The window sorts each stratum
     partition; strata counts are corpus-scale but per-stratum top-k
     never needs the full sort to ship anywhere."""
-    h = _token_hash(
-        F.concat(F.lit(f"{seed}_"), F.col(id_col).cast("string"))
-    )
+    h = md5_int(F.concat(F.lit(f"{seed}_"), F.col(id_col).cast("string")))
     base = df.select(
         F.col(id_col), F.col(strata_col), h.alias("_h")
     )
@@ -272,20 +270,15 @@ def epoch_shuffle(
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     staged = docs.select(
         id_col,
-        F.md5(
-            F.concat(
-                F.col(id_col).cast("string"), F.lit(f":epoch{epoch}")
-            )
+        md5_hex(
+            F.concat(F.col(id_col).cast("string"), F.lit(f":epoch{epoch}"))
         ).alias("_k"),
     )
     w = Window.partitionBy("shard").orderBy("_k", id_col)
     return (
         staged.select(
             id_col,
-            (
-                F.conv(F.substring("_k", 1, 12), 16, 10).cast("long")
-                % F.lit(n_shards)
-            ).alias("shard"),
+            (hex_int(F.col("_k"), 12) % F.lit(n_shards)).alias("shard"),
             "_k",
         )
         .withColumn("pos", F.row_number().over(w).cast("long"))
@@ -346,7 +339,7 @@ def mix_token_budget(
             ).alias("rate_bp"),
         )
     )
-    keep_hash = _token_hash(
+    keep_hash = md5_int(
         F.concat(F.lit(f"{seed}_"), F.col(id_col).cast("string"))
     ) % F.lit(10000)
     return (
@@ -385,17 +378,12 @@ def write_epoch_shards(
             )
     keyed = docs.select(
         "*",
-        F.md5(
-            F.concat(
-                F.col(id_col).cast("string"), F.lit(f":epoch{epoch}")
-            )
+        md5_hex(
+            F.concat(F.col(id_col).cast("string"), F.lit(f":epoch{epoch}"))
         ).alias("_k"),
     ).select(
         "*",
-        (
-            F.conv(F.substring("_k", 1, 12), 16, 10).cast("long")
-            % F.lit(n_shards)
-        ).alias("shard"),
+        (hex_int(F.col("_k"), 12) % F.lit(n_shards)).alias("shard"),
     )
     (
         keyed.repartition(n_shards, "shard")
@@ -513,7 +501,7 @@ def curriculum_order(
     keyed = split.select(
         "doc_id",
         F.col("split").alias("phase"),
-        F.md5(
+        md5_hex(
             F.concat(
                 F.col("doc_id").cast("string"),
                 F.lit(f":curriculum{epoch}"),
@@ -521,10 +509,7 @@ def curriculum_order(
         ).alias("_k"),
     ).withColumn(
         "shard",
-        (
-            F.conv(F.substring("_k", 1, 12), 16, 10).cast("long")
-            % F.lit(n_shards)
-        ).cast("long"),
+        (hex_int(F.col("_k"), 12) % F.lit(n_shards)).cast("long"),
     )
     w = Window.partitionBy("phase", "shard").orderBy("_k", "doc_id")
     return keyed.select(

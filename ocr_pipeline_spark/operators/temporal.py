@@ -236,8 +236,9 @@ def cohort_retention(
     """Cohort retention matrix — the other event-analytics staple: keys
     are cohorted by the epoch-week of their FIRST event; each later
     active epoch-week contributes to (cohort_week, week_offset,
-    n_active). Epoch weeks are floor(epoch_seconds / 604800) — pure
-    integer bucketing, no calendar/timezone/week-start dialect to
+    n_active). Epoch weeks are epoch_seconds floor-divided by 604800 in
+    integer math (pre-1970 weeks are negative, as Python's ``//``) —
+    pure integer bucketing, no calendar/timezone/week-start dialect to
     drift between engines.
 
     Output: (cohort_week, week_offset, n_active) with week_offset >= 0
@@ -251,10 +252,10 @@ def cohort_retention(
 
     DuckDB oracle: `q: t_retention`.
     """
-    wk = (
-        F.col(ts_col).cast("timestamp").cast("long") / F.lit(604800)
-    ).cast("long")
-    base = events.select(F.col(key_col).alias("k"), wk.alias("w"))
+    base = events.select(
+        F.col(key_col).alias("k"),
+        F.col(ts_col).cast("timestamp").cast("long").alias("e"),
+    ).select("k", F.expr("(e - pmod(e, 604800)) div 604800").alias("w"))
     cohort = base.groupBy("k").agg(F.min("w").alias("cw"))
     active = base.distinct()
     return (
@@ -322,11 +323,12 @@ def ewma_values(
 
     with alpha = alpha_bp / 10000. The fold runs over the key's
     time-ordered value array (sort_array over collect_list of
-    (ts, id, value) structs — the deterministic-order recipe; ties
-    break by the id column), and the oracle replays the IDENTICAL
-    operand order via DuckDB's list_reduce over list(value ORDER BY
-    ts, id), so every intermediate double is bit-equal (the CLAUDE.md
-    sequential-left-fold rule). Output ewma is round(.,4) + 0.0.
+    (ts, id, value) structs, ts at full precision — the
+    deterministic-order recipe; ties break by the id column), and the
+    oracle replays the IDENTICAL operand order via DuckDB's list_reduce
+    over list(value ORDER BY ts, id), so every intermediate double is
+    bit-equal (the CLAUDE.md sequential-left-fold rule). Output ewma is
+    round(.,4) + 0.0.
 
     Output: (key, n_events, last_ts epoch-seconds bigint, ewma double).
 
@@ -344,7 +346,7 @@ def ewma_values(
         events.select(
             F.col(key_col).alias("k"),
             F.struct(
-                F.col(ts_col).cast("timestamp").cast("long").alias("e"),
+                F.col(ts_col).cast("timestamp").alias("ts"),
                 F.col(id_col).alias("i"),
                 F.col(value_col).cast("double").alias("v"),
             ).alias("s"),
@@ -354,7 +356,7 @@ def ewma_values(
         .select(
             "k",
             F.size("ss").cast("long").alias("n_events"),
-            F.element_at("ss", -1)["e"].cast("long").alias("last_ts"),
+            F.element_at("ss", -1)["ts"].cast("long").alias("last_ts"),
             F.transform(F.col("ss"), lambda s: s["v"]).alias("vs"),
         )
     )

@@ -8,15 +8,17 @@ text). Heuristics follow published corpus-filtering practice (C4/Gopher
 style length & stopword rules).
 
 Every function is deliberately expressible in ANSI SQL so the driver's
-DuckDB oracle can replay it exactly: normalization, hashing (md5) and
-arithmetic are specified to be engine-identical (decimal/int math or
-identically-ordered double folds).
+DuckDB oracle can replay it exactly: normalization, hashing (md5, the
+``hashing`` module's recipe) and arithmetic are specified to be
+engine-identical (decimal/int math or identically-ordered double folds).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .hashing import md5_hex, md5_int
 
 __all__ = [
     "STOPWORDS_EN",
@@ -302,7 +304,7 @@ def repetition_stats(
     )
     per_gram = grams.select(
         "doc_id",
-        F.substring(F.md5(F.encode(F.col("g"), "UTF-8")), 1, 16).alias("gk"),
+        md5_hex(F.col("g"), 16).alias("gk"),
     ).groupBy("doc_id", "gk").agg(F.count(F.lit(1)).alias("c"))
     return per_gram.groupBy("doc_id").agg(
         F.sum("c").alias("n_grams"),
@@ -370,28 +372,11 @@ def tfidf_top_terms(
     )
 
 
-def fingerprint(col: Column, prefix_len: int = 16) -> Column:
-    """Document fingerprint: md5 of normalized text (stable across
+def fingerprint(col: Column) -> Column:
+    """Document fingerprint: 16-hex md5 of normalized text (stable across
     engines; DuckDB: substr(md5(norm), 1, 16)). The rolling-hash analogue
     of the reference's region ids — content-derived, not positional."""
-    return F.substring(F.md5(F.encode(norm_text(col), "UTF-8")), 1, prefix_len)
-
-
-def _token_hash(tok: Column) -> Column:
-    """48-bit int hash of a token: first 12 hex chars of md5 — portable
-    (DuckDB: ('0x' || substr(md5(t), 1, 12))::BIGINT; Python:
-    ``token_hash48``). The ONE definition of this recipe."""
-    return F.conv(
-        F.substring(F.md5(F.encode(tok, "UTF-8")), 1, 12), 16, 10
-    ).cast("long")
-
-
-def token_hash48(s: str) -> int:
-    """Python-side companion of ``_token_hash`` — same bytes, same 48
-    bits (driver-side probe-cell computation, oracle constants)."""
-    import hashlib
-
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:12], 16)
+    return md5_hex(norm_text(col), 16)
 
 
 def rolling_hash(col: Column, mod: int = 1 << 31) -> Column:
@@ -403,7 +388,7 @@ def rolling_hash(col: Column, mod: int = 1 << 31) -> Column:
     return F.aggregate(
         tokens(col),
         F.lit(0).cast("long"),
-        lambda acc, t: (acc * F.lit(31) + _token_hash(t)) % F.lit(mod),
+        lambda acc, t: (acc * F.lit(31) + md5_int(t)) % F.lit(mod),
     )
 
 
@@ -422,7 +407,7 @@ def winnow_fingerprints(
     t_df = docs.select("doc_id", tokens(F.col(text_col)).alias("_t"))
     gram_hashes = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(F.col("_t")) - k, F.lit(0))),
-        lambda i: _token_hash(F.array_join(F.slice(F.col("_t"), i + 1, k), " ")),
+        lambda i: md5_int(F.array_join(F.slice(F.col("_t"), i + 1, k), " ")),
     )
     h_df = t_df.select("doc_id", gram_hashes.alias("_h"))
     mins = F.transform(
@@ -644,9 +629,7 @@ def source_drift(
         .filter(F.col("tok").isNotNull())
         .select(
             "grp",
-            F.substring(F.md5(F.encode(F.col("tok"), "UTF-8")), 1, 16).alias(
-                "thash"
-            ),
+            md5_hex(F.col("tok"), 16).alias("thash"),
         )
         .localCheckpoint(eager=False)
     )

@@ -1,25 +1,10 @@
-"""applyInPandas regroup parity + streaming throughput listener."""
+"""Streaming throughput listener."""
 
 from __future__ import annotations
 
 import time
 
-from ocr_pipeline_spark.operators.extraction import (
-    explode_blocks,
-    regroup_blocks,
-    regroup_blocks_grouped,
-    segment_pages,
-)
 from ocr_pipeline_spark.streaming import ThroughputListener, start_extract_stream
-
-
-def test_grouped_regroup_matches_expression_form(spark, pages_df):
-    blocks = explode_blocks(segment_pages(pages_df.limit(60)))
-    blocks.persist()
-    a = sorted(map(tuple, regroup_blocks(blocks).collect()))
-    b = sorted(map(tuple, regroup_blocks_grouped(blocks).collect()))
-    blocks.unpersist()
-    assert a == b
 
 
 def test_throughput_listener_records_batches(spark, pages_df, tmp_path, capfd):

@@ -730,9 +730,10 @@ def test_fuzzy_decontam_candidate_generation_is_banded(spark):
 
 
 def test_bm25_topk_not_global_sort(spark):
-    """bm25_search's scale contract: the final top-k compiles to
-    TakeOrderedAndProject, the (N, L) scalars broadcast (Cross build
-    only), and no exchange carries the token stream's text column."""
+    """bm25_search's scale contract: the corpus is scanned and tokenized
+    once, the final top-k compiles to TakeOrderedAndProject, the (N, L)
+    scalars broadcast (Cross build only), and no exchange carries the
+    token stream's text column."""
     import re as _re
 
     from ocr_pipeline_spark.operators.index import bm25_search
@@ -740,6 +741,7 @@ def test_bm25_topk_not_global_sort(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     df = bm25_search(docs, ("spark", "dup", "vector"), k=8)
     plan = _plan(df)
+    assert plan.count("FileScan") <= 1      # checkpointed tokenize
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan
     assert "CartesianProduct" not in plan

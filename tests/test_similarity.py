@@ -255,16 +255,6 @@ def test_hashed_embedding_is_scan_local(spark):
     assert "Exchange" not in plan
 
 
-def test_hashed_embedding_rejects_bad_dim(spark):
-    import pytest as _pytest
-
-    from ocr_pipeline_spark.operators.similarity import hashed_embedding
-
-    df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    with _pytest.raises(ValueError):
-        hashed_embedding(df, dim=0)
-
-
 def test_text_near_dup_end_to_end(spark):
     """The documents->hashed-embedding->LSH-cosine chain must flag a
     lightly-edited copy and not an unrelated doc, and the plan must

@@ -151,6 +151,59 @@ def test_cohort_retention_offsets(spark):
     assert max(k[1] for k in got) == 1
 
 
+def test_cohort_retention_floors_pre_1970_weeks(spark):
+    """Epoch weeks floor like Python's // (and the t_retention oracle),
+    so pre-1970 events fall in negative weeks instead of truncating
+    toward week 0."""
+    import math
+    from datetime import datetime as dt
+    from datetime import timezone
+
+    from ocr_pipeline_spark.operators.temporal import cohort_retention
+
+    utc = timezone.utc
+    rows = [
+        (1, dt(1969, 12, 31, 23, 0, tzinfo=utc), 1, "view"),
+        (2, dt(1970, 1, 1, 0, 30, tzinfo=utc), 1, "view"),
+        (3, dt(1969, 12, 31, 23, 59, 59, 500000, tzinfo=utc), 2, "view"),
+        (4, dt(1969, 12, 20, tzinfo=utc), 3, "view"),
+        (5, dt(1970, 1, 2, tzinfo=utc), 3, "view"),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string"
+    )
+    got = {
+        (r["cohort_week"], r["week_offset"]): r["n_active"]
+        for r in cohort_retention(df).collect()
+    }
+    weeks: dict[int, set[int]] = {}
+    for _, ts, user, _ in rows:
+        weeks.setdefault(user, set()).add(math.floor(ts.timestamp()) // 604800)
+    want: dict[tuple[int, int], int] = {}
+    for ws in weeks.values():
+        for w in ws:
+            key = (min(ws), w - min(ws))
+            want[key] = want.get(key, 0) + 1
+    assert got == want
+    assert want == {(-1, 0): 2, (-1, 1): 1, (-2, 0): 1, (-2, 2): 1}
+    # the DuckDB oracle floors the same way
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    con = duckdb.connect()
+    con.execute("SET TimeZone = 'UTC'")
+    con.execute(
+        "CREATE TABLE events (event_id BIGINT, ts TIMESTAMP, user_id BIGINT)"
+    )
+    con.executemany(
+        "INSERT INTO events VALUES (?, ?, ?)",
+        [(i, ts.replace(tzinfo=None), u) for i, ts, u, _ in rows],
+    )
+    oracle = con.execute(entrymod.oracle_sql()["t_retention"]).fetchall()
+    assert {(w, o): n for w, o, n in oracle} == want
+
+
 def test_event_funnel_rejects_short_steps(spark):
     import pytest as _pytest
 
@@ -255,6 +308,11 @@ def test_ewma_values_fold_and_ties(spark):
         # same-timestamp tie for user 2: event_id breaks it (5 then 6)
         (5, dt(2026, 1, 1, 9), 2, "v", 10.0),
         (6, dt(2026, 1, 1, 9), 2, "v", 0.0),
+        # same second for user 3, sub-second order inverted against
+        # event_id: the raw ts orders the fold (8 then 7), as the
+        # t_ewma oracle's ORDER BY ts, event_id does
+        (7, dt(2026, 1, 1, 9, 0, 0, 900000), 3, "v", 0.0),
+        (8, dt(2026, 1, 1, 9, 0, 0, 100000), 3, "v", 10.0),
     ]
     df = spark.createDataFrame(
         rows,
@@ -267,6 +325,7 @@ def test_ewma_values_fold_and_ties(spark):
     }
     assert got[1] == (3, 1.56)      # 1 -> 1.2 -> 1.56 at alpha 0.2
     assert got[2] == (2, 8.0)       # 10 -> 10 + 0.2*(0-10) = 8.0
+    assert got[3] == (2, 8.0)       # 10 first, not 0 -> 2.0
     # partition independence
     b = {
         r["user_id"]: (r["n_events"], r["ewma"])

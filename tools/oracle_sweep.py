@@ -102,9 +102,11 @@ def main():
             od = con.execute(sql).fetchdf()
             rows = len(sp) == len(od)
             schema = sorted(sp.columns) == sorted(od.columns)
-            hmatch = rows and schema and canon_hash(sp) == canon_hash(od)
+            value_hash = canon_hash(sp)
+            hmatch = rows and schema and value_hash == canon_hash(od)
             results[name] = {"rows": rows, "schema": schema, "hash": hmatch,
-                             "spark_rows": len(sp), "oracle_rows": len(od)}
+                             "spark_rows": len(sp), "oracle_rows": len(od),
+                             "value_hash": value_hash}
             print(("OK " if hmatch else "RED") + f" {name} {results[name]}", flush=True)
         except Exception as e:  # record and keep sweeping
             results[name] = {"status": "error", "err": f"{type(e).__name__}: {e}"}
