@@ -87,7 +87,6 @@ from ocr_pipeline_spark.operators.multimodal import (
 from ocr_pipeline_spark.operators.similarity import (
     ann_topk,
     brute_force_topk,
-    brute_force_topk_arrow,
     cosine_near_dup,
     hashed_embedding,
     ivf_topk,
@@ -121,6 +120,7 @@ from ocr_pipeline_spark.operators.graph import (
 )
 from ocr_pipeline_spark.operators.index import bm25_search, term_postings
 from ocr_pipeline_spark.operators.links import link_rows, page_edges
+from ocr_pipeline_spark.operators.partitioning import HOT_SHARE
 from ocr_pipeline_spark.operators.sketch import (
     cms_estimate,
     cms_state,
@@ -819,13 +819,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sim_semdedup": lambda s, d: semantic_dedup(
             _t(s, d, "embeddings"), k=8, iters=3, threshold=0.3
         ),
-        # numpy/Arrow GEMM variant — shares the fold oracle: both round
-        # to 4 decimals before ranking (round-then-rank), absorbing the
-        # BLAS-vs-fold summation delta; agreement also asserted in
-        # tests/test_similarity.py
-        "sim_topk_arrow": lambda s, d: brute_force_topk_arrow(
-            _t(s, d, "embeddings"), query_ids=[0, 1, 2, 3, 4], k=5
-        ),
         # Johnson-Lindenstrauss random projection 64d -> 16d
         # (operators/similarity.py:rp_project): scan-local fold dots
         # against md5-derived planes, rounded 4dp (the cos_sim recipe).
@@ -872,7 +865,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             n_planes=10,
             dim=16,
             seed=0,
-            unroll_cosine=True,
         ).orderBy("vec_a", "vec_b"),
         "sim_rp_reduce": lambda s, d: rp_project(_t(s, d, "embeddings"))
         .withColumn(
@@ -1308,9 +1300,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def _p_hot_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The salting pre-pass (operators/partitioning.find_hot_domains) as
     a value-checked table: per-domain row weight over the deterministic
-    synth-page urls + the hot flag at the default 5% share. The synth
-    corpus has 3 planted hot domains (~16-19% each) over a ~4% tail, so
-    both flag values are exercised."""
+    synth-page urls + the hot flag at the ``HOT_SHARE`` (5%) share. The
+    synth corpus has 3 planted hot domains (~16-19% each) over a ~4%
+    tail, so both flag values are exercised."""
     from ocr_pipeline_spark.operators.partitioning import domain_of
 
     pages = _synth_pages_df(spark)
@@ -1323,7 +1315,7 @@ def _p_hot_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.crossJoin(F.broadcast(total)).select(
         "domain",
         "w",
-        (F.col("w") > F.lit(0.05) * F.col("t")).alias("is_hot"),
+        (F.col("w") > F.lit(HOT_SHARE) * F.col("t")).alias("is_hot"),
     )
 
 
@@ -5026,25 +5018,6 @@ def oracle_sql() -> dict[str, str]:
                                         ORDER BY cos_sim DESC, neighbor_id) AS rank
               FROM s) WHERE rank <= 5
         """,
-        # BLAS/Arrow variant: same oracle as the fold — the UDF emits
-        # unrounded doubles and rounding happens JVM-side (F.round, the
-        # same HALF_UP-on-shortest-repr rule the fold and DuckDB use),
-        # then round-then-rank with an id tie-break. The only remaining
-        # cross-engine delta is the ~1e-15 BLAS-vs-fold summation
-        # straddle of a rounding boundary, which would surface here as a
-        # hash mismatch — that is what the gate is for. Agreement with
-        # the fold is also asserted in tests/test_similarity.py.
-        "sim_topk_arrow": f"""
-            WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id IN (0,1,2,3,4)),
-            s AS (SELECT query_id, e.vec_id AS neighbor_id, {cos} AS cos_sim
-                  FROM e, q WHERE e.vec_id <> q.query_id)
-            SELECT query_id, rank, neighbor_id, cos_sim FROM (
-              SELECT query_id, neighbor_id, cos_sim,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos_sim DESC, neighbor_id) AS rank
-              FROM s) WHERE rank <= 5
-        """,
         # multimodal: expectations computed by the same Python kernels the
         # Spark UDFs call, inlined as VALUES (binary payloads — not
         # expressible over the pre-registered views)
@@ -5081,7 +5054,7 @@ def oracle_sql() -> dict[str, str]:
             s AS (SELECT domain, cast(count(*) as bigint) AS w
                   FROM u GROUP BY domain)
             SELECT domain, w,
-                   w > 0.05 * (SELECT sum(w) FROM s) AS is_hot
+                   w > {HOT_SHARE} * (SELECT sum(w) FROM s) AS is_hot
             FROM s
         """,
         "url_canonical": f"""

@@ -1,14 +1,17 @@
 """Deduplication operators: exact, MinHash(+LSH), SimHash, n-gram Jaccard.
 
 Core components of a web-scale training-data pipeline (dedup before
-training). Everything below is pure Column expressions — JVM-side,
-shuffle-conscious:
+training). Everything below is Column expressions — JVM-side,
+shuffle-conscious — except the SimHash signature, an Arrow-batched numpy
+vote:
 
 - exact:    one groupBy on a 16-hex fingerprint (map-side partial agg);
 - MinHash:  signatures computed scan-local (no shuffle), candidate pairs
             via an equi-join on LSH band keys — the band join is the ONLY
             shuffle, and its keys are short strings;
-- SimHash:  60-bit signature from md5-derived token hashes, bit-vote fold;
+- SimHash:  60-bit signature from md5-derived token hashes, bit-vote fold
+            (scan-local mapInPandas; the ``dd_simhash`` DuckDB oracle is
+            its definition);
 - Jaccard:  exact verification on candidate pairs only (never all-pairs).
 
 At 10^12 docs: the LSH band join shuffles O(bands × docs) short rows
@@ -27,7 +30,7 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .hashing import md5_hex, md5_int, md5_int_py, md5_int_sql
+from .hashing import md5_hex, md5_int, md5_int_py
 from .textstats import fingerprint, norm_text, tokens
 
 __all__ = [
@@ -45,9 +48,7 @@ __all__ = [
     "jaccard_verify",
     "dup_clusters",
     "dup_spans",
-    "simhash60",
     "simhash_signatures",
-    "simhash_signatures_expr",
     "simhash_candidate_pairs",
     "containment_pairs",
 ]
@@ -345,89 +346,42 @@ def dup_clusters(
     return labels
 
 
-def _simhash_token_hashes(text_col_sql: str) -> str:
-    """SQL fragment: text column → array of 60-bit token hashes (first 15
-    md5 hex chars; engine-portable: DuckDB ('0x'||substr(md5(t),1,15))::BIGINT)."""
-    norm = f"trim(regexp_replace(lower({text_col_sql}), '\\\\s+', ' '))"
-    return f"transform(split({norm}, ' '), t -> {md5_int_sql('t', 15)})"
-
-
-def _simhash_fold(hashes_sql: str) -> str:
-    """SQL fragment: token-hash array → 60-bit SimHash. Each bit is the
-    sign of the ±1 vote sum across tokens; ties (vote 0) count as 0.
-    Written as F.expr SQL because PySpark's shiftright/shiftleft wrappers
-    only take literal shift amounts."""
-    return (
-        "aggregate(sequence(0, 59), cast(0 as bigint), (acc, i) -> acc + "
-        f"if(aggregate({hashes_sql}, cast(0 as bigint), "
-        "(a, h) -> a + (shiftright(h, i) & 1) * 2 - 1) > 0, "
-        "shiftleft(cast(1 as bigint), i), cast(0 as bigint)))"
-    )
-
-
-def simhash60(text_col_sql: str) -> Column:
-    """60-bit SimHash of whitespace tokens; ``text_col_sql`` is a SQL
-    expression naming the TEXT column. One-shot form — the full tokenize+
-    md5 tree sits inside the per-bit fold, so prefer simhash_signatures
-    (staged) for anything beyond a single expression."""
-    return F.expr(_simhash_fold(_simhash_token_hashes(text_col_sql)))
-
-
-def simhash_signatures_expr(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Expression-only SimHash — the DEFINITION (mirrored by the DuckDB
-    oracle). Staged: token hashes in their own projection, then the
-    60-bit vote fold referencing the array column — without the split,
-    the tokenize+md5 tree would sit INSIDE the per-bit fold and be
-    re-evaluated 60× per row (no logical CSE; same fix as
-    minhash_signatures). Still ~60×tokens interpreted ops per row, so
-    the default implementation below vectorizes it."""
-    h_df = docs.select(
-        "doc_id", F.expr(_simhash_token_hashes(text_col)).alias("_th")
-    )
-    return h_df.select(
-        "doc_id", F.expr(_simhash_fold("_th")).alias("simhash")
-    )
-
-
 def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """SimHash, Arrow/numpy implementation of the same definition
-    (~20× the expression form: the per-bit vote is a vectorized matrix
-    reduction instead of 60×tokens interpreted lambda steps).
+    """60-bit SimHash of whitespace tokens → (doc_id, simhash).
 
-    Semantics proven equal to ``simhash_signatures_expr`` by
-    tests/test_dedup.py on real tables; the normalization steps
-    (lower / \\s+ collapse / single-space split) coincide between Python
-    and the JVM on ASCII text — for multilingual corpora where
-    Python/Java lower() can diverge on edge code points, use the
-    expression form as the tie-breaking definition."""
+    Tokens are ``lower(coalesce(text, ''))`` with ASCII whitespace runs
+    collapsed to one space, trimmed of spaces and split on ' '; each
+    token hashes to its first 15 md5 hex chars (``md5_int_py(t, 15)``).
+    Bit i of the signature is set when more tokens have bit i set than
+    not (ties count as 0). The ``dd_simhash`` DuckDB oracle is the
+    definition; NULL text signs like '' there and here.
+
+    Arrow/numpy: the per-bit vote is one vectorized matrix reduction per
+    document instead of 60×tokens interpreted lambda steps."""
     import re as _re
 
     import numpy as np
     import pandas as pd
 
-    _ws = _re.compile(r"\s+")
+    # re.ASCII: Python's default \s is Unicode-aware (NBSP, U+2003,
+    # U+001C); the engines' \s is ASCII-only
+    _ws = _re.compile(r"\s+", _re.ASCII)
     shifts = np.arange(60, dtype=np.uint64)
+
+    def sign(t: str | None) -> int:
+        toks = _ws.sub(" ", (t or "").lower()).strip(" ").split(" ")
+        hs = np.array([md5_int_py(tok, 15) for tok in toks], dtype=np.uint64)
+        bits = (hs[:, None] >> shifts) & np.uint64(1)
+        votes = 2 * bits.sum(0, dtype=np.int64) - len(hs)
+        return int(((votes > 0).astype(np.uint64) << shifts).sum(dtype=np.uint64))
 
     def fn(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            sigs = []
-            for t in pdf[text_col]:
-                if t is None:  # NULL text → NULL simhash, as in the
-                    sigs.append(None)  # expression definition / oracle
-                    continue
-                norm = _ws.sub(" ", t.lower()).strip()
-                toks = norm.split(" ")
-                hs = np.array(
-                    [md5_int_py(tok, 15) for tok in toks], dtype=np.uint64
-                )
-                bits = (hs[:, None] >> shifts) & np.uint64(1)
-                votes = 2 * bits.sum(0, dtype=np.int64) - len(hs)
-                sig = int(
-                    ((votes > 0).astype(np.uint64) << shifts).sum(dtype=np.uint64)
-                )
-                sigs.append(sig)
+            sigs = np.fromiter(
+                (sign(t) for t in pdf[text_col]), dtype=np.int64, count=len(pdf)
+            )
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"].to_numpy(), "simhash": sigs}
             )

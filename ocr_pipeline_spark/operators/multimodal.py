@@ -39,7 +39,6 @@ __all__ = [
     "synth_media",
     "decode_media_meta",
     "frame_sample",
-    "media_features",
     "media_features_packed",
     "feature_of",
     "format_feature",
@@ -230,32 +229,16 @@ def format_feature(vec: list | None) -> str:
     return ",".join("%.6f" % v for v in vec)
 
 
-def media_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
-    """Feature extraction: L2-normalized byte histogram of the payload
-    body → array<double> of length ``dim``. A deterministic stand-in for
-    an embedding model with the exact plumbing a real one needs (binary
-    in, fixed-dim float vector out, Arrow-batched); output feeds the
-    similarity/dedup operators directly."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            feats = [feature_of(p, dim) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"].to_numpy(), "feature": feats}
-            )
-
-    return media.mapInPandas(
-        fn, schema="media_id long, feature array<double>"
-    )
-
-
 def media_features_packed(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
-    """``media_features`` with the vector serialized Python-side via
-    ``format_feature`` — for cross-engine value checks, where an
-    array<double> column can't be canonicalized/hashed. Same single
-    mapInPandas stage (no extra Arrow hop)."""
+    """Feature extraction: ``feature_of`` (L2-normalized byte histogram
+    of the payload, ``dim`` doubles) per payload, serialized Python-side
+    via ``format_feature`` → (media_id, feature_str); undecodable
+    payloads give ''. A deterministic stand-in for an embedding model
+    with the plumbing a real one needs (binary in, fixed-dim vector
+    out, one Arrow-batched mapInPandas stage). Packed because an
+    array<double> column can't be canonicalized/hashed for cross-engine
+    value checks; parse it back with ``split``/``cast`` where a vector
+    column is needed."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -9,12 +9,11 @@ logic:
    column only. (Counting payload *bytes* would be more precise but
    ``length(html)`` forces reading the full binary column — a whole-corpus
    IO pass at 100 TB. Row count over a pruned scan is the right
-   cost/precision trade; a deploy that keeps an ``n_bytes`` column at
-   ingest can pass ``weight_col`` to weight by size for free.);
-2. domains above ``hot_share`` of total weight (rows by default) get
-   NSALT-way salt derived from hash(url) — deterministic, so per-url
-   completeness is preserved (every url still lands on exactly one
-   partition);
+   cost/precision trade.);
+2. domains above ``HOT_SHARE`` of the rows (at most ``MAX_HOT`` of them)
+   get ``NSALT``-way salt derived from hash(url) — deterministic, so
+   per-url completeness is preserved (every url still lands on exactly
+   one partition);
 3. everything else salts to 0, keeping domain locality for the cold tail.
 
 At 10^12 docs the pre-pass is a trivial aggregation; hot_domains is a tiny
@@ -28,7 +27,9 @@ from pyspark.sql import functions as F
 
 __all__ = ["domain_of", "find_hot_domains", "salted_repartition"]
 
-DEFAULT_NSALT = 16
+HOT_SHARE = 0.05
+MAX_HOT = 64
+NSALT = 16
 
 
 def domain_of(url_col):
@@ -36,22 +37,15 @@ def domain_of(url_col):
     return F.parse_url(url_col, F.lit("HOST"))
 
 
-def find_hot_domains(
-    pages: DataFrame,
-    hot_share: float = 0.05,
-    max_hot: int = 64,
-    weight_col: str | None = None,
-) -> list[str]:
-    """Domains holding more than ``hot_share`` of total weight.
-
-    Weight = row count by default (url-only pruned scan — the 100 TB-safe
-    choice); pass ``weight_col`` (e.g. a precomputed n_bytes column) to
-    weight by payload size instead."""
-    weight = (
-        F.col(weight_col) if weight_col is not None else F.lit(1).cast("long")
-    )
+def find_hot_domains(pages: DataFrame) -> list[str]:
+    """Domains holding more than ``HOT_SHARE`` of the rows, largest first,
+    at most ``MAX_HOT``. A url-only pruned scan — the 100 TB-safe
+    choice."""
     stats = (
-        pages.select(domain_of(F.col("url")).alias("domain"), weight.alias("w"))
+        pages.select(
+            domain_of(F.col("url")).alias("domain"),
+            F.lit(1).cast("long").alias("w"),
+        )
         .groupBy("domain")
         .agg(F.sum("w").alias("w"))
     )
@@ -59,9 +53,9 @@ def find_hot_domains(
     if not total:
         return []
     rows = (
-        stats.filter(F.col("w") > hot_share * total)
+        stats.filter(F.col("w") > HOT_SHARE * total)
         .orderBy(F.desc("w"))
-        .limit(max_hot)
+        .limit(MAX_HOT)
         .collect()
     )
     return [r["domain"] for r in rows if r["domain"] is not None]
@@ -71,16 +65,15 @@ def salted_repartition(
     pages: DataFrame,
     num_partitions: int,
     hot_domains: list[str] | None = None,
-    nsalt: int = DEFAULT_NSALT,
 ) -> DataFrame:
     """Repartition by hash(domain, salt): cold domains stay co-located
-    (salt 0); hot domains spread over ``nsalt`` buckets keyed by hash(url)
+    (salt 0); hot domains spread over ``NSALT`` buckets keyed by hash(url)
     so one domain can't pin a partition. Deterministic in the data only —
     output is independent of input partitioning (north-rule determinism)."""
     if not hot_domains:
         return pages.repartition(num_partitions, F.hash(F.col("url")))
     domain = domain_of(F.col("url"))
     salt = F.when(
-        domain.isin(list(hot_domains)), F.pmod(F.hash(F.col("url")), F.lit(nsalt))
+        domain.isin(list(hot_domains)), F.pmod(F.hash(F.col("url")), F.lit(NSALT))
     ).otherwise(F.lit(0))
     return pages.repartition(num_partitions, F.hash(domain, salt))

@@ -31,7 +31,6 @@ from .hashing import md5_int, md5_int_py
 __all__ = [
     "cosine",
     "brute_force_topk",
-    "brute_force_topk_arrow",
     "hyperplane_bucket",
     "ann_topk",
     "cosine_near_dup",
@@ -74,14 +73,22 @@ def _sim4(a: Column, b: Column) -> Column:
     return F.nanvl(F.round(cosine(a, b), 4), F.lit(0.0))
 
 
+# Widest vectors whose pair cosine cosine_near_dup unrolls. At 64 dims
+# the unrolled expression passes Spark's 64 KB generated-method limit,
+# whole-stage codegen is disabled, and the fold wins (local[4], sf0.01:
+# 2.9-6.2 s unrolled vs 0.9-2.4 s folded).
+_UNROLL_MAX_DIM = 16
+
+
 def _sim4_unrolled(a: Column, b: Column, dim: int) -> Column:
     """_sim4 with the folds UNROLLED to dim explicit element_at terms —
     whole-stage-codegen arithmetic instead of interpreted higher-order
     lambdas (CodegenFallback). Left-associated addition starting from
     the first product reproduces the aggregate fold's doubles exactly
     (0.0 + x1 == x1 in IEEE), so oracles are unaffected. Worth it when
-    the cosine runs per CANDIDATE PAIR (near-dup joins: measured ~4x
-    at sf0.1 on 16-dim text embeddings); pointless per-row."""
+    the cosine runs per CANDIDATE PAIR on narrow vectors (near-dup
+    joins: measured ~4x at sf0.1 on 16-dim text embeddings); pointless
+    per-row."""
 
     def dot(u: Column, v: Column) -> Column:
         terms = [
@@ -121,80 +128,6 @@ def brute_force_topk(
         F.col(id_col).alias("neighbor_id"),
         _sim4(F.col("qvec"), F.col(vec_col)).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
-
-
-def brute_force_topk_arrow(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k, numpy-batch variant: queries are collected
-    driver-side (tiny), shipped in the closure, and each Arrow batch of
-    the corpus computes a dense (batch × queries) GEMM in C.
-
-    Measured ~3× faster than the expression-fold ``brute_force_topk`` at
-    64 dims / 50 queries, and the gap widens with dim × |Q| — this is the
-    hot path for real embedding widths (768+), where per-element
-    interpreted folds lose to BLAS. numpy's pairwise/SIMD summation is
-    not bit-identical to a sequential fold, but both variants round cos
-    to 4 decimals BEFORE ranking with an id tie-break (round-then-rank),
-    which absorbs the ~1e-15 summation-order delta — so this variant
-    shares the fold's DuckDB oracle, and the test suite asserts
-    agreement with ``brute_force_topk``. Same output contract."""
-    import numpy as np
-    import pandas as pd
-
-    out_schema = "query_id long, rank int, neighbor_id long, cos_sim double"
-    qrows = emb.filter(F.col(id_col).isin(query_ids)).select(
-        id_col, vec_col
-    ).collect()
-    if not qrows:  # no matching query ids: empty result, same schema
-        return emb.sparkSession.createDataFrame([], out_schema)
-    Q = np.array([r[vec_col] for r in qrows], dtype=np.float64)
-    q_ids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            # zero-norm guard: a zero vector gets cos 0 everywhere, not
-            # NaN (Spark sorts NaN above real values under desc)
-            Vn = V / np.maximum(
-                np.linalg.norm(V, axis=1, keepdims=True), 1e-300
-            )
-            S = Vn @ Qn.T
-            n = len(pdf)
-            out = pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, n),
-                    "neighbor_id": np.tile(
-                        pdf[id_col].to_numpy(), len(q_ids)
-                    ),
-                    # unrounded: rounding happens JVM-side below, so the
-                    # rule (Spark F.round HALF_UP on the shortest decimal
-                    # repr) is IDENTICAL to the fold variant's and to the
-                    # DuckDB oracle — np.round is half-even on the scaled
-                    # binary value and disagrees on *.xxxx5 doubles
-                    "cos_sim": S.T.ravel(),
-                }
-            )
-            yield out[out.query_id != out.neighbor_id]
-
-    sims = emb.select(id_col, vec_col).mapInPandas(
-        fn, schema="query_id long, neighbor_id long, cos_sim double"
-    ).withColumn("cos_sim", F.round("cos_sim", 4))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
@@ -347,7 +280,6 @@ def cosine_near_dup(
     seed: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    unroll_cosine: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, LSH-bucketed.
 
@@ -358,7 +290,8 @@ def cosine_near_dup(
     verified with exact cosine ≥ threshold. Recall trades off via
     n_planes exactly as in ann_topk (single-table here: near-dup pairs
     are overwhelmingly same-bucket because near-parallel vectors agree on
-    most hyperplane signs)."""
+    most hyperplane signs). The pair cosine is unrolled for
+    ``dim <= 16`` and a fold above that (see ``_UNROLL_MAX_DIM``)."""
     # coalesce → non-nullable key: stops the join's inferred isnotnull
     # filter from being pushed below the projection with the whole
     # hyperplane expression inlined (evaluated twice per row otherwise)
@@ -381,7 +314,7 @@ def cosine_near_dup(
             _sim4_unrolled(
                 F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"), dim
             )
-            if unroll_cosine
+            if dim <= _UNROLL_MAX_DIM
             else _sim4(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
         ).alias("cos_sim"),
     )

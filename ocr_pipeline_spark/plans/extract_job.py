@@ -52,7 +52,9 @@ def run_extraction(
     """Run (or resume) the extraction job. Returns the run_id.
 
     Logs per-stage docs/sec (north rule): kernel-cpu rate via
-    accumulators plus job wall docs/sec."""
+    accumulators plus job wall docs/sec. The job wall time covers the
+    whole call, both eager pre-passes included."""
+    t0 = time.monotonic()
     run_id = run_id or uuid.uuid4().hex
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
     metrics = metrics or StageMetrics(spark, stages=("extract",))
@@ -66,7 +68,6 @@ def run_extraction(
     hot = find_hot_domains(todo) if salting else []
     balanced = salted_repartition(todo, num_partitions, hot)
     extracted = with_bucket(extract_pages(balanced, metrics=metrics), n_buckets)
-    t0 = time.monotonic()
     write_extracted_with_manifest(
         extracted, out_path, manifest_path, run_id, run_buckets=run_buckets
     )

@@ -145,14 +145,35 @@ def test_signatures_independent_of_partitioning(spark, corpus):
     assert a == b
 
 
-def test_simhash_numpy_matches_expression_definition(spark, corpus):
-    from ocr_pipeline_spark.operators.dedup import simhash_signatures_expr
+def test_simhash_matches_duckdb_oracle_on_edge_text(spark):
+    """The dd_simhash oracle is the SimHash definition. Internal non-ASCII
+    whitespace is a token character on both engines (their \\s is
+    ASCII-only), NULL signs like '', and a NULL in the Arrow batch must
+    not turn the 60-bit signatures into doubles. Trailing non-ASCII
+    whitespace is left out: DuckDB's trim strips U+3000, Spark's not."""
+    import duckdb
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for df in (corpus, docs):
-        a = sorted(map(tuple, simhash_signatures(df).collect()))
-        b = sorted(map(tuple, simhash_signatures_expr(df).collect()))
-        assert a == b
+    import __spark_entry__ as entrymod
+
+    rows = [
+        (1, "alpha\xa0beta gamma"),
+        (2, "alpha\u2003beta gamma"),
+        (3, "alpha\x1cbeta gamma"),
+        (4, None),
+        (5, ""),
+        (6, "plain ascii text"),
+        (7, "  Mixed\tASCII \n whitespace\r\n"),
+    ]
+    # one partition: the NULL row shares its Arrow batch with the rest
+    df = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+    got = {r["doc_id"]: r["simhash"] for r in simhash_signatures(df).collect()}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = dict(con.execute(entrymod.oracle_sql()["dd_simhash"]).fetchall())
+    assert got == want
+    assert got[4] == got[5]
 
 
 def test_chunk_dedup_semantics(spark):

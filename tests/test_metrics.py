@@ -37,6 +37,41 @@ def test_run_extraction_logs_job_line(spark, pages_df, tmp_path, capfd):
     assert stages["job"]["docs_per_sec"] > 0
 
 
+def test_job_line_times_the_prepasses(
+    spark, pages_df, tmp_path, capfd, monkeypatch
+):
+    """The "job" wall starts at call entry: a slow hot-domain pre-pass
+    shows up in wall_secs, which matches the call timed from outside."""
+    import time
+
+    from ocr_pipeline_spark.plans import extract_job
+
+    real = extract_job.find_hot_domains
+
+    def slow(pages):
+        time.sleep(0.5)
+        return real(pages)
+
+    monkeypatch.setattr(extract_job, "find_hot_domains", slow)
+    t0 = time.monotonic()
+    run_extraction(
+        spark,
+        pages_df,
+        str(tmp_path / "out"),
+        str(tmp_path / "man"),
+        n_buckets=8,
+    )
+    outer = time.monotonic() - t0
+    job = [
+        json.loads(line)
+        for line in capfd.readouterr().out.splitlines()
+        if line.startswith('{"stage": "job"')
+    ]
+    assert len(job) == 1
+    assert job[0]["wall_secs"] >= 0.5
+    assert job[0]["wall_secs"] >= outer - 0.25
+
+
 def test_profile_table_stats(spark):
     from ocr_pipeline_spark.operators.profiling import profile_table
 

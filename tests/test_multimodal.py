@@ -11,8 +11,10 @@ from ocr_pipeline_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     _decode_real,
     decode_media_meta,
+    feature_of,
+    format_feature,
     frame_sample,
-    media_features,
+    media_features_packed,
     synth_media,
 )
 
@@ -72,18 +74,20 @@ def test_frame_sample_counts(spark, media_df):
 
 
 def test_media_features_shape_and_norm(spark, media_df):
-    feats = media_features(media_df)
-    ok = feats.filter(F.col("feature").isNotNull())
-    assert ok.count() == N - len([i for i in range(N) if i % 23 == 7])
-    assert ok.filter(F.size("feature") != FEATURE_DIM).count() == 0
-    norm = ok.select(
-        F.aggregate(
-            F.zip_with("feature", "feature", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("sq")
-    )
-    assert norm.filter(F.abs(F.col("sq") - 1.0) > 1e-9).count() == 0
+    payloads = {r["media_id"]: r["payload"] for r in media_df.collect()}
+    got = {
+        r["media_id"]: r["feature_str"]
+        for r in media_features_packed(media_df).collect()
+    }
+    assert got == {i: format_feature(feature_of(p)) for i, p in payloads.items()}
+    ok = [v for v in got.values() if v]
+    assert len(ok) == N - len([i for i in range(N) if i % 23 == 7])
+    assert all(len(v.split(",")) == FEATURE_DIM for v in ok)
+    # the kernel's vectors are unit-norm before '%.6f' packing
+    for p in payloads.values():
+        vec = feature_of(p)
+        if vec is not None:
+            assert abs(sum(x * x for x in vec) - 1.0) <= 1e-9
 
 
 def test_media_dedup_collapses_identical_payloads(spark):

@@ -13,13 +13,13 @@ from ocr_pipeline_spark.operators.partitioning import (
 
 
 def test_hot_domains_detected(spark, pages_df):
-    hot = find_hot_domains(pages_df, hot_share=0.05)
+    hot = find_hot_domains(pages_df)
     # synthesizer routes ~45% of rows to site00/01/02
     assert set(hot) >= {"site00.example", "site01.example", "site02.example"}
 
 
 def test_salting_spreads_hot_domain(spark, pages_df):
-    hot = find_hot_domains(pages_df, hot_share=0.05)
+    hot = find_hot_domains(pages_df)
     n = 8
     unsalted = pages_df.repartition(n, domain_of(F.col("url")))
     salted = salted_repartition(pages_df, n, hot)
@@ -39,7 +39,7 @@ def test_salting_spreads_hot_domain(spark, pages_df):
 
 
 def test_salting_preserves_per_url_completeness(spark, pages_df):
-    hot = find_hot_domains(pages_df, hot_share=0.05)
+    hot = find_hot_domains(pages_df)
     salted = salted_repartition(pages_df, 8, hot)
     assert salted.count() == pages_df.count()
     assert salted.select("url").distinct().count() == pages_df.count()
@@ -53,7 +53,7 @@ def test_salting_preserves_per_url_completeness(spark, pages_df):
 
 
 def test_extraction_unaffected_by_salting(spark, pages_df):
-    hot = find_hot_domains(pages_df, hot_share=0.05)
+    hot = find_hot_domains(pages_df)
     plain = extract_pages(pages_df).orderBy("url").collect()
     salted = extract_pages(salted_repartition(pages_df, 8, hot)).orderBy("url").collect()
     assert plain == salted

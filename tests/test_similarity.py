@@ -9,7 +9,6 @@ import pytest
 from ocr_pipeline_spark.operators.similarity import (
     ann_topk,
     brute_force_topk,
-    brute_force_topk_arrow,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -50,22 +49,6 @@ def test_brute_force_matches_numpy(spark, emb, emb_np):
         by_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
     for qid in [0, 1, 2]:
         assert by_q[qid] == _numpy_topk(ids, mat, qid, 5), qid
-
-
-def test_arrow_variant_agrees_with_expression(spark, emb):
-    """Same neighbors, ranks, and (to float-sum noise within 4dp
-    rounding) similarities as the expression-fold implementation."""
-    qids = [0, 1, 2, 3, 4]
-    a = brute_force_topk(emb, query_ids=qids, k=5).collect()
-    b = brute_force_topk_arrow(emb, query_ids=qids, k=5).collect()
-    akey = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"]) for r in a}
-    bkey = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"]) for r in b}
-    assert set(akey) == set(bkey)
-    for key in akey:
-        an, asim = akey[key]
-        bn, bsim = bkey[key]
-        assert an == bn, (key, an, bn)
-        assert abs(asim - bsim) <= 1e-4
 
 
 def test_ann_recall_vs_brute(spark, emb):
