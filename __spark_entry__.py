@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocr_pipeline_spark.operators.dedup import (
+    DEFAULT_SHINGLE,
     MINHASH_P,
     boilerplate_scrub,
     chunk_dedup,
@@ -166,7 +167,7 @@ from ocr_pipeline_spark.operators.temporal import (
     sessionize,
 )
 from ocr_pipeline_spark.operators.decontam import (
-    GRAMS_SQL,
+    DEFAULT_NGRAM,
     contamination_flags,
     fuzzy_decontam,
 )
@@ -221,8 +222,11 @@ def _synth_pages_df(spark: SparkSession, n: int = 150, seed: int = 42) -> DataFr
     return spark.createDataFrame(synth_pages(n, seed=seed), schema=PAGES_SCHEMA)
 
 
-# DuckDB fragments mirroring ocr_pipeline_spark.operators.textstats
-_NORM = "trim(regexp_replace(lower(coalesce(text, '')), '\\s+', ' ', 'g'))"
+# DuckDB fragments mirroring ocr_pipeline_spark.operators.textstats — the
+# oracle's only spelling of norm_text. Explicit whitespace class: RE2's \s
+# lacks \x0b, which Java's has; trim(.., ' '): bare trim strips non-ASCII
+# whitespace, Spark's trim only spaces.
+_NORM = r"trim(regexp_replace(lower(coalesce(text, '')), '[\t\n\x0b\f\r ]+', ' ', 'g'), ' ')"
 _TOKS = f"string_split({_NORM}, ' ')"
 _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS_EN) + "]"
 # per-token (doc_id, is_quality, bucket) rows — the classifier
@@ -245,11 +249,16 @@ _QC_BUCKETED_SQL = f"""
           FROM documents))
 """
 
-_SHINGLES = (
-    f"case when len({_TOKS}) < 3 then [{_NORM}] else "
-    f"list_distinct(list_transform(range(0, len({_TOKS}) - 2), "
-    f"i -> array_to_string(({_TOKS})[i+1:i+3], ' '))) end"
-)
+
+
+def _grams_sql(n: int) -> str:
+    """DuckDB mirror of ``dedup.shingles``: the distinct word n-grams of
+    _NORM, or [_NORM] for docs shorter than n tokens."""
+    return (
+        f"case when len({_TOKS}) < {n} then [{_NORM}] else "
+        f"list_distinct(list_transform(range(0, len({_TOKS}) - {n - 1}), "
+        f"i -> array_to_string(({_TOKS})[i+1:i+{n}], ' '))) end"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1973,12 +1982,11 @@ def _semi_error_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _a1_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A2: fan-out explode + cross-doc pooling aggregate."""
     docs = _t(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     # explode_outer: plain explode makes InferFiltersFromGenerate push a
-    # size(split(norm))>0 filter below the projection, re-evaluating the
+    # size(tokens)>0 filter below the projection, re-evaluating the
     # normalize+split per row a second time (split is never empty anyway)
     return (
-        docs.select(F.explode_outer(F.split(norm, " ")).alias("token"))
+        docs.select(F.explode_outer(tokens(F.col("text"))).alias("token"))
         .filter(F.col("token").isNotNull())
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -3023,7 +3031,7 @@ def oracle_sql() -> dict[str, str]:
     consts = minhash_perm_constants(8)
     sh_hash = f"(('0x' || substr(md5(s), 1, 12))::BIGINT % {P})"
     sig = lambda i: (  # noqa: E731
-        f"list_min(list_transform({_SHINGLES}, "
+        f"list_min(list_transform({_grams_sql(DEFAULT_SHINGLE)}, "
         f"s -> ({consts[i][0]} * {sh_hash} + {consts[i][1]}) % {P}))"
     )
     lsh_pairs_sql = f"""
@@ -4084,7 +4092,7 @@ def oracle_sql() -> dict[str, str]:
                AND a.doc_id < b.doc_id
                AND (a.doc_id >= 10000000) != (b.doc_id >= 10000000)
               GROUP BY 1, 2),
-            sh AS (SELECT doc_id, {_SHINGLES} AS sh FROM u),
+            sh AS (SELECT doc_id, {_grams_sql(DEFAULT_SHINGLE)} AS sh FROM u),
             ver AS (
               SELECT case when doc_a >= 10000000 then doc_b
                           else doc_a end AS doc_id,
@@ -4314,7 +4322,7 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY 1 ORDER BY 1
         """,
         "dd_jaccard_bucket": f"""
-            WITH sh AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
+            WITH sh AS (SELECT doc_id, {_grams_sql(DEFAULT_SHINGLE)} AS sh FROM documents),
             pairs AS (SELECT doc_a, doc_b FROM ({lsh_pairs_sql}))
             SELECT doc_a, doc_b,
                    len(list_intersect(sa.sh, sb.sh)) AS n_intersect,
@@ -4482,7 +4490,7 @@ def oracle_sql() -> dict[str, str]:
         "ct_contamination": f"""
             WITH g AS (
               SELECT doc_id, substr(md5(gram), 1, 16) AS gk
-              FROM (SELECT doc_id, unnest({GRAMS_SQL("text")}) AS gram
+              FROM (SELECT doc_id, unnest({_grams_sql(DEFAULT_NGRAM)}) AS gram
                     FROM documents)),
             bench AS (SELECT DISTINCT gk FROM g WHERE doc_id % 97 = 0)
             SELECT g.doc_id,

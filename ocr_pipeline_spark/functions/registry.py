@@ -5,9 +5,10 @@ Two tiers:
 - ``register_sql_functions``: SQL UDFs (``CREATE TEMPORARY FUNCTION …
   RETURN <expr>``, Spark 4). These are macro-expanded into the plan and
   run JVM-side under codegen — the zero-overhead way to ship the
-  engine's text semantics (normalization, fingerprints, quality gates)
-  to SQL, guaranteed identical to the DataFrame operators because the
-  bodies are the same expressions.
+  engine's text semantics (normalization, token counts, fingerprints,
+  cosine similarity) to SQL, identical to the DataFrame operators
+  because the bodies are built from the same recipes
+  (``textstats.norm_text_sql``, the ``hashing`` SQL fragments).
 
 - ``register_udtfs``: Python UDTFs for the 1→N shapes SQL can't macro —
   per-document block segmentation as a LATERAL table function. This is
@@ -24,17 +25,16 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..operators.hashing import md5_hex_sql, md5_int_sql
-
-_NORM_BODY = "trim(regexp_replace(lower(coalesce({s}, '')), '\\\\s+', ' '))"
+from ..operators.textstats import norm_text_sql
 
 _SQL_FUNCTIONS: dict[str, str] = {
     # normalization / tokenization
     "norm_text": (
-        "(s STRING) RETURNS STRING RETURN " + _NORM_BODY.format(s="s")
+        "(s STRING) RETURNS STRING RETURN " + norm_text_sql("s")
     ),
     "ws_token_count": (
         "(s STRING) RETURNS INT RETURN size(split("
-        + _NORM_BODY.format(s="s")
+        + norm_text_sql("s")
         + ", ' '))"
     ),
     "word_count": (
@@ -44,11 +44,11 @@ _SQL_FUNCTIONS: dict[str, str] = {
     # fingerprints (identical to operators.textstats)
     "fingerprint16": (
         "(s STRING) RETURNS STRING RETURN "
-        + md5_hex_sql(_NORM_BODY.format(s="s"), 16)
+        + md5_hex_sql(norm_text_sql("s"), 16)
     ),
     "rolling_hash31": (
         "(s STRING) RETURNS BIGINT RETURN "
-        "aggregate(split(" + _NORM_BODY.format(s="s") + ", ' '), "
+        "aggregate(split(" + norm_text_sql("s") + ", ' '), "
         "cast(0 as bigint), (acc, t) -> (acc * 31 + "
         + md5_int_sql("t")
         + ") % 2147483648)"

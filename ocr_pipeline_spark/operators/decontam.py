@@ -14,10 +14,9 @@ text never crosses a shuffle (CLAUDE.md payload rule: the broadcast
 probe uses 16-hex md5 prefixes), and the only corpus-sized exchange is
 the per-doc partial-agg on (doc_id, two ints).
 
-Engine portability: gram construction reuses ``dedup.shingles``
-semantics exactly (distinct word n-grams of normalized text; short docs
-fall back to the whole normalized text), and ``GRAMS_SQL`` derives the
-DuckDB expression from the same spec so the driver oracle replays it.
+Engine portability: gram construction is ``dedup.shingles`` (distinct
+word n-grams of normalized text; short docs fall back to the whole
+normalized text), which the DuckDB oracle's n-gram builder mirrors.
 """
 
 from __future__ import annotations
@@ -25,13 +24,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _shingles_from
+from .dedup import shingles
 from .hashing import md5_hex
-from .textstats import norm_text, tokens
 
 __all__ = [
     "DEFAULT_NGRAM",
-    "GRAMS_SQL",
     "contamination_flags",
     "gram_keys",
     "fuzzy_decontam",
@@ -48,20 +45,8 @@ def gram_keys(col: Column, n: int = DEFAULT_NGRAM) -> Column:
     column (shingles semantics: docs shorter than n words contribute
     their whole normalized text as one gram)."""
     return F.transform(
-        _shingles_from(tokens(col), norm_text(col), n),
+        shingles(col, n),
         lambda g: md5_hex(g, 16),
-    )
-
-
-def GRAMS_SQL(c: str, n: int = DEFAULT_NGRAM) -> str:
-    """DuckDB expression for the same distinct n-gram list (pre-hash),
-    derived from the shingles spec — mirror of ``dedup.shingles``."""
-    norm = f"trim(regexp_replace(lower(coalesce({c}, '')), '\\s+', ' ', 'g'))"
-    toks = f"string_split({norm}, ' ')"
-    return (
-        f"case when len({toks}) < {n} then [{norm}] else "
-        f"list_distinct(list_transform(range(0, len({toks}) - {n - 1}), "
-        f"i -> array_to_string(({toks})[i+1:i+{n}], ' '))) end"
     )
 
 

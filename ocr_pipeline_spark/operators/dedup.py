@@ -30,8 +30,9 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels.bpe import norm_words
 from .hashing import md5_hex, md5_int, md5_int_py
-from .textstats import fingerprint, norm_text, tokens
+from .textstats import _staged_tokens, fingerprint, norm_text, tokens
 
 __all__ = [
     "boilerplate_scrub",
@@ -113,12 +114,7 @@ def shingle_sets(
 ) -> DataFrame:
     """(doc_id, _sh) with tokenization and shingling staged as separate
     projections (see _shingles_from)."""
-    pre = docs.select(
-        "doc_id",
-        tokens(F.col(text_col)).alias("_t"),
-        norm_text(F.col(text_col)).alias("_n"),
-    )
-    return pre.select(
+    return _staged_tokens(docs, text_col).select(
         "doc_id", _shingles_from(F.col("_t"), F.col("_n"), n).alias("_sh")
     )
 
@@ -349,28 +345,22 @@ def dup_clusters(
 def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """60-bit SimHash of whitespace tokens → (doc_id, simhash).
 
-    Tokens are ``lower(coalesce(text, ''))`` with ASCII whitespace runs
-    collapsed to one space, trimmed of spaces and split on ' '; each
-    token hashes to its first 15 md5 hex chars (``md5_int_py(t, 15)``).
-    Bit i of the signature is set when more tokens have bit i set than
-    not (ties count as 0). The ``dd_simhash`` DuckDB oracle is the
-    definition; NULL text signs like '' there and here.
+    Tokens are the engine tokenizer's (``kernels.bpe.norm_words``, the
+    Python twin of ``textstats.tokens``); each token hashes to its first
+    15 md5 hex chars (``md5_int_py(t, 15)``). Bit i of the signature is
+    set when more tokens have bit i set than not (ties count as 0). The
+    ``dd_simhash`` DuckDB oracle is the definition; NULL text signs like
+    '' there and here.
 
     Arrow/numpy: the per-bit vote is one vectorized matrix reduction per
     document instead of 60×tokens interpreted lambda steps."""
-    import re as _re
-
     import numpy as np
     import pandas as pd
 
-    # re.ASCII: Python's default \s is Unicode-aware (NBSP, U+2003,
-    # U+001C); the engines' \s is ASCII-only
-    _ws = _re.compile(r"\s+", _re.ASCII)
     shifts = np.arange(60, dtype=np.uint64)
 
     def sign(t: str | None) -> int:
-        toks = _ws.sub(" ", (t or "").lower()).strip(" ").split(" ")
-        hs = np.array([md5_int_py(tok, 15) for tok in toks], dtype=np.uint64)
+        hs = np.array([md5_int_py(tok, 15) for tok in norm_words(t)], dtype=np.uint64)
         bits = (hs[:, None] >> shifts) & np.uint64(1)
         votes = 2 * bits.sum(0, dtype=np.int64) - len(hs)
         return int(((votes > 0).astype(np.uint64) << shifts).sum(dtype=np.uint64))

@@ -23,6 +23,7 @@ from .hashing import md5_hex, md5_int
 __all__ = [
     "STOPWORDS_EN",
     "norm_text",
+    "norm_text_sql",
     "tokens",
     "word_count",
     "token_stats",
@@ -64,12 +65,19 @@ def norm_text(col: Column) -> Column:
     """Deterministic normalization shared by all text operators:
     NULL→'' (so downstream size()/length() never mix NULL semantics
     across engines — Spark's size(NULL) is -1, DuckDB's len(NULL) is
-    NULL), lowercase, collapse whitespace runs, trim. Identical
-    semantics in DuckDB:
-    trim(regexp_replace(lower(coalesce(c, '')), '\\s+', ' ', 'g'))."""
+    NULL), lowercase, collapse ASCII whitespace runs to one space, trim
+    spaces. The one Column spelling of the recipe; ``norm_text_sql`` is
+    its Spark-SQL spelling, ``kernels.bpe.norm_words`` its Python twin
+    and the entry module's ``_NORM`` its DuckDB spelling."""
     return F.trim(
         F.regexp_replace(F.lower(F.coalesce(col, F.lit(""))), r"\s+", " ")
     )
+
+
+def norm_text_sql(s: str) -> str:
+    """Spark-SQL spelling of ``norm_text`` over the SQL expression ``s``
+    (the body of the registered ``norm_text`` SQL function)."""
+    return f"trim(regexp_replace(lower(coalesce({s}, '')), '\\\\s+', ' '))"
 
 
 def tokens(col: Column) -> Column:
@@ -87,23 +95,22 @@ def word_count(col: Column) -> Column:
 
 
 def _staged_tokens(
-    docs: DataFrame, text_col: str, extra: tuple[str, ...] = ()
+    docs: DataFrame, text_col: str, keep: tuple[str, ...] | list[str] = ("doc_id",)
 ) -> DataFrame:
-    """(doc_id, _t tokens, _n norm [, extra cols]) as a separate projection
-    — tokenization evaluated once per row regardless of how many stats
-    reference it downstream (no logical CSE in Catalyst; CollapseProject
-    keeps the split for non-cheap multi-referenced producers)."""
+    """(*keep, _t tokens, _n norm) as a separate projection — tokenization
+    evaluated once per row regardless of how many stats reference it
+    downstream (no logical CSE in Catalyst; CollapseProject keeps the
+    split for non-cheap multi-referenced producers)."""
     return docs.select(
-        "doc_id",
+        *keep,
         tokens(F.col(text_col)).alias("_t"),
         norm_text(F.col(text_col)).alias("_n"),
-        *extra,
     )
 
 
 def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-doc token statistics (A3/A9 analogue: counts per unit)."""
-    pre = _staged_tokens(docs, text_col, extra=(text_col,))
+    pre = _staged_tokens(docs, text_col, keep=("doc_id", text_col))
     t = F.col("_t")
     return pre.select(
         "doc_id",
@@ -119,14 +126,15 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_flags(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Gopher/C4-style quality gates as boolean columns + the verdict.
+def _gopher_gate() -> dict[str, Column]:
+    """Gopher/C4-style quality predicates, their stopword-hit evidence
+    and the English guess over the staged ``_t``/``_n`` columns
+    (``_staged_tokens``), unaliased — the one definition that
+    ``quality_flags``, ``lang_id`` and ``annotate_quality`` select from.
 
     All thresholds integer/boolean so cross-engine comparison is exact;
     mean word length is compared via cross-multiplication (chars vs
-    token count) to avoid float division.
-    """
-    pre = _staged_tokens(docs, text_col)
+    token count) to avoid float division."""
     t = F.col("_t")
     n_tok = F.size(t)
     n_chars = F.length(F.col("_n"))
@@ -140,14 +148,27 @@ def quality_flags(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
     # ≥1 stopword per 50 tokens: 50*hits >= n_tok
     stop_ok = F.lit(50) * stop_hits >= n_tok
-    return pre.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        stop_hits.alias("stop_hits"),
-        len_ok.alias("len_ok"),
-        wlen_ok.alias("wlen_ok"),
-        stop_ok.alias("stop_ok"),
-        (len_ok & wlen_ok & stop_ok).alias("is_quality"),
+    return {
+        "n_tokens": n_tok,
+        "stop_hits": stop_hits,
+        "len_ok": len_ok,
+        "wlen_ok": wlen_ok,
+        "stop_ok": stop_ok,
+        "is_quality": len_ok & wlen_ok & stop_ok,
+        # ≥1 stopword per 20 tokens reads as English
+        "lang_guess": F.when(
+            F.lit(20) * stop_hits >= n_tok, F.lit("en")
+        ).otherwise(F.lit("unknown")),
+    }
+
+
+def quality_flags(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Gopher/C4-style quality gates as boolean columns + the verdict
+    (integer evidence only; see ``_gopher_gate``)."""
+    g = _gopher_gate()
+    names = ("n_tokens", "stop_hits", "len_ok", "wlen_ok", "stop_ok", "is_quality")
+    return _staged_tokens(docs, text_col).select(
+        "doc_id", *[g[c].alias(c) for c in names]
     )
 
 
@@ -156,19 +177,12 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     swaps in per-language stopword lists; the operator shape — vectorized
     membership scan + threshold — is the same). Emits integer evidence and
     the guess, no float ratios."""
-    pre = _staged_tokens(docs, text_col)
-    t = F.col("_t")
-    stop_arr = F.array(*[F.lit(w) for w in STOPWORDS_EN])
-    hits = F.size(F.filter(t, lambda x: F.array_contains(stop_arr, x)))
-    n_tok = F.size(t)
-    guess = F.when(F.lit(20) * hits >= n_tok, F.lit("en")).otherwise(
-        F.lit("unknown")
-    )
-    return pre.select(
+    g = _gopher_gate()
+    return _staged_tokens(docs, text_col).select(
         "doc_id",
-        n_tok.alias("n_tokens"),
-        hits.alias("en_stop_hits"),
-        guess.alias("lang_guess"),
+        g["n_tokens"].alias("n_tokens"),
+        g["stop_hits"].alias("en_stop_hits"),
+        g["lang_guess"].alias("lang_guess"),
     )
 
 
@@ -245,30 +259,10 @@ def annotate_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
     path's annotator. Same predicates as quality_flags/lang_id; those
     stay as standalone per-doc stat tables, this one rides along with
     the full row so the heavy text column never crosses an exchange."""
-    pre = docs.select(
+    g = _gopher_gate()
+    return _staged_tokens(docs, text_col, keep=docs.columns).select(
         *docs.columns,
-        tokens(F.col(text_col)).alias("_t"),
-        norm_text(F.col(text_col)).alias("_n"),
-    )
-    t = F.col("_t")
-    n_tok = F.size(t)
-    n_chars = F.length(F.col("_n"))
-    stop_arr = F.array(*[F.lit(w) for w in STOPWORDS_EN])
-    stop_hits = F.size(F.filter(t, lambda x: F.array_contains(stop_arr, x)))
-    len_ok = (n_tok >= F.lit(5)) & (n_tok <= F.lit(100000))
-    n_word_chars = n_chars - (n_tok - F.lit(1))
-    wlen_ok = (n_word_chars >= F.lit(2) * n_tok) & (
-        n_word_chars <= F.lit(12) * n_tok
-    )
-    stop_ok = F.lit(50) * stop_hits >= n_tok
-    guess = F.when(F.lit(20) * stop_hits >= n_tok, F.lit("en")).otherwise(
-        F.lit("unknown")
-    )
-    return pre.select(
-        *docs.columns,
-        n_tok.alias("n_tokens"),
-        (len_ok & wlen_ok & stop_ok).alias("is_quality"),
-        guess.alias("lang_guess"),
+        *[g[c].alias(c) for c in ("n_tokens", "is_quality", "lang_guess")],
     )
 
 
@@ -718,7 +712,7 @@ def mojibake_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     (len(t) - len(replace(t, m, ''))) / len(m) -- summed over the fixed
     marker list: literal substrings on both engines, NO regex, so
     Java/RE2 dialect drift is structurally impossible (the lesson the
-    CLAUDE.md ASCII-\\s recipe teaches). Scan-local, codegen, no
+    CLAUDE.md whitespace-class recipe teaches). Scan-local, codegen, no
     shuffle; cost is a dozen replace passes over the text column,
     fused in one whole-stage-codegen projection.
 

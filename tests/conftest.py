@@ -27,3 +27,21 @@ def pages_df(spark, pages_pdf):
     df.persist()
     df.count()
     return df
+
+
+
+@pytest.fixture(scope="session")
+def edge_texts():
+    """One row per input class the normalize recipe (textstats.norm_text)
+    must treat alike on every engine: internal NBSP, leading/trailing
+    U+3000, vertical tab, U+001C, NULL, '' and mixed ASCII whitespace."""
+    return [
+        "alpha\xa0beta Gamma",
+        "\u3000Lead and trail\u3000",
+        " a\u3000",
+        "a\x0bb c",
+        "a\x1cb",
+        None,
+        "",
+        "  Mixed\tASCII \n whitespace\r\n\x0c",
+    ]

@@ -148,9 +148,9 @@ def test_signatures_independent_of_partitioning(spark, corpus):
 def test_simhash_matches_duckdb_oracle_on_edge_text(spark):
     """The dd_simhash oracle is the SimHash definition. Internal non-ASCII
     whitespace is a token character on both engines (their \\s is
-    ASCII-only), NULL signs like '', and a NULL in the Arrow batch must
-    not turn the 60-bit signatures into doubles. Trailing non-ASCII
-    whitespace is left out: DuckDB's trim strips U+3000, Spark's not."""
+    ASCII-only), vertical tab separates tokens, edge U+3000 survives the
+    trim, NULL signs like '', and a NULL in the Arrow batch must not turn
+    the 60-bit signatures into doubles."""
     import duckdb
 
     import __spark_entry__ as entrymod
@@ -163,6 +163,8 @@ def test_simhash_matches_duckdb_oracle_on_edge_text(spark):
         (5, ""),
         (6, "plain ascii text"),
         (7, "  Mixed\tASCII \n whitespace\r\n"),
+        (8, "a\x0bb c"),
+        (9, "\u3000alpha beta gamma\u3000"),
     ]
     # one partition: the NULL row shares its Arrow batch with the rest
     df = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)

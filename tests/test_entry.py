@@ -150,3 +150,24 @@ def test_every_query_is_oracled():
     ship without its DuckDB value check (rows-only queries would need
     an explicit exemption list here, with a reason)."""
     assert set(QUERIES) == set(ORACLES)
+
+
+def test_a1_explode_tokens_null_parity(spark, tmp_path):
+    """NULL texts tokenize like '' on both engines: with 20+ NULL rows
+    the '' token reaches the count threshold on both sides or neither."""
+    import pandas as pd
+
+    texts = [None] * 24 + ["the cat sat"] * 21 + ["Dog  and cat"] * 3
+    pd.DataFrame({"doc_id": range(len(texts)), "text": texts}).to_parquet(
+        tmp_path / "documents.parquet"
+    )
+    sdf = QUERIES["a1_explode_tokens"](spark, str(tmp_path))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+    )
+    ores = con.execute(ORACLES["a1_explode_tokens"])
+    ocols = [d[0] for d in ores.description]
+    got = _normalize([tuple(r) for r in sdf.collect()], list(sdf.columns))
+    assert got == _normalize(ores.fetchall(), ocols)
+    assert ("", 24) in {(r[1], r[0]) for r in got}

@@ -21,8 +21,13 @@ def registered(spark):
     register_udtfs(spark)
 
 
-def test_sql_udfs_match_dataframe_operators(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+def test_sql_udfs_match_dataframe_operators(spark, edge_texts):
+    edge = spark.createDataFrame(
+        [(-1 - i, t) for i, t in enumerate(edge_texts)], "doc_id long, text string"
+    )
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    ).unionByName(edge)
     docs.createOrReplaceTempView("docs_v")
     via_sql = spark.sql(
         """SELECT doc_id, norm_text(text) AS n, fingerprint16(text) AS fp,

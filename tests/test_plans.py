@@ -144,6 +144,19 @@ def test_tfidf_computes_token_explode_once(spark):
     assert plan.count("FileScan") <= 1      # checkpointed subtree
 
 
+@pytest.mark.parametrize("op", ["annotate_quality", "quality_flags", "shingle_sets"])
+def test_text_prep_tokenizes_once(spark, op):
+    """The staged token projection (textstats._staged_tokens) is the one
+    place these operators tokenize: a second tokenize tree in the
+    optimized plan means a copy bypassed the staging."""
+    from ocr_pipeline_spark.operators import dedup, textstats
+
+    fn = getattr(textstats, op, None) or getattr(dedup, op)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    plan = fn(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1
+
+
 def test_incremental_fingerprint_not_pushed_into_filter(spark):
     """The coalesce-wrapped fingerprint join key: no inferred isnotnull
     may re-inline the normalize+md5-over-text tree into a Filter."""

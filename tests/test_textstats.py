@@ -138,9 +138,17 @@ def test_null_text_is_engine_portable(spark):
     import __spark_entry__ as entrymod
     from ocr_pipeline_spark.operators.textstats import token_stats
 
-    df = spark.createDataFrame(
-        [(1, None), (2, "Hello,  World")], "doc_id long, text string"
-    )
+    # 3-6: vertical tab separates on Java's \s (not RE2's); trim strips
+    # spaces only, not U+3000; U+001C is no separator anywhere
+    rows = [
+        (1, None),
+        (2, "Hello,  World"),
+        (3, "a\x0bb"),
+        (4, " a\u3000"),
+        (5, "\u3000a b"),
+        (6, "a\x1cb"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r.asDict() for r in token_stats(df).collect()}
     # '' normalizes to one empty whitespace token, zero words/punct
     assert got[1] == {
@@ -149,9 +157,7 @@ def test_null_text_is_engine_portable(spark):
     }
 
     con = duckdb.connect()
-    con.register(
-        "documents", pd.DataFrame({"doc_id": [1, 2], "text": [None, "Hello,  World"]})
-    )
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
     orows = {
         r[0]: r
         for r in con.execute(entrymod.oracle_sql()["ts_token_stats"]).fetchall()
