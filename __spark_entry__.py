@@ -1307,8 +1307,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def _p_hot_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The salting pre-pass (operators/partitioning.find_hot_domains) as
-    a value-checked table: per-domain row weight over the deterministic
+    """The hot-domain diagnostic (operators/partitioning.find_hot_domains)
+    as a value-checked table: per-domain row weight over the deterministic
     synth-page urls + the hot flag at the ``HOT_SHARE`` (5%) share. The
     synth corpus has 3 planted hot domains (~16-19% each) over a ~4%
     tail, so both flag values are exercised."""

@@ -21,7 +21,7 @@ Layout:
   sources/     deterministic synthetic pages-table generator (seeded)
   operators/   Spark DataFrame operators: extraction, partitioning/salting,
                lineage manifests + resume, dedup, similarity, text stats
-  plans/       end-to-end job assembly (scan → salt → extract → sink)
+  plans/       end-to-end job assembly (scan → hash(url) → extract → sink)
   streaming/   micro-batch trigger analogue of the reference's buckets
 """
 

@@ -52,7 +52,6 @@ def _cmd_extract(args) -> None:
         args.out,
         args.manifest,
         n_buckets=args.buckets,
-        salting=not args.no_salting,
     )
     print(f"run_id={run_id}")
 
@@ -388,7 +387,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--out", required=True)
     p.add_argument("--manifest", required=True)
     p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--no-salting", action="store_true")
     p.set_defaults(fn=_cmd_extract)
 
     p = sub.add_parser("stream", help="streaming extraction")

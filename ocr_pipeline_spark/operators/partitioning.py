@@ -1,9 +1,10 @@
-"""hash(url) partitioning with salt-based hot-domain skew mitigation.
+"""Hot-domain detection and salting for a domain-keyed repartition.
 
-North-rule requirement (SURVEY.md §4.3): AQE's skew handling only rewrites
-skewed *joins/aggregations*; a skewed ``repartition`` feeding a
-``mapInPandas`` kernel is invisible to it, so salting is explicit job-level
-logic:
+Off the extraction job's path (it keys on hash(url), which spreads hot
+domains with no salt): the ``p_hot_domains`` diagnostic and the
+benchmark's partitioning layer use these. AQE's skew handling only
+rewrites skewed *joins/aggregations*, not a skewed ``repartition`` feeding
+``mapInPandas``, so salting a domain key is explicit logic:
 
 1. a cheap pre-pass aggregates ROW counts per domain — it scans the url
    column only. (Counting payload *bytes* would be more precise but

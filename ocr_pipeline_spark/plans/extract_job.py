@@ -1,17 +1,17 @@
 """The flagship job: pages table → extracted table + lineage manifests.
 
-Rebuild lifecycle (SURVEY.md §3.3), one job, one wide stage boundary:
+Rebuild lifecycle (SURVEY.md §3.3):
 
     pages (scan; Catalyst prunes to url/html)
     → resume anti-join against committed manifest buckets
-    → salted repartition on hash(domain, salt)     [the only shuffle]
+    → repartition(P, hash(url))                    [shuffle: url, html]
     → mapInPandas fused extraction kernel          [Arrow-batched]
-    → write extracted (bucket-partitioned) + manifest rows
+    → write extracted + manifest rows   [shuffle on bucket: extracted text]
 
 Scale notes (100 TB / 10^12 docs):
-- the shuffle moves only (url, html) — and would be skipped entirely if the
-  input table is already bucketed by url (Iceberg bucket(url) partitioning);
-  it exists to balance payload bytes across executors when it is not;
+- the first shuffle moves only (url, html); url is the finest key, so a hot
+  domain's urls spread over every kernel task with no salt or pre-pass
+  (AQE cannot rebalance a mapInPandas stage, so the key must);
 - nothing block-level ever shuffles; the fused kernel keeps fan-out/fan-in
   inside one Arrow batch;
 - resume cost is one manifest-scan anti-join, independent of data size.
@@ -33,7 +33,6 @@ from ..operators.lineage import (
     write_extracted_with_manifest,
 )
 from ..operators.metrics import StageMetrics
-from ..operators.partitioning import find_hot_domains, salted_repartition
 
 __all__ = ["run_extraction"]
 
@@ -46,14 +45,13 @@ def run_extraction(
     run_id: str | None = None,
     n_buckets: int = 64,
     num_partitions: int | None = None,
-    salting: bool = True,
     metrics: StageMetrics | None = None,
 ) -> str:
     """Run (or resume) the extraction job. Returns the run_id.
 
     Logs per-stage docs/sec (north rule): kernel-cpu rate via
     accumulators plus job wall docs/sec. The job wall time covers the
-    whole call, both eager pre-passes included."""
+    whole call, the eager bucket pre-pass included."""
     t0 = time.monotonic()
     run_id = run_id or uuid.uuid4().hex
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
@@ -65,8 +63,7 @@ def run_extraction(
     # cheap pre-pass on the input side (url column only — html pruned):
     # which buckets does this run own? Drives the manifest read-back filter.
     run_buckets = [r["bucket"] for r in todo.select("bucket").distinct().collect()]
-    hot = find_hot_domains(todo) if salting else []
-    balanced = salted_repartition(todo, num_partitions, hot)
+    balanced = todo.repartition(num_partitions, "url")
     extracted = with_bucket(extract_pages(balanced, metrics=metrics), n_buckets)
     write_extracted_with_manifest(
         extracted, out_path, manifest_path, run_id, run_buckets=run_buckets

@@ -40,19 +40,22 @@ def test_run_extraction_logs_job_line(spark, pages_df, tmp_path, capfd):
 def test_job_line_times_the_prepasses(
     spark, pages_df, tmp_path, capfd, monkeypatch
 ):
-    """The "job" wall starts at call entry: a slow hot-domain pre-pass
-    shows up in wall_secs, which matches the call timed from outside."""
+    """The "job" wall starts at call entry: a slow resume pre-pass
+    (the committed-bucket read) shows up in wall_secs, which matches the
+    call timed from outside."""
     import time
 
     from ocr_pipeline_spark.plans import extract_job
 
-    real = extract_job.find_hot_domains
+    real = extract_job.committed_buckets
+    calls = []
 
-    def slow(pages):
+    def slow(spark, manifest_path):
+        calls.append(manifest_path)
         time.sleep(0.5)
-        return real(pages)
+        return real(spark, manifest_path)
 
-    monkeypatch.setattr(extract_job, "find_hot_domains", slow)
+    monkeypatch.setattr(extract_job, "committed_buckets", slow)
     t0 = time.monotonic()
     run_extraction(
         spark,
@@ -67,6 +70,7 @@ def test_job_line_times_the_prepasses(
         for line in capfd.readouterr().out.splitlines()
         if line.startswith('{"stage": "job"')
     ]
+    assert len(calls) == 1
     assert len(job) == 1
     assert job[0]["wall_secs"] >= 0.5
     assert job[0]["wall_secs"] >= outer - 0.25

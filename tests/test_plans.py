@@ -260,6 +260,34 @@ def test_interval_join_uses_equi_keys(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_extraction_job_shuffles_on_url_alone(spark, pages_df, tmp_path,
+                                             monkeypatch):
+    """run_extraction feeds the kernel through a hash(url) repartition:
+    the finest key balances hot domains with no salt, no domain key and
+    no hot-domain pre-pass (AQE cannot rebalance a mapInPandas stage)."""
+    import re
+
+    from ocr_pipeline_spark.plans import extract_job
+
+    captured = []
+    monkeypatch.setattr(
+        extract_job, "write_extracted_with_manifest",
+        lambda df, *args, **kwargs: captured.append(df),
+    )
+    extract_job.run_extraction(
+        spark, pages_df, str(tmp_path / "out"), str(tmp_path / "man"),
+        n_buckets=8, num_partitions=4,
+    )
+    lines = _plan(captured[0]).splitlines()
+    exchanges = [ln for ln in lines if "Exchange" in ln]
+    # parse_url prints as ParseUrlEvaluator in the physical plan
+    assert exchanges
+    assert not any(re.search(r"parse_?url", ln, re.I) for ln in exchanges)
+    below = lines[next(i for i, ln in enumerate(lines) if "MapInPandas" in ln):]
+    feed = next(ln for ln in below if "Exchange" in ln)
+    assert re.search(r"Exchange hashpartitioning\(url#\d+, 4\)", feed), feed
+
+
 def test_hot_domain_prepass_reads_urls_only(spark, tmp_path):
     """find_hot_domains' aggregate scans the url column, not the payload
     (length(html) would force whole-corpus IO at 100 TB)."""
