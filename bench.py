@@ -1,11 +1,16 @@
 """Benchmark harness (driver contract + north-rule scaling evidence).
 
 Default mode: run the headline queries at ``$SPARK_GRAFT_SF_DIR``
-(default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and print
-ONE JSON line::
+(default ``DEFAULT_SF_DIR``) on ``local[$SPARK_GRAFT_CPUS]``. The full
+result goes to ``bench_result.json`` next to this file::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
+
+and stdout ends with ONE short JSON line, ``value`` first, so a log cut
+to its tail still carries the headline::
+
+    {"value": <total sec>, "unit": "sec", "metric": "...", "full": "bench_result.json"}
 
 ``--scaling`` mode (north rule, BASELINE.json): run the SAME fused
 extraction job on the SAME synthesized pages table at two parallelism
@@ -28,6 +33,12 @@ import sys
 import time
 
 from pyspark.sql import SparkSession
+
+RESULT_FILE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "bench_result.json"
+)
+# no progress bars: they interleave with the result line on the console
+QUIET = {"spark.ui.showConsoleProgress": "false"}
 
 HEADLINE = [
     # relational core
@@ -200,7 +211,7 @@ def run_headline(sf_dir: str, cores: str) -> dict:
     from ocr_pipeline_spark.operators.extraction import extract_pages
     from ocr_pipeline_spark.session import get_spark
 
-    spark = get_spark("bench", cores=cores)
+    spark = get_spark("bench", cores=cores, extra_conf=QUIET)
     sf = _sf_of(sf_dir)
     pages_parquet = _ensure_pages(spark, sf)
     qs = entrymod.queries()
@@ -329,7 +340,7 @@ def scaling_level(cores: int, path: str) -> float:
     from ocr_pipeline_spark.operators.extraction import extract_pages
     from ocr_pipeline_spark.session import get_spark
 
-    spark = get_spark(f"bench-scaling-{cores}", cores=cores)
+    spark = get_spark(f"bench-scaling-{cores}", cores=cores, extra_conf=QUIET)
     pages = spark.read.parquet(path)
     _force(extract_pages(pages))
     dt = float("inf")
@@ -417,6 +428,14 @@ def run_scaling(n_small: int, sf: float, n_pages: int | None) -> dict:
     }
 
 
+def emit(out: dict, path: str = RESULT_FILE) -> None:
+    """Write the full result to ``path``; end stdout with its headline."""
+    with open(path, "w") as f:
+        json.dump(out, f, indent=1)
+    head = {k: out[k] for k in ("value", "unit", "metric")}
+    print(json.dumps({**head, "full": os.path.basename(path)}))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scaling", action="store_true")
@@ -442,7 +461,7 @@ def main() -> None:
             write_pages_parquet,
         )
 
-        spark = get_spark("bench-scaling-gen", cores=8)
+        spark = get_spark("bench-scaling-gen", cores=8, extra_conf=QUIET)
         write_pages_parquet(
             spark, args.pages_path, args.n_pages,
             chunk=max(1, args.n_pages // args.n_files),
@@ -457,7 +476,7 @@ def main() -> None:
         out = run_scaling(args.n_small, _sf_of(sf_dir), args.n_pages)
     else:
         out = run_headline(sf_dir, cores)
-    print(json.dumps(out))
+    emit(out)
 
 
 if __name__ == "__main__":

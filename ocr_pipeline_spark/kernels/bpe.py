@@ -67,10 +67,12 @@ TRAIN_CORPUS: tuple[str, ...] = (
 )
 
 # re.ASCII: Python's default \s is Unicode-aware (NBSP, em-space, ...)
-# while Java's \s — the Spark expression path — and RE2's \s — the
-# DuckDB oracle — are ASCII-only [ \t\n\x0b\f\r]. The kernel IS the
-# spec for bpe_encode_pandas, so it must tokenize exactly like the
-# engines or the "equal by construction" paths diverge on web text.
+# while Java's \s — the Spark expression path — is ASCII-only
+# [ \t\n\x0b\f\r], which re.ASCII matches exactly. RE2's \s — the
+# DuckDB oracle — lacks \x0b, so the oracle spells that class out. The
+# kernel IS the spec for bpe_encode_pandas, so it must tokenize exactly
+# like the engines or the "equal by construction" paths diverge on web
+# text.
 _WS = re.compile(r"\s+", re.ASCII)
 
 

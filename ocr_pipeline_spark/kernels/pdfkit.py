@@ -79,11 +79,20 @@ def build_pdf(paragraphs: list[list[str]]) -> bytes:
     return b"%PDF-1.4\n" + b"\n".join(objs) + b"\ntrailer << /Root 1 0 R >>\n%%EOF\n"
 
 
+def _text_objects(doc: str):
+    """``BT ... ET`` matches, in order. The scan stops at the last ``ET``:
+    every ``BT`` before it matches there or earlier, and one after it has
+    no ``ET`` to match, so no search runs to the end of the document once
+    per unclosed ``BT`` (which made the scan quadratic)."""
+    end = doc.rfind("ET")
+    return _TEXTOBJ_RE.finditer(doc, 0, end + 2) if end >= 0 else iter(())
+
+
 def parse_pdf_blocks(data: bytes) -> list[Block]:
     """PDF bytes → ordered Blocks (reading order: top→bottom, left→right)."""
     doc = data.decode("latin-1")
     runs = []  # (x, y, text, span_start, span_end)
-    for tobj in _TEXTOBJ_RE.finditer(doc):
+    for tobj in _text_objects(doc):
         x = y = 0.0
         base = tobj.start(1)
         for m in _OP_RE.finditer(tobj.group(1)):

@@ -25,7 +25,8 @@ deterministic dynamic-partition overwrite of that bucket.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -50,11 +51,16 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def committed_buckets(spark: SparkSession, manifest_path: str) -> DataFrame:
-    """Manifest rows of prior runs; empty DataFrame if none exist yet."""
+    """Buckets committed by prior runs; empty DataFrame if none exist yet.
+
+    The manifest is read with its known schema (no inference job). The
+    first-run empty relation is a local one, so collecting it runs no job
+    and the resume anti-join against it folds away."""
     try:
-        return spark.read.parquet(manifest_path).select("bucket").distinct()
-    except Exception:  # first run: no manifest table
-        return spark.createDataFrame([], "bucket int")
+        manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
+    except AnalysisException:  # first run: no manifest table
+        return spark.sql("SELECT CAST(NULL AS INT) AS bucket WHERE false")
+    return manifest.select("bucket").distinct()
 
 
 def pending(pages_bucketed: DataFrame, committed: DataFrame) -> DataFrame:
@@ -91,36 +97,55 @@ def write_extracted_with_manifest(
     whole function is one ``append`` + one manifest ``append`` in a single
     transaction.
 
-    The manifest is aggregated from the rows READ BACK from ``out_path``
-    (restricted to ``run_buckets``, computed cheaply from the input side),
+    The manifest is aggregated from the rows READ BACK from ``out_path``,
     not from ``extracted_bucketed``: referencing the un-materialized plan
     twice would run the whole extraction kernel a second time, and a
     manifest derived from committed bytes is the stronger integrity claim
-    (it describes what is actually on disk).
+    (it describes what is actually on disk). The write observes the set
+    of buckets it wrote, so the read-back opens only those bucket
+    directories, with the written schema (no inference job, no listing of
+    other runs' buckets). Nothing written (fully-resumed or empty input)
+    means no manifest rows.
+
+    ``run_buckets``: optional caller-known bucket set; an empty list skips
+    the write, and the read-back is restricted to it.
     """
     spark = extracted_bucketed.sparkSession
     if run_buckets is not None and not run_buckets:
         return  # nothing pending (fully-resumed or empty input): no-op
     # small-files control: partitionBy writes one file per (task, bucket)
-    # pair — from P salted tasks that is up to P × buckets shards per run.
+    # pair — from P kernel tasks that is up to P × buckets shards per run.
     # Repartitioning on bucket first yields ONE file per bucket per run;
     # the shuffle moves extracted text (~10× smaller than the page
     # payloads that already moved).
     extracted_bucketed = extracted_bucketed.repartition(F.col("bucket"))
+    # observed on the written root, above the exchange: an observation
+    # below it is dropped when AQE proves the plan empty at runtime, and
+    # Observation.get then raises instead of returning an empty set.
+    # Set union is idempotent, so a retried task cannot corrupt it.
+    wrote = Observation()
     # per-WRITE option, not spark.conf.set: a session-wide mutation
     # silently flips every later mode("overwrite")+partitionBy write in
     # the same session to partition-level semantics (it turned
     # compact_sketch_log's full-log replace into an append — the r5
     # suite-order bug)
     (
-        extracted_bucketed.write.mode("overwrite")
+        extracted_bucketed.observe(wrote, F.collect_set("bucket").alias("b"))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(out_path)
     )
-    written = spark.read.parquet(out_path)
+    buckets = set(wrote.get["b"])
     if run_buckets is not None:
-        written = written.filter(F.col("bucket").isin(run_buckets))
+        buckets &= set(run_buckets)
+    if not buckets:
+        return
+    written = (
+        spark.read.schema(extracted_bucketed.schema)
+        .option("basePath", out_path)
+        .parquet(*(f"{out_path}/bucket={b}" for b in sorted(buckets)))
+    )
     manifest = (
         written.groupBy("bucket")
         .agg(

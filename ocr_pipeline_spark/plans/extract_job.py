@@ -6,7 +6,9 @@ Rebuild lifecycle (SURVEY.md §3.3):
     → resume anti-join against committed manifest buckets
     → repartition(P, hash(url))                    [shuffle: url, html]
     → mapInPandas fused extraction kernel          [Arrow-batched]
-    → write extracted + manifest rows   [shuffle on bucket: extracted text]
+    → write extracted, observing the buckets written
+                                        [shuffle on bucket: extracted text]
+    → read back those buckets → manifest rows
 
 Scale notes (100 TB / 10^12 docs):
 - the first shuffle moves only (url, html); url is the finest key, so a hot
@@ -14,7 +16,11 @@ Scale notes (100 TB / 10^12 docs):
   (AQE cannot rebalance a mapInPandas stage, so the key must);
 - nothing block-level ever shuffles; the fused kernel keeps fan-out/fan-in
   inside one Arrow batch;
-- resume cost is one manifest-scan anti-join, independent of data size.
+- resume cost is one manifest-scan anti-join, independent of data size;
+  a call whose manifest already covers every bucket returns before any
+  job touches the pages;
+- no eager pre-pass over the input: the write reports the buckets it
+  wrote, so the manifest read-back never lists other runs' buckets.
 """
 
 from __future__ import annotations
@@ -51,23 +57,22 @@ def run_extraction(
 
     Logs per-stage docs/sec (north rule): kernel-cpu rate via
     accumulators plus job wall docs/sec. The job wall time covers the
-    whole call, the eager bucket pre-pass included."""
+    whole call, the committed-bucket read included."""
     t0 = time.monotonic()
     run_id = run_id or uuid.uuid4().hex
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
     metrics = metrics or StageMetrics(spark, stages=("extract",))
 
-    todo = pending(
-        with_bucket(pages, n_buckets), committed_buckets(spark, manifest_path)
-    )
-    # cheap pre-pass on the input side (url column only — html pruned):
-    # which buckets does this run own? Drives the manifest read-back filter.
-    run_buckets = [r["bucket"] for r in todo.select("bucket").distinct().collect()]
-    balanced = todo.repartition(num_partitions, "url")
-    extracted = with_bucket(extract_pages(balanced, metrics=metrics), n_buckets)
-    write_extracted_with_manifest(
-        extracted, out_path, manifest_path, run_id, run_buckets=run_buckets
-    )
+    committed = committed_buckets(spark, manifest_path)
+    # at most n_buckets ints; no job on a first run (no manifest yet). A
+    # manifest covering every bucket means nothing can be pending: return
+    # before any job touches the pages.
+    done = {r["bucket"] for r in committed.collect()}
+    if not done.issuperset(range(n_buckets)):
+        todo = pending(with_bucket(pages, n_buckets), committed)
+        balanced = todo.repartition(num_partitions, "url")
+        extracted = with_bucket(extract_pages(balanced, metrics=metrics), n_buckets)
+        write_extracted_with_manifest(extracted, out_path, manifest_path, run_id)
     wall = time.monotonic() - t0
     rep = metrics.log()
     n_docs = rep.get("extract", {}).get("rows", 0)

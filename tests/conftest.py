@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from ocr_pipeline_spark.session import get_spark
@@ -11,6 +13,25 @@ def spark():
     s = get_spark("ocr_pipeline_spark-tests", cores=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def job_ids(spark):
+    """``job_ids(fn)`` runs ``fn()`` in a fresh Spark job group and returns
+    the ids of the jobs it launched."""
+    sc = spark.sparkContext
+
+    def run(fn) -> list[int]:
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -2,6 +2,13 @@
 
 from __future__ import annotations
 
+import re
+import time
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from ocr_pipeline_spark.kernels import pdfkit
 from ocr_pipeline_spark.kernels.extract import extract_document
 from ocr_pipeline_spark.kernels.pdfkit import build_pdf, parse_pdf_blocks
 
@@ -43,3 +50,51 @@ def test_pdf_dispatch_and_garbage():
 
     bad = extract_document(b"%PDF-1.4\ngarbage\n%%EOF")
     assert bad.kind == "pdf" and bad.error is not None
+
+
+# -- bounded text-object scan ----------------------------------------------
+
+# the unbounded scan the bounded one replaced: the oracle it must equal
+_ORACLE_RE = re.compile(r"BT(.*?)ET", re.S)
+
+_pdf_tokens = st.lists(
+    st.sampled_from(
+        ["BT", "ET", "B", "T", "E", " ", "\n", "x", "(", ")", "\\", "Tj",
+         "Td", "TD", "12", "-3.5", "/F1", "BET", "BTET", "ETB",
+         "(hi) Tj", "(a\\)b) Tj", "0 -30 Td", "72 700 Td"]
+    ),
+    max_size=60,
+).map("".join)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_pdf_tokens)
+def test_text_objects_equal_unbounded_scan(doc):
+    got = [(m.span(), m.group(1)) for m in pdfkit._text_objects(doc)]
+    want = [(m.span(), m.group(1)) for m in _ORACLE_RE.finditer(doc)]
+    assert got == want
+
+
+@settings(max_examples=200, deadline=None)
+@given(_pdf_tokens)
+def test_parse_pdf_blocks_equals_unbounded_scan(doc):
+    data = ("%PDF-1.4\n" + doc).encode("latin-1")
+    got = parse_pdf_blocks(data)
+    real = pdfkit._text_objects
+    pdfkit._text_objects = _ORACLE_RE.finditer
+    try:
+        want = parse_pdf_blocks(data)
+    finally:
+        pdfkit._text_objects = real
+    assert got == want
+
+
+def test_unclosed_text_objects_parse_in_linear_time():
+    """Every BT with no ET after it used to rescan to the end of the
+    document: 40 KB of them took seconds, 1 MB would take hours."""
+    for tail in (b"", b"ET"):
+        data = b"%PDF-1.4\n" + b"BT x " * 200_000 + tail  # 1 MB
+        t0 = time.monotonic()
+        r = extract_document(data)
+        assert time.monotonic() - t0 < 1.0
+        assert r.kind == "pdf" and r.error is not None

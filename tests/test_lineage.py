@@ -2,14 +2,18 @@
 
 from __future__ import annotations
 
+import glob
+import os
+import re
+
 from pyspark.sql import functions as F
 
 from ocr_pipeline_spark.operators.lineage import (
     committed_buckets,
-    pending,
     with_bucket,
 )
 from ocr_pipeline_spark.plans.extract_job import run_extraction
+from ocr_pipeline_spark.sources.synth_pages import PAGES_SCHEMA
 
 
 def test_bucket_assignment_is_stable(spark, pages_df):
@@ -20,10 +24,16 @@ def test_bucket_assignment_is_stable(spark, pages_df):
     )
 
 
-def test_full_run_then_resume_is_noop(spark, pages_df, tmp_path):
+def _data_files(out: str) -> dict[str, float]:
+    return {f: os.path.getmtime(f) for f in glob.glob(f"{out}/bucket=*/*.parquet")}
+
+
+def test_full_run_then_resume_is_noop(spark, pages_df, tmp_path, job_ids):
     out = str(tmp_path / "extracted")
     man = str(tmp_path / "manifests")
-    run_extraction(spark, pages_df, out, man, run_id="r1", n_buckets=8)
+    pages_df.write.parquet(str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    run_extraction(spark, pages, out, man, run_id="r1", n_buckets=8)
 
     got = spark.read.parquet(out)
     assert got.count() == pages_df.count()
@@ -31,10 +41,73 @@ def test_full_run_then_resume_is_noop(spark, pages_df, tmp_path):
     manifest = spark.read.parquet(man)
     assert manifest.count() == 8
     assert manifest.agg(F.sum("row_count")).first()[0] == pages_df.count()
+    files = _data_files(out)
 
-    # resume with everything committed → zero pending rows
-    todo = pending(with_bucket(pages_df, 8), committed_buckets(spark, man))
-    assert todo.count() == 0
+    # re-run with every bucket committed: the call reads the committed
+    # bucket set and nothing else. The page files are gone, so any job
+    # over the pages would fail.
+    for f in glob.glob(str(tmp_path / "pages" / "*.parquet")):
+        os.remove(f)
+    rerun = job_ids(
+        lambda: run_extraction(spark, pages, out, man, run_id="r2", n_buckets=8)
+    )
+    bare = job_ids(lambda: committed_buckets(spark, man).collect())
+    assert len(rerun) == len(bare)
+    assert spark.read.parquet(man).count() == 8
+    assert _data_files(out) == files
+
+
+def test_nothing_pending_with_incomplete_manifest_is_noop(spark, pages_pdf,
+                                                          tmp_path):
+    """3 urls in 64 buckets: the manifest never covers every bucket, so a
+    re-run goes through the pipeline on zero pending rows. It must write
+    nothing and raise nothing (under AQE the plan is proven empty at
+    runtime)."""
+    out = str(tmp_path / "extracted")
+    man = str(tmp_path / "manifests")
+    three = spark.createDataFrame(pages_pdf.head(3), schema=PAGES_SCHEMA)
+    run_extraction(spark, three, out, man, run_id="r1", n_buckets=64)
+    committed = spark.read.parquet(man).collect()
+    assert 0 < len(committed) <= 3
+    files = _data_files(out)
+
+    run_extraction(spark, three, out, man, run_id="r2", n_buckets=64)
+    assert sorted(spark.read.parquet(man).collect()) == sorted(committed)
+    assert _data_files(out) == files
+
+
+def test_resume_reads_back_only_its_own_buckets(spark, pages_df, tmp_path,
+                                               monkeypatch):
+    """The manifest of a resumed run is derived from files of the buckets
+    it wrote; the directories of earlier runs' buckets are never opened."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    out = str(tmp_path / "extracted")
+    man = str(tmp_path / "manifests")
+    half = with_bucket(pages_df, 8).filter(F.col("bucket") < 4).drop("bucket")
+    run_extraction(spark, half, out, man, run_id="r1", n_buckets=8)
+
+    reads = []
+    real = DataFrameReader.parquet
+
+    def capture(self, *paths, **options):
+        df = real(self, *paths, **options)
+        if any(str(p).startswith(out) for p in paths):
+            reads.append(df)
+        return df
+
+    monkeypatch.setattr(DataFrameReader, "parquet", capture)
+    run_extraction(spark, pages_df, out, man, run_id="r2", n_buckets=8)
+    monkeypatch.undo()
+
+    r2 = {r["bucket"] for r in spark.read.parquet(man).collect()
+          if r["run_id"] == "r2"}
+    assert r2 == set(range(4, 8))
+    opened = [f for df in reads for f in df.inputFiles()]
+    assert opened
+    for f in opened:
+        b = re.search(r"/bucket=(\d+)/", f)
+        assert b and int(b.group(1)) in r2, f
 
 
 def test_partial_failure_resume_completes_without_dupes(spark, pages_df, tmp_path):
@@ -80,8 +153,6 @@ def test_bytes_hash_is_order_independent(spark, pages_df, tmp_path):
 
 
 def test_compaction_one_file_per_bucket(spark, pages_df, tmp_path):
-    import glob
-
     out = str(tmp_path / "extracted")
     run_extraction(spark, pages_df, out, str(tmp_path / "man"),
                    run_id="c1", n_buckets=4, num_partitions=8)

@@ -288,6 +288,22 @@ def test_extraction_job_shuffles_on_url_alone(spark, pages_df, tmp_path,
     assert re.search(r"Exchange hashpartitioning\(url#\d+, 4\)", feed), feed
 
 
+def test_extraction_job_count(spark, pages_df, tmp_path, job_ids):
+    """A first run launches no eager bucket pre-pass and no schema
+    inference for the read-back: the write observes the buckets it wrote
+    and only those directories are read back, with the written schema.
+    The job before this design launched 11 Spark jobs here: 3 for the
+    pre-pass, 2 for broadcasting an RDD-backed empty manifest into the
+    resume anti-join, 1 to infer the read-back schema; this one runs 5."""
+    from ocr_pipeline_spark.plans.extract_job import run_extraction
+
+    jobs = job_ids(lambda: run_extraction(
+        spark, pages_df, str(tmp_path / "out"), str(tmp_path / "man"),
+        n_buckets=8,
+    ))
+    assert len(jobs) <= 11 - 4, jobs
+
+
 def test_hot_domain_prepass_reads_urls_only(spark, tmp_path):
     """find_hot_domains' aggregate scans the url column, not the payload
     (length(html) would force whole-corpus IO at 100 TB)."""
