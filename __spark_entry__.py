@@ -65,6 +65,7 @@ from ocr_pipeline_spark.operators.clustering import (
 )
 from ocr_pipeline_spark.operators.collocations import collocations
 from ocr_pipeline_spark.operators.lm import (
+    SCALE_BP,
     bigram_surprisal,
     dsir_weights,
     head_split,
@@ -176,6 +177,7 @@ from ocr_pipeline_spark.kernels.bpe import (
 )
 from ocr_pipeline_spark.kernels.bpe import default_merges as kernel_default_merges
 from ocr_pipeline_spark.kernels.bpe import vocab_of as kernel_vocab_of
+from ocr_pipeline_spark.kernels.materialize import BLOCK_SEPARATOR
 from ocr_pipeline_spark.operators.bpe import bpe_encode, bpe_train
 from ocr_pipeline_spark.plans.curate_job import curate, curate_incremental
 from ocr_pipeline_spark.operators.textstats import (
@@ -259,6 +261,59 @@ def _grams_sql(n: int) -> str:
         f"list_distinct(list_transform(range(0, len({_TOKS}) - {n - 1}), "
         f"i -> array_to_string(({_TOKS})[i+1:i+{n}], ' '))) end"
     )
+
+
+# DuckDB spellings of the operators/lm.py recipe steps, one each; the ten
+# LM-family oracles are built from them. _THASHES: each token's 16-hex
+# md5 (textstats.token_hash) as one array per document.
+_THASHES = f"list_transform({_TOKS}, x -> substr(md5(x), 1, 16))"
+
+
+def _bits_sql(q: str) -> str:
+    """lm._bits: whole bits of a BIGINT q >= 1, floor(log2(q)) + 1."""
+    return f"length(bin({q}))"
+
+
+def _bp_sql(bits: str) -> str:
+    """lm._bp: mean ``bits`` per token (``n_toks``) in basis points."""
+    return f"cast(({SCALE_BP} * {bits}) // n_toks as bigint)"
+
+
+def _unigram_sql(src: str) -> str:
+    """lm._unigram_bits over the (.., thash) rows of CTE ``src``: CTEs
+    c (thash, cnt), s (n_total, vocab) and lm (thash, cnt, vocab, bits)."""
+    return f"""c AS (SELECT thash, cast(count(*) as bigint) AS cnt
+                  FROM {src} GROUP BY thash),
+            s AS (SELECT cast(sum(cnt) as bigint) AS n_total,
+                         cast(count(*) as bigint) AS vocab FROM c),
+            lm AS (SELECT thash, cnt, vocab,
+                     {_bits_sql("(n_total + vocab) // (cnt + 1)")} AS bits
+                   FROM c CROSS JOIN s)"""
+
+
+def _pairs_sql(src: str) -> str:
+    """lm._pair_rows: (doc_id, a, b) per adjacent pair of the ``hs``
+    hash arrays of ``src``; DuckDB's positional multi-unnest zips the
+    slice pair like Spark's arrays_zip."""
+    return f"""SELECT doc_id, unnest(hs[1:(len(hs)-1)]) AS a,
+                   unnest(hs[2:len(hs)]) AS b
+            FROM {src} WHERE len(hs) >= 2"""
+
+
+# lm.lm_surprisal and lm.head_split as CTEs: ex (doc_id, thash) per token,
+# the unigram table, sc (doc_id, n_toks, sum_bits, surprisal_bp) and ph,
+# the ntile(3) split by (surprisal_bp, doc_id).
+_SURPRISAL_SQL = f"""ex AS (SELECT doc_id, unnest({_THASHES}) AS thash
+                  FROM documents),
+            {_unigram_sql("ex")},
+            sc AS (SELECT *, {_bp_sql("sum_bits")} AS surprisal_bp
+                   FROM (SELECT doc_id, cast(count(*) as bigint) AS n_toks,
+                                cast(sum(bits) as bigint) AS sum_bits
+                         FROM ex JOIN lm USING (thash) GROUP BY doc_id)),
+            ph AS (SELECT doc_id, surprisal_bp,
+                          cast(ntile(3) OVER (ORDER BY surprisal_bp, doc_id)
+                               as bigint) AS split
+                   FROM sc)"""
 
 
 # ---------------------------------------------------------------------------
@@ -2786,7 +2841,7 @@ def _x_regroup_oracle() -> str:
         )
         if not kept:
             continue
-        text = "\n\n".join(b.text for b in kept)
+        text = BLOCK_SEPARATOR.join(b.text for b in kept)
         rows.append(f"('{_sql_quote(u)}', '{_sql_quote(text)}', {len(kept)})")
     return f"""
         SELECT url, text, n_content_blocks::BIGINT AS n_content_blocks
@@ -3268,23 +3323,8 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY doc_id
         """,
         "lm_doc_surprisal": f"""
-            WITH ex AS (
-              SELECT doc_id, substr(md5(tok), 1, 16) AS thash
-              FROM (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents)),
-            c AS (SELECT thash, count(*) AS cnt FROM ex GROUP BY thash),
-            s AS (SELECT cast(sum(cnt) as bigint) AS n_total,
-                         cast(count(*) as bigint) AS vocab FROM c),
-            lm AS (
-              SELECT thash,
-                     length(bin((n_total + vocab) // (cnt + 1))) AS bits
-              FROM c CROSS JOIN s)
-            SELECT doc_id,
-                   cast(count(*) as bigint) AS n_toks,
-                   cast(sum(bits) as bigint) AS sum_bits,
-                   cast((10000 * sum(bits)) // count(*) as bigint)
-                       AS surprisal_bp
-            FROM ex JOIN lm USING (thash)
-            GROUP BY doc_id
+            WITH {_SURPRISAL_SQL}
+            SELECT doc_id, n_toks, sum_bits, surprisal_bp FROM sc
         """,
         # cur_dsir: the lm CTEs twice — raw counts plus the lang='en'
         # target slice's counts over the SAME smoothing domain (raw
@@ -3293,52 +3333,33 @@ def oracle_sql() -> dict[str, str]:
         # engines' integer division truncates toward zero, so the
         # negative-capable logw_bp folds identically.
         "cur_dsir": f"""
-            WITH ex AS (
-              SELECT doc_id, substr(md5(tok), 1, 16) AS thash
-              FROM (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents)),
-            c AS (SELECT thash, count(*) AS cnt FROM ex GROUP BY thash),
-            s AS (SELECT cast(sum(cnt) as bigint) AS n_total,
-                         cast(count(*) as bigint) AS vocab FROM c),
+            WITH {_SURPRISAL_SQL},
             t AS (SELECT doc_id FROM documents WHERE lang = 'en'),
             ct AS (SELECT thash, count(*) AS cnt_t
                    FROM ex JOIN t USING (doc_id) GROUP BY thash),
             st AS (SELECT cast(coalesce(sum(cnt_t), 0) as bigint)
                           AS n_total_t FROM ct),
-            lm AS (
-              SELECT c.thash,
-                     length(bin((s.n_total + s.vocab) // (c.cnt + 1)))
-                   - length(bin((st.n_total_t + s.vocab)
-                                // (coalesce(ct.cnt_t, 0) + 1))) AS diff
-              FROM c
-              LEFT JOIN ct ON c.thash = ct.thash
-              CROSS JOIN s CROSS JOIN st)
-            SELECT doc_id,
-                   cast(count(*) as bigint) AS n_toks,
-                   cast(sum(diff) as bigint) AS logw_bits,
-                   cast((10000 * sum(diff)) // count(*) as bigint)
-                       AS logw_bp
-            FROM ex JOIN lm USING (thash)
-            GROUP BY doc_id
+            w AS (
+              SELECT lm.thash,
+                     lm.bits - {_bits_sql("(st.n_total_t + lm.vocab)"
+                                          " // (coalesce(ct.cnt_t, 0) + 1)")}
+                       AS diff
+              FROM lm LEFT JOIN ct USING (thash) CROSS JOIN st)
+            SELECT *, {_bp_sql("logw_bits")} AS logw_bp
+            FROM (SELECT doc_id, cast(count(*) as bigint) AS n_toks,
+                         cast(sum(diff) as bigint) AS logw_bits
+                  FROM ex JOIN w USING (thash) GROUP BY doc_id)
         """,
         # lm_head_split_approx: lm surprisal CTEs + the sk_quantiles
         # histogram recipe (divide-first width, cum*10^4 >= p*n cut
         # bins) + bin-rank assignment — same integer ops end to end
         "lm_head_split_approx": f"""
-            WITH ex AS (
-              SELECT doc_id, substr(md5(tok), 1, 16) AS thash
-              FROM (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents)),
-            c AS (SELECT thash, count(*) AS cnt FROM ex GROUP BY thash),
-            s AS (SELECT cast(sum(cnt) as bigint) AS n_total,
-                         cast(count(*) as bigint) AS vocab FROM c),
-            lm AS (SELECT thash,
-                     length(bin((n_total + vocab) // (cnt + 1))) AS bits
-                   FROM c CROSS JOIN s),
-            sc AS (SELECT doc_id,
-                     cast((10000 * sum(bits)) // count(*) as bigint) AS v
-                   FROM ex JOIN lm USING (thash) GROUP BY doc_id),
-            b AS (SELECT min(v) AS lo, max(v) AS hi FROM sc),
+            WITH {_SURPRISAL_SQL},
+            b AS (SELECT min(surprisal_bp) AS lo, max(surprisal_bp) AS hi
+                  FROM sc),
             wd AS (SELECT lo, (hi - lo + 64) // 64 AS w FROM b),
-            binned AS (SELECT doc_id, v, lo, w, (v - lo) // w AS bin
+            binned AS (SELECT doc_id, surprisal_bp AS v, lo, w,
+                              (surprisal_bp - lo) // w AS bin
                        FROM sc CROSS JOIN wd),
             state AS (SELECT bin, count(*) AS cnt
                       FROM binned GROUP BY bin),
@@ -3361,118 +3382,79 @@ def oracle_sql() -> dict[str, str]:
             FROM binned CROSS JOIN th ORDER BY doc_id
         """,
         # lm_bigram_surprisal: replay the two count tables + per-entry
-        # bits; DuckDB's positional multi-unnest zips the slice pair
-        # exactly like Spark's zip_with
+        # bits over the hash arrays
         "lm_bigram_surprisal": f"""
-            WITH t AS (SELECT doc_id,
-                         list_transform({_TOKS},
-                           x -> substr(md5(x), 1, 16)) AS hs
-                       FROM documents),
-            ex AS (SELECT doc_id, unnest(hs) AS h FROM t),
-            c AS (SELECT h, cast(count(*) as bigint) AS cnt
-                  FROM ex GROUP BY h),
-            s AS (SELECT cast(sum(cnt) as bigint) AS n_total,
-                         cast(count(*) as bigint) AS vocab FROM c),
-            ub AS (SELECT h, cnt AS c_a, vocab,
-                     cast(length(bin((n_total + vocab) // (cnt + 1)))
-                          as bigint) AS bits
-                   FROM c CROSS JOIN s),
-            bgp AS (SELECT doc_id,
-                      unnest(hs[1:(len(hs)-1)]) AS a,
-                      unnest(hs[2:len(hs)]) AS b
-                    FROM t WHERE len(hs) >= 2),
+            WITH t AS (SELECT doc_id, {_THASHES} AS hs FROM documents),
+            ex AS (SELECT unnest(hs) AS thash FROM t),
+            {_unigram_sql("ex")},
+            bgp AS ({_pairs_sql("t")}),
             bgc AS (SELECT a, b, cast(count(*) as bigint) AS c_ab
                     FROM bgp GROUP BY 1, 2),
             gb AS (SELECT bgc.a, bgc.b,
-                     cast(length(bin((ub.c_a + ub.vocab) //
-                                     (bgc.c_ab + 1))) as bigint) AS bits
-                   FROM bgc JOIN ub ON bgc.a = ub.h),
+                     {_bits_sql("(lm.cnt + lm.vocab) // (bgc.c_ab + 1)")}
+                       AS bits
+                   FROM bgc JOIN lm ON bgc.a = lm.thash),
             fb AS (SELECT doc_id, cast(len(hs) as bigint) AS n_toks,
-                          ub.bits AS fbits
-                   FROM t JOIN ub ON hs[1] = ub.h),
+                          lm.bits AS fbits
+                   FROM t JOIN lm ON hs[1] = lm.thash),
             pb AS (SELECT bgp.doc_id, cast(sum(gb.bits) as bigint)
                             AS pbits
                    FROM bgp JOIN gb ON bgp.a = gb.a AND bgp.b = gb.b
                    GROUP BY 1)
-            SELECT fb.doc_id, fb.n_toks,
-                   cast(fb.fbits + coalesce(pb.pbits, 0) as bigint)
-                     AS sum_bits,
-                   cast((10000 * (fb.fbits + coalesce(pb.pbits, 0)))
-                        // fb.n_toks as bigint) AS surprisal_bp
-            FROM fb LEFT JOIN pb USING (doc_id) ORDER BY doc_id
+            SELECT *, {_bp_sql("sum_bits")} AS surprisal_bp
+            FROM (SELECT fb.doc_id, fb.n_toks,
+                         cast(fb.fbits + coalesce(pb.pbits, 0) as bigint)
+                           AS sum_bits
+                  FROM fb LEFT JOIN pb USING (doc_id))
+            ORDER BY doc_id
         """,
         # lm_stupid_backoff: LM counts from even doc_ids, scoring over
         # odd; seen bigram = raw conditional frequency bits
         # len(bin(c_a // c_ab)), backoff = 1 + add-one unigram bits
         # (OOV folds in at cnt 0 => len(bin(N + V)))
         "lm_stupid_backoff": f"""
-            WITH tl AS (SELECT doc_id,
-                          list_transform({_TOKS},
-                            x -> substr(md5(x), 1, 16)) AS hs
+            WITH tl AS (SELECT doc_id, {_THASHES} AS hs
                         FROM documents WHERE doc_id % 2 = 0),
-            ts AS (SELECT doc_id,
-                          list_transform({_TOKS},
-                            x -> substr(md5(x), 1, 16)) AS hs
+            ts AS (SELECT doc_id, {_THASHES} AS hs
                    FROM documents WHERE doc_id % 2 = 1),
-            exl AS (SELECT unnest(hs) AS h FROM tl),
-            c AS (SELECT h, cast(count(*) as bigint) AS cnt
-                  FROM exl GROUP BY h),
-            s AS (SELECT cast(sum(cnt) as bigint) AS n_total,
-                         cast(count(*) as bigint) AS vocab FROM c),
-            ub AS (SELECT h, cnt AS c_a,
-                     cast(length(bin((n_total + vocab) // (cnt + 1)))
-                          as bigint) AS bits0
-                   FROM c CROSS JOIN s),
-            bgl AS (SELECT unnest(hs[1:(len(hs)-1)]) AS a,
-                           unnest(hs[2:len(hs)]) AS b
-                    FROM tl WHERE len(hs) >= 2),
+            exl AS (SELECT unnest(hs) AS thash FROM tl),
+            {_unigram_sql("exl")},
+            oov AS (SELECT {_bits_sql("n_total + vocab")} AS bits FROM s),
+            bgl AS ({_pairs_sql("tl")}),
             sb AS (SELECT bgc.a, bgc.b,
-                     cast(length(bin(ub.c_a // bgc.c_ab)) as bigint)
-                       AS bits_seen
+                     {_bits_sql("lm.cnt // bgc.c_ab")} AS bits_seen
                    FROM (SELECT a, b, cast(count(*) as bigint) AS c_ab
                          FROM bgl GROUP BY 1, 2) bgc
-                   JOIN ub ON bgc.a = ub.h),
-            bgs AS (SELECT doc_id,
-                           unnest(hs[1:(len(hs)-1)]) AS a,
-                           unnest(hs[2:len(hs)]) AS b
-                    FROM ts WHERE len(hs) >= 2),
+                   JOIN lm ON bgc.a = lm.thash),
+            bgs AS ({_pairs_sql("ts")}),
             pp AS (SELECT bgs.doc_id,
                      coalesce(sb.bits_seen,
-                              1 + coalesce(u2.bits0,
-                                (SELECT length(bin(n_total + vocab))
-                                 FROM s))) AS bits,
+                              1 + coalesce(u2.bits,
+                                           (SELECT bits FROM oov))) AS bits,
                      CASE WHEN sb.bits_seen IS NULL THEN 1 ELSE 0 END
                        AS bo
                    FROM bgs
                    LEFT JOIN sb ON bgs.a = sb.a AND bgs.b = sb.b
-                   LEFT JOIN ub u2 ON bgs.b = u2.h),
+                   LEFT JOIN lm u2 ON bgs.b = u2.thash),
             pb AS (SELECT doc_id, cast(sum(bits) as bigint) AS pbits,
                           cast(sum(bo) as bigint) AS nbo
                    FROM pp GROUP BY 1),
             fb AS (SELECT doc_id, cast(len(hs) as bigint) AS n_toks,
-                          coalesce(ub.bits0,
-                            (SELECT length(bin(n_total + vocab))
-                             FROM s)) AS fbits
-                   FROM ts LEFT JOIN ub ON hs[1] = ub.h)
-            SELECT fb.doc_id, fb.n_toks,
-                   cast(fb.fbits + coalesce(pb.pbits, 0) as bigint)
-                     AS sum_bits,
-                   cast(coalesce(pb.nbo, 0) as bigint) AS n_backoff,
-                   cast((10000 * (fb.fbits + coalesce(pb.pbits, 0)))
-                        // fb.n_toks as bigint) AS surprisal_bp
-            FROM fb LEFT JOIN pb USING (doc_id) ORDER BY fb.doc_id
+                          coalesce(lm.bits, (SELECT bits FROM oov)) AS fbits
+                   FROM ts LEFT JOIN lm ON hs[1] = lm.thash)
+            SELECT *, {_bp_sql("sum_bits")} AS surprisal_bp
+            FROM (SELECT fb.doc_id, fb.n_toks,
+                         cast(fb.fbits + coalesce(pb.pbits, 0) as bigint)
+                           AS sum_bits,
+                         cast(coalesce(pb.nbo, 0) as bigint) AS n_backoff
+                  FROM fb LEFT JOIN pb USING (doc_id))
+            ORDER BY doc_id
         """,
         # lm_vocab_coverage: rank types by (cnt desc, thash asc),
         # cumulative occurrence mass at each requested K (saturates at
         # n_total past the vocabulary size)
         "lm_vocab_coverage": f"""
-            WITH ex AS (
-              SELECT substr(md5(tok), 1, 16) AS thash
-              FROM (SELECT unnest({_TOKS}) AS tok FROM documents)),
-            c AS (SELECT thash, cast(count(*) as bigint) AS cnt
-                  FROM ex GROUP BY thash),
-            s AS (SELECT cast(sum(cnt) as bigint) AS n_total,
-                         cast(count(*) as bigint) AS vocab FROM c),
+            WITH {_SURPRISAL_SQL},
             r AS (SELECT cast(row_number() OVER
                            (ORDER BY cnt DESC, thash) as bigint) AS rnk,
                          cast(sum(cnt) OVER
@@ -3492,26 +3474,7 @@ def oracle_sql() -> dict[str, str]:
         # qc_vs_lm: the lm_head_split CTE joined to the quality
         # predicates of ts_quality_flags, grouped per band
         "qc_vs_lm": f"""
-            WITH ex AS (
-              SELECT doc_id, substr(md5(tok), 1, 16) AS thash
-              FROM (SELECT doc_id, unnest({_TOKS}) AS tok
-                    FROM documents)),
-            c AS (SELECT thash, count(*) AS cnt FROM ex GROUP BY thash),
-            s AS (SELECT cast(sum(cnt) as bigint) AS n_total,
-                         cast(count(*) as bigint) AS vocab FROM c),
-            lm AS (SELECT thash,
-                          length(bin((n_total + vocab) // (cnt + 1)))
-                            AS bits
-                   FROM c CROSS JOIN s),
-            sc AS (SELECT doc_id,
-                          cast((10000 * sum(bits)) // count(*) as bigint)
-                            AS surprisal_bp
-                   FROM ex JOIN lm USING (thash) GROUP BY doc_id),
-            ph AS (SELECT doc_id,
-                          cast(ntile(3) OVER (ORDER BY surprisal_bp,
-                                              doc_id) as bigint)
-                            AS split
-                   FROM sc),
+            WITH {_SURPRISAL_SQL},
             q AS (SELECT doc_id,
                          ((n_tokens >= 5 AND n_tokens <= 100000)
                           AND ((n_chars - (n_tokens - 1)) >= 2 * n_tokens
@@ -3536,26 +3499,8 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY ph.split ORDER BY ph.split
         """,
         "lm_head_split": f"""
-            WITH ex AS (
-              SELECT doc_id, substr(md5(tok), 1, 16) AS thash
-              FROM (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents)),
-            c AS (SELECT thash, count(*) AS cnt FROM ex GROUP BY thash),
-            s AS (SELECT cast(sum(cnt) as bigint) AS n_total,
-                         cast(count(*) as bigint) AS vocab FROM c),
-            lm AS (
-              SELECT thash,
-                     length(bin((n_total + vocab) // (cnt + 1))) AS bits
-              FROM c CROSS JOIN s),
-            sc AS (
-              SELECT doc_id,
-                     cast((10000 * sum(bits)) // count(*) as bigint)
-                         AS surprisal_bp
-              FROM ex JOIN lm USING (thash)
-              GROUP BY doc_id)
-            SELECT doc_id, surprisal_bp,
-                   cast(ntile(3) OVER (ORDER BY surprisal_bp, doc_id)
-                        as bigint) AS split
-            FROM sc
+            WITH {_SURPRISAL_SQL}
+            SELECT doc_id, surprisal_bp, split FROM ph
         """,
         "qc_top_fraction": f"""
             WITH b AS ({_QC_BUCKETED_SQL}),
@@ -4295,18 +4240,14 @@ def oracle_sql() -> dict[str, str]:
         # term N_g*(N - C_g); HUGEINT intermediates are fine, the
         # OUTPUT casts to bigint per the dtype rule
         "cur_source_drift": f"""
-            WITH ex AS (SELECT source AS grp,
-                               substr(md5(tok), 1, 16) AS thash
-                        FROM (SELECT source, unnest({_TOKS}) AS tok
-                              FROM documents)),
+            WITH ex AS (SELECT source AS grp, unnest({_THASHES}) AS thash
+                        FROM documents),
+            {_unigram_sql("ex")},
             g AS (SELECT grp, thash, cast(count(*) as bigint) AS cnt_g
                   FROM ex GROUP BY 1, 2),
-            c AS (SELECT thash, cast(count(*) as bigint) AS cnt
-                  FROM ex GROUP BY 1),
             t AS (SELECT grp, cast(sum(cnt_g) as bigint) AS n_g,
                          cast(count(*) as bigint) AS vocab_g
-                  FROM g GROUP BY 1),
-            s AS (SELECT cast(sum(cnt) as bigint) AS n_total FROM c)
+                  FROM g GROUP BY 1)
             SELECT g.grp,
                    any_value(t.n_g) AS n_tokens,
                    any_value(t.vocab_g) AS vocab_g,
@@ -4622,27 +4563,8 @@ def oracle_sql() -> dict[str, str]:
         # sp_curriculum: lm_head_split's CTEs for the phase, then the
         # epoch_shuffle md5-key recipe within (phase, shard)
         "sp_curriculum": f"""
-            WITH ex AS (
-              SELECT doc_id, substr(md5(tok), 1, 16) AS thash
-              FROM (SELECT doc_id, unnest({_TOKS}) AS tok
-                    FROM documents)),
-            c AS (SELECT thash, count(*) AS cnt FROM ex GROUP BY thash),
-            s AS (SELECT cast(sum(cnt) as bigint) AS n_total,
-                         cast(count(*) as bigint) AS vocab FROM c),
-            lm AS (SELECT thash,
-                          length(bin((n_total + vocab) // (cnt + 1)))
-                            AS bits
-                   FROM c CROSS JOIN s),
-            sc AS (SELECT doc_id,
-                          cast((10000 * sum(bits)) // count(*) as bigint)
-                            AS surprisal_bp
-                   FROM ex JOIN lm USING (thash) GROUP BY doc_id),
-            ph AS (SELECT doc_id,
-                          cast(ntile(3) OVER (ORDER BY surprisal_bp,
-                                              doc_id) as bigint)
-                            AS phase
-                   FROM sc),
-            k AS (SELECT doc_id, phase,
+            WITH {_SURPRISAL_SQL},
+            k AS (SELECT doc_id, split AS phase,
                          md5(doc_id::VARCHAR || ':curriculum0') AS _k
                   FROM ph),
             sh AS (SELECT doc_id, phase, _k,

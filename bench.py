@@ -14,7 +14,7 @@ to its tail still carries the headline::
 
 ``--scaling`` mode (north rule, BASELINE.json): run the SAME fused
 extraction job on the SAME synthesized pages table at two parallelism
-levels (local[N] and local[4N], default N=8) and report docs/sec at both
+levels (local[N] and local[4N], default N=4) and report docs/sec at both
 plus scaling efficiency = (T_N / T_4N) / 4. This is the sandbox stand-in
 for N vs 4N executors (no real cluster here); the job itself is a single
 narrow mapInPandas stage, so its scaling is governed by input partition
@@ -440,10 +440,10 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scaling", action="store_true")
     # N=4 vs 4N=16: at the big level 16 task threads + 16 Python workers
-    # still fit this box's 32 vCPUs — the honest analogue of N vs 4N
-    # executors on real nodes, where JVM:python core ratio is constant.
-    # local[8] vs local[32] oversubscribes only the big level (32+32
-    # threads on 32 vCPUs) and understates scaling.
+    # fit a 32-vCPU box — the honest analogue of N vs 4N executors on
+    # real nodes, where JVM:python core ratio is constant. On a smaller
+    # box the big level is oversubscribed and scaling is understated
+    # (local[8] vs local[32] does the same to a 32-vCPU box).
     ap.add_argument("--n-small", type=int, default=4)
     ap.add_argument("--n-pages", type=int, default=None)
     # internal: one scaling phase in a fresh process (see run_scaling)

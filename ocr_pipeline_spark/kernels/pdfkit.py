@@ -32,8 +32,12 @@ BLOCK_GAP = 18.0         # vertical gap between lines that splits blocks
 _LEADING = 14            # synthetic line leading (points)
 
 _TEXTOBJ_RE = re.compile(r"BT(.*?)ET", re.S)
+# (?<!\d): an operand never starts inside a digit run. Where the whole
+# run fails to start a match, no suffix of it can, so this only skips the
+# retries that made a long run quadratic. It sits after the sign: the
+# "-3" of "12-3 1 Td" still matches.
 _OP_RE = re.compile(
-    r"(?P<a>-?\d+(?:\.\d+)?)\s+(?P<b>-?\d+(?:\.\d+)?)\s+(?P<op>Td|TD)"
+    r"(?P<a>-?(?<!\d)\d+(?:\.\d+)?)\s+(?P<b>-?\d+(?:\.\d+)?)\s+(?P<op>Td|TD)"
     r"|\((?P<str>(?:[^()\\]|\\.)*)\)\s*Tj"
 )
 _ESCAPES = {"\\(": "(", "\\)": ")", "\\\\": "\\", "\\n": "\n", "\\r": "\r", "\\t": "\t"}

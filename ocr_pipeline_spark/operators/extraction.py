@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..kernels.extract import DEFAULT_MAX_PAYLOAD_BYTES, extract_document
 from ..kernels.htmlkit import decode_payload
+from ..kernels.materialize import BLOCK_SEPARATOR
 from ..kernels.overlay import render_overlay
 from ..kernels.refine import refine_sentences
 
@@ -148,11 +149,12 @@ def explode_blocks(segmented: DataFrame) -> DataFrame:
     )
 
 
-def regroup_blocks(blocks: DataFrame, sep: str = "\n\n") -> DataFrame:
+def regroup_blocks(blocks: DataFrame) -> DataFrame:
     """Fan-in J3: kept blocks → per-url text, order restored by sorting the
     collected (block_idx, text) structs (order invariant O1 — the reference
     forces recognition output order, str-recognition/processor.py:135-138).
-    sort_array on array<struct> orders by the first field, block_idx."""
+    sort_array on array<struct> orders by the first field, block_idx.
+    Blocks join with the fused path's ``BLOCK_SEPARATOR``."""
     return (
         blocks.filter(F.col("is_content"))
         .groupBy("url")
@@ -164,7 +166,7 @@ def regroup_blocks(blocks: DataFrame, sep: str = "\n\n") -> DataFrame:
                     ),
                     lambda s: s["block_text"],
                 ),
-                sep,
+                BLOCK_SEPARATOR,
             ).alias("text"),
             F.count(F.lit(1)).alias("n_content_blocks"),
         )

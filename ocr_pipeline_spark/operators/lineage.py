@@ -68,7 +68,7 @@ def pending(pages_bucketed: DataFrame, committed: DataFrame) -> DataFrame:
     return pages_bucketed.join(committed, "bucket", "left_anti")
 
 
-def _xor_fold_sha(col):
+def _xor_fold_sha():
     """Order-independent 64-bit fold of per-url text sha256 — the bucket's
     bytes_hash is identical no matter how rows were partitioned/ordered."""
     return F.lpad(
@@ -153,7 +153,7 @@ def write_extracted_with_manifest(
             F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias(
                 "n_errors"
             ),
-            _xor_fold_sha(None).alias("bytes_hash"),
+            _xor_fold_sha().alias("bytes_hash"),
         )
         .select(
             "bucket",

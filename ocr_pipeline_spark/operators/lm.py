@@ -43,8 +43,15 @@ Scale shape (10^12 docs):
   swap ``counts`` for any (thash, cnt) frame (e.g. top-K by frequency
   from a clean reference corpus) — the join shape is unchanged.
 
-DuckDB oracles: ``lm_doc_surprisal``, ``lm_head_split`` in
-__spark_entry__.py replay the identical integer math.
+One definition per recipe step: the token hash is
+``textstats.token_hash`` (rows: ``textstats.token_hashes``; arrays:
+``_hash_arrays``), every bit formula goes through ``_bits``, the unigram
+table is ``_unigram_bits``, the bigram pair stream ``_pair_rows`` and the
+per-doc score ``_bp``. The ten LM-family DuckDB oracles in
+__spark_entry__.py (``lm_*``, ``cur_dsir``, ``qc_vs_lm``,
+``sp_curriculum``, ``cur_source_drift``) are built from the same steps'
+SQL spellings there: ``_THASHES``, ``_bits_sql``, ``_unigram_sql``,
+``_SURPRISAL_SQL``, ``_pairs_sql`` and ``_bp_sql``.
 """
 
 from __future__ import annotations
@@ -52,8 +59,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .hashing import md5_hex
-from .textstats import tokens
+from .textstats import token_hash, token_hashes, tokens
 
 __all__ = [
     "token_counts",
@@ -69,21 +75,23 @@ __all__ = [
 SCALE_BP = 10_000
 
 
-def _keyed_tokens(docs: DataFrame, text_col: str) -> DataFrame:
-    """(doc_id, thash) per token occurrence; thash is the 16-hex md5 of
-    the token — the fixed-width join/group key (house style:
-    chunk_dedup's chash). Collision odds at 64 bits are negligible and,
-    because both engines key on the same hash, any collision folds
-    identically on the Spark and oracle sides. explode_outer + isNotNull
-    per the InferFiltersFromGenerate rule (CLAUDE.md); the md5 of a
-    non-null string is non-nullable, so no inferred-isnotnull pushdown
-    disease on the downstream joins."""
-    return (
-        docs.select("doc_id", tokens(F.col(text_col)).alias("toks"))
-        .select("doc_id", F.explode_outer("toks").alias("tok"))
-        .filter(F.col("tok").isNotNull())
-        .select("doc_id", md5_hex(F.col("tok"), 16).alias("thash"))
-    )
+def _bits(q: Column) -> Column:
+    """Whole bits of a BIGINT q >= 1: ``length(bin(q))`` =
+    floor(log2(q)) + 1, exact in both engines. Every LM bit formula
+    goes through here."""
+    return F.length(F.bin(q)).cast("long")
+
+
+def _add_one_bits(total: str, cnt: str) -> Column:
+    """Add-one smoothed bits of ``cnt`` out of ``total`` over the
+    ``vocab`` column: _bits((total + vocab) div (cnt + 1))."""
+    return _bits(F.expr(f"({total} + vocab) div ({cnt} + 1)"))
+
+
+def _bp(bits: str) -> Column:
+    """Per-doc score: mean ``bits`` per token (``n_toks``) in
+    fixed-point basis points."""
+    return F.expr(f"({SCALE_BP} * {bits}) div n_toks")
 
 
 def token_counts(keyed: DataFrame) -> DataFrame:
@@ -91,28 +99,28 @@ def token_counts(keyed: DataFrame) -> DataFrame:
     return keyed.groupBy("thash").agg(F.count(F.lit(1)).alias("cnt"))
 
 
+def _corpus_stats(counts: DataFrame) -> DataFrame:
+    """The 1-row (n_total, vocab) scalars of a (key, cnt) count table."""
+    return counts.agg(
+        F.sum("cnt").alias("n_total"), F.count(F.lit(1)).alias("vocab")
+    )
+
+
+def _unigram_bits(counts: DataFrame) -> DataFrame:
+    """The add-one unigram LM: ``counts`` plus the broadcast (n_total,
+    vocab) scalars and ``bits`` per VOCAB entry (not per occurrence)."""
+    return counts.crossJoin(F.broadcast(_corpus_stats(counts))).withColumn(
+        "bits", _add_one_bits("n_total", "cnt")
+    )
+
+
 def lm_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Self-train a unigram LM on the corpus and score every document.
 
     Output: (doc_id, n_toks, sum_bits, surprisal_bp), all bigint.
     """
-    keyed = _keyed_tokens(docs, text_col).localCheckpoint(eager=False)
-    counts = token_counts(keyed)
-    stats = counts.agg(
-        F.sum("cnt").alias("n_total"), F.count(F.lit(1)).alias("vocab")
-    )
-    # bits per VOCAB entry (not per occurrence): exact integer
-    # floor(log2(inverse smoothed prob)) + 1 via bin()-string length
-    lm = counts.crossJoin(F.broadcast(stats)).select(
-        "thash",
-        F.length(
-            F.bin(
-                F.expr("(n_total + vocab) div (cnt + 1)")
-            )
-        )
-        .cast("long")
-        .alias("bits"),
-    )
+    keyed = token_hashes(docs, "doc_id", text_col).localCheckpoint(eager=False)
+    lm = _unigram_bits(token_counts(keyed)).select("thash", "bits")
     return (
         keyed.join(lm, "thash")
         .groupBy("doc_id")
@@ -120,14 +128,7 @@ def lm_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
             F.count(F.lit(1)).alias("n_toks"),
             F.sum("bits").alias("sum_bits"),
         )
-        .select(
-            "doc_id",
-            "n_toks",
-            "sum_bits",
-            F.expr(f"({SCALE_BP} * sum_bits) div n_toks").alias(
-                "surprisal_bp"
-            ),
-        )
+        .withColumn("surprisal_bp", _bp("sum_bits"))
     )
 
 
@@ -163,11 +164,69 @@ def _hash_arrays(docs: DataFrame, text_col: str) -> DataFrame:
     a checkpoint boundary; both the counting aggregations and the
     per-doc scoring read the materialized arrays (no logical CSE)."""
     return docs.select(
-        "doc_id",
-        F.transform(tokens(F.col(text_col)), lambda t: md5_hex(t, 16)).alias(
-            "_h"
-        ),
+        "doc_id", F.transform(tokens(F.col(text_col)), token_hash).alias("_h")
     ).localCheckpoint(eager=False)
+
+
+def _array_counts(staged: DataFrame) -> DataFrame:
+    """(h, cnt) unigram counts of the staged hash arrays."""
+    return (
+        staged.select(F.explode_outer("_h").alias("h"))
+        .filter(F.col("h").isNotNull())
+        .groupBy("h")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _pair_rows(staged: DataFrame) -> DataFrame:
+    """(doc_id, a, b) per adjacent token-hash pair of the staged arrays.
+
+    Adjacent pairs via arrays_zip over the materialized hash array — a
+    lambda-free built-in that stays inside whole-stage codegen, unlike
+    the equivalent zip_with(.., (x,y) -> struct(..)) which is
+    CodegenFallback and pays an interpreted pass per execution
+    (measured at sf0.1: 7.3 -> 6.7 s first-execution, 1.3 -> 1.0 s
+    steady-state). _h is a checkpoint read, so the three references
+    (two slices + size) are cheap re-reads, not recomputation."""
+    n = F.greatest(F.size("_h") - 1, F.lit(0))
+    pairs_of = F.arrays_zip(
+        F.slice(F.col("_h"), 1, n).alias("a"),
+        F.slice(F.col("_h"), 2, n).alias("b"),
+    )
+    return (
+        staged.select("doc_id", F.explode_outer(pairs_of).alias("p"))
+        .filter(F.col("p").isNotNull())
+        .select("doc_id", "p.a", "p.b")
+    )
+
+
+def _first_tokens(staged: DataFrame) -> DataFrame:
+    """(doc_id, h, n_toks): each doc's first token hash and length."""
+    return staged.select(
+        "doc_id",
+        F.element_at("_h", 1).alias("h"),
+        F.size("_h").cast("long").alias("n_toks"),
+    )
+
+
+def _positional_scores(
+    first_bits: DataFrame, pair_bits: DataFrame, *extra: Column
+) -> DataFrame:
+    """(doc_id, n_toks, sum_bits, *extra, surprisal_bp): a doc's
+    first-token bits ``fb`` plus its pair bits ``pb`` (none for a
+    one-token doc)."""
+    return (
+        first_bits.join(pair_bits, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_toks",
+            (F.col("fb") + F.coalesce(F.col("pb"), F.lit(0))).alias(
+                "sum_bits"
+            ),
+            *extra,
+        )
+        .withColumn("surprisal_bp", _bp("sum_bits"))
+    )
 
 
 def bigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -192,67 +251,22 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
     (doc_id, n_toks, sum_bits, surprisal_bp), all bigint.
     """
     staged = _hash_arrays(docs, text_col)
-    uni = (
-        staged.select(F.explode_outer("_h").alias("h"))
-        .filter(F.col("h").isNotNull())
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    stats = uni.agg(
-        F.sum("cnt").alias("n_total"), F.count(F.lit(1)).alias("vocab")
-    )
-    u_bits = uni.crossJoin(F.broadcast(stats)).select(
-        "h",
-        F.col("vocab").alias("_v"),
-        F.col("cnt").alias("_ca"),
-        F.length(F.bin(F.expr("(n_total + vocab) div (cnt + 1)")))
-        .cast("long")
-        .alias("bits"),
-    )
-    # adjacent pairs via arrays_zip over the materialized hash array —
-    # a lambda-free built-in that stays inside whole-stage codegen,
-    # unlike the equivalent zip_with(.., (x,y) -> struct(..)) which is
-    # CodegenFallback and pays an interpreted pass per execution
-    # (measured at sf0.1: 7.3 -> 6.7 s first-execution, 1.3 -> 1.0 s
-    # steady-state). _h is a checkpoint read, so the three references
-    # (two slices + size) are cheap re-reads, not recomputation.
-    pairs_of = F.arrays_zip(
-        F.slice(F.col("_h"), 1, F.greatest(F.size("_h") - 1, F.lit(0))).alias("a"),
-        F.slice(F.col("_h"), 2, F.greatest(F.size("_h") - 1, F.lit(0))).alias("b"),
-    )
+    u_bits = _unigram_bits(_array_counts(staged))
     # the per-position pair stream feeds BOTH the bigram counts and the
     # per-doc scoring join — materialize the explode once (measured 6.2
     # -> 1.3 s steady-state at sf0.1 when this was first staged)
-    pair_rows = (
-        staged.select("doc_id", F.explode_outer(pairs_of).alias("p"))
-        .filter(F.col("p").isNotNull())
-        .select("doc_id", "p.a", "p.b")
-        .localCheckpoint(eager=False)
-    )
+    pair_rows = _pair_rows(staged).localCheckpoint(eager=False)
     bg = pair_rows.groupBy("a", "b").agg(
         F.count(F.lit(1)).alias("c_ab")
     )
     # conditional bits per distinct bigram: join the predecessor's
     # unigram count (c_a) + vocab, both already on the u_bits table
     g_bits = bg.join(
-        u_bits.select(
-            F.col("h").alias("a"),
-            F.col("_ca").alias("c_a"),
-            F.col("_v").alias("vocab"),
-        ),
+        u_bits.select(F.col("h").alias("a"), F.col("cnt").alias("c_a"), "vocab"),
         "a",
-    ).select(
-        "a",
-        "b",
-        F.length(F.bin(F.expr("(c_a + vocab) div (c_ab + 1)")))
-        .cast("long")
-        .alias("bits"),
-    )
+    ).select("a", "b", _add_one_bits("c_a", "c_ab").alias("bits"))
     first_bits = (
-        staged.select(
-            "doc_id", F.element_at("_h", 1).alias("h"),
-            F.size("_h").cast("long").alias("n_toks"),
-        )
+        _first_tokens(staged)
         .join(u_bits.select("h", "bits"), "h")
         .select("doc_id", "n_toks", F.col("bits").alias("fb"))
     )
@@ -261,24 +275,7 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum("bits").alias("pb"))
     )
-    return (
-        first_bits.join(pair_bits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_toks",
-            (F.col("fb") + F.coalesce(F.col("pb"), F.lit(0))).alias(
-                "sum_bits"
-            ),
-        )
-        .select(
-            "doc_id",
-            "n_toks",
-            "sum_bits",
-            F.expr(f"({SCALE_BP} * sum_bits) div n_toks").alias(
-                "surprisal_bp"
-            ),
-        )
-    )
+    return _positional_scores(first_bits, pair_bits)
 
 
 def head_split_approx(
@@ -384,7 +381,7 @@ def dsir_weights(
     thash) and bigint counts only; token text never crosses an
     exchange; per-token bits are computed once per vocab entry.
     """
-    keyed = _keyed_tokens(docs, text_col).localCheckpoint(eager=False)
+    keyed = token_hashes(docs, "doc_id", text_col).localCheckpoint(eager=False)
     raw_counts = token_counts(keyed)
     tgt_ids = docs.filter(target_pred).select("doc_id")
     tgt_counts = (
@@ -392,30 +389,19 @@ def dsir_weights(
         .groupBy("thash")
         .agg(F.count(F.lit(1)).alias("cnt_t"))
     )
-    stats = raw_counts.agg(
-        F.sum("cnt").alias("n_total"), F.count(F.lit(1)).alias("vocab")
-    )
     tstats = tgt_counts.agg(
         F.coalesce(F.sum("cnt_t"), F.lit(0)).cast("long").alias("n_total_t")
     )
     lm = (
         raw_counts.join(tgt_counts, "thash", "left")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(F.broadcast(_corpus_stats(raw_counts)))
         .crossJoin(F.broadcast(tstats))
         .select(
             "thash",
             (
-                F.length(F.bin(F.expr("(n_total + vocab) div (cnt + 1)")))
-                - F.length(
-                    F.bin(
-                        F.expr(
-                            "(n_total_t + vocab) div (coalesce(cnt_t, 0) + 1)"
-                        )
-                    )
-                )
-            )
-            .cast("long")
-            .alias("diff"),
+                _add_one_bits("n_total", "cnt")
+                - _add_one_bits("n_total_t", "coalesce(cnt_t, 0)")
+            ).alias("diff"),
         )
     )
     return (
@@ -425,12 +411,7 @@ def dsir_weights(
             F.count(F.lit(1)).alias("n_toks"),
             F.sum("diff").alias("logw_bits"),
         )
-        .select(
-            "doc_id",
-            "n_toks",
-            "logw_bits",
-            F.expr("(10000 * logw_bits) div n_toks").alias("logw_bp"),
-        )
+        .withColumn("logw_bp", _bp("logw_bits"))
     )
 
 
@@ -491,59 +472,28 @@ def stupid_backoff(
     staged_lm = (
         staged_sc if lm_docs is None else _hash_arrays(lm_docs, text_col)
     )
-    uni = (
-        staged_lm.select(F.explode_outer("_h").alias("h"))
-        .filter(F.col("h").isNotNull())
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    stats = uni.agg(
-        F.sum("cnt").alias("n_total"), F.count(F.lit(1)).alias("vocab")
-    )
+    counts = _array_counts(staged_lm)
+    stats = _corpus_stats(counts)
     # add-one unigram bits per vocab entry (the backoff/first-token
-    # table); c_a rides along for the seen-branch conditional
-    ub = uni.crossJoin(F.broadcast(stats)).select(
-        "h",
-        F.col("cnt").alias("_ca"),
-        F.length(F.bin(F.expr("(n_total + vocab) div (cnt + 1)")))
-        .cast("long")
-        .alias("bits0"),
-    )
-    pairs_of = F.arrays_zip(
-        F.slice(F.col("_h"), 1, F.greatest(F.size("_h") - 1, F.lit(0))).alias("a"),
-        F.slice(F.col("_h"), 2, F.greatest(F.size("_h") - 1, F.lit(0))).alias("b"),
-    )
-
-    def _pair_rows(staged: DataFrame) -> DataFrame:
-        return (
-            staged.select("doc_id", F.explode_outer(pairs_of).alias("p"))
-            .filter(F.col("p").isNotNull())
-            .select("doc_id", "p.a", "p.b")
-        )
-
-    lm_pairs = _pair_rows(staged_lm)
-    sc_pairs = _pair_rows(staged_sc)
+    # table); its cnt is c_a for the seen-branch conditional
+    ub = _unigram_bits(counts)
     # seen-branch bits per distinct MODEL bigram: raw conditional
     # frequency, no smoothing (the stupid-backoff signature move)
     sb = (
-        lm_pairs.groupBy("a", "b")
+        _pair_rows(staged_lm)
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("c_ab"))
-        .join(ub.select(F.col("h").alias("a"), "_ca"), "a")
-        .select(
-            "a",
-            "b",
-            F.length(F.bin(F.expr("_ca div c_ab")))
-            .cast("long")
-            .alias("bits_seen"),
-        )
+        .join(ub.select(F.col("h").alias("a"), F.col("cnt").alias("_ca")), "a")
+        .select("a", "b", _bits(F.expr("_ca div c_ab")).alias("bits_seen"))
     )
     # OOV fallback constant = add-one bits at cnt 0 = len(bin(N + V));
     # broadcast the 1-row stats so the coalesce stays JVM-side
-    oov = F.length(F.bin(F.expr("n_total + vocab"))).cast("long")
+    oov = _bits(F.expr("n_total + vocab"))
     pair_bits = (
-        sc_pairs.join(sb, ["a", "b"], "left")
+        _pair_rows(staged_sc)
+        .join(sb, ["a", "b"], "left")
         .join(
-            ub.select(F.col("h").alias("b"), F.col("bits0").alias("_b0")),
+            ub.select(F.col("h").alias("b"), F.col("bits").alias("_b0")),
             "b",
             "left",
         )
@@ -562,38 +512,17 @@ def stupid_backoff(
         )
     )
     first_bits = (
-        staged_sc.select(
-            "doc_id",
-            F.element_at("_h", 1).alias("h"),
-            F.size("_h").cast("long").alias("n_toks"),
-        )
-        .join(ub.select("h", "bits0"), "h", "left")
+        _first_tokens(staged_sc)
+        .join(ub.select("h", F.col("bits").alias("bits0")), "h", "left")
         .crossJoin(F.broadcast(stats))
         .select(
             "doc_id", "n_toks", F.coalesce(F.col("bits0"), oov).alias("fb")
         )
     )
-    return (
-        first_bits.join(pair_bits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_toks",
-            (F.col("fb") + F.coalesce(F.col("pb"), F.lit(0))).alias(
-                "sum_bits"
-            ),
-            F.coalesce(F.col("n_backoff"), F.lit(0))
-            .cast("long")
-            .alias("n_backoff"),
-        )
-        .select(
-            "doc_id",
-            "n_toks",
-            "sum_bits",
-            "n_backoff",
-            F.expr(f"({SCALE_BP} * sum_bits) div n_toks").alias(
-                "surprisal_bp"
-            ),
-        )
+    return _positional_scores(
+        first_bits,
+        pair_bits,
+        F.coalesce(F.col("n_backoff"), F.lit(0)).cast("long").alias("n_backoff"),
     )
 
 
@@ -630,10 +559,8 @@ def vocab_coverage(
     """
     if not ks or any(k < 1 for k in ks) or len(set(ks)) != len(ks):
         raise ValueError(f"ks must be distinct positive ints, got {ks}")
-    counts = token_counts(_keyed_tokens(docs, text_col))
-    stats = counts.agg(
-        F.sum("cnt").alias("n_total"), F.count(F.lit(1)).alias("vocab")
-    )
+    counts = token_counts(token_hashes(docs, "doc_id", text_col))
+    stats = _corpus_stats(counts)
     top = counts.orderBy(F.desc("cnt"), "thash").limit(max(ks))
     w = (
         Window.orderBy(F.desc("cnt"), "thash")

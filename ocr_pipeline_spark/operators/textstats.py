@@ -25,6 +25,8 @@ __all__ = [
     "norm_text",
     "norm_text_sql",
     "tokens",
+    "token_hash",
+    "token_hashes",
     "word_count",
     "token_stats",
     "quality_flags",
@@ -83,6 +85,28 @@ def norm_text_sql(s: str) -> str:
 def tokens(col: Column) -> Column:
     """Whitespace tokens of normalized text."""
     return F.split(norm_text(col), " ")
+
+
+def token_hash(tok: Column) -> Column:
+    """16-hex md5 of one token: the fixed-width join/group key of the LM
+    family (operators/lm.py, ``source_drift``). Collision odds at 64
+    bits are negligible and, because both engines key on the same hash,
+    any collision folds identically on the Spark and oracle sides (the
+    entry module's ``_THASHES`` is its DuckDB spelling)."""
+    return md5_hex(tok, 16)
+
+
+def token_hashes(docs: DataFrame, key: str, text_col: str) -> DataFrame:
+    """(key, thash) per token occurrence. explode_outer + isNotNull per
+    the InferFiltersFromGenerate rule (CLAUDE.md); the md5 of a non-null
+    string is non-nullable, so no inferred-isnotnull pushdown disease on
+    the downstream joins."""
+    return (
+        docs.select(key, tokens(F.col(text_col)).alias("toks"))
+        .select(key, F.explode_outer("toks").alias("tok"))
+        .filter(F.col("tok").isNotNull())
+        .select(key, token_hash(F.col("tok")).alias("thash"))
+    )
 
 
 def word_count(col: Column) -> Column:
@@ -616,17 +640,11 @@ def source_drift(
 
     DuckDB oracle: `q: cur_source_drift`.
     """
-    keyed = (
-        docs.select(F.col(group_col).alias("grp"), F.col(text_col).alias("_t"))
-        .select("grp", tokens(F.col("_t")).alias("toks"))
-        .select("grp", F.explode_outer("toks").alias("tok"))
-        .filter(F.col("tok").isNotNull())
-        .select(
-            "grp",
-            md5_hex(F.col("tok"), 16).alias("thash"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    keyed = token_hashes(
+        docs.select(F.col(group_col).alias("grp"), F.col(text_col).alias("_t")),
+        "grp",
+        "_t",
+    ).localCheckpoint(eager=False)
     gcnt = keyed.groupBy("grp", "thash").agg(
         F.count(F.lit(1)).alias("cnt_g")
     )

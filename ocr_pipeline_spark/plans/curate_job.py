@@ -46,6 +46,10 @@ __all__ = [
     "run_curation",
 ]
 
+# minhash mode keeps a candidate pair as a duplicate at this exact
+# shingle Jaccard or above
+JACCARD_THRESHOLD = 0.8
+
 
 def extracted_as_documents(extracted: DataFrame) -> DataFrame:
     """Bridge the extraction output (url, text, …) into the documents
@@ -67,7 +71,6 @@ def curate(
     docs: DataFrame,
     langs: tuple[str, ...] | None = ("en",),
     dedup: str | None = "exact",
-    jaccard_threshold: float = 0.8,
     max_rep_ratio: float | None = None,
     scrub: bool = False,
 ) -> DataFrame:
@@ -96,7 +99,7 @@ def curate(
     the gated corpus as a table and dedup against that.
 
     Minhash mode verifies every LSH candidate pair with exact shingle
-    Jaccard ≥ ``jaccard_threshold`` before clustering — band collisions
+    Jaccard ≥ ``JACCARD_THRESHOLD`` before clustering — band collisions
     alone fire on moderately-similar docs (a 4×2 banding collides
     Jaccard≈0.5 pairs ~68% of the time) and connected components would
     transitively chain them into deleted 'duplicates'."""
@@ -118,7 +121,7 @@ def curate(
     elif dedup == "minhash":
         cand = lsh_candidate_pairs(minhash_signatures(kept))
         pairs = jaccard_verify(kept, cand).filter(
-            F.col("jaccard") >= jaccard_threshold
+            F.col("jaccard") >= JACCARD_THRESHOLD
         )
         clusters = dup_clusters(pairs.select("doc_a", "doc_b"))
         drops = clusters.filter(

@@ -98,3 +98,53 @@ def test_unclosed_text_objects_parse_in_linear_time():
         r = extract_document(data)
         assert time.monotonic() - t0 < 1.0
         assert r.kind == "pdf" and r.error is not None
+
+
+# -- bounded operand scan ----------------------------------------------------
+
+# the operator regex before its operands were anchored to the start of a
+# digit run: the oracle the anchored one must equal
+_OP_ORACLE_RE = re.compile(
+    r"(?P<a>-?\d+(?:\.\d+)?)\s+(?P<b>-?\d+(?:\.\d+)?)\s+(?P<op>Td|TD)"
+    r"|\((?P<str>(?:[^()\\]|\\.)*)\)\s*Tj"
+)
+
+_op_tokens = st.lists(
+    st.sampled_from(
+        ["1", "12", "0", "-", ".", "-3", "1.5", ".5", " ", "\n", "\t", "Td",
+         "TD", "Tj", "T", "d", "(", ")", "\\", "x", "(hi)", "BT", "ET",
+         "0 -30 Td", "1.5.5 2 Td", ".12-3 1\nTD", "(a) Tj"]
+    ),
+    max_size=40,
+).map("".join)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_op_tokens)
+def test_op_scan_equals_unanchored_regex(body):
+    got = [(m.span(), m.groupdict()) for m in pdfkit._OP_RE.finditer(body)]
+    want = [(m.span(), m.groupdict()) for m in _OP_ORACLE_RE.finditer(body)]
+    assert got == want
+
+
+@settings(max_examples=200, deadline=None)
+@given(_op_tokens)
+def test_parse_pdf_blocks_equals_unanchored_regex(body):
+    data = ("%PDF-1.4\nBT " + body + " ET").encode("latin-1")
+    got = parse_pdf_blocks(data)
+    real = pdfkit._OP_RE
+    pdfkit._OP_RE = _OP_ORACLE_RE
+    try:
+        want = parse_pdf_blocks(data)
+    finally:
+        pdfkit._OP_RE = real
+    assert got == want
+
+
+def test_digit_run_parses_in_linear_time():
+    """Every position of a digit run inside one text object used to
+    restart the operand match: 16 000 digits took about 10 s."""
+    data = b"%PDF-1.4\nBT " + b"1" * (1 << 20) + b" ET"  # 1 MiB
+    t0 = time.monotonic()
+    assert parse_pdf_blocks(data) == []
+    assert time.monotonic() - t0 < 1.0

@@ -1,13 +1,16 @@
 """Unit tests for the unigram-LM surprisal scorer (operators/lm.py).
 Cross-engine value parity lives in test_entry.py (lm_doc_surprisal /
 lm_head_split oracles); these prove the semantics on controlled text
-and check the exact bit math against a pure-Python replay.
+and check the exact bit math against a pure-Python replay. The last
+test fails if an LM recipe step is spelled outside its one definition.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+import pathlib
+import re
 
 import pytest
 
@@ -431,3 +434,49 @@ def test_vocab_coverage_rejects_bad_ks(spark):
     for bad in ((), (0,), (3, 3)):
         with pytest.raises(ValueError):
             vocab_coverage(df, ks=bad)
+
+
+# -- one definition per LM recipe step, per engine ----------------------------
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+
+# md5 of a token (Spark), the bit formula (Spark), and the token hash or
+# add-one bits (DuckDB); \s* spans line breaks inside a call
+_TOKEN_MD5 = re.compile(r"md5_hex\(\s*(?:F\.col\(\s*[\"']tok[\"']\s*\)|(?:tok|t|x)\b)")
+_SPARK_BITS = re.compile(r"F\.bin\(")
+_DUCK_LM = re.compile(
+    r"substr\(md5\((?:tok|x|t)\), 1, 16\)|length\(bin\(\(n_total \+ vocab\)"
+)
+# the one line in each file allowed to spell its step
+_DEFINITIONS = {
+    "ocr_pipeline_spark/operators/textstats.py": "    return md5_hex(tok, 16)",
+    "ocr_pipeline_spark/operators/lm.py": '    return F.length(F.bin(q)).cast("long")',
+    "__spark_entry__.py": '_THASHES = f"list_transform({_TOKS}, x -> substr(md5(x), 1, 16))"',
+}
+_PLANTED = [
+    (_TOKEN_MD5, '        .select("doc_id", md5_hex(F.col("tok"), 16).alias("thash"))'),
+    (_TOKEN_MD5, "        F.transform(tokens(F.col(text_col)), lambda t: md5_hex(t, 16))"),
+    (_SPARK_BITS, '        F.length(F.bin(F.expr("(n_total + vocab) div (cnt + 1)")))'),
+    (_DUCK_LM, "              SELECT doc_id, substr(md5(tok), 1, 16) AS thash"),
+    (_DUCK_LM, "                           x -> substr(md5(x), 1, 16)) AS hs"),
+    (_DUCK_LM, "                     length(bin((n_total + vocab) // (cnt + 1))) AS bits"),
+]
+
+
+def test_no_module_inlines_the_lm_recipe():
+    assert all(pat.search(line) for pat, line in _PLANTED)
+    pkg = ROOT / "ocr_pipeline_spark"
+    scans = [(p.relative_to(ROOT).as_posix(), _TOKEN_MD5) for p in sorted(pkg.rglob("*.py"))]
+    scans += [("ocr_pipeline_spark/operators/lm.py", _SPARK_BITS), ("__spark_entry__.py", _DUCK_LM)]
+    hits, found = [], set()
+    for rel, pat in scans:
+        src = (ROOT / rel).read_text()
+        lines = src.splitlines()
+        for m in pat.finditer(src):
+            no = src.count("\n", 0, m.start())
+            if lines[no] == _DEFINITIONS.get(rel):
+                found.add(rel)
+            else:
+                hits.append(f"{rel}:{no + 1}: {lines[no].strip()}")
+    assert not hits, "LM recipe spelled outside its definitions:\n" + "\n".join(hits)
+    assert found == set(_DEFINITIONS)
