@@ -138,8 +138,6 @@ EXTENDED = [
     "sim_hash_embed",
     # crawl-frontier canonical-URL dedup (scan-local canon + groupBy)
     "dd_url_dedup",
-    # text near-dup end-to-end: hashed embeddings -> LSH-gated cosine
-    "sim_text_near_dup",
     # windowFunnel-style ordered funnel (per-step short-key groupBys)
     "t_funnel",
     # cohort retention over dialect-free epoch weeks

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..operators.hashing import md5_hex_sql, md5_int_sql
-from ..operators.textstats import norm_text_sql
+from ..operators.textstats import ROLL_MOD, norm_text_sql
 
 _SQL_FUNCTIONS: dict[str, str] = {
     # normalization / tokenization
@@ -51,7 +51,7 @@ _SQL_FUNCTIONS: dict[str, str] = {
         "aggregate(split(" + norm_text_sql("s") + ", ' '), "
         "cast(0 as bigint), (acc, t) -> (acc * 31 + "
         + md5_int_sql("t")
-        + ") % 2147483648)"
+        + f") % {ROLL_MOD})"
     ),
     # similarity (sequential fold — same op order as operators.similarity)
     "cos_sim": (

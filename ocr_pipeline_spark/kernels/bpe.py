@@ -16,7 +16,7 @@ Words with Subword Units"), specialized for engine portability:
   over the word-frequency table (overlapping occurrences all count,
   weighted by word frequency), take the pair with the highest count
   (ties: lexicographically smallest (left, right)), stop early when the
-  best count < ``min_count``;
+  best count < ``MIN_COUNT``;
 - merge application (THE spec shared by all three implementations): a
   single left-to-right fold — scan the symbol list, replacing each
   adjacent (left, right) occurrence as it is met, so ``a a a`` under
@@ -121,9 +121,11 @@ def apply_merge(syms: list[str], left: str, right: str) -> list[str]:
     return out
 
 
-def train_merges(
-    word_freqs: dict[str, int], n_merges: int, min_count: int = 2
-) -> list[Merge]:
+# Training stops at the first best pair seen fewer than MIN_COUNT times.
+MIN_COUNT = 2
+
+
+def train_merges(word_freqs: dict[str, int], n_merges: int) -> list[Merge]:
     vocab = {w: [c for c in w] for w in word_freqs}
     merges: list[Merge] = []
     for rank in range(1, n_merges + 1):
@@ -138,7 +140,7 @@ def train_merges(
         (left, right), c = min(
             counts.items(), key=lambda kv: (-kv[1], kv[0])
         )
-        if c < min_count:
+        if c < MIN_COUNT:
             break
         merges.append(Merge(rank, left, right, left + right, c))
         vocab = {
@@ -167,28 +169,19 @@ def corpus_alphabet(texts: "list[str | None]") -> list[str]:
     return sorted({c for t in texts for w in norm_words(t) for c in w})
 
 
-def vocab_of(
-    merges: "list[Merge]", alphabet: "list[str] | None" = None
-) -> list[str]:
+def vocab_of(merges: "list[Merge]") -> list[str]:
     """The tokenizer vocabulary: '<unk>' at id 0, then the sorted
-    single-character training alphabet, then merged symbols in rank
-    order. The alphabet is part of the tokenizer artifact — pass the
-    one from YOUR training corpus (``corpus_alphabet``) with
-    corpus-trained merges; the default is the TRAIN_CORPUS alphabet,
-    matching ``default_merges`` ONLY."""
-    if alphabet is None:
-        alphabet = corpus_alphabet(list(TRAIN_CORPUS))
-    return ["<unk>"] + list(alphabet) + [m.merged for m in merges]
+    single-character TRAIN_CORPUS alphabet, then merged symbols in rank
+    order. The alphabet is part of the tokenizer artifact, so this
+    vocabulary matches merges trained on TRAIN_CORPUS
+    (``default_merges``)."""
+    alphabet = corpus_alphabet(list(TRAIN_CORPUS))
+    return ["<unk>"] + alphabet + [m.merged for m in merges]
 
 
-def encode_ids(
-    text: str | None,
-    merges: "list[Merge]",
-    alphabet: "list[str] | None" = None,
-) -> list[int]:
+def encode_ids(text: str | None, merges: "list[Merge]") -> list[int]:
     """Token-id encoding: the subword stream mapped through
-    ``vocab_of(merges, alphabet)`` (symbols outside the vocabulary map
-    to 0 = '<unk>'). As with vocab_of, pass the training corpus's
-    alphabet unless the merges are ``default_merges``."""
-    vocab = {s: i for i, s in enumerate(vocab_of(merges, alphabet))}
+    ``vocab_of(merges)`` (symbols outside the vocabulary map to
+    0 = '<unk>')."""
+    vocab = {s: i for i, s in enumerate(vocab_of(merges))}
     return [vocab.get(s, 0) for s in encode_text(text, merges)]

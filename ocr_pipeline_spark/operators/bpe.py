@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels.bpe import Merge
+from ..kernels.bpe import MIN_COUNT, Merge
 from .textstats import tokens
 
 __all__ = [
@@ -51,13 +51,13 @@ __all__ = [
 ]
 
 
-def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_frequencies(docs: DataFrame) -> DataFrame:
     """(word, freq) over the corpus — tokenize, explode, count.
 
     explode_outer + isNotNull, not explode: InferFiltersFromGenerate
     would push the tokenize tree into a Filter (CLAUDE.md)."""
     return (
-        docs.select(F.explode_outer(tokens(F.col(text_col))).alias("word"))
+        docs.select(F.explode_outer(tokens(F.col("text"))).alias("word"))
         .filter(F.col("word").isNotNull())
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
@@ -98,8 +98,6 @@ def apply_merge_col(s: Column, left: str, right: str) -> Column:
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 24,
-    min_count: int = 2,
-    text_col: str = "text",
 ) -> list[Merge]:
     """Distributed BPE training; returns the learned merge table (a
     small driver-side list — it IS the tokenizer artifact).
@@ -108,7 +106,7 @@ def bpe_train(
     argmax is a deterministic ``orderBy(count desc, left, right)
     .limit(1)`` — one collected row per round, never the table."""
     vocab = (
-        word_frequencies(docs, text_col)
+        word_frequencies(docs)
         .select("freq", chars_col(F.col("word")).alias("s"))
         .localCheckpoint(eager=True)
     )
@@ -139,7 +137,7 @@ def bpe_train(
             .limit(1)
             .collect()
         )
-        if not best or best[0]["cnt"] < min_count:
+        if not best or best[0]["cnt"] < MIN_COUNT:
             break
         left, right, cnt = (
             best[0]["left"], best[0]["right"], int(best[0]["cnt"])
@@ -158,25 +156,21 @@ def _encode_word_col(word: Column, merges: list[Merge]) -> Column:
     return syms
 
 
-def bpe_encode(
-    docs: DataFrame, merges: list[Merge], text_col: str = "text"
-) -> DataFrame:
+def bpe_encode(docs: DataFrame, merges: list[Merge]) -> DataFrame:
     """(doc_id, bpe_tokens) — scan-local expression encoding: every
     word folded once per merge in rank order (the kernel spec)."""
     return docs.select(
         "doc_id",
         F.flatten(
             F.transform(
-                tokens(F.col(text_col)),
+                tokens(F.col("text")),
                 lambda w: _encode_word_col(w, merges),
             )
         ).alias("bpe_tokens"),
     )
 
 
-def bpe_encode_pandas(
-    docs: DataFrame, merges: list[Merge], text_col: str = "text"
-) -> DataFrame:
+def bpe_encode_pandas(docs: DataFrame, merges: list[Merge]) -> DataFrame:
     """Bulk encoder for production-sized merge tables: Arrow-batched
     mapInPandas over the kernel's dict-based encoder (30k nested folds
     would not plan; a rank-dict lookup loop is the right hot path).
@@ -190,9 +184,9 @@ def bpe_encode_pandas(
     def run(batches):
         for pdf in batches:
             yield pdf.assign(
-                bpe_tokens=pdf[text_col].map(
+                bpe_tokens=pdf["text"].map(
                     lambda t: encode_text(t, ms)
                 )
             )[["doc_id", "bpe_tokens"]]
 
-    return docs.select("doc_id", text_col).mapInPandas(run, out_schema)
+    return docs.select("doc_id", "text").mapInPandas(run, out_schema)

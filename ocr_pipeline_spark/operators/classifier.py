@@ -41,6 +41,7 @@ from .hashing import md5_int
 from .textstats import annotate_quality, tokens
 
 __all__ = [
+    "DEFAULT_BUCKETS",
     "QC_SCALE",
     "bucket_weights",
     "quality_scores",
@@ -48,17 +49,16 @@ __all__ = [
 ]
 
 QC_SCALE = 1_000_000
+# Token hash buckets: the model's features.
 DEFAULT_BUCKETS = 256
 
 
-def _bucketed(docs: DataFrame, n_buckets: int, text_col: str) -> DataFrame:
+def _bucketed(docs: DataFrame) -> DataFrame:
     """(doc_id, is_quality, bucket) — one row per token occurrence.
     explode_outer + isNotNull per the InferFiltersFromGenerate rule."""
-    ann = annotate_quality(docs, text_col=text_col).select(
-        "doc_id", "is_quality", F.col(text_col)
-    )
+    ann = annotate_quality(docs).select("doc_id", "is_quality", "text")
     staged = ann.select(
-        "doc_id", "is_quality", tokens(F.col(text_col)).alias("_t")
+        "doc_id", "is_quality", tokens(F.col("text")).alias("_t")
     )
     return (
         staged.select(
@@ -70,20 +70,16 @@ def _bucketed(docs: DataFrame, n_buckets: int, text_col: str) -> DataFrame:
         .select(
             "doc_id",
             "is_quality",
-            (md5_int(F.col("tok")) % F.lit(n_buckets)).alias("bucket"),
+            (md5_int(F.col("tok")) % F.lit(DEFAULT_BUCKETS)).alias("bucket"),
         )
     )
 
 
-def bucket_weights(
-    docs: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-    text_col: str = "text",
-) -> DataFrame:
+def bucket_weights(docs: DataFrame) -> DataFrame:
     """The trained model: (bucket, n_quality, n_total, weight) where
     weight = (QC_SCALE * (n_quality+1)) div (n_total+2) — the
     Laplace-smoothed quality share in fixed point."""
-    return _weights(_bucketed(docs, n_buckets, text_col))
+    return _weights(_bucketed(docs))
 
 
 def _weights(bucketed: DataFrame) -> DataFrame:
@@ -106,18 +102,12 @@ def _weights(bucketed: DataFrame) -> DataFrame:
     )
 
 
-def quality_scores(
-    docs: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-    text_col: str = "text",
-) -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Train on the corpus, score the corpus (one tokenize pass for
     both). Output: (doc_id, quality_score, n_scored_tokens, is_quality)
     where quality_score = integral mean bucket weight in [0, QC_SCALE]
     — the soft ranking; is_quality is the distilled binary label."""
-    bucketed = _bucketed(docs, n_buckets, text_col).localCheckpoint(
-        eager=False
-    )
+    bucketed = _bucketed(docs).localCheckpoint(eager=False)
     weights = _weights(bucketed).select("bucket", "weight")
     return (
         bucketed.join(F.broadcast(weights), "bucket")
@@ -136,12 +126,7 @@ def quality_scores(
     )
 
 
-def select_top_fraction(
-    docs: DataFrame,
-    frac: float = 0.25,
-    n_buckets: int = DEFAULT_BUCKETS,
-    text_col: str = "text",
-) -> DataFrame:
+def select_top_fraction(docs: DataFrame, frac: float = 0.25) -> DataFrame:
     """The "take the best X%" curation step the soft score exists for:
     the top ``ceil(frac * N)`` documents by (quality_score DESC, doc_id)
     — doc_id breaks ties, so the selected SET is deterministic.
@@ -158,7 +143,7 @@ def select_top_fraction(
     """
     if not (0.0 < frac <= 1.0):
         raise ValueError(f"frac must be in (0, 1], got {frac}")
-    scored = quality_scores(docs, n_buckets=n_buckets, text_col=text_col)
+    scored = quality_scores(docs)
     n = scored.count()
     k = max(1, math.ceil(frac * n))
     return (

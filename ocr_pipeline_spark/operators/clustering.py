@@ -36,9 +36,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["KM_SCALE", "kmeans_assign", "kmeans_centroids"]
+__all__ = ["KM_CELLS", "KM_ITERS", "KM_SCALE", "kmeans_assign", "kmeans_centroids"]
 
 KM_SCALE = 1_000_000
+# Default codebook: KM_CELLS cells after KM_ITERS update rounds.
+KM_CELLS = 8
+KM_ITERS = 3
 
 
 def _trunc_div(s: int, n: int) -> int:
@@ -86,8 +89,8 @@ def _assign(q: DataFrame, cents: dict[int, list[int]], id_col: str) -> DataFrame
 
 def kmeans_centroids(
     emb: DataFrame,
-    k: int = 8,
-    iters: int = 3,
+    k: int = KM_CELLS,
+    iters: int = KM_ITERS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> dict[int, list[int]]:
@@ -138,8 +141,8 @@ def kmeans_centroids(
 
 def kmeans_assign(
     emb: DataFrame,
-    k: int = 8,
-    iters: int = 3,
+    k: int = KM_CELLS,
+    iters: int = KM_ITERS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:

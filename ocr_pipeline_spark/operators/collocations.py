@@ -51,7 +51,6 @@ SCALE_BP = 10_000
 
 def collocations(
     docs: DataFrame,
-    text_col: str = "text",
     min_count: int = 5,
     top_k: int = 50,
 ) -> DataFrame:
@@ -63,7 +62,7 @@ def collocations(
     standard PMI pathology).
     """
     staged = docs.select(
-        tokens(F.col(text_col)).alias("_t")
+        tokens(F.col("text")).alias("_t")
     ).localCheckpoint(eager=False)
     uni = (
         staged.select(F.explode_outer("_t").alias("term"))

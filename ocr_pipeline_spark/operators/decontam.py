@@ -40,12 +40,12 @@ __all__ = [
 DEFAULT_NGRAM = 8
 
 
-def gram_keys(col: Column, n: int = DEFAULT_NGRAM) -> Column:
-    """Array of 16-hex md5 keys of the distinct word n-grams of a text
-    column (shingles semantics: docs shorter than n words contribute
-    their whole normalized text as one gram)."""
+def gram_keys(col: Column) -> Column:
+    """Array of 16-hex md5 keys of the distinct word DEFAULT_NGRAM-grams
+    of a text column (shingles semantics: shorter docs contribute their
+    whole normalized text as one gram)."""
     return F.transform(
-        shingles(col, n),
+        shingles(col, DEFAULT_NGRAM),
         lambda g: md5_hex(g, 16),
     )
 
@@ -53,16 +53,14 @@ def gram_keys(col: Column, n: int = DEFAULT_NGRAM) -> Column:
 def contamination_flags(
     docs: DataFrame,
     bench: DataFrame,
-    n: int = DEFAULT_NGRAM,
     threshold_pct: int = 10,
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document contamination screen against a benchmark suite.
 
     ``bench``: DataFrame with a ``text`` column (the benchmark items —
     questions, answers, passages). Output per input doc:
     (doc_id, n_grams, n_hit, is_contaminated) where ``n_grams`` counts
-    the doc's distinct n-grams, ``n_hit`` how many occur anywhere in the
+    the doc's distinct DEFAULT_NGRAM-grams, ``n_hit`` how many occur anywhere in the
     benchmark, and ``is_contaminated`` is the integer-exact threshold
     test 100·n_hit ≥ threshold_pct·n_grams.
 
@@ -74,7 +72,7 @@ def contamination_flags(
     """
     bench_keys = (
         bench.select(
-            F.explode_outer(gram_keys(F.col(text_col), n)).alias("gk")
+            F.explode_outer(gram_keys(F.col("text"))).alias("gk")
         )
         .filter(F.col("gk").isNotNull())
         .distinct()
@@ -85,7 +83,7 @@ def contamination_flags(
     # the whole tokenize+hash tree into a Filter and re-inline it per
     # element; the array is never empty, so rows are identical)
     sh = docs.select(
-        "doc_id", gram_keys(F.col(text_col), n).alias("_gks")
+        "doc_id", gram_keys(F.col("text")).alias("_gks")
     )
     ex = (
         sh.select(
@@ -117,11 +115,6 @@ def contamination_flags(
 def fuzzy_decontam(
     docs: DataFrame,
     bench: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
     min_jaccard_bp: int = 5000,
 ) -> DataFrame:
     """Fuzzy (near-duplicate) decontamination — the MinHash/LSH
@@ -156,21 +149,15 @@ def fuzzy_decontam(
         minhash_signatures,
     )
 
-    u = docs.select("doc_id", F.col(text_col).alias("text")).withColumn(
+    u = docs.select("doc_id", "text").withColumn(
         "_bench", F.lit(False)
     ).unionByName(
-        bench.select("doc_id", F.col(text_col).alias("text")).withColumn(
+        bench.select("doc_id", "text").withColumn(
             "_bench", F.lit(True)
         )
     )
     flags = u.select("doc_id", "_bench")
-    pairs = lsh_candidate_pairs(
-        minhash_signatures(
-            u, num_hashes=num_hashes, shingle_n=shingle_n
-        ),
-        bands=bands,
-        rows_per_band=rows_per_band,
-    )
+    pairs = lsh_candidate_pairs(minhash_signatures(u))
     cross = (
         pairs.join(
             flags.select(
@@ -186,7 +173,7 @@ def fuzzy_decontam(
         )
         .filter(F.col("_ba") != F.col("_bb"))
     )
-    ver = jaccard_verify(u, cross.select("doc_a", "doc_b"), shingle_n=shingle_n)
+    ver = jaccard_verify(u, cross.select("doc_a", "doc_b"))
     per_doc = (
         ver.join(
             flags.select(

@@ -56,6 +56,8 @@ __all__ = [
 
 DEFAULT_NUM_HASHES = 8
 DEFAULT_SHINGLE = 3
+# Tokens per chunk of the chunk-level dedup and boilerplate operators.
+CHUNK_TOKENS = 10
 
 # Universal-hash-family modulus for MinHash permutations (2^31 - 1, prime).
 # a*h+b stays under 2^62 (a, h < 2^31) — no bigint overflow in either engine.
@@ -74,12 +76,12 @@ def minhash_perm_constants(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup: one canonical doc per distinct content
     fingerprint. Output: (fingerprint, n_docs, canonical_doc_id)."""
     return (
         docs.select(
-            fingerprint(F.col(text_col)).alias("fingerprint"), "doc_id"
+            fingerprint(F.col("text")).alias("fingerprint"), "doc_id"
         )
         .groupBy("fingerprint")
         .agg(
@@ -109,41 +111,36 @@ def shingles(col: Column, n: int = DEFAULT_SHINGLE) -> Column:
     return _shingles_from(tokens(col), norm_text(col), n)
 
 
-def shingle_sets(
-    docs: DataFrame, text_col: str = "text", n: int = DEFAULT_SHINGLE
-) -> DataFrame:
+def shingle_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, _sh) with tokenization and shingling staged as separate
     projections (see _shingles_from)."""
-    return _staged_tokens(docs, text_col).select(
-        "doc_id", _shingles_from(F.col("_t"), F.col("_n"), n).alias("_sh")
+    return _staged_tokens(docs, "text").select(
+        "doc_id",
+        _shingles_from(F.col("_t"), F.col("_n"), DEFAULT_SHINGLE).alias("_sh"),
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_n: int = DEFAULT_SHINGLE,
-) -> DataFrame:
-    """Per-doc MinHash signature: bigint columns sig_0..sig_{num_hashes-1},
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """Per-doc MinHash signature: bigint columns
+    sig_0..sig_{DEFAULT_NUM_HASHES-1} over DEFAULT_SHINGLE-word shingles,
     sig_i = min over shingles of (a_i * h(shingle) + b_i) mod P, where
     h = md5_int(shingle) mod P (DuckDB:
     ('0x' || substr(md5(s), 1, 12))::BIGINT % P).
 
     Scale design: the md5 shingle hash is computed ONCE per shingle; each
-    of the num_hashes signatures is 3 integer ops per shingle on top —
-    the classic permutation family, ~num_hashes× cheaper than hashing
+    of the signatures is 3 integer ops per shingle on top —
+    the classic permutation family, ~DEFAULT_NUM_HASHES× cheaper than hashing
     every shingle per signature. Staged as three projections (shingles →
     hashes → mins) because higher-order expressions are CodegenFallback
     and Catalyst has no logical CSE — a single select would inline the
     whole shingle tree into every sig_i. CollapseProject keeps the split
     (non-cheap, multiply-referenced producers)."""
-    sh_df = shingle_sets(docs, text_col, shingle_n)
+    sh_df = shingle_sets(docs)
     h_df = sh_df.select(
         "doc_id",
         F.transform(F.col("_sh"), lambda s: md5_int(s) % MINHASH_P).alias("_h"),
     )
-    consts = minhash_perm_constants(num_hashes)
+    consts = minhash_perm_constants(DEFAULT_NUM_HASHES)
 
     def perm(a: int, b: int):
         # closure (not default args): PySpark derives lambda arity from
@@ -207,16 +204,11 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_verify(
-    docs: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    shingle_n: int = DEFAULT_SHINGLE,
-) -> DataFrame:
+def jaccard_verify(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact shingle-set Jaccard on candidate pairs (the verify stage after
     LSH recall). Output ints + a division of identical ints → identical
     doubles across engines."""
-    sh = shingle_sets(docs, text_col, shingle_n).withColumnRenamed("_sh", "sh")
+    sh = shingle_sets(docs).withColumnRenamed("_sh", "sh")
     j = (
         pairs.join(sh.withColumnRenamed("doc_id", "doc_a").alias("sa"), "doc_a")
         .join(
@@ -342,7 +334,7 @@ def dup_clusters(
     return labels
 
 
-def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """60-bit SimHash of whitespace tokens → (doc_id, simhash).
 
     Tokens are the engine tokenizer's (``kernels.bpe.norm_words``, the
@@ -370,13 +362,13 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
             if not len(pdf):
                 continue
             sigs = np.fromiter(
-                (sign(t) for t in pdf[text_col]), dtype=np.int64, count=len(pdf)
+                (sign(t) for t in pdf["text"]), dtype=np.int64, count=len(pdf)
             )
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"].to_numpy(), "simhash": sigs}
             )
 
-    return docs.select("doc_id", text_col).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         fn, schema="doc_id long, simhash long"
     )
 
@@ -593,7 +585,7 @@ def dup_spans(
 
 
 def chunk_dedup(
-    docs: DataFrame, k: int = 10, text_col: str = "text"
+    docs: DataFrame, k: int = CHUNK_TOKENS
 ) -> DataFrame:
     """Passage-level exact dedup (the C4/CCNet line-dedup analogue for
     corpora without line structure): split each document's normalized
@@ -622,7 +614,7 @@ def chunk_dedup(
     DuckDB oracle: __spark_entry__ replays the same chunking/election
     with row_number over (chash) — `q: dd_chunk_dedup`.
     """
-    chunked, keyed = _chunk_stages(docs, k, text_col)
+    chunked, keyed = _chunk_stages(docs, k, "text")
     winners = keyed.groupBy("chash").agg(
         F.min(F.struct("doc_id", "chunk_idx")).alias("w")
     )
@@ -726,7 +718,7 @@ def _reassemble(
 
 def boilerplate_scrub(
     docs: DataFrame,
-    k: int = 10,
+    k: int = CHUNK_TOKENS,
     max_df: int = 2,
     text_col: str = "text",
 ) -> DataFrame:
@@ -779,10 +771,7 @@ def boilerplate_scrub(
 def containment_pairs(
     docs: DataFrame,
     threshold_bp: int = 6000,
-    k: int = 3,
-    w: int = 4,
     max_fp_df: int | None = 20,
-    text_col: str = "text",
 ) -> DataFrame:
     """ASYMMETRIC containment detection over winnowing fingerprints —
     "document A is (mostly) contained in document B": quotes, truncated
@@ -793,7 +782,8 @@ def containment_pairs(
     containment_bp(src → dst) = 10000 · |fp(src) ∩ fp(dst)| div |fp(src)|
 
     over MOSS winnowing fingerprints (textstats.winnow_fingerprints:
-    any shared token run of ≥ w+k-1 tokens shares a fingerprint, so a
+    any shared token run of ≥ WINNOW_W+WINNOW_K-1 tokens shares a
+    fingerprint, so a
     verbatim-contained src scores near 10000 minus boundary windows).
     Output: (src_id, dst_id, n_shared, n_src, containment_bp), ordered
     pairs in BOTH directions (the asymmetry is the information), pairs
@@ -813,7 +803,7 @@ def containment_pairs(
     """
     from .textstats import winnow_fingerprints
 
-    fps = winnow_fingerprints(docs, text_col=text_col, k=k, w=w)
+    fps = winnow_fingerprints(docs)
     sizes = fps.select(
         F.col("doc_id").alias("src_id"),
         F.size("fingerprints").cast("long").alias("n_src"),
@@ -854,7 +844,7 @@ def containment_pairs(
 
 def cross_source_chunks(
     docs: DataFrame,
-    k: int = 10,
+    k: int = CHUNK_TOKENS,
     text_col: str = "text",
     source_col: str = "source",
 ) -> DataFrame:
@@ -910,10 +900,8 @@ def cross_source_chunks(
 
 def template_report(
     docs: DataFrame,
-    k: int = 10,
     min_df: int = 3,
     top_n: int = 50,
-    text_col: str = "text",
 ) -> DataFrame:
     """Boilerplate template AUDIT — the human-facing side of
     :func:`boilerplate_scrub`'s election: the most ubiquitous k-token
@@ -934,7 +922,7 @@ def template_report(
     """
     if min_df < 1:
         raise ValueError(f"min_df must be >= 1, got {min_df}")
-    chunked, keyed = _chunk_stages(docs, k, text_col)
+    chunked, keyed = _chunk_stages(docs, CHUNK_TOKENS, "text")
     stats = (
         keyed.groupBy("chash")
         .agg(

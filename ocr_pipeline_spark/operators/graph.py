@@ -52,6 +52,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
+    "DAMPING_BP",
+    "PAGERANK_ITERS",
+    "SCALE_BP",
     "pagerank",
     "pagerank_until",
     "out_degrees",
@@ -60,6 +63,9 @@ __all__ = [
 ]
 
 SCALE_BP = 10_000
+# Default PageRank run: PAGERANK_ITERS rounds at damping DAMPING_BP.
+DAMPING_BP = 8500
+PAGERANK_ITERS = 3
 
 
 def out_degrees(edges: DataFrame) -> DataFrame:
@@ -71,7 +77,7 @@ def out_degrees(edges: DataFrame) -> DataFrame:
 
 
 def pagerank(
-    edges: DataFrame, n_iters: int = 3, damping_bp: int = 8500
+    edges: DataFrame, n_iters: int = PAGERANK_ITERS, damping_bp: int = DAMPING_BP
 ) -> DataFrame:
     """Run ``n_iters`` exact PageRank iterations over an (src, dst)
     bigint edge list.
@@ -143,7 +149,6 @@ def _step(
 def pagerank_until(
     edges: DataFrame,
     eps_bp: int = 0,
-    damping_bp: int = 8500,
     max_iters: int = 100,
 ) -> tuple[DataFrame, int]:
     """Adaptive-convergence PageRank: iterate until
@@ -155,15 +160,13 @@ def pagerank_until(
     (bounded collect, the kmeans/bpe precedent); each round's plan is
     identical to ``pagerank``'s. Exact integer arithmetic means the
     fixed point is EXACT: with eps_bp=0 the loop stops when an
-    iteration changes no rank at all — termination is guaranteed for
-    any damping < 10000 because the integer map is a contraction
+    iteration changes no rank at all — termination is guaranteed
+    (DAMPING_BP < 10000) because the integer map is a contraction
     (|Δ| shrinks by at least the damping factor per round, and
     truncating division only loses mass). ``max_iters`` is the loud
     backstop (the dup_clusters precedent): exceeding it raises rather
     than silently returning an unconverged table.
     """
-    if not 0 <= damping_bp <= SCALE_BP:
-        raise ValueError(f"damping_bp must be in [0, {SCALE_BP}]")
     if eps_bp < 0:
         raise ValueError(f"eps_bp must be >= 0, got {eps_bp}")
     if max_iters < 1:
@@ -174,7 +177,7 @@ def pagerank_until(
         "node", F.lit(SCALE_BP).cast("long").alias("rank_bp")
     ).localCheckpoint(eager=False)
     for rounds in range(1, max_iters + 1):
-        nxt = _step(nodes, deg_edges, ranks, damping_bp)
+        nxt = _step(nodes, deg_edges, ranks, DAMPING_BP)
         delta = (
             nxt.join(
                 ranks.withColumnRenamed("rank_bp", "prev_bp"), "node"
@@ -193,15 +196,14 @@ def pagerank_until(
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 20, on_nonconverged: str = "warn"
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components of an undirected graph given as (src, dst)
     edge rows — the general form of the dedup layer's cluster
     assignment (operators/dedup.py:dup_clusters is the underlying
     hash-min label propagation with pointer jumping: O(log diameter)
-    rounds, per-round localCheckpoint lineage truncation, loud
-    max_iter). Every node converges to its component's minimum node id.
+    rounds, per-round localCheckpoint lineage truncation, and its
+    default max_iter and warning). Every node converges to its
+    component's minimum node id.
 
     Output: (node, component) for every node incident to an edge.
     Classic uses over the page graph: mirror-site detection (a
@@ -214,9 +216,7 @@ def connected_components(
     pairs = edges.select(
         F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
     )
-    return dup_clusters(
-        pairs, max_iter=max_iter, on_nonconverged=on_nonconverged
-    ).select(
+    return dup_clusters(pairs).select(
         F.col("doc_id").alias("node"),
         F.col("cluster_id").alias("component"),
     )

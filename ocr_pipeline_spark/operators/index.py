@@ -44,12 +44,15 @@ from pyspark.sql import functions as F
 
 from .textstats import tokens
 
-__all__ = ["term_postings", "bm25_search"]
+__all__ = ["BM25_B_BP", "BM25_K1_BP", "term_postings", "bm25_search"]
+
+# BM25's k1 = 1.2 and b = 0.75, in basis points.
+BM25_K1_BP = 12000
+BM25_B_BP = 7500
 
 
 def term_postings(
     docs: DataFrame,
-    text_col: str = "text",
     n_shards: int = 1,
     min_df: int = 1,
     max_df_frac: float | None = None,
@@ -70,7 +73,7 @@ def term_postings(
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     term_doc = (
         docs.select(
-            "doc_id", F.explode_outer(tokens(F.col(text_col))).alias("term")
+            "doc_id", F.explode_outer(tokens(F.col("text"))).alias("term")
         )
         .filter(F.col("term").isNotNull() & (F.col("term") != ""))
         .groupBy("term", "doc_id")
@@ -104,9 +107,6 @@ def bm25_search(
     docs: DataFrame,
     query_terms: tuple[str, ...],
     k: int = 10,
-    k1_bp: int = 12000,
-    b_bp: int = 7500,
-    text_col: str = "text",
 ) -> DataFrame:
     """BM25-shaped ranked retrieval (Robertson & Zaragoza 2009, "The
     Probabilistic Relevance Framework: BM25 and Beyond") in EXACT
@@ -115,13 +115,14 @@ def bm25_search(
 
         idf_b   = len(bin((N + 1) div (df + 1)))     # floor-log2 idf,
                                                      # the lm.py bit trick
-        norm_bp = (10000 - b_bp) + (b_bp * dl) div avgdl
-        K_bp    = (k1_bp * norm_bp) div 10000
-        sat_bp  = (10000 * tf * (10000 + k1_bp)) div (10000 * tf + K_bp)
+        norm_bp = (10000 - B_BP) + (B_BP * dl) div avgdl
+        K_bp    = (K1_BP * norm_bp) div 10000
+        sat_bp  = (10000 * tf * (10000 + K1_BP)) div (10000 * tf + K_bp)
         score   = sum over matched query terms of idf_b * sat_bp
 
-    with avgdl = L div N (floored — part of the spec). k1 = k1_bp/1e4,
-    b = b_bp/1e4 are the classic 1.2 / 0.75 defaults. The bit-length
+    with avgdl = L div N (floored — part of the spec). k1 = K1_BP/1e4,
+    b = B_BP/1e4 are the classic 1.2 / 0.75 (``BM25_K1_BP``,
+    ``BM25_B_BP``). The bit-length
     idf is the house integer-exact form (a monotone floor of log2, the
     same transform lm.py scores with); ranking ties break by doc_id.
 
@@ -133,7 +134,7 @@ def bm25_search(
     map-side-combinable groupBys on those shorts; the (N, L) scalars
     broadcast; the final top-k compiles to TakeOrderedAndProject
     (pinned) — never a global sort. INTEGER RANGE: every product is
-    bounded by b_bp*dl (~10^9 at 100k-token docs) or 10^4*tf*(2.2*10^4)
+    bounded by B_BP*dl (~10^9 at 100k-token docs) or 10^4*tf*(2.2*10^4)
     (~10^13) — safe in bigint at any corpus size because dl, tf are
     PER-DOCUMENT quantities and N only enters through the idf quotient.
 
@@ -145,7 +146,7 @@ def bm25_search(
     # lazy checkpoint: staged feeds both the term filter and the (N, L)
     # scalars — without it the corpus is scanned and tokenized twice
     staged = docs.select(
-        "doc_id", tokens(F.col(text_col)).alias("toks")
+        "doc_id", tokens(F.col("text")).alias("toks")
     ).localCheckpoint(eager=False)
     base = (
         staged.select(
@@ -175,9 +176,9 @@ def bm25_search(
                 F.length(F.bin(F.expr("(n_docs + 1) div (df + 1)")))
                 .cast("long")
                 * F.expr(
-                    f"(10000 * tf * (10000 + {k1_bp})) div "
-                    f"(10000 * tf + ({k1_bp} * "
-                    f"((10000 - {b_bp}) + ({b_bp} * dl) div avgdl))"
+                    f"(10000 * tf * (10000 + {BM25_K1_BP})) div "
+                    f"(10000 * tf + ({BM25_K1_BP} * "
+                    f"((10000 - {BM25_B_BP}) + ({BM25_B_BP} * dl) div avgdl))"
                     " div 10000)"
                 )
             ).alias("term_score"),

@@ -183,7 +183,6 @@ def write_zorder(
     path: str,
     cols: list[str],
     n_files: int = 8,
-    bits: int = ZBITS,
     bounds: list[tuple[int, int]] | None = None,
 ) -> None:
     """Write ``df`` as parquet clustered by the z-value of ``cols``:
@@ -191,7 +190,7 @@ def write_zorder(
     tight hyper-rectangle in every key dimension), sort within
     partitions by z so row groups inherit the clustering too. The
     z-value itself is dropped — it is a layout device, not data."""
-    z = with_zvalue(df, cols, bits=bits, bounds=bounds)
+    z = with_zvalue(df, cols, bounds=bounds)
     (
         z.repartitionByRange(n_files, "zval")
         .sortWithinPartitions("zval")

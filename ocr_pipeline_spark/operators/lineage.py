@@ -15,7 +15,8 @@ resume key). A run writes, per bucket:
     bytes_hash string (xor-fold of per-url sha256 — order-independent),
     committed_at timestamp
 
-Resume = anti-join pending buckets against the manifest (SURVEY.md §4.3.2).
+Resume = drop the pages whose bucket the manifest already lists
+(SURVEY.md §4.3.2).
 With Iceberg the output append + manifest append would share one
 transaction; on plain parquet we emulate by writing output first, manifest
 last (manifest row ⇒ bucket fully present — write-ahead in the safe
@@ -50,22 +51,23 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def committed_buckets(spark: SparkSession, manifest_path: str) -> DataFrame:
-    """Buckets committed by prior runs; empty DataFrame if none exist yet.
+def committed_buckets(spark: SparkSession, manifest_path: str) -> set[int]:
+    """Bucket ids committed by prior runs; empty if none exist yet.
 
-    The manifest is read with its known schema (no inference job). The
-    first-run empty relation is a local one, so collecting it runs no job
-    and the resume anti-join against it folds away."""
+    One read of the manifest's bucket column, with its known schema (no
+    inference job); a first run (no manifest) runs no job at all."""
     try:
         manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
     except AnalysisException:  # first run: no manifest table
-        return spark.sql("SELECT CAST(NULL AS INT) AS bucket WHERE false")
-    return manifest.select("bucket").distinct()
+        return set()
+    return {r["bucket"] for r in manifest.select("bucket").distinct().collect()}
 
 
-def pending(pages_bucketed: DataFrame, committed: DataFrame) -> DataFrame:
-    """Anti-join resume: drop pages whose bucket already committed (J4)."""
-    return pages_bucketed.join(committed, "bucket", "left_anti")
+def pending(pages_bucketed: DataFrame, committed: set[int]) -> DataFrame:
+    """Resume: drop pages whose bucket already committed (J4). The ids
+    are at most n_buckets ints, so this is a literal filter, not a join
+    against the manifest; with none committed it folds away."""
+    return pages_bucketed.filter(~F.col("bucket").isin(sorted(committed)))
 
 
 def _xor_fold_sha():
@@ -167,21 +169,16 @@ def write_extracted_with_manifest(
     manifest.write.mode("append").parquet(manifest_path)
 
 
-def diff_extractions(
-    old: DataFrame,
-    new: DataFrame,
-    key: str = "url",
-    hash_col: str = "text_sha256",
-) -> DataFrame:
+def diff_extractions(old: DataFrame, new: DataFrame) -> DataFrame:
     """Run-to-run extraction diff — the operational check behind the
     byte-identity contract: before promoting a new EXTRACTOR_VERSION,
     compare its output against the previous run per document and
     quantify what changed (reference analogue: re-running /ocr and
     eyeballing result.txt; here it is one join).
 
-    Output per key: status ∈ {'same','diff','only_old','only_new'} plus
-    both hashes ('' sentinel, never NULL-mixed). Scale shape: a single
-    full-outer equi-join on the key — rows are (key, 64-hex) shorts,
+    Output per url: status ∈ {'same','diff','only_old','only_new'} plus
+    both text_sha256 hashes ('' sentinel, never NULL-mixed). Scale shape: a single
+    full-outer equi-join on the url — rows are (url, 64-hex) shorts,
     extracted text itself never moves. Aggregate downstream
     (groupBy('status').count()) for the promotion gate.
     """
@@ -190,18 +187,18 @@ def diff_extractions(
     # is still PRESENT, and pairing it with the other run must be
     # 'diff', never 'only_*'. NULL hashes coalesce to '' before compare.
     o = old.select(
-        F.col(key),
-        F.coalesce(F.col(hash_col), F.lit("")).alias("old_sha"),
+        F.col("url"),
+        F.coalesce(F.col("text_sha256"), F.lit("")).alias("old_sha"),
         F.lit(True).alias("_in_old"),
     )
     n = new.select(
-        F.col(key),
-        F.coalesce(F.col(hash_col), F.lit("")).alias("new_sha"),
+        F.col("url"),
+        F.coalesce(F.col("text_sha256"), F.lit("")).alias("new_sha"),
         F.lit(True).alias("_in_new"),
     )
-    j = o.join(n, key, "full_outer")
+    j = o.join(n, "url", "full_outer")
     return j.select(
-        key,
+        "url",
         F.coalesce("old_sha", F.lit("")).alias("old_sha"),
         F.coalesce("new_sha", F.lit("")).alias("new_sha"),
         F.when(F.col("_in_old").isNull(), "only_new")

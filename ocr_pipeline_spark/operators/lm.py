@@ -114,12 +114,12 @@ def _unigram_bits(counts: DataFrame) -> DataFrame:
     )
 
 
-def lm_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lm_surprisal(docs: DataFrame) -> DataFrame:
     """Self-train a unigram LM on the corpus and score every document.
 
     Output: (doc_id, n_toks, sum_bits, surprisal_bp), all bigint.
     """
-    keyed = token_hashes(docs, "doc_id", text_col).localCheckpoint(eager=False)
+    keyed = token_hashes(docs, "doc_id", "text").localCheckpoint(eager=False)
     lm = _unigram_bits(token_counts(keyed)).select("thash", "bits")
     return (
         keyed.join(lm, "thash")
@@ -132,9 +132,7 @@ def lm_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def head_split(
-    docs: DataFrame, n_splits: int = 3, text_col: str = "text"
-) -> DataFrame:
+def head_split(docs: DataFrame, n_splits: int = 3) -> DataFrame:
     """CCNet head/middle/tail split: rank documents by LM surprisal
     (ascending — most fluent first, doc_id tie-break) and deal them
     into ``n_splits`` equal ntiles. split 1 = "head" (keep for
@@ -152,7 +150,7 @@ def head_split(
     if n_splits < 1:
         raise ValueError(f"n_splits must be >= 1, got {n_splits}")
     w = Window.orderBy(F.asc("surprisal_bp"), F.asc("doc_id"))
-    return lm_surprisal(docs, text_col=text_col).select(
+    return lm_surprisal(docs).select(
         "doc_id",
         "surprisal_bp",
         F.ntile(n_splits).over(w).cast("long").alias("split"),
@@ -229,7 +227,7 @@ def _positional_scores(
     )
 
 
-def bigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def bigram_surprisal(docs: DataFrame) -> DataFrame:
     """Bigram-LM surprisal — the context-aware upgrade of
     ``lm_surprisal`` (a token is cheap when its PREDECESSOR predicts
     it, not merely when it is corpus-frequent; "york" after "new"
@@ -250,7 +248,7 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
     joins/groupBys move 16-hex hashes and bigint counts. Output:
     (doc_id, n_toks, sum_bits, surprisal_bp), all bigint.
     """
-    staged = _hash_arrays(docs, text_col)
+    staged = _hash_arrays(docs, "text")
     u_bits = _unigram_bits(_array_counts(staged))
     # the per-position pair stream feeds BOTH the bigram counts and the
     # per-doc scoring join — materialize the explode once (measured 6.2
@@ -278,13 +276,11 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return _positional_scores(first_bits, pair_bits)
 
 
-def head_split_approx(
-    docs: DataFrame, n_splits: int = 3, text_col: str = "text", bins: int = 64
-) -> DataFrame:
+def head_split_approx(docs: DataFrame, n_splits: int = 3) -> DataFrame:
     """The SCALE form of ``head_split``: threshold assignment from the
     mergeable fixed-bin histogram sketch (operators/sketch.
     hist_quantiles) instead of a global ntile sort — two scan-local
-    passes over (doc_id, surprisal_bp) pairs plus a ≤``bins``-cell
+    passes over (doc_id, surprisal_bp) pairs plus a ≤64-cell
     aggregate; no global window, so it survives 10^12 docs where the
     exact ntile cannot (head_split's own docstring promises this path;
     this is it).
@@ -303,9 +299,7 @@ def head_split_approx(
 
     if n_splits < 1:
         raise ValueError(f"n_splits must be >= 1, got {n_splits}")
-    scored = lm_surprisal(docs, text_col=text_col).localCheckpoint(
-        eager=False
-    )
+    scored = lm_surprisal(docs).localCheckpoint(eager=False)
     ps = tuple(
         (k * SCALE_BP) // n_splits for k in range(1, n_splits)
     )
@@ -313,7 +307,6 @@ def head_split_approx(
         scored.withColumn("_g", F.lit(1)),
         "_g",
         "surprisal_bp",
-        bins=bins,
         ps_bp=ps,
     )
     # threshold bins: b_p = (est_p - lo) div w, exact by construction

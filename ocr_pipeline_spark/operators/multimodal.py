@@ -98,13 +98,13 @@ def _parse(payload: bytes | None) -> tuple[dict | None, str | None]:
         return None, "header too short"
 
 
-def synth_media(n: int, seed: int = 42) -> pd.DataFrame:
+def synth_media(n: int) -> pd.DataFrame:
     """Deterministic media table: cycles image/audio/video, pixel/sample
-    bytes derived from sha256(seed, i) — no RNG state. Every 23rd row is
+    bytes derived from sha256(42, i) — no RNG state. Every 23rd row is
     a corrupt payload (error-path fixture)."""
     rows = []
     for i in range(n):
-        h = hashlib.sha256(f"{seed}_{i}".encode()).digest()
+        h = hashlib.sha256(f"42_{i}".encode()).digest()
         fill = (h * 64)[: 64 * 48]
         kind = ("image", "audio", "video")[i % 3]
         if i % 23 == 7:
@@ -175,7 +175,11 @@ def decode_media_meta(media: DataFrame) -> DataFrame:
     return media.mapInPandas(fn, schema=MEDIA_META_SCHEMA)
 
 
-def frame_sample(media: DataFrame, every_k: int = 2) -> DataFrame:
+# frame_sample's default stride: frames 0, k, 2k, ...
+FRAME_EVERY_K = 2
+
+
+def frame_sample(media: DataFrame, every_k: int = FRAME_EVERY_K) -> DataFrame:
     """Video fan-out: one row per sampled frame (frames 0, k, 2k, …) —
     the A1 explode analogue for binary payloads; frame bytes are sliced
     views of the payload, sized by the header, never re-encoded."""
@@ -202,9 +206,9 @@ def frame_sample(media: DataFrame, every_k: int = 2) -> DataFrame:
     return media.mapInPandas(fn, schema=FRAME_SCHEMA)
 
 
-def feature_of(payload: bytes | None, dim: int = FEATURE_DIM) -> list | None:
+def feature_of(payload: bytes | None) -> list | None:
     """Per-payload feature kernel: L2-normalized byte histogram of the
-    payload → list of ``dim`` doubles, or None for undecodable payloads.
+    payload → list of ``FEATURE_DIM`` doubles, or None for undecodable payloads.
     Single source of truth — both the Spark UDF and the DuckDB-oracle
     VALUES builder call this exact function, so cross-engine parity is
     by construction (CLAUDE.md recipe: inline the same Python-derived
@@ -213,7 +217,7 @@ def feature_of(payload: bytes | None, dim: int = FEATURE_DIM) -> list | None:
     if err:
         return None
     body = np.frombuffer(bytes(payload), dtype=np.uint8)
-    hist = np.bincount(body % dim, minlength=dim).astype("float64")
+    hist = np.bincount(body % FEATURE_DIM, minlength=FEATURE_DIM).astype("float64")
     norm = float(np.sqrt((hist * hist).sum()))
     return (hist / norm).tolist() if norm else hist.tolist()
 
@@ -229,9 +233,9 @@ def format_feature(vec: list | None) -> str:
     return ",".join("%.6f" % v for v in vec)
 
 
-def media_features_packed(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
+def media_features_packed(media: DataFrame) -> DataFrame:
     """Feature extraction: ``feature_of`` (L2-normalized byte histogram
-    of the payload, ``dim`` doubles) per payload, serialized Python-side
+    of the payload, ``FEATURE_DIM`` doubles) per payload, serialized Python-side
     via ``format_feature`` → (media_id, feature_str); undecodable
     payloads give ''. A deterministic stand-in for an embedding model
     with the plumbing a real one needs (binary in, fixed-dim vector
@@ -244,7 +248,7 @@ def media_features_packed(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame
         for pdf in batches:
             if not len(pdf):
                 continue
-            feats = [format_feature(feature_of(p, dim)) for p in pdf["payload"]]
+            feats = [format_feature(feature_of(p)) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {"media_id": pdf["media_id"].to_numpy(), "feature_str": feats}
             )
@@ -252,11 +256,7 @@ def media_features_packed(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame
     return media.mapInPandas(fn, schema="media_id long, feature_str string")
 
 
-def media_dedup(
-    media: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-) -> DataFrame:
+def media_dedup(media: DataFrame) -> DataFrame:
     """Byte-identical media dedup — the FIRST dedup stage of any
     multimodal crawl (the same logo, tracking pixel, player stub or
     stock photo is recrawled millions of times byte-for-byte; LAION-
@@ -281,12 +281,12 @@ def media_dedup(
     """
     return (
         media.select(
-            F.md5(F.col(payload_col)).alias("fingerprint"),
-            F.col(id_col),
+            F.md5(F.col("payload")).alias("fingerprint"),
+            F.col("media_id"),
         )
         .groupBy("fingerprint")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_copies"),
-            F.min(id_col).cast("long").alias("canonical_media_id"),
+            F.min("media_id").cast("long").alias("canonical_media_id"),
         )
     )

@@ -91,7 +91,7 @@ def scrub_pii(col: Column) -> Column:
     return out
 
 
-def with_scrubbed_text(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_scrubbed_text(df: DataFrame) -> DataFrame:
     """Adds ``scrubbed`` plus one integer match-count column per rule
     (n_email / n_ip / n_phone), counted BEFORE redaction. Counts are
     computed per step on the partially-scrubbed text, mirroring the
@@ -101,7 +101,7 @@ def with_scrubbed_text(df: DataFrame, text_col: str = "text") -> DataFrame:
     # chain is evaluated once per row (no multi-reference CSE hazard).
     # NULL→'' at the root: Spark's size(regexp_extract_all(NULL)) and
     # DuckDB's len(...) disagree on NULL, so neither engine ever sees one
-    out = df.withColumn("_s0", F.coalesce(F.col(text_col), F.lit("")))
+    out = df.withColumn("_s0", F.coalesce(F.col("text"), F.lit("")))
     counts = []
     for i, (name, pat, rep) in enumerate(_PII_STEPS):
         cur, nxt = f"_s{i}", f"_s{i + 1}"
@@ -190,7 +190,7 @@ def LUHN_SQL(c: str, engine: str) -> str:
     )
 
 
-def with_card_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_card_scrub(df: DataFrame) -> DataFrame:
     """Adds ``card_scrubbed`` (text with every LUHN-VALID card-shaped
     number replaced by ``<CARD>``) and ``n_card`` (count of validated
     numbers). Shape candidates come from ``CARD_RE``; each candidate is
@@ -208,7 +208,7 @@ def with_card_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
     with the text as the fold seed (DuckDB's list_reduce has no
     explicit init; prepending makes the empty-valid case a no-op).
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     staged = df.withColumn(
         "_cands", F.regexp_extract_all(t, F.lit(CARD_RE), F.lit(0))
     )

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .clustering import KM_CELLS, KM_ITERS, kmeans_assign
 from .hashing import md5_int, md5_int_py
 
 __all__ = [
@@ -44,6 +45,22 @@ __all__ = [
 # Width of hashed_embedding's vectors. A power of two, so the token
 # hash's low bits pick the index and the next bit up picks the sign.
 EMBED_DIM = 16
+# Width of the embeddings table's vectors.
+VEC_DIM = 64
+# Neighbours each top-k query returns.
+TOP_K = 5
+# ann_topk: ANN_TABLES hash tables of ANN_PLANES sign bits each; table t
+# draws its planes with seed 1000 * t.
+ANN_PLANES = 3
+ANN_TABLES = 6
+# ivf_topk's md5 codebook size and the cells each query probes.
+IVF_CELLS = 16
+IVF_PROBE = 4
+# cosine_near_dup's sign bits per bucket.
+NEAR_DUP_PLANES = 4
+# rp_project: VEC_DIM -> RP_DIM onto planes drawn with seed RP_SEED.
+RP_DIM = 16
+RP_SEED = 7
 
 
 def _dbl(col: Column) -> Column:
@@ -108,9 +125,7 @@ def _sim4_unrolled(a: Column, b: Column, dim: int) -> Column:
 def brute_force_topk(
     emb: DataFrame,
     query_ids: list[int],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    k: int = TOP_K,
 ) -> DataFrame:
     """Exact top-k neighbors for each query id.
 
@@ -120,13 +135,13 @@ def brute_force_topk(
     Ranking uses the ROUNDED similarity with id tie-break so the result is
     reproducible across engines and float paths.
     """
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    q = emb.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    sims = emb.join(F.broadcast(q), F.col(id_col) != F.col("query_id")).select(
+    sims = emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        _sim4(F.col("qvec"), F.col(vec_col)).alias("cos_sim"),
+        F.col("vec_id").alias("neighbor_id"),
+        _sim4(F.col("qvec"), F.col("embedding")).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
@@ -167,15 +182,15 @@ def hyperplane_bucket(
     return bucket
 
 
-def _centroids(n_cells: int, dim: int, seed: int = 0) -> list[list[float]]:
+def _centroids(n_cells: int) -> list[list[float]]:
     """Deterministic pseudo-centroids: md5-derived components, L2-normalized
     — the stand-in for a k-means codebook (a real deploy trains centroids
     on a sample and broadcasts them; the operator shape is identical)."""
     cells = []
     for c in range(n_cells):
         row = []
-        for d in range(dim):
-            h = md5_int_py(f"ivf_{seed}_{c}_{d}", 15)
+        for d in range(VEC_DIM):
+            h = md5_int_py(f"ivf_0_{c}_{d}", 15)
             row.append(h / float(1 << 59) - 1.0)
         norm = sum(x * x for x in row) ** 0.5
         cells.append([x / norm for x in row])
@@ -199,13 +214,9 @@ def _cell_scores(vec: Column, cents: list[list[float]]) -> Column:
 def ivf_topk(
     emb: DataFrame,
     query_ids: list[int],
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    dim: int = 64,
-    seed: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    k: int = TOP_K,
+    n_cells: int = IVF_CELLS,
+    n_probe: int = IVF_PROBE,
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: corpus rows are assigned to
@@ -225,18 +236,18 @@ def ivf_topk(
     cents = (
         [list(map(float, c)) for c in centroids]
         if centroids is not None
-        else _centroids(n_cells, dim, seed)
+        else _centroids(n_cells)
     )
     if n_probe > len(cents):
         raise ValueError(
             f"n_probe {n_probe} exceeds the {len(cents)}-cell codebook"
         )
-    scores = _cell_scores(F.col(vec_col), cents)
+    scores = _cell_scores(F.col("embedding"), cents)
     # nearest cell = max by (score, cell) — array_max on struct orders by
     # the first field with the int as deterministic tie-break
     corpus = emb.select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         # coalesce: non-nullable join key (see cosine_near_dup note)
         F.coalesce(F.array_max(scores)["cell"], F.lit(-1)).alias("cell"),
     )
@@ -244,10 +255,10 @@ def ivf_topk(
         F.reverse(F.array_sort(scores)), 1, n_probe
     )  # descending by score
     q = (
-        emb.filter(F.col(id_col).isin(query_ids))
+        emb.filter(F.col("vec_id").isin(query_ids))
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qvec"),
             F.explode(F.transform(top_cells, lambda s: s["cell"])).alias(
                 "q_cell"
             ),
@@ -256,11 +267,11 @@ def ivf_topk(
     sims = corpus.join(
         F.broadcast(q),
         (F.col("cell") == F.col("q_cell"))
-        & (F.col(id_col) != F.col("query_id")),
+        & (F.col("vec_id") != F.col("query_id")),
     ).select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        _sim4(F.col("qvec"), F.col(vec_col)).alias("cos_sim"),
+        F.col("vec_id").alias("neighbor_id"),
+        _sim4(F.col("qvec"), F.col("embedding")).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
@@ -275,11 +286,9 @@ def ivf_topk(
 def cosine_near_dup(
     emb: DataFrame,
     threshold: float = 0.7,
-    n_planes: int = 4,
-    dim: int = 64,
+    n_planes: int = NEAR_DUP_PLANES,
+    dim: int = VEC_DIM,
     seed: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, LSH-bucketed.
 
@@ -296,26 +305,24 @@ def cosine_near_dup(
     # filter from being pushed below the projection with the whole
     # hyperplane expression inlined (evaluated twice per row otherwise)
     keyed = emb.select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         F.coalesce(
-            hyperplane_bucket(F.col(vec_col), n_planes, dim, seed), F.lit(-1)
+            hyperplane_bucket(F.col("embedding"), n_planes, dim, seed), F.lit(-1)
         ).alias("bucket"),
     )
     a, b = keyed.alias("a"), keyed.alias("b")
     pairs = a.join(
         b,
         (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        & (F.col("a.vec_id") < F.col("b.vec_id")),
     ).select(
-        F.col(f"a.{id_col}").alias("vec_a"),
-        F.col(f"b.{id_col}").alias("vec_b"),
+        F.col("a.vec_id").alias("vec_a"),
+        F.col("b.vec_id").alias("vec_b"),
         (
-            _sim4_unrolled(
-                F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"), dim
-            )
+            _sim4_unrolled(F.col("a.embedding"), F.col("b.embedding"), dim)
             if dim <= _UNROLL_MAX_DIM
-            else _sim4(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
+            else _sim4(F.col("a.embedding"), F.col("b.embedding"))
         ).alias("cos_sim"),
     )
     return pairs.filter(F.col("cos_sim") >= threshold)
@@ -324,21 +331,15 @@ def cosine_near_dup(
 def ann_topk(
     emb: DataFrame,
     query_ids: list[int],
-    k: int = 5,
-    n_planes: int = 3,
-    n_tables: int = 6,
-    dim: int = 64,
-    seed: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    k: int = TOP_K,
 ) -> DataFrame:
     """Multi-table LSH approximate top-k (classic Indyk-Motwani shape):
-    ``n_tables`` independent hash tables of ``n_planes`` sign bits each;
+    ``ANN_TABLES`` independent hash tables of ``ANN_PLANES`` sign bits each;
     a row is a candidate if it shares the query's bucket in ANY table.
 
     Recall ≈ 1 - (1 - p^b)^L where p is the per-plane agreement
-    probability of true neighbors — tune b (n_planes) for bucket size and
-    L (n_tables) for recall. The candidate join is an equi-join on
+    probability of true neighbors — b (ANN_PLANES) sets bucket size and
+    L (ANN_TABLES) recall. The candidate join is an equi-join on
     (table_idx, bucket): with uniform hash buckets, shuffle volume is
     L × N short rows instead of an O(N²) comparison — the scale path at
     10^12 rows. Exact cosine re-ranks the candidates.
@@ -348,18 +349,18 @@ def ann_topk(
             F.struct(
                 F.lit(t).alias("table_idx"),
                 hyperplane_bucket(
-                    F.col(vec_col), n_planes, dim, seed + 1000 * t
+                    F.col("embedding"), ANN_PLANES, VEC_DIM, 1000 * t
                 ).alias("bucket"),
             )
-            for t in range(n_tables)
+            for t in range(ANN_TABLES)
         ]
     )
     keyed = emb.select(
-        F.col(id_col), F.col(vec_col), F.explode(table_keys).alias("tk")
-    ).select(id_col, vec_col, "tk.*")
-    q = keyed.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
+        F.col("vec_id"), F.col("embedding"), F.explode(table_keys).alias("tk")
+    ).select("vec_id", "embedding", "tk.*")
+    q = keyed.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
         F.col("table_idx").alias("q_table"),
         F.col("bucket").alias("q_bucket"),
     )
@@ -368,17 +369,17 @@ def ann_topk(
             F.broadcast(q),
             (F.col("table_idx") == F.col("q_table"))
             & (F.col("bucket") == F.col("q_bucket"))
-            & (F.col(id_col) != F.col("query_id")),
+            & (F.col("vec_id") != F.col("query_id")),
         )
         # cosine BEFORE the dedup: the value is identical for every
         # table collision of a (query, neighbor) pair, so recomputing it
-        # per collision (≤ n_tables×, map-side) is far cheaper than
+        # per collision (≤ ANN_TABLES×, map-side) is far cheaper than
         # carrying both embeddings through the dropDuplicates exchange —
         # only (query_id, neighbor_id, cos_sim) shorts ever shuffle
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            _sim4(F.col("qvec"), F.col(vec_col)).alias("cos_sim"),
+            F.col("vec_id").alias("neighbor_id"),
+            _sim4(F.col("qvec"), F.col("embedding")).alias("cos_sim"),
         )
         .dropDuplicates(["query_id", "neighbor_id"])  # candidate in ≥1 table
     )
@@ -392,52 +393,42 @@ def ann_topk(
     )
 
 
-def rp_project(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    out_dim: int = 16,
-    in_dim: int = 64,
-    seed: int = 7,
-    round_dp: int = 4,
-) -> DataFrame:
+def rp_project(df: DataFrame) -> DataFrame:
     """Random-projection dimensionality reduction (Johnson-Lindenstrauss):
-    project each embedding onto ``out_dim`` deterministic md5-derived
+    project each embedding onto ``RP_DIM`` deterministic md5-derived
     hyperplanes — the cheap front half of a two-stage ANN (search the
     16-d sketch, re-rank survivors in full dimension), and the standard
     4x shrink for embedding storage/shuffle budgets.
 
-    Output: (id_col, rp array<double>), components rounded to
-    ``round_dp`` decimals (round-then-emit, the cos_sim recipe — the
+    Output: (vec_id, rp array<double>), components rounded to
+    4 decimals (round-then-emit, the cos_sim recipe — the
     fold itself is sequence-identical to the DuckDB oracle, rounding
     only normalizes the printed tail).
 
-    Scale shape: entirely scan-local — no shuffle, no UDF; out_dim
+    Scale shape: entirely scan-local — no shuffle, no UDF; RP_DIM
     sequential-fold dot products per row against broadcast literal
     planes (JVM codegen). The cast-to-double projection is staged once
     (``_v``) so Catalyst's missing logical CSE cannot re-cast the
     array per component (CLAUDE.md rule; CollapseProject preserves the
     split for non-cheap multi-referenced producers).
     """
-    planes = _plane_constants(out_dim, in_dim, seed)
-    staged = df.select(id_col, _dbl(F.col(vec_col)).alias("_v"))
+    planes = _plane_constants(RP_DIM, VEC_DIM, RP_SEED)
+    staged = df.select("vec_id", _dbl(F.col("embedding")).alias("_v"))
     comps = [
         # + 0.0 folds IEEE -0.0 to +0.0 (a component that rounds to
         # zero from below would otherwise print/hash differently
         # across engines); exact for every other value
-        F.round(
-            _dot(F.col("_v"), F.array(*[F.lit(c) for c in row])), round_dp
-        )
+        F.round(_dot(F.col("_v"), F.array(*[F.lit(c) for c in row])), 4)
         + F.lit(0.0)
         for row in planes
     ]
-    return staged.select(id_col, F.array(*comps).alias("rp"))
+    return staged.select("vec_id", F.array(*comps).alias("rp"))
 
 
 def semantic_dedup(
     emb: DataFrame,
-    k: int = 8,
-    iters: int = 3,
+    k: int = KM_CELLS,
+    iters: int = KM_ITERS,
     threshold: float = 0.7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -469,8 +460,6 @@ def semantic_dedup(
     hyperplane_bucket as a sub-key, before corpus-scale runs. Training
     cost is kmeans_centroids' bounded k x dim driver collect per round.
     """
-    from .clustering import kmeans_assign
-
     assign = kmeans_assign(emb, k, iters, id_col, vec_col)
     # coalesce -> non-nullable cell: keeps the self-join's inferred
     # isnotnull from pushing the assignment expression tree into a
@@ -512,7 +501,7 @@ def semantic_dedup(
     )
 
 
-def hashed_embedding(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def hashed_embedding(docs: DataFrame) -> DataFrame:
     """Feature-hashing document embeddings (Weinberger et al. 2009,
     ICML, "Feature Hashing for Large Scale Multitask Learning") — the
     deterministic, training-free featurizer that lets the embedding
@@ -546,7 +535,7 @@ def hashed_embedding(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     staged = docs.select(
         "doc_id",
-        F.transform(tokens(F.col(text_col)), lambda t: md5_int(t)).alias("_h48"),
+        F.transform(tokens(F.col("text")), lambda t: md5_int(t)).alias("_h48"),
     )
     comps = staged.select(
         "doc_id",

@@ -37,6 +37,9 @@ from .hashing import md5_int, md5_int_py
 
 # Hash range of md5_int (first 12 md5 hex chars → [0, 2^48)).
 HASH_RANGE = 1 << 48
+# Count-min layout: CMS_DEPTH hash rows of CMS_WIDTH cells each.
+CMS_DEPTH = 4
+CMS_WIDTH = 256
 
 __all__ = [
     "cms_estimate",
@@ -45,6 +48,8 @@ __all__ = [
     "kmv_distinct",
     "kmv_state",
     "kmv_from_state",
+    "CMS_DEPTH",
+    "CMS_WIDTH",
     "HASH_RANGE",
     "kmv_set_estimates",
 ]
@@ -141,18 +146,13 @@ def kmv_distinct(
     return out.withColumnRenamed("grp", group_col)
 
 
-def cms_state(
-    df: DataFrame,
-    value_col: str,
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
+def cms_state(df: DataFrame, value_col: str) -> DataFrame:
     """Count-min sketch STATE over a value stream: (row_idx, col_idx,
-    cnt) — depth independent hash rows, each bucketing every value into
-    ``width`` columns (Cormode & Muthukrishnan 2005). md5-derived row
+    cnt) — CMS_DEPTH independent hash rows, each bucketing every value into
+    ``CMS_WIDTH`` columns (Cormode & Muthukrishnan 2005). md5-derived row
     salts so any engine regenerates the same layout; bigint counts; the
     only shuffle is a groupBy on (row_idx, col_idx) — at most
-    depth×width cells, map-side partial aggregation collapses the
+    CMS_DEPTH×CMS_WIDTH cells, map-side partial aggregation collapses the
     stream before it moves.
 
     States merge by cellwise addition (``groupBy(row, col).sum`` over a
@@ -160,14 +160,12 @@ def cms_state(
     NULL values are excluded (not a value; parity rule).
 
     Perf (r4): values are COUNTED first (one groupBy on the short value
-    itself, map-side combinable), then the depth md5 salts are computed
+    itself, map-side combinable), then the CMS_DEPTH md5 salts are computed
     once per DISTINCT value and the cells weighted by the count — on a
     Zipfian token stream that is ~100× less hashing than salting every
     occurrence (a cell count is the same sum either way). Costs one
     extra tiny shuffle of (value, count) pairs; the md5 work drops from
     depth×occurrences to depth×vocabulary."""
-    if depth < 1 or width < 2:
-        raise ValueError(f"need depth >= 1, width >= 2: {depth}, {width}")
     counts = (
         df.select(F.col(value_col).alias("v"))
         .filter(F.col("v").isNotNull())
@@ -182,10 +180,10 @@ def cms_state(
                         F.lit(r).alias("row_idx"),
                         (
                             md5_int(F.concat(F.lit(f"cms{r}_"), F.col("v")))
-                            % F.lit(width)
+                            % F.lit(CMS_WIDTH)
                         ).alias("col_idx"),
                     )
-                    for r in range(depth)
+                    for r in range(CMS_DEPTH)
                 ]
             )
         ).alias("c"),
@@ -197,22 +195,18 @@ def cms_state(
     )
 
 
-def cms_estimate(
-    state: DataFrame,
-    queries: list[str],
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
+def cms_estimate(state: DataFrame, queries: list[str]) -> DataFrame:
     """Point estimates from a CMS state for the queried values:
     est(v) = min over rows of cnt[row][hash_row(v)] — an upper bound on
-    the true count, within eN/width with probability 1 - (1/2)^depth.
+    the true count, within eN/CMS_WIDTH with probability
+    1 - (1/2)^CMS_DEPTH.
     Output: (value, est). The query list is a small driver-side literal
     (the sketch's point-lookup API); missing cells count 0."""
     spark = state.sparkSession
     cells = [
-        (v, r, md5_int_py(f"cms{r}_{v}") % width)
+        (v, r, md5_int_py(f"cms{r}_{v}") % CMS_WIDTH)
         for v in queries
-        for r in range(depth)
+        for r in range(CMS_DEPTH)
     ]
     probes = spark.createDataFrame(
         cells, "value string, row_idx int, col_idx int"

@@ -76,7 +76,6 @@ def stratified_sample(
     strata_col: str,
     rates: dict[str, float],
     default_rate: float = 0.0,
-    seed: str = "strat0",
 ) -> DataFrame:
     """Deterministic per-stratum downsampling — the data-mixing primitive
     (keep X% of lang='en', Y% of lang='ko', …). Same guarantees as
@@ -90,7 +89,7 @@ def stratified_sample(
     keeps it at the source when the stratum column is a partition key.
     """
     bucket = (
-        md5_int(F.concat(F.lit(f"{seed}_"), F.col(id_col).cast("string")))
+        md5_int(F.concat(F.lit("strat0_"), F.col(id_col).cast("string")))
         % _MOD
     )
     thr: Column | None = None
@@ -177,7 +176,6 @@ def pack_sequences(
     token_col: str,
     budget: int,
     shard_col: str | None = None,
-    order_col: str = "doc_id",
 ) -> DataFrame:
     """Sequence packing: assign each doc a (bin_idx, bin_offset) in a
     deterministic stream of ``budget``-token training sequences — the
@@ -204,13 +202,13 @@ def pack_sequences(
         F.col(shard_col) if shard_col is not None else F.lit("all")
     ).alias("shard")
     base = df.select(
-        shard, F.col(order_col), F.col(token_col).cast("long").alias("n_tokens")
+        shard, F.col("doc_id"), F.col(token_col).cast("long").alias("n_tokens")
     )
     # ROWS frame, not the default RANGE: RANGE gives peer rows (tied
     # order keys) one shared cumulative sum — overlapping offsets
     w = (
         Window.partitionBy("shard")
-        .orderBy(order_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     t = F.col("n_tokens")
@@ -219,35 +217,29 @@ def pack_sequences(
     # doc just below a bin boundary once cumulative offsets grow large —
     # bigint end to end, like every other cross-engine recipe here
     return base.select(
-        "shard", order_col, "n_tokens", start.alias("_so")
+        "shard", "doc_id", "n_tokens", start.alias("_so")
     ).select(
         "shard",
-        order_col,
+        "doc_id",
         "n_tokens",
         F.expr(f"_so div {int(budget)}").alias("bin_idx"),
         (F.col("_so") % budget).alias("bin_offset"),
     )
 
 
-def domain_split(
-    df: DataFrame,
-    url_col: str = "url",
-    fractions: dict[str, float] | None = None,
-    seed: str = "split0",
-) -> DataFrame:
+def domain_split(df: DataFrame) -> DataFrame:
     """Leakage-free split: keyed on the url's host, so every page of a
     domain shares a split (near-dups within a site can't straddle
-    train/test)."""
-    fractions = fractions or {"train": 0.8, "valid": 0.1, "test": 0.1}
-    host = F.parse_url(F.col(url_col), F.lit("HOST"))
-    return df.withColumn("split", split_label(host, fractions, seed))
+    train/test), 80/10/10 train/valid/test."""
+    host = F.parse_url(F.col("url"), F.lit("HOST"))
+    fractions = {"train": 0.8, "valid": 0.1, "test": 0.1}
+    return df.withColumn("split", split_label(host, fractions, "split0"))
 
 
 def epoch_shuffle(
     docs: DataFrame,
     n_shards: int = 4,
     epoch: int = 0,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic training-order permutation for one epoch: every
     document gets (shard, pos) where shard = hash48(key) mod n_shards
@@ -269,20 +261,20 @@ def epoch_shuffle(
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     staged = docs.select(
-        id_col,
+        "doc_id",
         md5_hex(
-            F.concat(F.col(id_col).cast("string"), F.lit(f":epoch{epoch}"))
+            F.concat(F.col("doc_id").cast("string"), F.lit(f":epoch{epoch}"))
         ).alias("_k"),
     )
-    w = Window.partitionBy("shard").orderBy("_k", id_col)
+    w = Window.partitionBy("shard").orderBy("_k", "doc_id")
     return (
         staged.select(
-            id_col,
+            "doc_id",
             (hex_int(F.col("_k"), 12) % F.lit(n_shards)).alias("shard"),
             "_k",
         )
         .withColumn("pos", F.row_number().over(w).cast("long"))
-        .select(id_col, "shard", "pos")
+        .select("doc_id", "shard", "pos")
     )
 
 
@@ -290,10 +282,6 @@ def mix_token_budget(
     docs: DataFrame,
     shares_bp: dict[str, int],
     budget: int,
-    source_col: str = "source",
-    token_col: str = "n_toks",
-    id_col: str = "doc_id",
-    seed: str = "mix0",
 ) -> DataFrame:
     """Data mixing: sample each source so the kept mix approaches the
     target token shares under a total token budget — the Pile/Dolma
@@ -304,7 +292,7 @@ def mix_token_budget(
     budget*share_bp[s]/10000, so the keep fraction in basis points is
     rate_bp(s) = min(10000, (budget*share_bp[s]) div T_s) — the 10^4
     factors cancel; capped at taking everything. A document is kept
-    iff hash48('{seed}_{id}') mod 10000 < rate_bp — the same identity-
+    iff hash48('mix0_{id}') mod 10000 < rate_bp — the same identity-
     hash sampling as every split here (rerun/append-stable, no RNG).
     All arithmetic is bigint (integral div) — value-checked
     cross-engine (`q: sp_mix_budget`).
@@ -325,14 +313,14 @@ def mix_token_budget(
             raise ValueError(f"share_bp[{s!r}] out of [0, 10000]: {bp}")
     spark = docs.sparkSession
     shares = spark.createDataFrame(
-        list(shares_bp.items()), f"{source_col} string, share_bp long"
+        list(shares_bp.items()), "source string, share_bp long"
     )
     totals = (
-        docs.groupBy(source_col)
-        .agg(F.sum(F.col(token_col)).cast("long").alias("_tot"))
-        .join(shares, source_col)
+        docs.groupBy("source")
+        .agg(F.sum(F.col("n_toks")).cast("long").alias("_tot"))
+        .join(shares, "source")
         .select(
-            source_col,
+            "source",
             F.least(
                 F.lit(10000).cast("long"),
                 F.expr(f"({budget} * share_bp) div _tot"),
@@ -340,13 +328,13 @@ def mix_token_budget(
         )
     )
     keep_hash = md5_int(
-        F.concat(F.lit(f"{seed}_"), F.col(id_col).cast("string"))
+        F.concat(F.lit("mix0_"), F.col("doc_id").cast("string"))
     ) % F.lit(10000)
     return (
-        docs.select(id_col, source_col, token_col)
-        .join(F.broadcast(totals), source_col)
+        docs.select("doc_id", "source", "n_toks")
+        .join(F.broadcast(totals), "source")
         .filter(keep_hash < F.col("rate_bp"))
-        .select(id_col, source_col, token_col, "rate_bp")
+        .select("doc_id", "source", "n_toks", "rate_bp")
     )
 
 
@@ -355,7 +343,6 @@ def write_epoch_shards(
     out_path: str,
     n_shards: int = 4,
     epoch: int = 0,
-    id_col: str = "doc_id",
 ) -> None:
     """Materialize one training epoch: every document written into its
     ``epoch_shuffle`` shard, rows ordered by the permutation position
@@ -379,7 +366,7 @@ def write_epoch_shards(
     keyed = docs.select(
         "*",
         md5_hex(
-            F.concat(F.col(id_col).cast("string"), F.lit(f":epoch{epoch}"))
+            F.concat(F.col("doc_id").cast("string"), F.lit(f":epoch{epoch}"))
         ).alias("_k"),
     ).select(
         "*",
@@ -391,7 +378,7 @@ def write_epoch_shards(
         # its own (unstable) sort on partition columns unless the data
         # already arrives sorted by them — a bare sort on (_k, id)
         # would be silently destroyed by that writer sort
-        .sortWithinPartitions("shard", "_k", id_col)
+        .sortWithinPartitions("shard", "_k", "doc_id")
         .drop("_k")
         .write.mode("overwrite")
         .partitionBy("shard")
@@ -462,8 +449,6 @@ def curriculum_order(
     n_phases: int = 3,
     n_shards: int = 4,
     epoch: int = 0,
-    text_col: str = "text",
-    approx: bool = False,
 ) -> DataFrame:
     """Curriculum training order (Bengio et al. 2009, "Curriculum
     Learning"): stream 'easy' documents first — phases are surprisal
@@ -474,10 +459,7 @@ def curriculum_order(
     reruns, repartitioning and appends). A training run reads phases in
     order and a shuffled stream within each.
 
-    phase  = head_split ntile band (``approx=True`` swaps in
-             head_split_approx's histogram thresholds — the
-             no-global-sort scale form, same contract as head_split's
-             own docstring);
+    phase  = head_split ntile band;
     _k     = md5(doc_id ':curriculum' epoch)  (32-hex, per-epoch);
     shard  = first-48-bits(_k) mod n_shards;
     pos    = rank within (phase, shard) by (_k, doc_id).
@@ -487,17 +469,15 @@ def curriculum_order(
     exactly as in epoch_shuffle (pick it so a shard's (id, 32-hex)
     shorts fit a partition).
 
-    DuckDB oracle: `q: sp_curriculum` (exact head_split form).
+    DuckDB oracle: `q: sp_curriculum`.
     """
     if n_phases < 1 or n_shards < 1:
         raise ValueError(
             f"n_phases/n_shards must be >= 1, got {n_phases}/{n_shards}"
         )
-    from .lm import head_split, head_split_approx
+    from .lm import head_split
 
-    split = (head_split_approx if approx else head_split)(
-        docs, n_splits=n_phases, text_col=text_col
-    )
+    split = head_split(docs, n_splits=n_phases)
     keyed = split.select(
         "doc_id",
         F.col("split").alias("phase"),

@@ -36,6 +36,11 @@ __all__ = [
     "ewma_values",
 ]
 
+# Inactivity gap that ends a session, and event_funnel's window from
+# the first step.
+SESSION_GAP = "30 minutes"
+FUNNEL_WINDOW_S = 7 * 86400
+
 
 def asof_join(
     left: DataFrame,
@@ -43,15 +48,13 @@ def asof_join(
     key_cols: list[str],
     ts_col: str,
     value_cols: list[str],
-    tie_col: str | None = None,
 ) -> DataFrame:
     """For each left row: the ``value_cols`` of the LATEST right row with
     right.ts <= left.ts and equal keys (null if none). Output = all left
     columns + value_cols.
 
     Ties at identical timestamps resolve right-row-first (the as-of
-    convention: a quote at exactly the trade time matches), then by
-    ``tie_col`` if given."""
+    convention: a quote at exactly the trade time matches)."""
     # right payloads ride in ONE struct: the struct itself is the
     # "a right row exists" marker (non-null even when every value field
     # is null), so last(ignorenulls) matches the latest right ROW — a
@@ -75,12 +78,9 @@ def asof_join(
         F.lit(None).cast(l_tag.schema["_row"].dataType).alias("_row"),
     )
     u = l_tag.unionByName(r_tag)
-    order = [F.col(ts_col).asc(), F.col("_side").asc()]
-    if tie_col is not None:
-        order.append(F.col(f"_vals.{tie_col}").asc_nulls_first())
     w = (
         Window.partitionBy(*key_cols)
-        .orderBy(*order)
+        .orderBy(F.col(ts_col).asc(), F.col("_side").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = u.select(
@@ -100,7 +100,6 @@ def interval_join_count(
     key_cols: list[str],
     ts_col: str,
     window: str = "1 hour",
-    count_alias: str = "n_in_window",
 ) -> DataFrame:
     """Per left row: how many right rows share the keys and fall in
     (left.ts, left.ts + window]. Executes as an equi-join on the keys
@@ -120,24 +119,19 @@ def interval_join_count(
     )
     return joined.groupBy(
         *[F.col(f"l.{c}").alias(c) for c in left.columns]
-    ).agg(F.count(F.col(f"r.{ts_col}")).alias(count_alias))
+    ).agg(F.count(F.col(f"r.{ts_col}")).alias("n_in_window"))
 
 
-def sessionize(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-) -> DataFrame:
+def sessionize(events: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
     """Gap-based sessions per key (built-in session_window — works on a
     stream with a watermark too). Session end = last event + gap."""
     return (
         events.groupBy(
-            F.session_window(F.col(ts_col), gap).alias("sw"), F.col(key_col)
+            F.session_window(F.col("ts"), gap).alias("sw"), F.col("user_id")
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            key_col,
+            "user_id",
             F.col("sw.start").alias("session_start"),
             F.col("sw.end").alias("session_end"),
             "n_events",
@@ -148,14 +142,10 @@ def sessionize(
 def event_funnel(
     events: DataFrame,
     steps: tuple[str, ...] = ("signup", "view", "purchase"),
-    window_seconds: int = 7 * 86400,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Ordered-funnel analysis (the windowFunnel of event-analytics
     engines — ClickHouse windowFunnel, Amplitude funnels): per key, the
-    number of ``steps`` completed IN ORDER within ``window_seconds`` of
+    number of ``steps`` completed IN ORDER within ``FUNNEL_WINDOW_S`` of
     the first step, using greedy earliest-completion semantics — step k
     is satisfied by the EARLIEST step-k event strictly after the chosen
     step-(k-1) event and within the window anchored at step 1.
@@ -179,10 +169,10 @@ def event_funnel(
     # NTZ -> TIMESTAMP -> long = UTC epoch seconds (session timezone
     # is pinned to UTC in session.get_spark, so this matches DuckDB's
     # epoch() exactly; Spark 4 refuses the direct NTZ->BIGINT cast)
-    ep = F.col(ts_col).cast("timestamp").cast("long")
+    ep = F.col("ts").cast("timestamp").cast("long")
     base = events.select(
-        F.col(key_col).alias("k"),
-        F.col(type_col).alias("et"),
+        F.col("user_id").alias("k"),
+        F.col("event_type").alias("et"),
         ep.alias("e"),
     )
     cur = (
@@ -208,7 +198,7 @@ def event_funnel(
                     (F.col("_e") > F.col(f"t{i - 1}"))
                     & (
                         F.col("_e")
-                        <= F.col("t1") + F.lit(window_seconds)
+                        <= F.col("t1") + F.lit(FUNNEL_WINDOW_S)
                     ),
                     F.col("_e"),
                 ).alias("_v"),
@@ -222,7 +212,7 @@ def event_funnel(
     for i in range(2, len(steps) + 1):
         lvl = lvl + F.col(f"t{i}").isNotNull().cast("long")
     return cur.select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("user_id"),
         lvl.cast("long").alias("funnel_level"),
         *[F.col(f"t{i}").cast("long").alias(f"t{i}") for i in range(1, len(steps) + 1)],
     )
@@ -230,8 +220,6 @@ def event_funnel(
 
 def cohort_retention(
     events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Cohort retention matrix — the other event-analytics staple: keys
     are cohorted by the epoch-week of their FIRST event; each later
@@ -253,8 +241,8 @@ def cohort_retention(
     DuckDB oracle: `q: t_retention`.
     """
     base = events.select(
-        F.col(key_col).alias("k"),
-        F.col(ts_col).cast("timestamp").cast("long").alias("e"),
+        F.col("user_id").alias("k"),
+        F.col("ts").cast("timestamp").cast("long").alias("e"),
     ).select("k", F.expr("(e - pmod(e, 604800)) div 604800").alias("w"))
     cohort = base.groupBy("k").agg(F.min("w").alias("cw"))
     active = base.distinct()
@@ -268,13 +256,7 @@ def cohort_retention(
     )
 
 
-def session_values(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    gap: str = "30 minutes",
-) -> DataFrame:
+def session_values(events: DataFrame) -> DataFrame:
     """Per-session value rollup — sessionize + the money recipe in one
     aggregation (the "session revenue" rollup of product analytics):
     same gap-window semantics as :func:`sessionize`, plus the session's
@@ -285,19 +267,19 @@ def session_values(
     """
     return (
         events.groupBy(
-            F.session_window(F.col(ts_col), gap).alias("sw"),
-            F.col(key_col),
+            F.session_window(F.col("ts"), SESSION_GAP).alias("sw"),
+            F.col("user_id"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(
-                F.sum(F.col(value_col).cast("decimal(18,2)")), 2
+                F.sum(F.col("value").cast("decimal(18,2)")), 2
             )
             .cast("double")
             .alias("session_value"),
         )
         .select(
-            key_col,
+            "user_id",
             F.col("sw.start").alias("session_start"),
             F.col("sw.end").alias("session_end"),
             "n_events",
@@ -309,10 +291,6 @@ def session_values(
 def ewma_values(
     events: DataFrame,
     alpha_bp: int = 2000,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Per-key exponentially-weighted moving average of a value stream
     in event-time order — the streaming-metrics smoother (alerting
@@ -344,11 +322,11 @@ def ewma_values(
     alpha = alpha_bp / 10000.0
     arr = (
         events.select(
-            F.col(key_col).alias("k"),
+            F.col("user_id").alias("k"),
             F.struct(
-                F.col(ts_col).cast("timestamp").alias("ts"),
-                F.col(id_col).alias("i"),
-                F.col(value_col).cast("double").alias("v"),
+                F.col("ts").cast("timestamp").alias("ts"),
+                F.col("event_id").alias("i"),
+                F.col("value").cast("double").alias("v"),
             ).alias("s"),
         )
         .groupBy("k")
@@ -366,7 +344,7 @@ def ewma_values(
         lambda acc, x: acc + F.lit(alpha) * (x - acc),
     )
     return arr.select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("user_id"),
         "n_events",
         "last_ts",
         (F.round(fold, 4) + F.lit(0.0)).alias("ewma"),

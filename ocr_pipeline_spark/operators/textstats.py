@@ -32,12 +32,17 @@ __all__ = [
     "quality_flags",
     "lang_id",
     "lang_id_multi",
+    "LANGS",
     "LANG_STOPWORDS",
     "annotate_quality",
     "fingerprint",
+    "REP_GRAM",
     "repetition_stats",
     "tfidf_top_terms",
+    "ROLL_MOD",
     "rolling_hash",
+    "WINNOW_K",
+    "WINNOW_W",
     "winnow_fingerprints",
     "UNICODE_SAMPLES",
     "lang_id_ngram",
@@ -132,18 +137,18 @@ def _staged_tokens(
     )
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Per-doc token statistics (A3/A9 analogue: counts per unit)."""
-    pre = _staged_tokens(docs, text_col, keep=("doc_id", text_col))
+    pre = _staged_tokens(docs, "text", keep=("doc_id", "text"))
     t = F.col("_t")
     return pre.select(
         "doc_id",
         F.size(t).alias("ws_tokens"),
-        word_count(F.col(text_col)).alias("words"),
+        word_count(F.col("text")).alias("words"),
         F.length(F.col("_n")).alias("norm_chars"),
         F.size(
             F.regexp_extract_all(
-                F.coalesce(F.col(text_col), F.lit("")), F.lit(_PUNCT_RE), 0
+                F.coalesce(F.col("text"), F.lit("")), F.lit(_PUNCT_RE), 0
             )
         ).alias("punct_chars"),
         F.size(F.array_distinct(t)).alias("distinct_tokens"),
@@ -186,23 +191,23 @@ def _gopher_gate() -> dict[str, Column]:
     }
 
 
-def quality_flags(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_flags(docs: DataFrame) -> DataFrame:
     """Gopher/C4-style quality gates as boolean columns + the verdict
     (integer evidence only; see ``_gopher_gate``)."""
     g = _gopher_gate()
     names = ("n_tokens", "stop_hits", "len_ok", "wlen_ok", "stop_ok", "is_quality")
-    return _staged_tokens(docs, text_col).select(
+    return _staged_tokens(docs, "text").select(
         "doc_id", *[g[c].alias(c) for c in names]
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-hit language score (n-gram-free heuristic: a real deploy
     swaps in per-language stopword lists; the operator shape — vectorized
     membership scan + threshold — is the same). Emits integer evidence and
     the guess, no float ratios."""
     g = _gopher_gate()
-    return _staged_tokens(docs, text_col).select(
+    return _staged_tokens(docs, "text").select(
         "doc_id",
         g["n_tokens"].alias("n_tokens"),
         g["stop_hits"].alias("en_stop_hits"),
@@ -234,6 +239,10 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 }
 
 
+# Languages lang_id_multi and lang_id_ngram score, in tie-break order.
+LANGS: tuple[str, ...] = tuple(LANG_STOPWORDS)
+
+
 def _in_arr(arr: Column):
     # closure factory, NOT a default-arg lambda: F.filter sniffs the
     # callback arity from the signature, and `lambda x, a=arr:` reads as
@@ -241,14 +250,10 @@ def _in_arr(arr: Column):
     return lambda x: F.array_contains(arr, x)
 
 
-def lang_id_multi(
-    docs: DataFrame,
-    text_col: str = "text",
-    langs: tuple[str, ...] = ("en", "de", "es", "fr"),
-) -> DataFrame:
+def lang_id_multi(docs: DataFrame) -> DataFrame:
     """Multilingual stopword-evidence language ID: one integer hit-count
     per language (vectorized membership scan over the staged token
-    array), guess = first language (in ``langs`` priority order) whose
+    array), guess = first language (in ``LANGS`` priority order) whose
     hits equal the max, gated at ≥5% of tokens — integer math only, no
     float ratios, same cross-engine recipe as ``lang_id``.
 
@@ -256,23 +261,23 @@ def lang_id_multi(
     filters all reference the one materialized token array (_t), so the
     tokenize tree is evaluated once per row however many languages are
     scored."""
-    pre = _staged_tokens(docs, text_col)
+    pre = _staged_tokens(docs, "text")
     t = F.col("_t")
     hit_cols = [
         F.size(
             F.filter(t, _in_arr(F.array(*[F.lit(w) for w in LANG_STOPWORDS[lg]])))
         ).alias(f"{lg}_hits")
-        for lg in langs
+        for lg in LANGS
     ]
     scored = pre.select("doc_id", F.size(t).alias("n_tokens"), *hit_cols)
-    best = F.greatest(*[F.col(f"{lg}_hits") for lg in langs])
+    best = F.greatest(*[F.col(f"{lg}_hits") for lg in LANGS])
     guess = F.when(F.lit(20) * best < F.col("n_tokens"), F.lit("unknown"))
-    for lg in langs:
+    for lg in LANGS:
         guess = guess.when(F.col(f"{lg}_hits") == best, F.lit(lg))
     return scored.select(
         "doc_id",
         "n_tokens",
-        *[f"{lg}_hits" for lg in langs],
+        *[f"{lg}_hits" for lg in LANGS],
         guess.otherwise(F.lit("unknown")).alias("lang_guess"),
     )
 
@@ -290,9 +295,11 @@ def annotate_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_stats(
-    docs: DataFrame, text_col: str = "text", n: int = 2
-) -> DataFrame:
+# Word-n-gram length repetition_stats counts.
+REP_GRAM = 2
+
+
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition evidence (the standard
     repetition filters of large-corpus curation — duplicate-n-gram
     fraction, modal-n-gram fraction; Rae et al. 2021 §A1.1, C4's
@@ -304,17 +311,17 @@ def repetition_stats(
     (doc_id, md5-hash key) — the gram TEXT never crosses the shuffle,
     only doc_id + a 16-hex key; the count is a partial aggregate
     (map-side combine) and the per-doc rollup reuses the same doc_id
-    partitioning. Docs shorter than ``n`` tokens fall back to one
+    partitioning. Docs shorter than ``REP_GRAM`` tokens fall back to one
     whole-text gram (mirrors the shingle fallback), so every input doc
     yields exactly one output row."""
-    pre = _staged_tokens(docs, text_col)
+    pre = _staged_tokens(docs, "text")
     t, nm = F.col("_t"), F.col("_n")
     gram = F.when(
-        F.size(t) < n, F.array(nm)
+        F.size(t) < REP_GRAM, F.array(nm)
     ).otherwise(
         F.transform(
-            F.sequence(F.lit(0), F.size(t) - n),
-            lambda i: F.array_join(F.slice(t, i + 1, n), " "),
+            F.sequence(F.lit(0), F.size(t) - REP_GRAM),
+            lambda i: F.array_join(F.slice(t, i + 1, REP_GRAM), " "),
         )
     )
     grams = pre.select("doc_id", F.explode_outer(gram).alias("g")).filter(
@@ -335,9 +342,7 @@ def repetition_stats(
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame, text_col: str = "text", k: int = 5
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     """Per-doc top-k terms by tf·idf — the cross-doc pooling operator
     (corpus statistics feeding a per-doc score; keyword metadata for a
     training corpus). Output: (doc_id, rank, term, tf, df, score).
@@ -361,7 +366,7 @@ def tfidf_top_terms(
     last ulp, so a mismatch needs |a−b| to straddle a 4-decimal rounding
     boundary (~1e-12 probability per value; same accepted residual class
     as the cosine fold)."""
-    pre = _staged_tokens(docs, text_col)
+    pre = _staged_tokens(docs, "text")
     terms = (
         pre.select("doc_id", F.explode_outer("_t").alias("term"))
         .filter(F.col("term").isNotNull())
@@ -397,7 +402,11 @@ def fingerprint(col: Column) -> Column:
     return md5_hex(norm_text(col), 16)
 
 
-def rolling_hash(col: Column, mod: int = 1 << 31) -> Column:
+# Modulus of rolling_hash's fold (2^31).
+ROLL_MOD = 1 << 31
+
+
+def rolling_hash(col: Column) -> Column:
     """Order-sensitive rolling document hash: left fold
     h = (h*31 + hash48(token)) mod 2^31 over whitespace tokens.
     Distinguishes permuted documents (md5-of-text also does, but the fold
@@ -406,31 +415,35 @@ def rolling_hash(col: Column, mod: int = 1 << 31) -> Column:
     return F.aggregate(
         tokens(col),
         F.lit(0).cast("long"),
-        lambda acc, t: (acc * F.lit(31) + md5_int(t)) % F.lit(mod),
+        lambda acc, t: (acc * F.lit(31) + md5_int(t)) % F.lit(ROLL_MOD),
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame, text_col: str = "text", k: int = 3, w: int = 4
-) -> DataFrame:
+# winnow_fingerprints: WINNOW_K-token grams, windows of WINNOW_W hashes.
+WINNOW_K = 3
+WINNOW_W = 4
+
+
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """MOSS-style winnowing (Schleimer et al., SIGMOD'03): hash every
-    k-gram of tokens, slide a window of ``w`` consecutive hashes, keep
-    each window's minimum; output the distinct sorted selection.
+    k-gram of tokens (k = WINNOW_K), slide a window of w = WINNOW_W
+    consecutive hashes, keep each window's minimum; output the distinct
+    sorted selection.
 
     Guarantees: any shared run of ≥ w+k-1 tokens between two documents
     yields at least one shared fingerprint — the substring-plagiarism /
     near-dup detector that MinHash (set-based, order-blind) cannot
     express. Staged projections for the same CSE reason as
     dedup.minhash_signatures; everything stays JVM-side."""
-    t_df = docs.select("doc_id", tokens(F.col(text_col)).alias("_t"))
+    t_df = docs.select("doc_id", tokens(F.col("text")).alias("_t"))
     gram_hashes = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(F.col("_t")) - k, F.lit(0))),
-        lambda i: md5_int(F.array_join(F.slice(F.col("_t"), i + 1, k), " ")),
+        F.sequence(F.lit(0), F.greatest(F.size(F.col("_t")) - WINNOW_K, F.lit(0))),
+        lambda i: md5_int(F.array_join(F.slice(F.col("_t"), i + 1, WINNOW_K), " ")),
     )
     h_df = t_df.select("doc_id", gram_hashes.alias("_h"))
     mins = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(F.col("_h")) - w, F.lit(0))),
-        lambda i: F.array_min(F.slice(F.col("_h"), i + 1, w)),
+        F.sequence(F.lit(0), F.greatest(F.size(F.col("_h")) - WINNOW_W, F.lit(0))),
+        lambda i: F.array_min(F.slice(F.col("_h"), i + 1, WINNOW_W)),
     )
     return h_df.select(
         "doc_id",
@@ -450,7 +463,7 @@ UNICODE_SAMPLES: list[str] = [
 ]
 
 
-def with_nfc_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_nfc_text(docs: DataFrame) -> DataFrame:
     """Unicode NFC canonicalization: (doc_id, nfc_text, changed) — the
     text-canonicalization step multilingual web pipelines run before
     hashing/dedup (decomposed and composed accent sequences must not
@@ -478,7 +491,7 @@ def with_nfc_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
     out_schema = "doc_id long, nfc_text string, changed boolean"
 
     staged = docs.select(
-        "doc_id", F.coalesce(F.col(text_col), F.lit("")).alias("_t")
+        "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("_t")
     )
     non_ascii = F.col("_t").rlike("[^\\x00-\\x7F]")
 
@@ -502,10 +515,10 @@ def with_nfc_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return fast.unionByName(slow)
 
 
-def lang_trigram_sets(top: int = 30) -> dict[str, list[str]]:
+def lang_trigram_sets() -> dict[str, list[str]]:
     """Per-language character-trigram profiles, derived
     deterministically from LANG_STOPWORDS (trigrams of the
-    space-joined function words, top-``top`` by count with a
+    space-joined function words, top 30 by count with a
     lexicographic tie-break) — the same list regenerates in any
     engine/oracle, no hand-maintained tables."""
     from collections import Counter
@@ -518,20 +531,16 @@ def lang_trigram_sets(top: int = 30) -> dict[str, list[str]]:
             g
             for g, _ in sorted(
                 counts.items(), key=lambda kv: (-kv[1], kv[0])
-            )[:top]
+            )[:30]
         ]
     return out
 
 
-def lang_id_ngram(
-    docs: DataFrame,
-    text_col: str = "text",
-    langs: tuple[str, ...] = ("en", "de", "es", "fr"),
-) -> DataFrame:
+def lang_id_ngram(docs: DataFrame) -> DataFrame:
     """Character-n-gram language ID (the classic n-gram-profile
     heuristic, textcat-style): the padded normalized text's trigrams
     are scored against each language's function-word trigram profile;
-    guess = argmax hits with ``langs``-order priority on ties, or
+    guess = argmax hits with ``LANGS``-order priority on ties, or
     'unknown' when nothing matches. Complements the token-level
     ``lang_id_multi`` — n-gram profiles catch inflected/compounded
     forms whole-token stopword matching misses.
@@ -552,10 +561,10 @@ def lang_id_ngram(
     whole-stage codegen. Integer evidence only."""
     sets = lang_trigram_sets()
     lookup = docs.sparkSession.createDataFrame(
-        [(g, lang) for lang in langs for g in sets[lang]],
+        [(g, lang) for lang in LANGS for g in sets[lang]],
         "_tri string, _lang string",
     )
-    padded = F.concat(F.lit(" "), norm_text(F.col(text_col)), F.lit(" "))
+    padded = F.concat(F.lit(" "), norm_text(F.col("text")), F.lit(" "))
     staged = docs.select("doc_id", padded.alias("_p"))
     tri = F.when(
         F.length("_p") >= 3,
@@ -575,7 +584,7 @@ def lang_id_ngram(
                 F.sum(
                     F.when(F.col("_lang") == lang, 1).otherwise(0)
                 ).alias(f"hits_{lang}")
-                for lang in langs
+                for lang in LANGS
             ]
         )
     )
@@ -587,24 +596,20 @@ def lang_id_ngram(
                     F.lit(-i).alias("p"),
                     F.lit(lang).alias("lang"),
                 )
-                for i, lang in enumerate(langs)
+                for i, lang in enumerate(LANGS)
             ]
         )
     )
     return staged3.select(
         "doc_id",
-        *[f"hits_{lang}" for lang in langs],
+        *[f"hits_{lang}" for lang in LANGS],
         F.when(best.getField("h") > 0, best.getField("lang"))
         .otherwise("unknown")
         .alias("lang_guess"),
     )
 
 
-def source_drift(
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def source_drift(docs: DataFrame) -> DataFrame:
     """Per-source token-distribution drift vs the whole corpus — total
     variation distance, the standard distribution-shift audit run
     before per-source mixing weights are set (and the alarm that fires
@@ -625,7 +630,7 @@ def source_drift(
     is distributionally identical to the corpus; 10000 bp = disjoint.
 
     Output: (grp, n_tokens, vocab_g, tvd_bp), grp aliased from
-    ``group_col``; all counters bigint.
+    ``source``; all counters bigint.
 
     Scale shape (10^12 docs): one tokenize pass feeds both count
     aggregations (checkpointed short-key frame); shuffles carry
@@ -641,7 +646,7 @@ def source_drift(
     DuckDB oracle: `q: cur_source_drift`.
     """
     keyed = token_hashes(
-        docs.select(F.col(group_col).alias("grp"), F.col(text_col).alias("_t")),
+        docs.select(F.col("source").alias("grp"), F.col("text").alias("_t")),
         "grp",
         "_t",
     ).localCheckpoint(eager=False)
@@ -717,7 +722,7 @@ MOJIBAKE_SAMPLES: list[str] = [
 ]
 
 
-def mojibake_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def mojibake_stats(docs: DataFrame) -> DataFrame:
     """Mojibake (double-encoded UTF-8) detection -- the encoding-repair
     triage flag of web-corpus cleanup (ftfy's core heuristic): count
     occurrences of the MOJIBAKE_MARKERS signature substrings in the
@@ -737,7 +742,7 @@ def mojibake_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     DuckDB oracle: `q: ts_mojibake` (markers + planted MOJIBAKE_SAMPLES
     fixtures inlined on both sides -- the synth corpus is pure ASCII).
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     n_hits = F.lit(0)
     for m in MOJIBAKE_MARKERS:
         n_hits = n_hits + (
@@ -751,11 +756,7 @@ def mojibake_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_confusion(
-    docs: DataFrame,
-    text_col: str = "text",
-    label_col: str = "lang",
-) -> DataFrame:
+def lang_confusion(docs: DataFrame) -> DataFrame:
     """Language-ID evaluation against the corpus labels: the confusion
     rollup reduced to per-class precision / recall / F1 in basis points
     — the quality report a curation team reads before trusting a
@@ -779,11 +780,9 @@ def lang_confusion(
 
     DuckDB oracle: `q: ts_lang_confusion`.
     """
-    guesses = lang_id_multi(docs, text_col=text_col).select(
-        "doc_id", "lang_guess"
-    )
+    guesses = lang_id_multi(docs).select("doc_id", "lang_guess")
     conf = (
-        docs.select("doc_id", F.col(label_col).alias("lang"))
+        docs.select("doc_id", "lang")
         .join(guesses, "doc_id")
         .groupBy("lang", "lang_guess")
         .agg(F.count(F.lit(1)).alias("n"))

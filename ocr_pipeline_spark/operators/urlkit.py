@@ -92,8 +92,8 @@ def canonical_url(col: Column) -> Column:
     return out
 
 
-def with_canonical_url(df: DataFrame, url_col: str = "url") -> DataFrame:
-    return df.withColumn("canonical_url", canonical_url(F.col(url_col)))
+def with_canonical_url(df: DataFrame) -> DataFrame:
+    return df.withColumn("canonical_url", canonical_url(F.col("url")))
 
 
 # DuckDB chain mirroring canonical_url, as a SQL expression over {c}.
@@ -148,7 +148,7 @@ def path_of(col: Column) -> Column:
 
 
 def url_rule_verdicts(
-    urls: DataFrame, rules: DataFrame, url_col: str = "url"
+    urls: DataFrame, rules: DataFrame
 ) -> DataFrame:
     """UT1/RefinedWeb-style URL blocklist filter (Penedo et al. 2023
     §3.1 filter documents from a curated deny list of domains plus
@@ -177,7 +177,7 @@ def url_rule_verdicts(
     DuckDB oracle: `q: url_rules` (BLOCK_RULES + BLOCK_FIXTURE_URLS
     inlined on both sides).
     """
-    staged = urls.select(F.col(url_col).alias("url")).select(
+    staged = urls.select(F.col("url").alias("url")).select(
         "url",
         host_of(F.col("url")).alias("_host"),
         path_of(F.col("url")).alias("_path"),
@@ -219,7 +219,7 @@ def url_rule_verdicts(
     )
 
 
-def url_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def url_dedup(pages: DataFrame) -> DataFrame:
     """Canonical-URL exact dedup — the crawl-side dedup stage that runs
     BEFORE fetch/extraction ever sees a byte (Common-Crawl-style
     frontier hygiene): group rows by :func:`canonical_url` and elect
@@ -241,7 +241,7 @@ def url_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
     DERIVED from the same _STEPS list).
     """
     return (
-        pages.select(F.col(url_col).alias("url"))
+        pages.select(F.col("url").alias("url"))
         .select("url", canonical_url(F.col("url")).alias("canonical_url"))
         .groupBy("canonical_url")
         .agg(

@@ -3,7 +3,7 @@
 Rebuild lifecycle (SURVEY.md §3.3):
 
     pages (scan; Catalyst prunes to url/html)
-    → resume anti-join against committed manifest buckets
+    → resume filter: drop the buckets the manifest already lists
     → repartition(P, hash(url))                    [shuffle: url, html]
     → mapInPandas fused extraction kernel          [Arrow-batched]
     → write extracted, observing the buckets written
@@ -16,9 +16,9 @@ Scale notes (100 TB / 10^12 docs):
   (AQE cannot rebalance a mapInPandas stage, so the key must);
 - nothing block-level ever shuffles; the fused kernel keeps fan-out/fan-in
   inside one Arrow batch;
-- resume cost is one manifest-scan anti-join, independent of data size;
-  a call whose manifest already covers every bucket returns before any
-  job touches the pages;
+- resume cost is one read of the manifest's bucket ids, independent of
+  data size; a call whose manifest already covers every bucket returns
+  before any job touches the pages;
 - no eager pre-pass over the input: the write reports the buckets it
   wrote, so the manifest read-back never lists other runs' buckets.
 """
@@ -51,7 +51,6 @@ def run_extraction(
     run_id: str | None = None,
     n_buckets: int = 64,
     num_partitions: int | None = None,
-    metrics: StageMetrics | None = None,
 ) -> str:
     """Run (or resume) the extraction job. Returns the run_id.
 
@@ -61,15 +60,14 @@ def run_extraction(
     t0 = time.monotonic()
     run_id = run_id or uuid.uuid4().hex
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    metrics = metrics or StageMetrics(spark, stages=("extract",))
+    metrics = StageMetrics(spark, stages=("extract",))
 
-    committed = committed_buckets(spark, manifest_path)
     # at most n_buckets ints; no job on a first run (no manifest yet). A
     # manifest covering every bucket means nothing can be pending: return
     # before any job touches the pages.
-    done = {r["bucket"] for r in committed.collect()}
+    done = committed_buckets(spark, manifest_path)
     if not done.issuperset(range(n_buckets)):
-        todo = pending(with_bucket(pages, n_buckets), committed)
+        todo = pending(with_bucket(pages, n_buckets), done)
         balanced = todo.repartition(num_partitions, "url")
         extracted = with_bucket(extract_pages(balanced, metrics=metrics), n_buckets)
         write_extracted_with_manifest(extracted, out_path, manifest_path, run_id)

@@ -153,7 +153,6 @@ def write_bucketed(
     bucket_col: str,
     n_buckets: int = 32,
     sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` hash-bucketed (and optionally sorted) by
     ``bucket_col`` as a managed table — the co-location contract that
@@ -177,7 +176,7 @@ def write_bucketed(
 
     writer = (
         df.repartition(n_buckets, F.col(bucket_col))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, bucket_col)
     )

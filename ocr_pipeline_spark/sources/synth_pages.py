@@ -106,7 +106,11 @@ def _pdf_page(rng: random.Random) -> bytes:
     return build_pdf(paragraphs)
 
 
-def synth_pages(n: int, seed: int = 42) -> pd.DataFrame:
+# Default corpus seed.
+SYNTH_SEED = 42
+
+
+def synth_pages(n: int, seed: int = SYNTH_SEED) -> pd.DataFrame:
     """n rows of the pages table, deterministic for (n, seed)."""
     rng = random.Random(seed)
     rows = []
@@ -136,7 +140,7 @@ def synth_pages(n: int, seed: int = 42) -> pd.DataFrame:
 
 
 def write_pages_parquet(
-    spark, path: str, n: int, seed: int = 42, chunk: int = 2000
+    spark, path: str, n: int, seed: int = SYNTH_SEED, chunk: int = 2000
 ) -> None:
     """Materialize a synthetic pages table as parquet at ``path``.
 

@@ -41,12 +41,10 @@ BUCKET_STATE_SCHEMA = "pending array<string>, seq long"
 
 def bucket_batch(
     df: DataFrame,
-    key_col: str = "key",
-    item_col: str = "item",
     max_batch_size: int = 10,
     wait_timeout_ms: int | None = 10_000,
 ) -> DataFrame:
-    """Group a streaming DataFrame by ``key_col`` and emit fixed-size item
+    """Group a streaming DataFrame by ``key`` and emit fixed-size ``item``
     batches per key (size-or-time semantics above). Returns a streaming
     DataFrame with BUCKET_OUTPUT_SCHEMA.
 
@@ -89,7 +87,7 @@ def bucket_batch(
         pending, seq = state.get if state.exists else ([], 0)
         pending = list(pending)
         for pdf in pdfs:
-            pending.extend(pdf[item_col].astype(str).tolist())
+            pending.extend(pdf["item"].astype(str).tolist())
         out: list[tuple] = []
         while len(pending) >= max_batch_size:
             batch, pending = (
@@ -107,7 +105,7 @@ def bucket_batch(
                 columns=["key", "batch_seq", "items", "n_items", "reason"],
             )
 
-    return df.groupBy(key_col).applyInPandasWithState(
+    return df.groupBy("key").applyInPandasWithState(
         fn,
         outputStructType=BUCKET_OUTPUT_SCHEMA,
         stateStructType=BUCKET_STATE_SCHEMA,

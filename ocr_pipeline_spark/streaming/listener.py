@@ -16,17 +16,15 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 __all__ = ["ThroughputListener"]
 
+# Batch records kept, bounding memory for long-lived streams (oldest
+# records dropped; totals keep counting).
+MAX_BATCHES = 10_000
+
 
 class ThroughputListener(StreamingQueryListener):
-    def __init__(
-        self, query_name: str | None = None, max_batches: int = 10_000
-    ) -> None:
-        """``query_name``: record only that query's progress (listeners
-        are session-global — without a filter, concurrent streams mix).
-        ``max_batches`` bounds memory for long-lived streams (oldest
-        records dropped; totals keep counting)."""
-        self.query_name = query_name
-        self.max_batches = max_batches
+    def __init__(self) -> None:
+        """Records every query's progress: listeners are session-global,
+        so concurrent streams mix."""
         self.batches: list[dict] = []
         self._total_rows = 0
 
@@ -36,8 +34,6 @@ class ThroughputListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
-        if self.query_name is not None and p.name != self.query_name:
-            return
         rec = {
             "stage": "stream",
             "batch_id": p.batchId,
@@ -46,8 +42,8 @@ class ThroughputListener(StreamingQueryListener):
         }
         self.batches.append(rec)
         self._total_rows += rec["rows"]
-        if len(self.batches) > self.max_batches:
-            del self.batches[: len(self.batches) - self.max_batches]
+        if len(self.batches) > MAX_BATCHES:
+            del self.batches[: len(self.batches) - MAX_BATCHES]
         print(json.dumps(rec))
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802

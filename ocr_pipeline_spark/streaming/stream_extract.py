@@ -38,13 +38,16 @@ __all__ = [
     "start_extract_stream",
     "stream_window_counts",
     "stream_dedup",
+    "DOCS_SCHEMA",
 ]
+
+# The documents table with an event-time column, as the streams read it.
+DOCS_SCHEMA = "doc_id long, warc_ts timestamp, text string, lang string"
 
 
 def stream_dedup(
     df: DataFrame,
     key_cols: tuple[str, ...] = ("url",),
-    ts_col: str = "warc_ts",
     watermark: str = "24 hours",
 ) -> DataFrame:
     """Streaming exact dedup: keep the first row per key, with state
@@ -53,10 +56,10 @@ def stream_dedup(
     not O(all keys ever)). The Common-Crawl shape: recrawls of a url
     within the window are duplicates; across windows they are new
     versions. Works on a batch DataFrame too — there "first" is the
-    deterministic earliest-``ts_col`` row (content-hash tie-break), never
+    deterministic earliest-``warc_ts`` row (content-hash tie-break), never
     partition-order-dependent."""
     if df.isStreaming:
-        return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+        return df.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
             list(key_cols)
         )
     # batch path: deterministic "first" = earliest event time, ties broken
@@ -66,7 +69,7 @@ def stream_dedup(
 
     other = [c for c in df.columns if c not in key_cols]
     w = Window.partitionBy(*key_cols).orderBy(
-        F.col(ts_col).asc(), F.xxhash64(*other).asc()
+        F.col("warc_ts").asc(), F.xxhash64(*other).asc()
     )
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -156,7 +159,6 @@ def stream_window_counts(
 
 def stream_curate(
     docs: DataFrame,
-    ts_col: str = "warc_ts",
     watermark: str = "24 hours",
     langs: tuple[str, ...] | None = None,
 ) -> DataFrame:
@@ -178,10 +180,7 @@ def stream_curate(
     if langs is not None:
         kept = kept.filter(F.col("lang_guess").isin(list(langs)))
     keyed = kept.withColumn("fingerprint", fingerprint(F.col("text")))
-    return stream_dedup(
-        keyed, key_cols=("fingerprint",), ts_col=ts_col,
-        watermark=watermark,
-    )
+    return stream_dedup(keyed, key_cols=("fingerprint",), watermark=watermark)
 
 
 def start_curate_stream(
@@ -189,7 +188,6 @@ def start_curate_stream(
     src_dir: str,
     out_path: str,
     checkpoint: str,
-    schema=None,
     langs: tuple[str, ...] | None = None,
     watermark: str = "24 hours",
     available_now: bool = False,
@@ -200,14 +198,9 @@ def start_curate_stream(
     curation sibling of start_extract_stream, same trigger surface;
     ``max_files_per_trigger`` bounds each micro-batch like
     read_pages_stream's size trigger — with availableNow it splits a
-    bounded backlog into real incremental micro-batches).
-    ``schema`` defaults to the documents-table shape with an event-time
-    column: (doc_id long, warc_ts timestamp, text string, lang
-    string)."""
-    schema = schema or (
-        "doc_id long, warc_ts timestamp, text string, lang string"
-    )
-    reader = spark.readStream.schema(schema)
+    bounded backlog into real incremental micro-batches). Reads
+    ``DOCS_SCHEMA`` rows."""
+    reader = spark.readStream.schema(DOCS_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     docs = reader.parquet(src_dir)

@@ -13,7 +13,7 @@ per-micro-batch partial states:
 
     state_dir/batch=<run_id>-<epoch>/  ← one tiny parquet of (row_idx,
                                  col_idx, cnt) cells per micro-batch
-                                 (≤ depth × width rows, regardless of
+                                 (≤ CMS_DEPTH × CMS_WIDTH rows, regardless of
                                  batch size)
 
 - the writer never read-modifies-writes: appending a partial state is
@@ -29,7 +29,7 @@ per-micro-batch partial states:
   partition, which no (run_id, epoch) pair can produce (run ids may
   not be the literal string 'compacted');
 - reading the sketch = groupBy(row, col).sum over the log — cheap
-  because each batch contributes at most depth×width cells;
+  because each batch contributes at most CMS_DEPTH×CMS_WIDTH cells;
 - ``compact_sketch_log`` folds the log back to one partition when the
   batch count grows (read-merge-rewrite; run it offline or between
   restarts — readers during compaction see either the old log or the
@@ -51,6 +51,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.sketch import cms_state
 from ..operators.textstats import tokens
+from .stream_extract import DOCS_SCHEMA
 
 __all__ = [
     "start_token_sketch_stream",
@@ -59,13 +60,11 @@ __all__ = [
 ]
 
 
-def _batch_cells(
-    docs: DataFrame, text_col: str, depth: int, width: int
-) -> DataFrame:
+def _batch_cells(docs: DataFrame) -> DataFrame:
     toks = docs.select(
-        F.explode_outer(tokens(F.col(text_col))).alias("tok")
+        F.explode_outer(tokens(F.col("text"))).alias("tok")
     ).filter(F.col("tok").isNotNull() & (F.col("tok") != ""))
-    return cms_state(toks, "tok", depth=depth, width=width)
+    return cms_state(toks, "tok")
 
 
 _COMPACTED = "compacted"
@@ -89,16 +88,11 @@ def start_token_sketch_stream(
     src_dir: str,
     state_dir: str,
     checkpoint: str,
-    schema: str | None = None,
-    text_col: str = "text",
-    depth: int = 4,
-    width: int = 256,
     available_now: bool = False,
-    processing_time: str | None = None,
     run_id: str = "run0",
 ) -> StreamingQuery:
     """Maintain a CMS over the token stream of a growing documents
-    directory. Each micro-batch appends its ≤ depth×width partial-state
+    directory. Each micro-batch appends its ≤ CMS_DEPTH×CMS_WIDTH partial-state
     cells under ``state_dir/batch=<run_id>-<epoch>`` (dynamic partition
     overwrite → replayed epochs overwrite themselves, not the log).
 
@@ -107,13 +101,10 @@ def start_token_sketch_stream(
     checkpoint, and only the run_id keeps the new epoch 0 from
     overwriting an old writer's (or the compacted) partition."""
     _check_run_id(run_id)
-    schema = schema or (
-        "doc_id long, warc_ts timestamp, text string, lang string"
-    )
-    docs = spark.readStream.schema(schema).parquet(src_dir)
+    docs = spark.readStream.schema(DOCS_SCHEMA).parquet(src_dir)
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        cells = _batch_cells(batch, text_col, depth, width).withColumn(
+        cells = _batch_cells(batch).withColumn(
             "batch", F.lit(f"{run_id}-{int(epoch_id)}")
         )
         (
@@ -129,8 +120,6 @@ def start_token_sketch_stream(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
     return writer.start()
 
 
@@ -153,7 +142,7 @@ def compact_sketch_log(spark: SparkSession, state_dir: str) -> None:
     merged = read_sketch(spark, state_dir).withColumn(
         "batch", F.lit(_COMPACTED)
     )
-    rows = [r.asDict() for r in merged.collect()]  # ≤ depth×width cells
+    rows = [r.asDict() for r in merged.collect()]  # ≤ CMS_DEPTH×CMS_WIDTH cells
     (
         spark.createDataFrame(
             rows, "row_idx int, col_idx bigint, cnt long, batch string"

@@ -58,7 +58,7 @@ def test_forms_match_hashlib_and_python_twin(spark):
 
 
 # media_dedup hashes raw binary payloads, not text: no encode, no recipe
-_ALLOWED = {("operators/multimodal.py", 'F.md5(F.col(payload_col)).alias("fingerprint"),')}
+_ALLOWED = {("operators/multimodal.py", 'F.md5(F.col("payload")).alias("fingerprint"),')}
 _INLINE_MD5 = re.compile(r"F\.md5\(|hashlib\.md5\(|md5\(encode\(")
 
 

@@ -51,7 +51,7 @@ def test_full_run_then_resume_is_noop(spark, pages_df, tmp_path, job_ids):
     rerun = job_ids(
         lambda: run_extraction(spark, pages, out, man, run_id="r2", n_buckets=8)
     )
-    bare = job_ids(lambda: committed_buckets(spark, man).collect())
+    bare = job_ids(lambda: committed_buckets(spark, man))
     assert len(rerun) == len(bare)
     assert spark.read.parquet(man).count() == 8
     assert _data_files(out) == files
@@ -124,7 +124,7 @@ def test_partial_failure_resume_completes_without_dupes(spark, pages_df, tmp_pat
     first = spark.read.parquet(out).count()
     assert 0 < first < pages_df.count()
 
-    # resume with the FULL input — anti-join must skip committed buckets
+    # resume with the FULL input — the resume filter must skip committed buckets
     run_extraction(spark, pages_df, out, man, run_id="r2", n_buckets=n_buckets)
     got = spark.read.parquet(out)
     assert got.count() == pages_df.count()

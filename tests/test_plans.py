@@ -304,6 +304,33 @@ def test_extraction_job_count(spark, pages_df, tmp_path, job_ids):
     assert len(jobs) <= 11 - 4, jobs
 
 
+def test_partial_resume_filters_committed_buckets_without_a_join(
+    spark, pages_df, tmp_path, monkeypatch
+):
+    """A partial resume drops the committed buckets with a filter on the
+    bucket ids read once from the manifest: the plan that reaches the
+    write holds no join against the manifest (the old anti-join scanned
+    it a second time)."""
+    from pyspark.sql import functions as F
+
+    from ocr_pipeline_spark.operators.lineage import with_bucket
+    from ocr_pipeline_spark.plans import extract_job
+
+    out, man = str(tmp_path / "out"), str(tmp_path / "man")
+    half = with_bucket(pages_df, 8).filter(F.col("bucket") < 4).drop("bucket")
+    extract_job.run_extraction(spark, half, out, man, n_buckets=8)
+
+    captured = []
+    monkeypatch.setattr(
+        extract_job, "write_extracted_with_manifest",
+        lambda df, *args, **kwargs: captured.append(df),
+    )
+    extract_job.run_extraction(spark, pages_df, out, man, n_buckets=8)
+    plan = captured[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
+    assert "bucket#" in plan and " IN (0,1,2,3)" in plan, plan
+
+
 def test_hot_domain_prepass_reads_urls_only(spark, tmp_path):
     """find_hot_domains' aggregate scans the url column, not the payload
     (length(html) would force whole-corpus IO at 100 TB)."""
