@@ -212,6 +212,7 @@ from ocr_pipeline_spark.plans.curate_job import curate, curate_incremental
 from ocr_pipeline_spark.operators.textstats import (
     LANGS,
     LANG_STOPWORDS,
+    LANG_TOKENS_PER_HIT,
     REP_GRAM,
     ROLL_MOD,
     WINNOW_K,
@@ -1801,7 +1802,7 @@ def _p_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sp_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order layout key over events (day-number × user_id): the value
-    write_zorder clusters files by. Bounds are computed (min/max
+    a clustered write range-partitions files on. Bounds are computed (min/max
     pre-scan broadcast) so the driver check covers that path too; both
     the quantize CASE and the interleave SQL in the oracle are
     GENERATED from the same builders the Spark column uses
@@ -3560,7 +3561,7 @@ def oracle_sql() -> dict[str, str]:
                      len(list_filter({_TOKS}, x -> list_contains({_STOP_SQL}, x))) AS en_stop_hits
               FROM documents)
             SELECT doc_id, n_tokens, en_stop_hits,
-                   case when 20 * en_stop_hits >= n_tokens then 'en' else 'unknown' end AS lang_guess
+                   case when {LANG_TOKENS_PER_HIT} * en_stop_hits >= n_tokens then 'en' else 'unknown' end AS lang_guess
             FROM t
         """,
         # ts_lang_confusion: the langid_multi CTE -> confusion counts
@@ -3579,7 +3580,7 @@ def oracle_sql() -> dict[str, str]:
                          en_hits, de_hits, es_hits, fr_hits
                   FROM t),
             gg AS (SELECT doc_id,
-                          case when 20 * best < n_tokens then 'unknown'
+                          case when {LANG_TOKENS_PER_HIT} * best < n_tokens then 'unknown'
                                when en_hits = best then 'en'
                                when de_hits = best then 'de'
                                when es_hits = best then 'es'
@@ -3631,7 +3632,7 @@ def oracle_sql() -> dict[str, str]:
               FROM documents),
             g AS (SELECT *, greatest(en_hits, de_hits, es_hits, fr_hits) AS best FROM t)
             SELECT doc_id, n_tokens, en_hits, de_hits, es_hits, fr_hits,
-                   case when 20 * best < n_tokens then 'unknown'
+                   case when {LANG_TOKENS_PER_HIT} * best < n_tokens then 'unknown'
                         when en_hits = best then 'en'
                         when de_hits = best then 'de'
                         when es_hits = best then 'es'
@@ -4290,7 +4291,7 @@ def oracle_sql() -> dict[str, str]:
               WHERE (n_tokens >= 5 AND n_tokens <= 100000)
                 AND ((n_chars - (n_tokens - 1)) >= 2 * n_tokens AND (n_chars - (n_tokens - 1)) <= 12 * n_tokens)
                 AND (50 * stop_hits >= n_tokens)
-                AND (20 * stop_hits >= n_tokens)),
+                AND ({LANG_TOKENS_PER_HIT} * stop_hits >= n_tokens)),
             canon AS (SELECT min(doc_id) AS doc_id FROM kept GROUP BY fp)
             SELECT doc_id FROM kept WHERE doc_id IN (SELECT doc_id FROM canon)
         """,
@@ -4305,7 +4306,7 @@ def oracle_sql() -> dict[str, str]:
               WHERE (n_tokens >= 5 AND n_tokens <= 100000)
                 AND ((n_chars - (n_tokens - 1)) >= 2 * n_tokens AND (n_chars - (n_tokens - 1)) <= 12 * n_tokens)
                 AND (50 * stop_hits >= n_tokens)
-                AND (20 * stop_hits >= n_tokens)),
+                AND ({LANG_TOKENS_PER_HIT} * stop_hits >= n_tokens)),
             g AS (
               SELECT doc_id,
                      unnest({_REP_GRAMS}) AS g
@@ -4333,7 +4334,7 @@ def oracle_sql() -> dict[str, str]:
               WHERE (n_tokens >= 5 AND n_tokens <= 100000)
                 AND ((n_chars - (n_tokens - 1)) >= 2 * n_tokens AND (n_chars - (n_tokens - 1)) <= 12 * n_tokens)
                 AND (50 * stop_hits >= n_tokens)
-                AND (20 * stop_hits >= n_tokens)),
+                AND ({LANG_TOKENS_PER_HIT} * stop_hits >= n_tokens)),
             kept_even AS (
               SELECT doc_id, fp FROM q WHERE doc_id % 2 = 0
                 AND doc_id IN (SELECT min(doc_id) FROM q

@@ -5,9 +5,10 @@ A from-scratch rebuild of the capabilities of watanka/ocr-pipeline
 Common-Crawl-style page tables:
 
 - the reference's *detection* stage (CRAFT text-region detector,
-  std-detection/) becomes DOM/layout block segmentation: stdlib-HTML-parser
-  text-density + link-density boilerplate scoring for HTML payloads and a
-  char→line→block bounding-box clustering pass for PDF payloads;
+  std-detection/) becomes DOM/layout block segmentation: a self-contained
+  regex scanner with text-density + link-density boilerplate scoring for
+  HTML payloads and a char→line→block bounding-box clustering pass for
+  PDF payloads;
 - the reference's *recognition* stage (TPS-ResNet-BiLSTM-Attn,
   str-recognition/) becomes block classification + deterministic text
   materialization;
@@ -18,9 +19,11 @@ Common-Crawl-style page tables:
 Layout:
   kernels/     pure-Python, Spark-free extraction kernels (also the golden
                oracle used by the pytest byte-identity suite)
-  sources/     deterministic synthetic pages-table generator (seeded)
-  operators/   Spark DataFrame operators: extraction, partitioning/salting,
-               lineage manifests + resume, dedup, similarity, text stats
+  sources/     deterministic synthetic pages-table generator (seeded) and
+               WARC ingestion
+  operators/   Spark DataFrame operators: extraction, lineage manifests +
+               resume, dedup, similarity, text stats (plus an off-path
+               hot-domain diagnostic)
   plans/       end-to-end job assembly (scan → hash(url) → extract → sink)
   streaming/   micro-batch trigger analogue of the reference's buckets
 """

@@ -42,7 +42,6 @@ __all__ = [
     "apply_merge",
     "corpus_alphabet",
     "default_merges",
-    "encode_ids",
     "encode_text",
     "encode_word",
     "norm_words",
@@ -177,11 +176,3 @@ def vocab_of(merges: "list[Merge]") -> list[str]:
     (``default_merges``)."""
     alphabet = corpus_alphabet(list(TRAIN_CORPUS))
     return ["<unk>"] + alphabet + [m.merged for m in merges]
-
-
-def encode_ids(text: str | None, merges: "list[Merge]") -> list[int]:
-    """Token-id encoding: the subword stream mapped through
-    ``vocab_of(merges)`` (symbols outside the vocabulary map to
-    0 = '<unk>')."""
-    vocab = {s: i for i, s in enumerate(vocab_of(merges))}
-    return [vocab.get(s, 0) for s in encode_text(text, merges)]

@@ -32,14 +32,19 @@ BLOCK_GAP = 18.0         # vertical gap between lines that splits blocks
 _LEADING = 14            # synthetic line leading (points)
 
 _TEXTOBJ_RE = re.compile(r"BT(.*?)ET", re.S)
-# (?<!\d): an operand never starts inside a digit run. Where the whole
-# run fails to start a match, no suffix of it can, so this only skips the
-# retries that made a long run quadratic. It sits after the sign: the
-# "-3" of "12-3 1 Td" still matches.
-_OP_RE = re.compile(
-    r"(?P<a>-?(?<!\d)\d+(?:\.\d+)?)\s+(?P<b>-?\d+(?:\.\d+)?)\s+(?P<op>Td|TD)"
-    r"|\((?P<str>(?:[^()\\]|\\.)*)\)\s*Tj"
-)
+# the move operator "a b Td". (?<!\d): an operand never starts inside
+# a digit run. Where the whole run fails to start a match, no suffix of
+# it can, so this only skips the retries that made a long run quadratic.
+# It sits after the sign: the "-3" of "12-3 1 Td" still matches.
+_TD_RE = re.compile(r"(-?(?<!\d)\d+(?:\.\d+)?)\s+(-?\d+(?:\.\d+)?)\s+(Td|TD)")
+# the show operator "(str) Tj": the string is scanned possessively (it
+# cannot end inside an escape, so backtracking finds no other end); no
+# DOTALL: a backslash before a newline escapes nothing
+_STR_SCAN_RE = re.compile(r"\((?:[^()\\]+|\\.)*+")
+_STR_END_RE = re.compile(r"\)\s*Tj")
+# where an operator can start: a sign or a digit-run start (a move), "("
+_TD_START_RE = re.compile(r"-|(?<!\d)\d")
+_OP_START_RE = re.compile(r"\(|" + _TD_START_RE.pattern)
 _ESCAPES = {"\\(": "(", "\\)": ")", "\\\\": "\\", "\\n": "\n", "\\r": "\r", "\\t": "\t"}
 
 
@@ -92,6 +97,40 @@ def _text_objects(doc: str):
     return _TEXTOBJ_RE.finditer(doc, 0, end + 2) if end >= 0 else iter(())
 
 
+def _ops(body: str):
+    """``(start, end, a, b, op, str)`` for each ``a b Td``/``TD`` move
+    and ``(str) Tj`` show in a text-object body: the matches of a
+    leftmost-first ``finditer`` over the two operators. A string scan that
+    finds no ``) Tj`` at its end kills every ``(`` it passed: each one
+    sat inside an escape, so a scan from it would stop at the same end.
+    Without that, ``(a\\`` repeated rescans to the end of the object
+    from every ``(``. A ``Td`` inside such a string still matches."""
+    pos = dead = 0  # no "(" before ``dead`` starts a match
+    while True:
+        if pos < dead:
+            c = _TD_START_RE.search(body, pos, dead) or _OP_START_RE.search(body, dead)
+        else:
+            c = _OP_START_RE.search(body, pos)
+        if c is None:
+            return
+        p = c.start()
+        if body[p] != "(":
+            m = _TD_RE.match(body, p)
+            if m:
+                pos = m.end()
+                yield p, pos, m[1], m[2], m[3], None
+                continue
+        else:
+            e = _STR_SCAN_RE.match(body, p).end()
+            t = _STR_END_RE.match(body, e)
+            if t:
+                pos = t.end()
+                yield p, pos, None, None, None, body[p + 1 : e]
+                continue
+            dead = e
+        pos = p + 1
+
+
 def parse_pdf_blocks(data: bytes) -> list[Block]:
     """PDF bytes → ordered Blocks (reading order: top→bottom, left→right)."""
     doc = data.decode("latin-1")
@@ -99,17 +138,16 @@ def parse_pdf_blocks(data: bytes) -> list[Block]:
     for tobj in _text_objects(doc):
         x = y = 0.0
         base = tobj.start(1)
-        for m in _OP_RE.finditer(tobj.group(1)):
-            if m.group("op"):
+        for start, _, a, b, op, body in _ops(tobj.group(1)):
+            if op:
                 # Td/TD are relative moves in our subset (each BT resets)
-                x += float(m.group("a"))
-                y += float(m.group("b"))
-            elif m.group("str") is not None:
-                text = _unescape(m.group("str"))
+                x += float(a)
+                y += float(b)
+            else:
+                text = _unescape(body)
                 if text.strip():
-                    runs.append(
-                        (x, y, text, base + m.start("str"), base + m.end("str"))
-                    )
+                    s0 = base + start + 1  # the string body, past "("
+                    runs.append((x, y, text, s0, s0 + len(body)))
     if not runs:
         return []
 

@@ -53,8 +53,6 @@ from .hashing import md5_int
 __all__ = [
     "bloom_build",
     "bloom_probe",
-    "bloom_merge",
-    "bloom_fill",
     "bloom_gate",
 ]
 
@@ -114,24 +112,6 @@ def bloom_build(
                 f" cast(pos % {WORD_BITS} as int))"
             )
         ).alias("word")
-    )
-
-
-def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Union of two filters built with the same (m_bits, n_hashes):
-    bitwise OR per word. Distributive — fold any number of filters."""
-    return (
-        a.unionByName(b)
-        .groupBy("word_idx")
-        .agg(F.bit_or("word").alias("word"))
-    )
-
-
-def bloom_fill(words: DataFrame) -> DataFrame:
-    """One-row diagnostic: total set bits (drives the fp estimate
-    fp ≈ (n_set/m)^k for a built filter). bigint."""
-    return words.agg(
-        F.sum(F.bit_count("word")).cast("long").alias("n_set")
     )
 
 

@@ -37,10 +37,7 @@ Scale shape (10^10+ edges):
   per round so the plan does not grow with n_iters (lineage-truncation
   precedent: dedup.connected_components).
 - n_iters is a fixed small constant (PageRank converges geometrically;
-  3-10 rounds rank-order web graphs). ``pagerank_until`` is the
-  adaptive form — the same per-round plan plus a 1-row max |Δrank|
-  aggregate per round, stopping at the exact integer fixed point
-  (real crawls do not know n_iters a priori).
+  3-10 rounds rank-order web graphs).
 
 DuckDB oracle: ``g_pagerank`` in __spark_entry__.py unrolls the same
 iterations as chained CTEs.
@@ -56,7 +53,6 @@ __all__ = [
     "PAGERANK_ITERS",
     "SCALE_BP",
     "pagerank",
-    "pagerank_until",
     "out_degrees",
     "connected_components",
     "degree_distribution",
@@ -91,109 +87,44 @@ def pagerank(
         raise ValueError(f"damping_bp must be in [0, {SCALE_BP}]")
     if n_iters < 1:
         raise ValueError(f"n_iters must be >= 1, got {n_iters}")
-    nodes, deg_edges = _prepare(edges)
-    ranks = nodes.select("node", F.lit(SCALE_BP).cast("long").alias("rank_bp"))
-    for _ in range(n_iters):
-        ranks = _step(nodes, deg_edges, ranks, damping_bp)
-    return ranks
-
-
-def _prepare(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(nodes, degree-annotated edges) — the per-run fixed inputs.
-    deg_edges is materialized once: iterations join a fixed
-    (src, dst, outdeg) bigint triple, not the derivation tree."""
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
+    # materialized once: iterations join a fixed (src, dst, outdeg)
+    # bigint triple, not the derivation tree
     deg_edges = edges.join(
         out_degrees(edges).withColumnRenamed("node", "src"), "src"
     ).localCheckpoint(eager=False)
-    return nodes, deg_edges
-
-
-def _step(
-    nodes: DataFrame,
-    deg_edges: DataFrame,
-    ranks: DataFrame,
-    damping_bp: int,
-) -> DataFrame:
-    """One exact PageRank iteration: one equi-join on src, one shuffle
-    (groupBy dst), lineage truncated per round (localCheckpoint)."""
-    contrib = (
-        deg_edges.join(
-            ranks.withColumnRenamed("node", "src"), "src"
-        )
-        .select("dst", F.expr("rank_bp div outdeg").alias("c"))
-        .groupBy(F.col("dst").alias("node"))
-        .agg(F.sum("c").alias("in_bp"))
-    )
     base_bp = SCALE_BP - damping_bp
-    return (
-        nodes.join(contrib, "node", "left")
-        .select(
-            "node",
-            (
-                F.lit(base_bp).cast("long")
-                + F.expr(
-                    f"({damping_bp} * coalesce(in_bp, 0))"
-                    f" div {SCALE_BP}"
-                )
-            ).alias("rank_bp"),
-        )
-        .localCheckpoint(eager=False)
-    )
-
-
-def pagerank_until(
-    edges: DataFrame,
-    eps_bp: int = 0,
-    max_iters: int = 100,
-) -> tuple[DataFrame, int]:
-    """Adaptive-convergence PageRank: iterate until
-    ``max |rank_t+1 - rank_t| <= eps_bp`` (a real crawl does not know
-    n_iters a priori). Returns (ranks, rounds_run) where ranks equals
-    ``pagerank(edges, n_iters=rounds_run)`` bit-for-bit.
-
-    The convergence probe is a 1-row driver aggregate per round
-    (bounded collect, the kmeans/bpe precedent); each round's plan is
-    identical to ``pagerank``'s. Exact integer arithmetic means the
-    fixed point is EXACT: with eps_bp=0 the loop stops when an
-    iteration changes no rank at all — termination is guaranteed
-    (DAMPING_BP < 10000) because the integer map is a contraction
-    (|Δ| shrinks by at least the damping factor per round, and
-    truncating division only loses mass). ``max_iters`` is the loud
-    backstop (the dup_clusters precedent): exceeding it raises rather
-    than silently returning an unconverged table.
-    """
-    if eps_bp < 0:
-        raise ValueError(f"eps_bp must be >= 0, got {eps_bp}")
-    if max_iters < 1:
-        raise ValueError(f"max_iters must be >= 1, got {max_iters}")
-    delta = None
-    nodes, deg_edges = _prepare(edges)
-    ranks = nodes.select(
-        "node", F.lit(SCALE_BP).cast("long").alias("rank_bp")
-    ).localCheckpoint(eager=False)
-    for rounds in range(1, max_iters + 1):
-        nxt = _step(nodes, deg_edges, ranks, DAMPING_BP)
-        delta = (
-            nxt.join(
-                ranks.withColumnRenamed("rank_bp", "prev_bp"), "node"
+    ranks = nodes.select("node", F.lit(SCALE_BP).cast("long").alias("rank_bp"))
+    for _ in range(n_iters):
+        # one equi-join on src, one shuffle (groupBy dst), lineage
+        # truncated per round
+        contrib = (
+            deg_edges.join(
+                ranks.withColumnRenamed("node", "src"), "src"
             )
-            .agg(
-                F.max(F.abs(F.col("rank_bp") - F.col("prev_bp"))).alias("d")
-            )
-            .first()["d"]
+            .select("dst", F.expr("rank_bp div outdeg").alias("c"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum("c").alias("in_bp"))
         )
-        ranks = nxt
-        if delta is None or delta <= eps_bp:
-            return ranks, rounds
-    raise RuntimeError(
-        f"pagerank_until did not reach max |delta| <= {eps_bp} bp in "
-        f"{max_iters} rounds (last delta {delta}); raise max_iters or eps_bp"
-    )
+        ranks = (
+            nodes.join(contrib, "node", "left")
+            .select(
+                "node",
+                (
+                    F.lit(base_bp).cast("long")
+                    + F.expr(
+                        f"({damping_bp} * coalesce(in_bp, 0))"
+                        f" div {SCALE_BP}"
+                    )
+                ).alias("rank_bp"),
+            )
+            .localCheckpoint(eager=False)
+        )
+    return ranks
 
 
 def connected_components(edges: DataFrame) -> DataFrame:

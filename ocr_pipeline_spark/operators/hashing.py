@@ -21,7 +21,7 @@ import hashlib
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["md5_hex", "md5_int", "hex_int", "md5_hex_sql", "md5_int_sql", "md5_int_py"]
+__all__ = ["md5_hex", "md5_int", "hex_int", "md5_int_py"]
 
 
 def md5_hex(col: Column, n_hex: int = 32) -> Column:
@@ -41,17 +41,6 @@ def md5_int(col: Column, n_hex: int = 12) -> Column:
     """Bigint of the first ``n_hex`` md5 hex chars of ``col`` (48 bits by
     default)."""
     return hex_int(md5_hex(col), n_hex)
-
-
-def md5_hex_sql(expr: str, n_hex: int = 32) -> str:
-    """``md5_hex`` as a Spark-SQL fragment over the SQL expression ``expr``."""
-    h = f"md5(encode({expr}, 'UTF-8'))"
-    return h if n_hex == 32 else f"substring({h}, 1, {n_hex})"
-
-
-def md5_int_sql(expr: str, n_hex: int = 12) -> str:
-    """``md5_int`` as a Spark-SQL fragment over the SQL expression ``expr``."""
-    return f"cast(conv({md5_hex_sql(expr, n_hex)}, 16, 10) as bigint)"
 
 
 def md5_int_py(s: str, n_hex: int = 12) -> int:

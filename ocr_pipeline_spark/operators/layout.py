@@ -23,7 +23,7 @@ Scale notes:
   (min/max aggregate, broadcast back as a 1-row scalar join — no
   collect); pass explicit ``bounds`` to make it single-scan when the
   domain is known (dates, id ranges).
-- :func:`write_zorder` range-partitions on the z-value, so file count is
+- a clustered write range-partitions on the z-value, so file count is
   an explicit dial: at 100 TB pick ``n_files = bytes / target_file_size``
   (e.g. 1 GiB targets). Only the z-long and the row payload move in that
   one exchange; quantization is scan-local.
@@ -39,7 +39,6 @@ __all__ = [
     "zvalue_sql",
     "quantize_case_sql",
     "with_zvalue",
-    "write_zorder",
     "ZBITS",
 ]
 
@@ -175,26 +174,4 @@ def with_zvalue(
     qrefs = [F.col(f"_q{i}") for i in range(len(cols))]
     return staged.select(
         *df.columns, zvalue(qrefs, bits).cast("long").alias(out)
-    )
-
-
-def write_zorder(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 8,
-    bounds: list[tuple[int, int]] | None = None,
-) -> None:
-    """Write ``df`` as parquet clustered by the z-value of ``cols``:
-    range-partition on z (each file owns one contiguous z interval ⇒ a
-    tight hyper-rectangle in every key dimension), sort within
-    partitions by z so row groups inherit the clustering too. The
-    z-value itself is dropped — it is a layout device, not data."""
-    z = with_zvalue(df, cols, bounds=bounds)
-    (
-        z.repartitionByRange(n_files, "zval")
-        .sortWithinPartitions("zval")
-        .drop("zval")
-        .write.mode("overwrite")
-        .parquet(path)
     )

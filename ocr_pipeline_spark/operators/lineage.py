@@ -128,9 +128,8 @@ def write_extracted_with_manifest(
     wrote = Observation()
     # per-WRITE option, not spark.conf.set: a session-wide mutation
     # silently flips every later mode("overwrite")+partitionBy write in
-    # the same session to partition-level semantics (it turned
-    # compact_sketch_log's full-log replace into an append — the r5
-    # suite-order bug)
+    # the same session to partition-level semantics (a later full-table
+    # overwrite becomes an append)
     (
         extracted_bucketed.observe(wrote, F.collect_set("bucket").alias("b"))
         .write.mode("overwrite")

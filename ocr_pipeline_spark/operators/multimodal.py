@@ -8,11 +8,11 @@ column and every kernel is an Arrow-batched ``mapInPandas`` (no base64
 detour, no per-row Python in the row loop sense — one pandas pass per
 batch; SURVEY.md §1.2).
 
-The real codec step is STUBBED: this container has no image/audio libs,
+The real codec step is STUBBED: no image/audio library is a dependency,
 so payloads use a tiny deterministic container format (FAKE* headers,
-below) and ``_decode_real`` raises NotImplementedError — swapping in
-PIL/ffmpeg touches ONLY that function; the Spark-side plumbing (schema,
-fan-out shape, error-column routing, batch sizing) is real and tested.
+below) — swapping in PIL/ffmpeg touches only ``_parse``; the Spark-side
+plumbing (schema, fan-out shape, error-column routing, batch sizing) is
+real and tested.
 
 Fake container formats (big-endian u32 fields after the 7-byte magic):
     b"FAKEIMG" w h      + w*h gray bytes
@@ -60,15 +60,6 @@ FRAME_SCHEMA = (
 FEATURE_DIM = 16
 
 _MAGICS = {b"FAKEIMG": "image", b"FAKEAUD": "audio", b"FAKEVID": "video"}
-
-
-def _decode_real(payload: bytes) -> dict:
-    """Real-codec hook. Deliberately unimplemented in this container —
-    a deploy with PIL/soundfile/pyav implements ONLY this function."""
-    raise NotImplementedError(
-        "real media codecs are not available in this environment; "
-        "payloads use the deterministic FAKE* container format"
-    )
 
 
 def _parse(payload: bytes | None) -> tuple[dict | None, str | None]:

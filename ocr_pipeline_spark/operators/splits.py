@@ -24,10 +24,8 @@ __all__ = [
     "epoch_shuffle",
     "curriculum_order",
     "mix_token_budget",
-    "write_epoch_shards",
     "split_label",
     "hash_split",
-    "domain_split",
     "stratified_sample",
     "reservoir_per_stratum",
     "domain_cap",
@@ -227,15 +225,6 @@ def pack_sequences(
     )
 
 
-def domain_split(df: DataFrame) -> DataFrame:
-    """Leakage-free split: keyed on the url's host, so every page of a
-    domain shares a split (near-dups within a site can't straddle
-    train/test), 80/10/10 train/valid/test."""
-    host = F.parse_url(F.col("url"), F.lit("HOST"))
-    fractions = {"train": 0.8, "valid": 0.1, "test": 0.1}
-    return df.withColumn("split", split_label(host, fractions, "split0"))
-
-
 def epoch_shuffle(
     docs: DataFrame,
     n_shards: int = 4,
@@ -335,54 +324,6 @@ def mix_token_budget(
         .join(F.broadcast(totals), "source")
         .filter(keep_hash < F.col("rate_bp"))
         .select("doc_id", "source", "n_toks", "rate_bp")
-    )
-
-
-def write_epoch_shards(
-    docs: DataFrame,
-    out_path: str,
-    n_shards: int = 4,
-    epoch: int = 0,
-) -> None:
-    """Materialize one training epoch: every document written into its
-    ``epoch_shuffle`` shard, rows ordered by the permutation position
-    WITHIN each shard file — readers stream shard files start-to-finish
-    and see the epoch's pseudo-random document order with zero
-    read-side sorting.
-
-    Write shape (the CLAUDE.md rule): repartition ON the partition
-    column first, so ``partitionBy`` emits exactly one file per shard
-    per run (no small-file explosion), and ``sortWithinPartitions``
-    orders rows inside each file. Document payloads cross exactly one
-    exchange — the shard repartition — which any layout write must pay;
-    the sort is partition-local (no global sort, no range exchange).
-    """
-    for reserved in ("shard", "_k"):
-        if reserved in docs.columns:
-            raise ValueError(
-                f"input already has a {reserved!r} column (re-sharding "
-                "a previously written epoch? drop it first)"
-            )
-    keyed = docs.select(
-        "*",
-        md5_hex(
-            F.concat(F.col("doc_id").cast("string"), F.lit(f":epoch{epoch}"))
-        ).alias("_k"),
-    ).select(
-        "*",
-        (hex_int(F.col("_k"), 12) % F.lit(n_shards)).alias("shard"),
-    )
-    (
-        keyed.repartition(n_shards, "shard")
-        # the partition column LEADS the sort: FileFormatWriter inserts
-        # its own (unstable) sort on partition columns unless the data
-        # already arrives sorted by them — a bare sort on (_k, id)
-        # would be silently destroyed by that writer sort
-        .sortWithinPartitions("shard", "_k", "doc_id")
-        .drop("_k")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(out_path)
     )
 
 

@@ -23,7 +23,6 @@ from .hashing import md5_hex, md5_int
 __all__ = [
     "STOPWORDS_EN",
     "norm_text",
-    "norm_text_sql",
     "tokens",
     "token_hash",
     "token_hashes",
@@ -34,6 +33,7 @@ __all__ = [
     "lang_id_multi",
     "LANGS",
     "LANG_STOPWORDS",
+    "LANG_TOKENS_PER_HIT",
     "annotate_quality",
     "fingerprint",
     "REP_GRAM",
@@ -64,6 +64,12 @@ STOPWORDS_EN = (
     "there their what so up out if about who get which go me"
 ).split()
 
+# A text reads as a language when at least one token in
+# LANG_TOKENS_PER_HIT is one of its stopwords: the English rule of the
+# quality gate's ``lang_guess`` and ``lang_id_multi``'s gate, in both
+# engines.
+LANG_TOKENS_PER_HIT = 20
+
 _WORD_RE = "[A-Za-z0-9]+"
 _PUNCT_RE = "[.,;:!?]"
 
@@ -73,18 +79,12 @@ def norm_text(col: Column) -> Column:
     NULL→'' (so downstream size()/length() never mix NULL semantics
     across engines — Spark's size(NULL) is -1, DuckDB's len(NULL) is
     NULL), lowercase, collapse ASCII whitespace runs to one space, trim
-    spaces. The one Column spelling of the recipe; ``norm_text_sql`` is
-    its Spark-SQL spelling, ``kernels.bpe.norm_words`` its Python twin
-    and the entry module's ``_NORM`` its DuckDB spelling."""
+    spaces. The one Column spelling of the recipe;
+    ``kernels.bpe.norm_words`` is its Python twin and the entry module's
+    ``_NORM`` its DuckDB spelling."""
     return F.trim(
         F.regexp_replace(F.lower(F.coalesce(col, F.lit(""))), r"\s+", " ")
     )
-
-
-def norm_text_sql(s: str) -> str:
-    """Spark-SQL spelling of ``norm_text`` over the SQL expression ``s``
-    (the body of the registered ``norm_text`` SQL function)."""
-    return f"trim(regexp_replace(lower(coalesce({s}, '')), '\\\\s+', ' '))"
 
 
 def tokens(col: Column) -> Column:
@@ -184,9 +184,8 @@ def _gopher_gate() -> dict[str, Column]:
         "wlen_ok": wlen_ok,
         "stop_ok": stop_ok,
         "is_quality": len_ok & wlen_ok & stop_ok,
-        # ≥1 stopword per 20 tokens reads as English
         "lang_guess": F.when(
-            F.lit(20) * stop_hits >= n_tok, F.lit("en")
+            F.lit(LANG_TOKENS_PER_HIT) * stop_hits >= n_tok, F.lit("en")
         ).otherwise(F.lit("unknown")),
     }
 
@@ -271,7 +270,9 @@ def lang_id_multi(docs: DataFrame) -> DataFrame:
     ]
     scored = pre.select("doc_id", F.size(t).alias("n_tokens"), *hit_cols)
     best = F.greatest(*[F.col(f"{lg}_hits") for lg in LANGS])
-    guess = F.when(F.lit(20) * best < F.col("n_tokens"), F.lit("unknown"))
+    guess = F.when(
+        F.lit(LANG_TOKENS_PER_HIT) * best < F.col("n_tokens"), F.lit("unknown")
+    )
     for lg in LANGS:
         guess = guess.when(F.col(f"{lg}_hits") == best, F.lit(lg))
     return scored.select(

@@ -1,1 +1,1 @@
-"""End-to-end job assembly (scan → salt → extract → sink + manifests)."""
+"""End-to-end job assembly (scan → hash(url) → extract → sink + manifests)."""

@@ -40,7 +40,6 @@ from ..operators.pii import scrub_pii
 from ..operators.textstats import annotate_quality, fingerprint, repetition_stats
 
 __all__ = [
-    "extracted_as_documents",
     "curate",
     "curate_incremental",
     "run_curation",
@@ -49,22 +48,6 @@ __all__ = [
 # minhash mode keeps a candidate pair as a duplicate at this exact
 # shingle Jaccard or above
 JACCARD_THRESHOLD = 0.8
-
-
-def extracted_as_documents(extracted: DataFrame) -> DataFrame:
-    """Bridge the extraction output (url, text, …) into the documents
-    shape curation expects: doc_id = xxhash64(url) (deterministic,
-    collision-safe at 10^12 for a 64-bit space caveat noted), error rows
-    dropped. Chains extract_job → curate_job without a second scan of
-    the pages table."""
-    return (
-        extracted.filter(F.col("error").isNull())
-        .select(
-            F.xxhash64(F.col("url")).alias("doc_id"),
-            F.col("url"),
-            F.col("text"),
-        )
-    )
 
 
 def curate(

@@ -11,21 +11,11 @@ from .stream_extract import (
     stream_window_counts,
 )
 from .bucket_state import bucket_batch
-from .listener import ThroughputListener
-from .stream_sketch import (
-    compact_sketch_log,
-    read_sketch,
-    start_token_sketch_stream,
-)
 
 __all__ = [
-    "ThroughputListener",
-    "compact_sketch_log",
     "read_pages_stream",
-    "read_sketch",
     "start_curate_stream",
     "start_extract_stream",
-    "start_token_sketch_stream",
     "stream_curate",
     "stream_dedup",
     "stream_window_counts",

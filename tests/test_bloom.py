@@ -1,8 +1,8 @@
 """Unit tests for the Bloom-filter membership sketch
 (operators/bloom.py). Cross-engine value parity lives in test_entry.py
 (sk_bloom oracle); these pin the structural guarantees — no false
-negatives, bitmap packing vs the distinct-position set, mergeability —
-and the probe's broadcast-join plan shape.
+negatives, bitmap packing vs the distinct-position set — and the probe's
+broadcast-join plan shape.
 """
 
 from __future__ import annotations
@@ -15,13 +15,15 @@ from pyspark.sql import functions as F
 from ocr_pipeline_spark.operators.bloom import (
     WORD_BITS,
     bloom_build,
-    bloom_fill,
     bloom_gate,
-    bloom_merge,
     bloom_probe,
 )
 
 M, K = 512, 3
+
+
+def _n_set(words) -> int:
+    return words.agg(F.sum(F.bit_count("word"))).first()[0]
 
 
 def _py_positions(v: str) -> set[int]:
@@ -70,10 +72,8 @@ def test_packing_matches_python_positions(spark, keysets):
     want_bits = set()
     for v in members:
         want_bits |= _py_positions(v)
-    words = {
-        r["word_idx"]: r["word"]
-        for r in bloom_build(mdf, "v", m_bits=M, n_hashes=K).collect()
-    }
+    built = bloom_build(mdf, "v", m_bits=M, n_hashes=K)
+    words = {r["word_idx"]: r["word"] for r in built.collect()}
     got_bits = {
         w * WORD_BITS + b
         for w, word in words.items()
@@ -81,26 +81,7 @@ def test_packing_matches_python_positions(spark, keysets):
         if (word >> b) & 1
     }
     assert got_bits == want_bits
-    n_set = bloom_fill(
-        bloom_build(mdf, "v", m_bits=M, n_hashes=K)
-    ).first()["n_set"]
-    assert n_set == len(want_bits)
-
-
-def test_merge_is_union(spark, keysets):
-    members, _, _, _ = keysets
-    a = spark.createDataFrame([(v,) for v in members[:30]], "v string")
-    b = spark.createDataFrame([(v,) for v in members[30:]], "v string")
-    merged = bloom_merge(
-        bloom_build(a, "v", m_bits=M, n_hashes=K),
-        bloom_build(b, "v", m_bits=M, n_hashes=K),
-    )
-    full = bloom_build(
-        a.unionByName(b), "v", m_bits=M, n_hashes=K
-    )
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, full.collect())
-    )
+    assert _n_set(built) == len(want_bits)
 
 
 def test_null_keys_excluded(spark):
@@ -108,8 +89,7 @@ def test_null_keys_excluded(spark):
         [("a",), (None,), ("b",)], "v string"
     )
     words = bloom_build(df, "v", m_bits=M, n_hashes=K)
-    n_set = bloom_fill(words).first()["n_set"]
-    assert n_set == len(_py_positions("a") | _py_positions("b"))
+    assert _n_set(words) == len(_py_positions("a") | _py_positions("b"))
 
 
 def test_m_bits_word_multiple_guard(spark):

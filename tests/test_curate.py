@@ -63,31 +63,6 @@ def test_run_curation_summary(spark, corpus, tmp_path, capfd):
     assert spark.read.parquet(out).count() == 3
 
 
-def test_extract_then_curate_chain(spark, pages_df):
-    """pages → extraction → curation, end to end: unique doc ids, every
-    kept doc passes the quality gate, duplicates collapse."""
-    from ocr_pipeline_spark.operators.extraction import extract_pages
-    from ocr_pipeline_spark.plans.curate_job import extracted_as_documents
-
-    docs = extracted_as_documents(extract_pages(pages_df))
-    assert docs.count() == docs.select("doc_id").distinct().count()
-    # the synthetic vocabulary has no English stopwords, so the stopword
-    # gate rejects the whole corpus — the C4-style filter doing its job
-    assert curate(docs, langs=None, dedup="exact").count() == 0
-    # dedup-only canonicalization on the same chain: no two kept docs
-    # share a normalized-text fingerprint
-    from ocr_pipeline_spark.operators.dedup import exact_dedup
-    from ocr_pipeline_spark.operators.textstats import fingerprint
-
-    canon = exact_dedup(docs).select(
-        F.col("canonical_doc_id").alias("doc_id")
-    )
-    kept = docs.join(canon, "doc_id", "left_semi")
-    fps = kept.select(fingerprint(F.col("text")).alias("fp"))
-    assert fps.count() == fps.distinct().count()
-    assert kept.count() > 0
-
-
 def test_curation_on_driver_documents(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     kept = curate(docs, langs=None, dedup="exact")

@@ -8,11 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from ocr_pipeline_spark.operators.graph import (
-    out_degrees,
-    pagerank,
-    pagerank_until,
-)
+from ocr_pipeline_spark.operators.graph import out_degrees, pagerank
 
 # star-plus-chain: 1..4 all link to 0 (hub); 0 links to 1; 5 -> 6 chain
 EDGES = [(1, 0), (2, 0), (3, 0), (4, 0), (0, 1), (5, 6), (1, 2)]
@@ -81,52 +77,6 @@ def test_deterministic_across_partitionings(spark, edges):
     a = pagerank(edges.repartition(1)).collect()
     b = pagerank(edges.repartition(7)).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def _py_until(edges, eps_bp=0, damping_bp=8500):
-    """Pure-Python replay of the adaptive loop (same spec as above)."""
-    prev = {
-        n: 10000 for n in {u for u, _ in edges} | {v for _, v in edges}
-    }
-    rounds = 0
-    while True:
-        rounds += 1
-        cur = _py_pagerank(edges, n_iters=rounds, damping_bp=damping_bp)
-        if max(abs(cur[n] - prev[n]) for n in cur) <= eps_bp:
-            return cur, rounds
-        prev = cur
-
-
-def test_until_stops_at_exact_fixed_point(spark, edges):
-    ranks, rounds = pagerank_until(edges, eps_bp=0)
-    got = {r["node"]: r["rank_bp"] for r in ranks.collect()}
-    want, want_rounds = _py_until(EDGES, eps_bp=0)
-    assert (got, rounds) == (want, want_rounds)
-    # the result IS the n_iters form at the discovered round count, and
-    # one further iteration changes nothing (true fixed point) — checked
-    # against the Python spec, which test_matches_python_spec /
-    # test_single_iteration_formula pin as equal to the Spark form
-    # (keeps this test from re-running 2×rounds more Spark iterations)
-    assert got == _py_pagerank(EDGES, n_iters=rounds)
-    assert got == _py_pagerank(EDGES, n_iters=rounds + 1)
-
-
-def test_until_loose_eps_stops_earlier(spark, edges):
-    _, exact_rounds = _py_until(EDGES, eps_bp=0)  # pure-Python replay
-    ranks, loose_rounds = pagerank_until(edges, eps_bp=2000)
-    got = {r["node"]: r["rank_bp"] for r in ranks.collect()}
-    want, want_rounds = _py_until(EDGES, eps_bp=2000)
-    assert (got, loose_rounds) == (want, want_rounds)
-    assert 1 <= loose_rounds < exact_rounds
-
-
-def test_until_guards(spark, edges):
-    with pytest.raises(ValueError, match="eps_bp"):
-        pagerank_until(edges, eps_bp=-1)
-    with pytest.raises(ValueError, match="max_iters"):
-        pagerank_until(edges, max_iters=0)
-    with pytest.raises(RuntimeError, match="max_iters|did not reach"):
-        pagerank_until(edges, eps_bp=0, max_iters=1)
 
 
 def test_connected_components_basic(spark):

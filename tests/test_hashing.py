@@ -1,4 +1,4 @@
-"""The md5 key recipe: every Column and SQL form agrees with hashlib and
+"""The md5 key recipe: every Column form agrees with hashlib and
 the Python twin, and no other module spells the recipe itself."""
 
 from __future__ import annotations
@@ -12,10 +12,8 @@ from pyspark.sql import functions as F
 from ocr_pipeline_spark.operators.hashing import (
     hex_int,
     md5_hex,
-    md5_hex_sql,
     md5_int,
     md5_int_py,
-    md5_int_sql,
 )
 
 # ASCII, multi-byte UTF-8 (2-, 3- and 4-byte sequences), empty, NULL
@@ -32,14 +30,10 @@ def test_forms_match_hashlib_and_python_twin(spark):
     df = spark.createDataFrame([(i, s) for i, s in enumerate(SAMPLES)], "i int, s string")
     cols = []
     for n in N_HEX:
-        cols += [
-            md5_hex(F.col("s"), n).alias(f"hex_{n}"),
-            F.expr(md5_hex_sql("s", n)).alias(f"hexsql_{n}"),
-        ]
+        cols.append(md5_hex(F.col("s"), n).alias(f"hex_{n}"))
     for n in INT_N_HEX:
         cols += [
             md5_int(F.col("s"), n).alias(f"int_{n}"),
-            F.expr(md5_int_sql("s", n)).alias(f"intsql_{n}"),
             hex_int(md5_hex(F.col("s")), n).alias(f"hexint_{n}"),
         ]
     rows = {r["i"]: r for r in df.select("i", *cols).collect()}
@@ -48,12 +42,11 @@ def test_forms_match_hashlib_and_python_twin(spark):
         for n in N_HEX:
             want = None if s is None else _hex(s, n)
             assert r[f"hex_{n}"] == want, (s, n)
-            assert r[f"hexsql_{n}"] == want, (s, n)
             if s is not None:
                 assert md5_int_py(s, n) == int(want, 16), (s, n)
         for n in INT_N_HEX:
             want = None if s is None else md5_int_py(s, n)
-            for form in ("int", "intsql", "hexint"):
+            for form in ("int", "hexint"):
                 assert r[f"{form}_{n}"] == want, (s, n, form)
 
 

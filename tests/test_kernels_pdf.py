@@ -100,7 +100,7 @@ def test_unclosed_text_objects_parse_in_linear_time():
         assert r.kind == "pdf" and r.error is not None
 
 
-# -- bounded operand scan ----------------------------------------------------
+# -- bounded operator scan ---------------------------------------------------
 
 # the operator regex before its operands were anchored to the start of a
 # digit run: the oracle the anchored one must equal
@@ -108,6 +108,29 @@ _OP_ORACLE_RE = re.compile(
     r"(?P<a>-?\d+(?:\.\d+)?)\s+(?P<b>-?\d+(?:\.\d+)?)\s+(?P<op>Td|TD)"
     r"|\((?P<str>(?:[^()\\]|\\.)*)\)\s*Tj"
 )
+# the anchored regex, before its finditer became a loop that skips dead
+# string starts: the oracle for strings that escape and stop short
+_OP_ANCHORED_RE = re.compile(
+    r"(?P<a>-?(?<!\d)\d+(?:\.\d+)?)\s+(?P<b>-?\d+(?:\.\d+)?)\s+(?P<op>Td|TD)"
+    r"|\((?P<str>(?:[^()\\]|\\.)*)\)\s*Tj"
+)
+
+
+def _finditer_ops(regex, body):
+    return [
+        (m.start(), m.end(), m["a"], m["b"], m["op"], m["str"])
+        for m in regex.finditer(body)
+    ]
+
+
+def _parse_with(regex, data):
+    real = pdfkit._ops
+    pdfkit._ops = lambda body: iter(_finditer_ops(regex, body))
+    try:
+        return parse_pdf_blocks(data)
+    finally:
+        pdfkit._ops = real
+
 
 _op_tokens = st.lists(
     st.sampled_from(
@@ -122,29 +145,47 @@ _op_tokens = st.lists(
 @settings(max_examples=400, deadline=None)
 @given(_op_tokens)
 def test_op_scan_equals_unanchored_regex(body):
-    got = [(m.span(), m.groupdict()) for m in pdfkit._OP_RE.finditer(body)]
-    want = [(m.span(), m.groupdict()) for m in _OP_ORACLE_RE.finditer(body)]
-    assert got == want
+    assert list(pdfkit._ops(body)) == _finditer_ops(_OP_ORACLE_RE, body)
 
 
 @settings(max_examples=200, deadline=None)
 @given(_op_tokens)
 def test_parse_pdf_blocks_equals_unanchored_regex(body):
     data = ("%PDF-1.4\nBT " + body + " ET").encode("latin-1")
-    got = parse_pdf_blocks(data)
-    real = pdfkit._OP_RE
-    pdfkit._OP_RE = _OP_ORACLE_RE
-    try:
-        want = parse_pdf_blocks(data)
-    finally:
-        pdfkit._OP_RE = real
-    assert got == want
+    assert parse_pdf_blocks(data) == _parse_with(_OP_ORACLE_RE, data)
 
 
 def test_digit_run_parses_in_linear_time():
     """Every position of a digit run inside one text object used to
     restart the operand match: 16 000 digits took about 10 s."""
     data = b"%PDF-1.4\nBT " + b"1" * (1 << 20) + b" ET"  # 1 MiB
+    t0 = time.monotonic()
+    assert parse_pdf_blocks(data) == []
+    assert time.monotonic() - t0 < 1.0
+
+
+# strings that escape, nest and stop short, with Td ops inside them
+_str_tokens = st.lists(
+    st.sampled_from(
+        ["(", ")", "\\", "\\(", "\\)", "\\\\", "\\\n", "a", " ", "\n", "Tj",
+         ") Tj", ")Tj", "(a\\", "1 2 Td", "-3", "4", " TD", "(x) Tj"]
+    ),
+    max_size=40,
+).map("".join)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_str_tokens)
+def test_string_scan_equals_anchored_regex(body):
+    assert list(pdfkit._ops(body)) == _finditer_ops(_OP_ANCHORED_RE, body)
+    data = ("%PDF-1.4\nBT " + body + " ET").encode("latin-1")
+    assert parse_pdf_blocks(data) == _parse_with(_OP_ANCHORED_RE, data)
+
+
+def test_unclosed_strings_parse_in_linear_time():
+    """Every ``(`` of a repeated ``(a\\`` used to rescan to the end of the
+    text object: 24 KB took about 4 s."""
+    data = b"%PDF-1.4\nBT " + b"(a\\" * 350_000 + b" ET"  # 1 MiB
     t0 = time.monotonic()
     assert parse_pdf_blocks(data) == []
     assert time.monotonic() - t0 < 1.0

@@ -1,16 +1,14 @@
-"""Z-order layout: cross-engine z-value parity, clustering property,
-and plan shape."""
+"""Z-order layout: cross-engine z-value parity, bounds handling and
+plan shape."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_pipeline_spark.operators.layout import (
     ZBITS,
     with_zvalue,
-    write_zorder,
     zvalue_sql,
 )
 
@@ -92,57 +90,6 @@ def test_explicit_bounds_single_scan(grid_df):
     df2 = with_zvalue(grid_df, ["a", "b"])
     plan2 = df2._jdf.queryExecution().optimizedPlan().toString()
     assert plan2.count("Join") == 1
-
-
-def test_write_zorder_clusters_files(spark, tmp_path):
-    """Data-skipping property: per-file bounding rectangles (the
-    min/max stats a reader prunes on) must cover a small fraction of
-    the key space, vs ~full coverage for an unordered shuffle."""
-    n = 4096
-    rows = [(i, (i * 2654435761) % 256, (i * 40503) % 256) for i in range(n)]
-    df = spark.createDataFrame(rows, "id long, a long, b long")
-
-    zpath = str(tmp_path / "z")
-    upath = str(tmp_path / "u")
-    write_zorder(df, zpath, ["a", "b"], n_files=16, bounds=[(0, 255), (0, 255)])
-    df.repartition(16).write.parquet(upath)
-
-    def file_volume(path: str) -> int:
-        per_file = (
-            spark.read.parquet(path)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(
-                F.min("a").alias("alo"), F.max("a").alias("ahi"),
-                F.min("b").alias("blo"), F.max("b").alias("bhi"),
-            )
-            .collect()
-        )
-        return sum(
-            (r.ahi - r.alo + 1) * (r.bhi - r.blo + 1) for r in per_file
-        )
-
-    zvol, uvol = file_volume(zpath), file_volume(upath)
-    # 16 z-files tile 256×256 into ~16 rectangles (~65k total); a random
-    # shuffle gives every file nearly the full square (~16 × 65k).
-    assert zvol < uvol / 4
-    # content is unchanged
-    assert (
-        spark.read.parquet(zpath).orderBy("id").collect()
-        == df.orderBy("id").collect()
-    )
-
-
-def test_write_zorder_plan_is_range_partitioned(spark, tmp_path, grid_df):
-    """Pin the intended physical shape: ONE range-partitioning exchange
-    on the z-long (short key — payload crosses once, as any clustered
-    write must), no extra shuffles."""
-    z = with_zvalue(grid_df, ["a", "b"], bounds=[(0, 100), (0, 210)])
-    staged = (
-        z.repartitionByRange(8, "zval").sortWithinPartitions("zval").drop("zval")
-    )
-    plan = staged._jdf.queryExecution().executedPlan().toString()
-    assert plan.lower().count("rangepartitioning") == 1
-    assert plan.count("Exchange") == 1
 
 
 def test_zvalue_sql_term_count():

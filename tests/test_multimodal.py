@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from ocr_pipeline_spark.operators.multimodal import (
     FEATURE_DIM,
     MEDIA_SCHEMA,
-    _decode_real,
     decode_media_meta,
     feature_of,
     format_feature,
@@ -27,11 +26,6 @@ def media_df(spark):
     df.persist()
     df.count()
     return df
-
-
-def test_real_codec_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        _decode_real(b"\xff\xd8\xff")
 
 
 def test_decode_meta_types_and_errors(spark, media_df):

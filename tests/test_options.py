@@ -13,7 +13,7 @@ import ast
 import pathlib
 from collections import defaultdict
 
-ROOT = pathlib.Path(__file__).resolve().parent.parent
+from entry_files import PACKAGE, ROOT, entry_files
 
 
 def _options(tree: ast.AST):
@@ -75,12 +75,9 @@ def _is_set(calls, name, option, idx) -> bool:
 def unset_options(root: pathlib.Path) -> dict[str, tuple[int, list[str]]]:
     """{'package': (n_options, unset), 'entry helpers': (...)} for the
     tree at ``root``; unset entries read ``path:line: func(option=)``."""
-    pkg = sorted((root / "ocr_pipeline_spark").rglob("*.py"))
+    pkg = sorted((root / PACKAGE).rglob("*.py"))
     entry = root / "__spark_entry__.py"
-    callers = pkg + [entry, root / "bench.py"] + [
-        p for d in ("perfbench", "tools", "tests")
-        for p in sorted((root / d).glob("*.py"))
-    ]
+    callers = pkg + entry_files(root) + sorted((root / "tests").glob("*.py"))
     calls = _calls(callers)
     out = {}
     for label, files in (("package", pkg), ("entry helpers", [entry])):

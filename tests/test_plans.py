@@ -466,40 +466,6 @@ def test_top_fraction_is_take_ordered_not_global_sort(spark):
     assert "rangepartitioning" not in plan.lower()
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """write_bucketed's co-location contract: two tables bucketed the
-    same way on the join key sort-merge join with ZERO Exchange — the
-    plan property that stops a 10^12-row corpus paying a corpus-wide
-    shuffle for every daily join."""
-    from ocr_pipeline_spark.sources.catalog import write_bucketed
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    left = docs.select("doc_id", "lang")
-    right = docs.select("doc_id", "n_chars")
-    write_bucketed(left, "bk_left", "doc_id", n_buckets=4,
-                   sort_col="doc_id")
-    write_bucketed(right, "bk_right", "doc_id", n_buckets=4,
-                   sort_col="doc_id")
-    # disable auto-broadcast: at test scale the planner would broadcast
-    # the tiny side (and skip bucketing entirely); at 100 TB neither
-    # side broadcasts — the sort-merge-without-Exchange shape is the
-    # one under test
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bk_left").join(
-            spark.table("bk_right"), "doc_id"
-        )
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == docs.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
-
-
 def test_lang_id_ngram_is_broadcast_lookup(spark):
     """lang_id_ngram's plan contract after the r4 codegen rewrite: the
     trigram array is built ONCE (sequence/substr staged, not re-inlined

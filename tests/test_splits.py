@@ -1,4 +1,4 @@
-"""Deterministic splits: stability, fraction accuracy, leakage-freedom."""
+"""Deterministic splits: stability and fraction accuracy."""
 
 from __future__ import annotations
 
@@ -6,10 +6,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from ocr_pipeline_spark.operators.partitioning import domain_of
 from ocr_pipeline_spark.operators.splits import (
     domain_cap,
-    domain_split,
     hash_split,
     reservoir_per_stratum,
     stratified_sample,
@@ -149,16 +147,6 @@ def test_domain_cap_quota_and_preference(spark):
     assert domain_cap(small, "source", 10, "n_chars", "doc_id").count() == 2
 
 
-def test_domain_split_no_leakage(spark, pages_df):
-    labeled = domain_split(pages_df)
-    per_domain = (
-        labeled.select(domain_of(F.col("url")).alias("d"), "split")
-        .groupBy("d")
-        .agg(F.countDistinct("split").alias("n"))
-    )
-    assert per_domain.filter(F.col("n") > 1).count() == 0
-
-
 def test_pack_sequences_layout(spark):
     from ocr_pipeline_spark.operators.splits import pack_sequences
 
@@ -248,51 +236,6 @@ def test_mix_token_budget_rates_and_cap(spark):
         mix_token_budget(docs, {"a": 20000}, budget=1)
     with pytest.raises(ValueError):
         mix_token_budget(docs, {"a": 100}, budget=-5)
-
-
-def test_write_epoch_shards_layout_and_order(spark, tmp_path):
-    import glob
-    import hashlib
-
-    from ocr_pipeline_spark.operators.splits import (
-        epoch_shuffle,
-        write_epoch_shards,
-    )
-
-    docs = spark.range(0, 200).withColumnRenamed("id", "doc_id")
-    out = str(tmp_path / "epoch1")
-    write_epoch_shards(docs, out, n_shards=4, epoch=1)
-    # one parquet file per shard per run (repartition-before-partitionBy)
-    for d in glob.glob(f"{out}/shard=*"):
-        files = [f for f in glob.glob(f"{d}/*.parquet")]
-        assert len(files) == 1, d
-    # within-file order is the epoch permutation (md5 key order)
-    perm = {
-        (r["shard"], r["pos"]): r["doc_id"]
-        for r in epoch_shuffle(docs, n_shards=4, epoch=1).collect()
-    }
-    import pandas as pd
-
-    for d in sorted(glob.glob(f"{out}/shard=*")):
-        shard = int(d.rsplit("=", 1)[1])
-        pdf = pd.read_parquet(glob.glob(f"{d}/*.parquet")[0])
-        expect = [
-            perm[(shard, p)] for p in range(1, len(pdf) + 1)
-        ]
-        assert list(pdf["doc_id"]) == expect
-    # every doc exactly once across shards
-    got = spark.read.parquet(out)
-    assert got.count() == 200
-    assert got.select("doc_id").distinct().count() == 200
-
-
-def test_write_epoch_shards_rejects_reserved_columns(spark, tmp_path):
-    from ocr_pipeline_spark.operators.splits import write_epoch_shards
-
-    docs = spark.range(0, 5).withColumnRenamed("id", "doc_id")
-    clash = docs.withColumn("shard", docs.doc_id % 2)
-    with pytest.raises(ValueError, match="shard"):
-        write_epoch_shards(clash, str(tmp_path / "x"))
 
 
 class TestTemperatureShares:

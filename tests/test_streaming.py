@@ -289,151 +289,3 @@ def test_start_curate_stream_end_to_end(spark, tmp_path):
     got = spark.read.parquet(str(tmp_path / "out"))
     assert got.count() == 1  # one quality fingerprint survives
     assert got.first()["doc_id"] in (1, 2)
-
-
-def test_token_sketch_stream_merges_to_batch_sketch(spark, tmp_path):
-    """Continuous CMS maintenance: the merged append-only state log
-    equals the batch sketch over the same corpus EXACTLY (cellwise
-    mergeability), and estimates answer from the merged state."""
-    import datetime
-
-    from ocr_pipeline_spark.operators.sketch import cms_estimate, cms_state
-    from ocr_pipeline_spark.operators.textstats import tokens
-    from ocr_pipeline_spark.streaming import (
-        compact_sketch_log,
-        read_sketch,
-        start_token_sketch_stream,
-    )
-    from pyspark.sql import functions as F
-
-    ts = datetime.datetime(2024, 5, 1, 12, 0, 0)
-    rows = [
-        (i, ts, f"the data {'query ' * (i % 3)}engine row {i}", "en")
-        for i in range(60)
-    ]
-    schema = "doc_id long, warc_ts timestamp, text string, lang string"
-    src = str(tmp_path / "src")
-    spark.createDataFrame(rows, schema).coalesce(2).write.parquet(src)
-
-    state = str(tmp_path / "state")
-    q = start_token_sketch_stream(
-        spark,
-        src,
-        state,
-        str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    _wait(q)
-
-    merged = {
-        (r["row_idx"], r["col_idx"]): r["cnt"]
-        for r in read_sketch(spark, state).collect()
-    }
-    toks = (
-        spark.createDataFrame(rows, schema)
-        .select(F.explode_outer(tokens(F.col("text"))).alias("tok"))
-        .filter(F.col("tok").isNotNull() & (F.col("tok") != ""))
-    )
-    want = {
-        (r["row_idx"], r["col_idx"]): r["cnt"]
-        for r in cms_state(toks, "tok").collect()
-    }
-    assert merged == want
-
-    est = {
-        r["value"]: r["est"]
-        for r in cms_estimate(
-            read_sketch(spark, state), ["the", "zzz-absent"]
-        ).collect()
-    }
-    assert est["the"] >= 60 and est["zzz-absent"] == 0
-
-    # compaction preserves the sums
-    compact_sketch_log(spark, state)
-    after = {
-        (r["row_idx"], r["col_idx"]): r["cnt"]
-        for r in read_sketch(spark, state).collect()
-    }
-    assert after == want
-
-
-def test_sketch_log_multi_writer_and_restart(spark, tmp_path):
-    """Two writers share one state_dir without clobbering (their epoch
-    ids both start at 0 — only the per-writer run_id keeps the
-    partitions disjoint), and a fresh-checkpoint restart after
-    compaction APPENDS to the compacted history instead of overwriting
-    batch=0 (the r4 advisory's failure mode)."""
-    import datetime
-
-    from ocr_pipeline_spark.operators.sketch import cms_state
-    from ocr_pipeline_spark.operators.textstats import tokens
-    from ocr_pipeline_spark.streaming import (
-        compact_sketch_log,
-        read_sketch,
-        start_token_sketch_stream,
-    )
-    from pyspark.sql import functions as F
-
-    ts = datetime.datetime(2024, 5, 1, 12, 0, 0)
-    schema = "doc_id long, warc_ts timestamp, text string, lang string"
-    rows_a = [(i, ts, f"alpha data {i}", "en") for i in range(20)]
-    rows_b = [(i, ts, f"beta data {i}", "en") for i in range(30)]
-    src_a, src_b = str(tmp_path / "a"), str(tmp_path / "b")
-    spark.createDataFrame(rows_a, schema).coalesce(1).write.parquet(src_a)
-    spark.createDataFrame(rows_b, schema).coalesce(1).write.parquet(src_b)
-    state = str(tmp_path / "state")
-
-    def _expect(rowsets):
-        toks = (
-            spark.createDataFrame(
-                [r for rs in rowsets for r in rs], schema
-            )
-            .select(F.explode_outer(tokens(F.col("text"))).alias("tok"))
-            .filter(F.col("tok").isNotNull() & (F.col("tok") != ""))
-        )
-        return {
-            (r["row_idx"], r["col_idx"]): r["cnt"]
-            for r in cms_state(toks, "tok").collect()
-        }
-
-    # two writers, same state_dir, distinct run ids — both epoch 0
-    for run_id, src in (("wa", src_a), ("wb", src_b)):
-        _wait(
-            start_token_sketch_stream(
-                spark, src, state, str(tmp_path / f"ckpt_{run_id}"),
-                available_now=True, run_id=run_id,
-            )
-        )
-    got = {
-        (r["row_idx"], r["col_idx"]): r["cnt"]
-        for r in read_sketch(spark, state).collect()
-    }
-    assert got == _expect([rows_a, rows_b])
-
-    # compact, then a THIRD writer with a fresh checkpoint (epoch 0
-    # again) — history survives because 'compacted' is unreachable
-    compact_sketch_log(spark, state)
-    rows_c = [(i, ts, f"gamma data {i}", "en") for i in range(10)]
-    src_c = str(tmp_path / "c")
-    spark.createDataFrame(rows_c, schema).coalesce(1).write.parquet(src_c)
-    _wait(
-        start_token_sketch_stream(
-            spark, src_c, state, str(tmp_path / "ckpt_wc"),
-            available_now=True, run_id="wc",
-        )
-    )
-    got = {
-        (r["row_idx"], r["col_idx"]): r["cnt"]
-        for r in read_sketch(spark, state).collect()
-    }
-    assert got == _expect([rows_a, rows_b, rows_c])
-
-    # reserved / malformed run ids refuse loudly
-    import pytest as _pytest
-
-    for bad in ("compacted", "has-dash", "a=b", ""):
-        with _pytest.raises(ValueError, match="run_id"):
-            start_token_sketch_stream(
-                spark, src_c, state, str(tmp_path / "ckpt_bad"),
-                available_now=True, run_id=bad,
-            )

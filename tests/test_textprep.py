@@ -1,5 +1,5 @@
-"""The normalize / tokenize recipe: the Column, Spark-SQL, Python and
-DuckDB forms agree on edge text, no other module spells the recipe
+"""The normalize / tokenize recipe: the Column, Python and DuckDB forms
+agree on edge text, no other module spells the recipe
 itself, and the merged quality gate answers like its standalone tables."""
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ import sys
 import duckdb
 from pyspark.sql import functions as F
 
-from ocr_pipeline_spark.functions import register_sql_functions
 from ocr_pipeline_spark.kernels.bpe import norm_words
 from ocr_pipeline_spark.operators.textstats import (
     annotate_quality,
@@ -30,15 +29,12 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_forms_agree_on_edge_rows(spark, edge_texts):
-    register_sql_functions(spark)
     df = spark.createDataFrame(list(enumerate(edge_texts)), "doc_id long, text string")
     text = F.col("text")
     rows = df.select(
         "doc_id",
         norm_text(text).alias("n"),
         tokens(text).alias("t"),
-        F.expr("norm_text(text)").alias("n_sql"),
-        F.expr("ws_token_count(text)").alias("wc_sql"),
     ).collect()
 
     con = duckdb.connect()
@@ -56,7 +52,6 @@ def test_forms_agree_on_edge_rows(spark, edge_texts):
         want = norm_words(edge_texts[r["doc_id"]])
         assert r["t"] == want, r
         assert r["n"] == " ".join(want), r
-        assert (r["n_sql"], r["wc_sql"]) == (r["n"], len(want)), r
         assert duck[r["doc_id"]] == (r["n"], want), r
 
 
