@@ -28,9 +28,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocr_pipeline_spark.operators.dedup import (
+    CONTAINMENT_MAX_FP_DF,
     DEFAULT_NUM_HASHES,
     DEFAULT_SHINGLE,
     MINHASH_P,
+    SIMHASH_BITS,
+    SIMHASH_BLOCKS,
+    SIMHASH_MAX_HAMMING,
     boilerplate_scrub,
     chunk_dedup,
     cross_source_chunks,
@@ -158,6 +162,10 @@ from ocr_pipeline_spark.operators.sketch import (
     kmv_set_estimates,
 )
 from ocr_pipeline_spark.operators.splits import (
+    CURRICULUM_EPOCH,
+    CURRICULUM_SHARDS,
+    RESERVOIR_SEED,
+    SPLIT_SEED,
     domain_cap,
     epoch_shuffle,
     hash_split,
@@ -169,7 +177,6 @@ from ocr_pipeline_spark.operators.splits import (
     curriculum_order,
 )
 from ocr_pipeline_spark.operators.layout import (
-    ZBITS,
     quantize_case_sql,
     with_zvalue,
     zvalue_sql,
@@ -186,6 +193,8 @@ from ocr_pipeline_spark.operators.urlkit import (
     with_canonical_url,
 )
 from ocr_pipeline_spark.operators.temporal import (
+    EWMA_ALPHA_BP,
+    FUNNEL_STEPS,
     FUNNEL_WINDOW_S,
     SESSION_GAP,
     asof_join,
@@ -215,6 +224,7 @@ from ocr_pipeline_spark.operators.textstats import (
     LANG_TOKENS_PER_HIT,
     REP_GRAM,
     ROLL_MOD,
+    TFIDF_TOP_K,
     WINNOW_K,
     WINNOW_W,
     STOPWORDS_EN,
@@ -242,6 +252,7 @@ from ocr_pipeline_spark.streaming import (
     start_curate_stream,
     stream_window_counts,
 )
+from ocr_pipeline_spark.streaming.stream_extract import STREAM_WINDOW
 from ocr_pipeline_spark.sources.synth_pages import (
     PAGES_SCHEMA,
     SYNTH_SEED,
@@ -3096,18 +3107,19 @@ def oracle_sql() -> dict[str, str]:
         """
     # mirror of simhash_candidate_pairs: one table per block-combo from
     # the SAME simhash_table_combos list, key = concatenated block values
-    blk = lambda i: f"((simhash >> {i * 10}) & 1023)"  # noqa: E731
+    per = SIMHASH_BITS // SIMHASH_BLOCKS
+    blk = lambda i: f"((simhash >> {i * per}) & {(1 << per) - 1})"  # noqa: E731
 
     def key_of(combo: tuple[int, ...]) -> str:
-        # same left fold as the Spark side: ((b0 << 10) | b1) << 10 | b2
+        # same left fold as the Spark side: ((b0 << per) | b1) << per | b2
         key = blk(combo[0])
         for c in combo[1:]:
-            key = f"(({key} << 10) | {blk(c)})"
+            key = f"(({key} << {per}) | {blk(c)})"
         return key
     tables_union = " UNION ALL ".join(
         f"SELECT doc_id, simhash, {t} AS table_idx, "
         f"{key_of(combo)} AS table_key FROM sigs"
-        for t, combo in enumerate(simhash_table_combos(6, 3))
+        for t, combo in enumerate(simhash_table_combos())
     )
     simhash_pairs_sql = f"""
             WITH sigs AS ({simhash_sql}),
@@ -3119,7 +3131,7 @@ def oracle_sql() -> dict[str, str]:
                 ON a.table_idx = b.table_idx AND a.table_key = b.table_key
                AND a.doc_id < b.doc_id
               GROUP BY 1, 2)
-            SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3
+            SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= {SIMHASH_MAX_HAMMING}
         """
     return _prioritize({
         "q1_pricing_summary": """
@@ -3920,7 +3932,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT doc_id, term, tf, df, score,
                      row_number() OVER (PARTITION BY doc_id
                                         ORDER BY score DESC, term) AS rank
-              FROM s) WHERE rank <= 5
+              FROM s) WHERE rank <= {TFIDF_TOP_K}
         """,
         "ts_repetition": f"""
             WITH g AS (
@@ -4243,7 +4255,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, unnest(fps) AS fp FROM m
         """,
         # dd_containment: replay the fp_winnow derivation over the
-        # augmented table (docs + 5 truncated halves), rare-fp cap 20,
+        # augmented table (docs + 5 truncated halves), the rare-fp cap,
         # asymmetric shared/|fp(src)| in basis points
         "dd_containment": f"""
             WITH aug AS (
@@ -4255,7 +4267,7 @@ def oracle_sql() -> dict[str, str]:
               FROM documents WHERE doc_id < 5),
             {_winnow_sql("aug")},
             f AS (SELECT doc_id, unnest(fps) AS fp FROM m),
-            rare AS (SELECT fp FROM f GROUP BY fp HAVING count(*) <= 20),
+            rare AS (SELECT fp FROM f GROUP BY fp HAVING count(*) <= {CONTAINMENT_MAX_FP_DF}),
             p AS (SELECT f.doc_id, f.fp FROM f JOIN rare USING (fp)),
             sizes AS (SELECT doc_id AS src_id,
                              cast(len(fps) as bigint) AS n_src FROM m),
@@ -4383,9 +4395,9 @@ def oracle_sql() -> dict[str, str]:
               AND (50 * stop_hits >= n_tokens)
             GROUP BY fp
         """,
-        "st_window_counts": """
-            SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-                   time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour' AS window_end,
+        "st_window_counts": f"""
+            SELECT time_bucket(INTERVAL '{STREAM_WINDOW}', ts) AS window_start,
+                   time_bucket(INTERVAL '{STREAM_WINDOW}', ts) + INTERVAL '{STREAM_WINDOW}' AS window_end,
                    event_type, count(*) AS n_docs
             FROM events GROUP BY 1, 2, 3
         """,
@@ -4470,12 +4482,12 @@ def oracle_sql() -> dict[str, str]:
             b AS (SELECT min(day_i) lo0, max(day_i) hi0,
                          min(user_id) lo1, max(user_id) hi1 FROM base),
             q AS (SELECT event_id,
-                   cast({quantize_case_sql("day_i", "lo0", "hi0", ZBITS, div="//")}
+                   cast({quantize_case_sql("day_i", "lo0", "hi0", div="//")}
                         as bigint) AS _q0,
-                   cast({quantize_case_sql("user_id", "lo1", "hi1", ZBITS, div="//")}
+                   cast({quantize_case_sql("user_id", "lo1", "hi1", div="//")}
                         as bigint) AS _q1
                   FROM base, b)
-            SELECT event_id, ({zvalue_sql(["_q0", "_q1"], ZBITS)}) AS zval
+            SELECT event_id, ({zvalue_sql(["_q0", "_q1"])}) AS zval
             FROM q
         """,
         # sp_curriculum: lm_head_split's CTEs for the phase, then the
@@ -4483,10 +4495,10 @@ def oracle_sql() -> dict[str, str]:
         "sp_curriculum": f"""
             WITH {_SURPRISAL_SQL},
             k AS (SELECT doc_id, split AS phase,
-                         md5(doc_id::VARCHAR || ':curriculum0') AS _k
+                         md5(doc_id::VARCHAR || ':curriculum{CURRICULUM_EPOCH}') AS _k
                   FROM ph),
             sh AS (SELECT doc_id, phase, _k,
-                          ('0x' || substr(_k, 1, 12))::BIGINT % 4
+                          ('0x' || substr(_k, 1, 12))::BIGINT % {CURRICULUM_SHARDS}
                             AS shard
                    FROM k)
             SELECT doc_id, phase, cast(shard as bigint) AS shard,
@@ -4514,12 +4526,12 @@ def oracle_sql() -> dict[str, str]:
             WHERE b < CASE lang WHEN 'en' THEN 5000 WHEN 'de' THEN 10000
                                 WHEN 'fr' THEN 2500 ELSE 1000 END
         """,
-        "sp_reservoir": """
+        "sp_reservoir": f"""
             SELECT doc_id, lang, rk FROM (
               SELECT doc_id, lang,
                      cast(row_number() OVER (
                        PARTITION BY lang
-                       ORDER BY ('0x' || substr(md5('resv0_' ||
+                       ORDER BY ('0x' || substr(md5('{RESERVOIR_SEED}_' ||
                                  doc_id::VARCHAR), 1, 12))::BIGINT,
                                 doc_id)
                        as bigint) AS rk
@@ -4563,14 +4575,14 @@ def oracle_sql() -> dict[str, str]:
                    (so % 512)::BIGINT AS bin_offset
             FROM o
         """,
-        "sp_hash_split": """
+        "sp_hash_split": f"""
             SELECT doc_id,
                    CASE WHEN b < 8000 THEN 'train'
                         WHEN b < 9000 THEN 'valid'
                         WHEN b < 10000 THEN 'test'
                         ELSE 'rest' END AS split
             FROM (SELECT doc_id,
-                         ('0x' || substr(md5('split0_' || doc_id::VARCHAR), 1, 12))::BIGINT % 10000 AS b
+                         ('0x' || substr(md5('{SPLIT_SEED}_' || doc_id::VARCHAR), 1, 12))::BIGINT % 10000 AS b
                   FROM documents)
         """,
         # t_funnel: per-step chained LEFT joins with min(CASE ...) so a
@@ -4579,13 +4591,13 @@ def oracle_sql() -> dict[str, str]:
             WITH base AS (SELECT user_id AS k, event_type AS et,
                                  floor(epoch(ts))::BIGINT AS e FROM events),
             s1 AS (SELECT k, min(e) AS t1 FROM base
-                   WHERE et = 'signup' GROUP BY k),
+                   WHERE et = '{FUNNEL_STEPS[0]}' GROUP BY k),
             s2 AS (SELECT s1.k, any_value(s1.t1) AS t1,
                           min(CASE WHEN b.e > s1.t1
                                     AND b.e <= s1.t1 + {FUNNEL_WINDOW_S}
                                    THEN b.e END) AS t2
                    FROM s1 LEFT JOIN base b
-                     ON b.k = s1.k AND b.et = 'view'
+                     ON b.k = s1.k AND b.et = '{FUNNEL_STEPS[1]}'
                    GROUP BY s1.k),
             s3 AS (SELECT s2.k, any_value(s2.t1) AS t1,
                           any_value(s2.t2) AS t2,
@@ -4593,7 +4605,7 @@ def oracle_sql() -> dict[str, str]:
                                     AND b.e <= s2.t1 + {FUNNEL_WINDOW_S}
                                    THEN b.e END) AS t3
                    FROM s2 LEFT JOIN base b
-                     ON b.k = s2.k AND b.et = 'purchase'
+                     ON b.k = s2.k AND b.et = '{FUNNEL_STEPS[2]}'
                    GROUP BY s2.k)
             SELECT k AS user_id,
                    cast(1 + (t2 IS NOT NULL)::INT
@@ -4637,7 +4649,7 @@ def oracle_sql() -> dict[str, str]:
         # t_ewma: list_reduce over list(value ORDER BY ts, event_id)
         # replays the exact fold (first element is the init, matching
         # the Spark aggregate(vs[2:], vs[1], ...) form)
-        "t_ewma": """
+        "t_ewma": f"""
             WITH a AS (
               SELECT user_id,
                      cast(count(*) as bigint) AS n_events,
@@ -4646,7 +4658,7 @@ def oracle_sql() -> dict[str, str]:
               FROM events GROUP BY user_id)
             SELECT user_id, n_events, last_ts,
                    round(list_reduce(vs,
-                     (acc, x) -> acc + 0.2 * (x - acc)), 4) + 0.0
+                     (acc, x) -> acc + {EWMA_ALPHA_BP / 10000} * (x - acc)), 4) + 0.0
                      AS ewma
             FROM a ORDER BY user_id
         """,

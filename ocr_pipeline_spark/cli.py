@@ -132,8 +132,6 @@ def _cmd_semdedup(args) -> None:
         k=args.k,
         iters=args.iters,
         threshold=args.threshold,
-        id_col=args.id_col,
-        vec_col=args.vec_col,
     )
     out.write.mode("overwrite").parquet(args.out)
     kept = spark.read.parquet(args.out).filter("keep").count()
@@ -147,7 +145,7 @@ def _cmd_dsir(args) -> None:
 
     spark = get_spark("cli-dsir", cores=args.cores)
     docs = spark.read.parquet(args.input)
-    out = dsir_weights(docs, F.expr(args.target_where), text_col=args.text_col)
+    out = dsir_weights(docs, F.expr(args.target_where))
     out.write.mode("overwrite").parquet(args.out)
     n = spark.read.parquet(args.out).count()
     print(f"wrote DSIR importance weights to {args.out} ({n} docs)")
@@ -158,7 +156,7 @@ def _cmd_dupspans(args) -> None:
 
     spark = get_spark("cli-dupspans", cores=args.cores)
     docs = spark.read.parquet(args.input)
-    out = dup_spans(docs, n=args.n, text_col=args.text_col)
+    out = dup_spans(docs, n=args.n)
     out.write.mode("overwrite").parquet(args.out)
     flagged = spark.read.parquet(args.out).filter(
         f"dup_bp >= {args.flag_bp}"
@@ -174,9 +172,7 @@ def _cmd_scrub(args) -> None:
 
     spark = get_spark("cli-scrub", cores=args.cores)
     docs = spark.read.parquet(args.input)
-    out = boilerplate_scrub(
-        docs, k=args.k, max_df=args.max_df, text_col=args.text_col
-    )
+    out = boilerplate_scrub(docs, k=args.k, max_df=args.max_df)
     out.write.mode("overwrite").parquet(args.out)
     stats = (
         spark.read.parquet(args.out)
@@ -199,9 +195,7 @@ def _cmd_search(args) -> None:
 
     spark = get_spark("cli-search", cores=args.cores)
     docs = spark.read.parquet(args.input)
-    out = bm25_search(
-        docs, tuple(args.terms), k=args.k, text_col=args.text_col
-    )
+    out = bm25_search(docs, tuple(args.terms), k=args.k)
     for r in out.collect():
         print(
             f"doc {r['doc_id']:>10}  score {r['score']:>8} "
@@ -251,7 +245,6 @@ def _cmd_lmscore(args) -> None:
     out = stupid_backoff(
         docs,
         lm_docs=lm,
-        text_col=args.text_col,
         penalty_bits=args.penalty_bits,
     )
     out.write.mode("overwrite").parquet(args.out)
@@ -277,9 +270,7 @@ def _cmd_vocab(args) -> None:
     spark = get_spark("cli-vocab", cores=args.cores)
     docs = spark.read.parquet(args.input)
     ks = tuple(int(k) for k in args.ks.split(","))
-    for r in vocab_coverage(docs, ks=ks, text_col=args.text_col).orderBy(
-        "k"
-    ).collect():
+    for r in vocab_coverage(docs, ks=ks).orderBy("k").collect():
         print(
             f"top-{r['k']:>8}: {r['coverage_bp'] / 100:6.2f}% of "
             f"{r['n_total']} occurrences (vocab {r['vocab']})"
@@ -291,9 +282,9 @@ def _cmd_overlap(args) -> None:
 
     spark = get_spark("cli-overlap", cores=args.cores)
     docs = spark.read.parquet(args.input)
-    out = cross_source_chunks(
-        docs, k=args.k, text_col=args.text_col, source_col=args.source_col
-    ).orderBy("shared_chunks", ascending=False)
+    out = cross_source_chunks(docs, k=args.k).orderBy(
+        "shared_chunks", ascending=False
+    )
     if args.out:
         out.write.mode("overwrite").parquet(args.out)
     for r in out.limit(args.top).collect():
@@ -331,7 +322,7 @@ def _cmd_report(args) -> None:
 
     spark = get_spark("cli-report", cores=args.cores)
     df = spark.read.parquet(args.input)
-    for r in corpus_report(df, text_col=args.text_col).collect():
+    for r in corpus_report(df).collect():
         print(f"{r['metric']}\t{r['value']}")
 
 
@@ -464,7 +455,6 @@ def build_parser() -> argparse.ArgumentParser:
         required=True,
         help="SQL predicate defining the target slice, e.g. \"lang = 'en'\"",
     )
-    p.add_argument("--text-col", default="text")
     p.set_defaults(fn=_cmd_dsir)
 
     p = sub.add_parser(
@@ -474,7 +464,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--input", required=True)
     p.add_argument("--out", required=True)
     p.add_argument("--n", type=int, default=8, help="window size (tokens)")
-    p.add_argument("--text-col", default="text")
     p.add_argument(
         "--flag-bp",
         type=int,
@@ -496,7 +485,6 @@ def build_parser() -> argparse.ArgumentParser:
         default=2,
         help="drop chunks appearing in more than this many distinct docs",
     )
-    p.add_argument("--text-col", default="text")
     p.set_defaults(fn=_cmd_scrub)
 
     p = sub.add_parser(
@@ -505,7 +493,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--input", required=True)
     p.add_argument("terms", nargs="+", help="query terms")
     p.add_argument("--k", type=int, default=10)
-    p.add_argument("--text-col", default="text")
     p.set_defaults(fn=_cmd_search)
 
     p = sub.add_parser(
@@ -532,7 +519,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="parquet of LM training docs (default: self-train on input)",
     )
     p.add_argument("--penalty-bits", type=int, default=1)
-    p.add_argument("--text-col", default="text")
     p.set_defaults(fn=_cmd_lmscore)
 
     p = sub.add_parser(
@@ -540,7 +526,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--input", required=True)
     p.add_argument("--ks", default="1,10,100,1000,10000")
-    p.add_argument("--text-col", default="text")
     p.set_defaults(fn=_cmd_vocab)
 
     p = sub.add_parser(
@@ -551,8 +536,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--out", default=None)
     p.add_argument("--k", type=int, default=10)
     p.add_argument("--top", type=int, default=20)
-    p.add_argument("--text-col", default="text")
-    p.add_argument("--source-col", default="source")
     p.set_defaults(fn=_cmd_overlap)
 
     p = sub.add_parser(
@@ -564,8 +547,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--k", type=int, default=8)
     p.add_argument("--iters", type=int, default=3)
     p.add_argument("--threshold", type=float, default=0.7)
-    p.add_argument("--id-col", default="vec_id")
-    p.add_argument("--vec-col", default="embedding")
     p.set_defaults(fn=_cmd_semdedup)
 
     p = sub.add_parser(
@@ -578,7 +559,6 @@ def build_parser() -> argparse.ArgumentParser:
         "report", help="dataset-card rollup of a documents table"
     )
     p.add_argument("--input", required=True)
-    p.add_argument("--text-col", default="text")
     p.set_defaults(fn=_cmd_report)
 
     p = sub.add_parser(

@@ -44,19 +44,16 @@ class ExtractResult:
 DEFAULT_MAX_PAYLOAD_BYTES = 4 << 20
 
 
-def extract_document(
-    payload: bytes | None,
-    max_payload_bytes: int | None = DEFAULT_MAX_PAYLOAD_BYTES,
-) -> ExtractResult:
+def extract_document(payload: bytes | None) -> ExtractResult:
     """bytes → ExtractResult. Total function: never raises.
 
-    Payloads over ``max_payload_bytes`` are truncated (deterministic
-    prefix — the same contract WARC applies at capture time), so a
-    pathological page can never blow a worker; pass None to disable."""
+    Payloads over ``DEFAULT_MAX_PAYLOAD_BYTES`` are truncated
+    (deterministic prefix — the same contract WARC applies at capture
+    time), so a pathological page can never blow a worker."""
     if payload is None or len(payload) == 0:
         return ExtractResult(error="empty payload", text_sha256=sha256_text(""))
-    if max_payload_bytes is not None and len(payload) > max_payload_bytes:
-        payload = payload[:max_payload_bytes]
+    if len(payload) > DEFAULT_MAX_PAYLOAD_BYTES:
+        payload = payload[:DEFAULT_MAX_PAYLOAD_BYTES]
     try:
         if payload[:5] == b"%PDF-":
             blocks = parse_pdf_blocks(payload)

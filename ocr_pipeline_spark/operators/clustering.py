@@ -51,11 +51,11 @@ def _trunc_div(s: int, n: int) -> int:
     return q if s >= 0 else -q
 
 
-def _quantized(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _quantized(emb: DataFrame) -> DataFrame:
     return emb.select(
-        id_col,
+        "vec_id",
         F.transform(
-            F.col(vec_col),
+            F.col("embedding"),
             lambda x: F.floor(
                 x.cast("double") * KM_SCALE + F.lit(0.5)
             ).cast("long"),
@@ -72,7 +72,7 @@ def _dist2(vcol: Column, centroid: list[int]) -> Column:
     )
 
 
-def _assign(q: DataFrame, cents: dict[int, list[int]], id_col: str) -> DataFrame:
+def _assign(q: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
     choice = F.array_min(
         F.array(
             *[
@@ -84,30 +84,28 @@ def _assign(q: DataFrame, cents: dict[int, list[int]], id_col: str) -> DataFrame
             ]
         )
     )
-    return q.select(id_col, "v", choice.getField("cell").alias("cell"))
+    return q.select("vec_id", "v", choice.getField("cell").alias("cell"))
 
 
 def kmeans_centroids(
     emb: DataFrame,
     k: int = KM_CELLS,
     iters: int = KM_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> dict[int, list[int]]:
     """Train and return the fixed-point centroid table
     {cell: [dim bigints]}. Init = the quantized vectors of the k
     smallest ids (deterministic, engine-portable)."""
     if k < 1 or iters < 0:
         raise ValueError(f"need k >= 1, iters >= 0: {k}, {iters}")
-    q = _quantized(emb, id_col, vec_col).localCheckpoint(eager=True)
-    init = q.filter(F.col(id_col) < k).collect()
+    q = _quantized(emb).localCheckpoint(eager=True)
+    init = q.filter(F.col("vec_id") < k).collect()
     if len(init) != k:
         raise ValueError(
             f"init needs ids 0..{k - 1} present, found {len(init)}"
         )
-    cents = {int(r[id_col]): [int(x) for x in r["v"]] for r in init}
+    cents = {int(r["vec_id"]): [int(x) for x in r["v"]] for r in init}
     for _ in range(iters):
-        assigned = _assign(q, cents, id_col)
+        assigned = _assign(q, cents)
         rows = (
             assigned.select(
                 "cell", F.posexplode("v").alias("dim", "val")
@@ -143,12 +141,9 @@ def kmeans_assign(
     emb: DataFrame,
     k: int = KM_CELLS,
     iters: int = KM_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, cell) assignment under the trained centroids — ties on
+    """(vec_id, cell) assignment under the trained centroids — ties on
     distance go to the smallest cell id (exact, so ties are real and
     must break identically everywhere)."""
-    cents = kmeans_centroids(emb, k, iters, id_col, vec_col)
-    q = _quantized(emb, id_col, vec_col)
-    return _assign(q, cents, id_col).select(id_col, "cell")
+    cents = kmeans_centroids(emb, k, iters)
+    return _assign(_quantized(emb), cents).select("vec_id", "cell")

@@ -58,6 +58,13 @@ DEFAULT_NUM_HASHES = 8
 DEFAULT_SHINGLE = 3
 # Tokens per chunk of the chunk-level dedup and boilerplate operators.
 CHUNK_TOKENS = 10
+# simhash_candidate_pairs: SIMHASH_BITS-bit signatures split into
+# SIMHASH_BLOCKS blocks; pairs within SIMHASH_MAX_HAMMING bits are kept.
+SIMHASH_BITS = 60
+SIMHASH_BLOCKS = 6
+SIMHASH_MAX_HAMMING = 3
+# containment_pairs drops fingerprints held by more documents than this.
+CONTAINMENT_MAX_FP_DF = 20
 
 # Universal-hash-family modulus for MinHash permutations (2^31 - 1, prime).
 # a*h+b stays under 2^62 (a, h < 2^31) — no bigint overflow in either engine.
@@ -232,11 +239,7 @@ def jaccard_verify(docs: DataFrame, pairs: DataFrame) -> DataFrame:
 _LOG = logging.getLogger(__name__)
 
 
-def dup_clusters(
-    pairs: DataFrame,
-    max_iter: int = 20,
-    on_nonconverged: str = "warn",
-) -> DataFrame:
+def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Duplicate-cluster assignment: connected components over candidate
     pairs via hash-min label propagation (each doc converges to the
     minimum doc_id of its component — the canonical representative).
@@ -254,11 +257,7 @@ def dup_clusters(
     The ``max_iter`` cap is never silent: pointer jumping converges in
     O(log diameter) rounds (a component would need diameter > 2^20 to
     exhaust the default), but if the cap IS hit the labels may still
-    split a component, so ``on_nonconverged`` controls the signal —
-    ``"warn"`` logs a warning (default), ``"raise"`` raises
-    ``RuntimeError``."""
-    if on_nonconverged not in ("warn", "raise"):
-        raise ValueError(f"on_nonconverged must be warn|raise, got {on_nonconverged!r}")
+    split a component, so a warning is logged."""
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
@@ -323,14 +322,11 @@ def dup_clusters(
             converged = True
             break
     if not converged:
-        msg = (
+        _LOG.warning(
             f"dup_clusters: label propagation did not converge within "
             f"max_iter={max_iter} rounds; returned cluster_ids may still "
             f"split a connected component (raise max_iter)"
         )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        _LOG.warning(msg)
     return labels
 
 
@@ -373,57 +369,45 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_table_combos(blocks: int, max_hamming: int) -> list[tuple[int, ...]]:
+def simhash_table_combos() -> list[tuple[int, ...]]:
     """The block-index combinations keying each LSH table: every
-    (blocks - max_hamming)-subset of the block indices. A pair with
-    hamming ≤ max_hamming differs in at most max_hamming blocks, so it
-    AGREES on some (blocks - max_hamming)-subset → is caught by that
+    (SIMHASH_BLOCKS - SIMHASH_MAX_HAMMING)-subset of the block indices.
+    A pair with hamming ≤ SIMHASH_MAX_HAMMING differs in at most that
+    many blocks, so it AGREES on some such subset → is caught by that
     table (recall exactly 1 at the threshold). Shared by the Spark
     operator and the DuckDB oracle builder."""
     import itertools
 
-    return list(itertools.combinations(range(blocks), blocks - max_hamming))
+    return list(
+        itertools.combinations(
+            range(SIMHASH_BLOCKS), SIMHASH_BLOCKS - SIMHASH_MAX_HAMMING
+        )
+    )
 
 
-def simhash_candidate_pairs(
-    sigs: DataFrame,
-    blocks: int = 6,
-    max_hamming: int = 3,
-    sig_bits: int = 60,
-) -> DataFrame:
+def simhash_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Multi-table bit-block LSH over SimHash signatures → verified
     near-dup pairs (doc_a, doc_b, hamming). The Manku-Jain-Sarma design
     ("Detecting near-duplicates for web crawling", WWW'07): the
-    ``sig_bits``-bit signature is split into ``blocks`` contiguous
-    blocks; one table per (blocks - max_hamming)-subset of blocks, keyed
-    on the CONCATENATION of that subset's block values.
+    ``SIMHASH_BITS``-bit signature is split into ``SIMHASH_BLOCKS``
+    contiguous blocks; one table per (blocks - max hamming)-subset of
+    blocks, keyed on the CONCATENATION of that subset's block values.
 
     Why not naive single-block bands: a 60/4 = 15-bit band key has a
     2^15 keyspace — at 10^12 docs every bucket holds ~3×10^7 docs and
     the within-bucket join goes quadratic. Here the table key is
-    (blocks - max_hamming) × (sig_bits/blocks) = 30 bits (defaults), so
+    (6 - 3) × (60/6) = 30 bits, so
     buckets stay small at web scale at the cost of C(6,3) = 20 tables —
     the published trade-off, and each emitted row is (doc_id, 2 shorts,
     1 long): no text ever moves.
 
-    Verify: popcount(xor(sig_a, sig_b)) ≤ max_hamming — pure JVM
+    Verify: popcount(xor(sig_a, sig_b)) ≤ SIMHASH_MAX_HAMMING — pure JVM
     expressions on the two 8-byte signatures. The equi-join key
     (table_idx, table_key) is a slice of a hash → uniform, skew-free
     shuffle; candidate volume is O(key collisions), never O(N²).
     Companion of ``lsh_candidate_pairs`` (MinHash/Jaccard regime).
     """
-    if sig_bits % blocks != 0:
-        # integer division would silently ignore the top sig_bits%blocks
-        # bits, voiding the recall-1-at-threshold guarantee
-        raise ValueError(
-            f"sig_bits ({sig_bits}) must be divisible by blocks ({blocks})"
-        )
-    if not 0 < max_hamming < blocks:
-        raise ValueError(
-            f"max_hamming ({max_hamming}) must be in [1, blocks-1] "
-            f"(blocks={blocks})"
-        )
-    bits_per = sig_bits // blocks
+    bits_per = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << bits_per) - 1
 
     def block(i: int) -> Column:
@@ -437,7 +421,7 @@ def simhash_candidate_pairs(
             key = F.shiftleft(key, bits_per).bitwiseOR(block(i))
         return key
 
-    combos = simhash_table_combos(blocks, max_hamming)
+    combos = simhash_table_combos()
     # NULL signatures (null text) are dropped HERE, explicitly: the
     # self-join key is derived from the nullable simhash column, and
     # Catalyst's inferred isnotnull(table_key) would otherwise push the
@@ -480,12 +464,12 @@ def simhash_candidate_pairs(
         # identical on every collision row, min() is just the reducer
         .groupBy("doc_a", "doc_b")
         .agg(F.min("hamming").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
 def dup_spans(
-    docs: DataFrame, n: int = 8, text_col: str = "text"
+    docs: DataFrame, n: int = 8
 ) -> DataFrame:
     """Per-document duplicated-span coverage — the exact-substring-dedup
     measurement of Lee et al., "Deduplicating Training Data Makes
@@ -523,7 +507,7 @@ def dup_spans(
     """
     from pyspark.sql.window import Window
 
-    t_df = docs.select(F.col("doc_id"), tokens(F.col(text_col)).alias("_t"))
+    t_df = docs.select(F.col("doc_id"), tokens(F.col("text")).alias("_t"))
     # the gram-hash array staged as its own projection (no logical CSE;
     # the transform is the expensive multi-referenced producer)
     grams = F.when(
@@ -584,13 +568,11 @@ def dup_spans(
     )
 
 
-def chunk_dedup(
-    docs: DataFrame, k: int = CHUNK_TOKENS
-) -> DataFrame:
+def chunk_dedup(docs: DataFrame) -> DataFrame:
     """Passage-level exact dedup (the C4/CCNet line-dedup analogue for
     corpora without line structure): split each document's normalized
-    token stream into consecutive ``k``-token chunks, keep exactly one
-    corpus-wide copy of every distinct chunk — the winner is the
+    token stream into consecutive ``CHUNK_TOKENS``-token chunks, keep
+    exactly one corpus-wide copy of every distinct chunk — the winner is the
     lexicographically smallest (doc_id, chunk_idx) — and reassemble each
     document from its surviving chunks in order.
 
@@ -614,7 +596,7 @@ def chunk_dedup(
     DuckDB oracle: __spark_entry__ replays the same chunking/election
     with row_number over (chash) — `q: dd_chunk_dedup`.
     """
-    chunked, keyed = _chunk_stages(docs, k, "text")
+    chunked, keyed = _chunk_stages(docs, CHUNK_TOKENS)
     winners = keyed.groupBy("chash").agg(
         F.min(F.struct("doc_id", "chunk_idx")).alias("w")
     )
@@ -631,7 +613,7 @@ def chunk_dedup(
 
 
 def _chunk_stages(
-    docs: DataFrame, k: int, text_col: str
+    docs: DataFrame, k: int
 ) -> tuple[DataFrame, DataFrame]:
     """Shared chunking stages for chunk_dedup / boilerplate_scrub:
     ``chunked`` is (doc_id, chunks array<string>) — consecutive k-token
@@ -641,7 +623,7 @@ def _chunk_stages(
     if k < 1:
         raise ValueError(f"chunk size must be >= 1, got {k}")
     staged = docs.select(
-        "doc_id", tokens(F.col(text_col)).alias("toks")
+        "doc_id", tokens(F.col("text")).alias("toks")
     )
     # chunk array: tokens[i*k : (i+1)*k] joined by ' '; tokens() is
     # never empty ('' normalizes to ['']), so the sequence bound
@@ -720,7 +702,6 @@ def boilerplate_scrub(
     docs: DataFrame,
     k: int = CHUNK_TOKENS,
     max_df: int = 2,
-    text_col: str = "text",
 ) -> DataFrame:
     """Ubiquitous-chunk boilerplate removal (the RefinedWeb/CCNet
     cross-document line-dedup rule re-expressed for corpora without
@@ -753,7 +734,7 @@ def boilerplate_scrub(
     """
     if max_df < 1:
         raise ValueError(f"max_df must be >= 1, got {max_df}")
-    chunked, keyed = _chunk_stages(docs, k, text_col)
+    chunked, keyed = _chunk_stages(docs, k)
     ubiquitous = (
         keyed.groupBy("chash")
         .agg(F.countDistinct("doc_id").alias("df"))
@@ -771,7 +752,6 @@ def boilerplate_scrub(
 def containment_pairs(
     docs: DataFrame,
     threshold_bp: int = 6000,
-    max_fp_df: int | None = 20,
 ) -> DataFrame:
     """ASYMMETRIC containment detection over winnowing fingerprints —
     "document A is (mostly) contained in document B": quotes, truncated
@@ -792,12 +772,12 @@ def containment_pairs(
     Scale shape:
     - candidate generation is the equi-self-join on the fingerprint —
       (fp, doc_id) bigint pairs only, never text (the LSH-pairs shape).
-    - ``max_fp_df`` drops corpus-ubiquitous fingerprints before the
-      join (site boilerplate shared by thousands of pages would
+    - ``CONTAINMENT_MAX_FP_DF`` drops corpus-ubiquitous fingerprints
+      before the join (site boilerplate shared by thousands of pages would
       contribute df² candidate pairs; a fingerprint that common
       identifies no specific containment anyway — the stopword-cap
       argument from index.term_postings). The cap bounds the join
-      fan-out at max_fp_df² pairs per fingerprint.
+      fan-out at CONTAINMENT_MAX_FP_DF² pairs per fingerprint.
     - |fp(src)| comes from the fingerprint table itself (size of the
       array), broadcast-joined back onto the aggregated pair counts.
     """
@@ -811,14 +791,13 @@ def containment_pairs(
     pairs = fps.select(
         "doc_id", F.explode_outer("fingerprints").alias("fp")
     ).filter(F.col("fp").isNotNull())
-    if max_fp_df is not None:
-        rare = (
-            pairs.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_fp_df)
-            .select("fp")
-        )
-        pairs = pairs.join(rare, "fp")
+    rare = (
+        pairs.groupBy("fp")
+        .agg(F.count(F.lit(1)).alias("_df"))
+        .filter(F.col("_df") <= CONTAINMENT_MAX_FP_DF)
+        .select("fp")
+    )
+    pairs = pairs.join(rare, "fp")
     a = pairs.select(F.col("doc_id").alias("src_id"), "fp")
     b = pairs.select(F.col("doc_id").alias("dst_id"), "fp")
     shared = (
@@ -845,8 +824,6 @@ def containment_pairs(
 def cross_source_chunks(
     docs: DataFrame,
     k: int = CHUNK_TOKENS,
-    text_col: str = "text",
-    source_col: str = "source",
 ) -> DataFrame:
     """Cross-source shared-chunk matrix — the syndication/boilerplate
     PROVENANCE analytic of corpus curation: for every pair of sources,
@@ -875,10 +852,10 @@ def cross_source_chunks(
 
     DuckDB oracle: `q: dd_cross_source`.
     """
-    _, keyed = _chunk_stages(docs, k, text_col)
+    _, keyed = _chunk_stages(docs, k)
     labeled = (
         keyed.join(
-            docs.select("doc_id", F.col(source_col).alias("_src")),
+            docs.select("doc_id", F.col("source").alias("_src")),
             "doc_id",
         )
         .select("_src", "chash")
@@ -922,7 +899,7 @@ def template_report(
     """
     if min_df < 1:
         raise ValueError(f"min_df must be >= 1, got {min_df}")
-    chunked, keyed = _chunk_stages(docs, CHUNK_TOKENS, "text")
+    chunked, keyed = _chunk_stages(docs, CHUNK_TOKENS)
     stats = (
         keyed.groupBy("chash")
         .agg(

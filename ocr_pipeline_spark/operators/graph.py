@@ -72,9 +72,7 @@ def out_degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame, n_iters: int = PAGERANK_ITERS, damping_bp: int = DAMPING_BP
-) -> DataFrame:
+def pagerank(edges: DataFrame, n_iters: int = PAGERANK_ITERS) -> DataFrame:
     """Run ``n_iters`` exact PageRank iterations over an (src, dst)
     bigint edge list.
 
@@ -83,8 +81,6 @@ def pagerank(
     (uniform start = 10000). Deterministic, bit-identical across
     engines and partitionings.
     """
-    if not 0 <= damping_bp <= SCALE_BP:
-        raise ValueError(f"damping_bp must be in [0, {SCALE_BP}]")
     if n_iters < 1:
         raise ValueError(f"n_iters must be >= 1, got {n_iters}")
     nodes = (
@@ -97,7 +93,7 @@ def pagerank(
     deg_edges = edges.join(
         out_degrees(edges).withColumnRenamed("node", "src"), "src"
     ).localCheckpoint(eager=False)
-    base_bp = SCALE_BP - damping_bp
+    base_bp = SCALE_BP - DAMPING_BP
     ranks = nodes.select("node", F.lit(SCALE_BP).cast("long").alias("rank_bp"))
     for _ in range(n_iters):
         # one equi-join on src, one shuffle (groupBy dst), lineage
@@ -117,7 +113,7 @@ def pagerank(
                 (
                     F.lit(base_bp).cast("long")
                     + F.expr(
-                        f"({damping_bp} * coalesce(in_bp, 0))"
+                        f"({DAMPING_BP} * coalesce(in_bp, 0))"
                         f" div {SCALE_BP}"
                     )
                 ).alias("rank_bp"),

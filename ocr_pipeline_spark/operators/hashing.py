@@ -23,6 +23,9 @@ from pyspark.sql import functions as F
 
 __all__ = ["md5_hex", "md5_int", "hex_int", "md5_int_py"]
 
+# Hex chars of md5_int's key: 48 bits.
+INT_KEY_HEX = 12
+
 
 def md5_hex(col: Column, n_hex: int = 32) -> Column:
     """First ``n_hex`` md5 hex chars of ``col`` (the whole digest by
@@ -37,12 +40,11 @@ def hex_int(hex_col: Column, n_hex: int) -> Column:
     return F.conv(F.substring(hex_col, 1, n_hex), 16, 10).cast("long")
 
 
-def md5_int(col: Column, n_hex: int = 12) -> Column:
-    """Bigint of the first ``n_hex`` md5 hex chars of ``col`` (48 bits by
-    default)."""
-    return hex_int(md5_hex(col), n_hex)
+def md5_int(col: Column) -> Column:
+    """Bigint of the first ``INT_KEY_HEX`` md5 hex chars of ``col``."""
+    return hex_int(md5_hex(col), INT_KEY_HEX)
 
 
-def md5_int_py(s: str, n_hex: int = 12) -> int:
+def md5_int_py(s: str, n_hex: int = INT_KEY_HEX) -> int:
     """Python twin of ``md5_int``: same bytes, same bits."""
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:n_hex], 16)

@@ -20,9 +20,8 @@ every row at n_docs/n_shards ids WITHOUT losing information (the full
 list is the ordered concat of its shards), and shard rows of one term
 land on different reducers, so the skewed key is load-spread too — the
 same salting idea as partitioning.salt_hot_keys, but lossless because
-the shard id is derivable from doc_id. min_df / max_df_frac bound the
-vocabulary tail (hapaxes) and head (stopwords) when the index is for
-lookup rather than audit.
+the shard id is derivable from doc_id. min_df bounds the vocabulary
+tail (hapaxes) when the index is for lookup rather than audit.
 
 Scale shape:
 - one tokenize pass; the shuffle moves (term, doc_id) pairs — terms are
@@ -55,7 +54,6 @@ def term_postings(
     docs: DataFrame,
     n_shards: int = 1,
     min_df: int = 1,
-    max_df_frac: float | None = None,
 ) -> DataFrame:
     """Build the sharded postings table over whitespace tokens.
 
@@ -64,10 +62,8 @@ def term_postings(
     rows); all counts bigint, postings array<bigint> ascending.
 
     ``min_df`` drops terms seen in fewer than min_df documents
-    (hapax-legomena tail — typically >40% of a web vocabulary);
-    ``max_df_frac`` drops terms seen in more than that fraction of the
-    corpus (stopword head). Both filter on the global df, computed
-    before the bounds are applied.
+    (hapax-legomena tail — typically >40% of a web vocabulary); it
+    filters on the global df, computed before the bound is applied.
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
@@ -90,14 +86,6 @@ def term_postings(
     out = packed.withColumn("df", F.sum("df_shard").over(w)).filter(
         F.col("df") >= min_df
     )
-    if max_df_frac is not None:
-        n_docs = docs.select(
-            F.count_distinct("doc_id").alias("_n")
-        )
-        out = out.crossJoin(F.broadcast(n_docs)).filter(
-            F.col("df") <= F.col("_n") * max_df_frac
-        )
-        out = out.drop("_n")
     return out.select(
         "term", "shard", "df_shard", "tf_shard", "df", "postings"
     )

@@ -12,17 +12,15 @@ its store (pipeline/app.py result fetch); at corpus scale the same need
 layout, not an index server.
 
 Cross-engine contract: z-values are pure bigint arithmetic — quantize is
-subtract-min, scale by (2^bits − 1), integral ``div`` by the span;
+subtract-min, scale by (2^ZBITS − 1), integral ``div`` by the span;
 interleave is a shift/mask/or fold. Both the Spark Column builder and
 the DuckDB SQL builder consume ONE shared term enumeration
 (:func:`_zterms`), so the engines compute bit-identical z-values
 (driver query ``sp_zorder``; unit parity in tests/test_layout.py).
 
 Scale notes:
-- :func:`with_zvalue` with computed bounds costs ONE extra bounds scan
-  (min/max aggregate, broadcast back as a 1-row scalar join — no
-  collect); pass explicit ``bounds`` to make it single-scan when the
-  domain is known (dates, id ranges).
+- :func:`with_zvalue` costs ONE extra bounds scan (min/max aggregate,
+  broadcast back as a 1-row scalar join — no collect).
 - a clustered write range-partitions on the z-value, so file count is
   an explicit dial: at 100 TB pick ``n_files = bytes / target_file_size``
   (e.g. 1 GiB targets). Only the z-long and the row payload move in that
@@ -42,136 +40,104 @@ __all__ = [
     "ZBITS",
 ]
 
+# Bits per quantized key column.
 ZBITS = 16
+_MASK = (1 << ZBITS) - 1
 
 
-def _zterms(k: int, bits: int) -> list[tuple[int, int, int]]:
+def _zterms(k: int) -> list[tuple[int, int, int]]:
     """Shared (col_idx, bit_idx, out_shift) enumeration — the single
     source of truth for both engines' interleave expressions."""
-    return [(c, i, i * k + c) for c in range(k) for i in range(bits)]
+    return [(c, i, i * k + c) for c in range(k) for i in range(ZBITS)]
 
 
-def _check_width(k: int, bits: int) -> None:
-    # k*bits must fit the POSITIVE range of an int64: Spark's shiftleft
+def _check_width(k: int) -> None:
+    # k*ZBITS must fit the POSITIVE range of an int64: Spark's shiftleft
     # silently masks shift amounts mod 64 (Java semantics) while DuckDB
-    # raises, so an oversized config would give garbage on one engine
-    # and an error on the other; and bit 63 would make z negative,
-    # breaking Morton ordering. Fail loudly instead.
-    if k * bits > 63:
+    # raises, so too many columns would give garbage on one engine and
+    # an error on the other; and bit 63 would make z negative, breaking
+    # Morton ordering. Fail loudly instead.
+    if k * ZBITS > 63:
         raise ValueError(
-            f"{k} cols × {bits} bits = {k * bits} z-bits; max is 63"
+            f"{k} cols × {ZBITS} bits = {k * ZBITS} z-bits; max is 63"
         )
 
 
-def zvalue(qcols: list[Column], bits: int = ZBITS) -> Column:
+def zvalue(qcols: list[Column]) -> Column:
     """Morton interleave of ALREADY-quantized long columns (each in
-    [0, 2^bits)). Plain shift/mask/or fold — whole-stage codegen, no
+    [0, 2^ZBITS)). Plain shift/mask/or fold — whole-stage codegen, no
     Python. Callers must pass staged column REFERENCES (each input is
-    referenced ``bits`` times; Catalyst has no logical CSE, but a
+    referenced ``ZBITS`` times; Catalyst has no logical CSE, but a
     col-ref re-read is free)."""
-    _check_width(len(qcols), bits)
+    _check_width(len(qcols))
     z: Column | None = None
-    for c, i, shift in _zterms(len(qcols), bits):
+    for c, i, shift in _zterms(len(qcols)):
         term = F.shiftleft(F.shiftright(qcols[c], i).bitwiseAND(F.lit(1)), shift)
         z = term if z is None else z.bitwiseOR(term)
     assert z is not None
     return z
 
 
-def zvalue_sql(qnames: list[str], bits: int = ZBITS) -> str:
+def zvalue_sql(qnames: list[str]) -> str:
     """DuckDB expression computing the same z-value over bigint columns
     named ``qnames`` — generated from the same :func:`_zterms`
     enumeration as :func:`zvalue`."""
-    _check_width(len(qnames), bits)
+    _check_width(len(qnames))
     terms = [
         f"((({qnames[c]} >> {i}) & 1) << {shift})"
-        for c, i, shift in _zterms(len(qnames), bits)
+        for c, i, shift in _zterms(len(qnames))
     ]
     return " | ".join(terms)
 
 
-def quantize_case_sql(
-    c: str, lo: str, hi: str, bits: int = ZBITS, div: str = "div"
-) -> str:
-    """Shared quantize expression (SQL text) for the computed-bounds
-    path — multiply-first for spans where (span · mask) fits int64,
-    divide-first (overflow-free, ~2^bits buckets) beyond. One generator
-    for both engines: Spark consumes it with ``div='div'``, the DuckDB
-    oracle with ``div='//'`` — same literals, same branch predicate."""
-    mask = (1 << bits) - 1
-    mul_max = (1 << 62) // mask
+def quantize_case_sql(c: str, lo: str, hi: str, div: str = "div") -> str:
+    """Shared quantize expression (SQL text) — multiply-first for spans
+    where (span · mask) fits int64, divide-first (overflow-free,
+    ~2^ZBITS buckets) beyond. One generator for both engines: Spark
+    consumes it with ``div='div'``, the DuckDB oracle with ``div='//'``
+    — same literals, same branch predicate."""
+    mul_max = (1 << 62) // _MASK
     span = f"greatest({hi} - {lo}, 1)"
     return (
         f"CASE WHEN {span} <= {mul_max} "
-        f"THEN (cast({c} as bigint) - {lo}) * {mask} {div} {span} "
+        f"THEN (cast({c} as bigint) - {lo}) * {_MASK} {div} {span} "
         f"ELSE (cast({c} as bigint) - {lo}) {div} "
-        f"({span} {div} {mask + 1} + 1) END"
+        f"({span} {div} {_MASK + 1} + 1) END"
     )
 
 
-def with_zvalue(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = ZBITS,
-    bounds: list[tuple[int, int]] | None = None,
-    out: str = "zval",
-) -> DataFrame:
-    """Append a z-value column interleaving the quantized ``cols``
+def with_zvalue(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Append a ``zval`` column interleaving the quantized ``cols``
     (integer-valued column NAMES — stage derived keys, e.g. a
     day-number, with ``withColumn`` first so the DuckDB mirror can name
     the same columns).
 
-    quantized_c = ((c − lo_c) · (2^bits − 1)) div max(hi_c − lo_c, 1),
+    quantized_c = ((c − lo_c) · (2^ZBITS − 1)) div max(hi_c − lo_c, 1),
     all bigint (integral ``div``, never float — a 53-bit mantissa can
     flip a boundary value; same rule as splits.pack_sequences). Spans
     wider than 2^62 div mask would overflow that multiply (ANSI mode
     aborts the job), so wide domains — snowflake ids, epoch-micros —
     switch to the divide-first form (c − lo) div ceil-step, which is
-    overflow-free and still yields ~2^bits balanced buckets. Bounds
-    default to a min/max pre-scan broadcast back as a 1-row scalar
-    join; pass ``bounds=[(lo, hi), ...]`` to skip that scan — explicit
-    bounds additionally CLAMP to [0, mask], since a straggler outside
-    the declared domain would otherwise overflow into other columns'
-    interleave bits and silently wreck the per-file bounding boxes."""
-    _check_width(len(cols), bits)
-    reserved = {out} | {
+    overflow-free and still yields ~2^ZBITS balanced buckets. The
+    bounds come from a min/max pre-scan broadcast back as a 1-row
+    scalar join; true min/max bounds keep every quantized value in
+    [0, mask], so no clamp is needed."""
+    _check_width(len(cols))
+    reserved = {"zval"} | {
         n for i in range(len(cols)) for n in (f"_q{i}", f"_lo{i}", f"_hi{i}")
     }
     clash = sorted(reserved & set(df.columns))
     if clash:
         raise ValueError(f"input columns collide with internal names: {clash}")
-    mask = (1 << bits) - 1
-    mul_max = (1 << 62) // mask  # largest span where (span·mask) < 2^63
-    if bounds is not None:
-        if len(bounds) != len(cols):
-            raise ValueError("bounds must match cols 1:1")
-        j = df
-        qexprs = []
-        for i, (c, (lo, hi)) in enumerate(zip(cols, bounds)):
-            lo, hi = int(lo), int(hi)
-            span = max(hi - lo, 1)
-            if span <= mul_max:
-                q = f"(cast({c} as bigint) - {lo}) * {mask} div {span}"
-            else:
-                q = f"(cast({c} as bigint) - {lo}) div {span // (mask + 1) + 1}"
-            qexprs.append(
-                F.expr(f"least(greatest({q}, 0), {mask})").alias(f"_q{i}")
-            )
-    else:
-        aggs = []
-        for i, c in enumerate(cols):
-            aggs.append(F.min(c).cast("bigint").alias(f"_lo{i}"))
-            aggs.append(F.max(c).cast("bigint").alias(f"_hi{i}"))
-        j = df.crossJoin(F.broadcast(df.agg(*aggs)))
-        # true min/max bounds ⇒ already in [0, mask], no clamp needed
-        qexprs = [
-            F.expr(
-                quantize_case_sql(c, f"_lo{i}", f"_hi{i}", bits)
-            ).alias(f"_q{i}")
-            for i, c in enumerate(cols)
-        ]
+    aggs = []
+    for i, c in enumerate(cols):
+        aggs.append(F.min(c).cast("bigint").alias(f"_lo{i}"))
+        aggs.append(F.max(c).cast("bigint").alias(f"_hi{i}"))
+    j = df.crossJoin(F.broadcast(df.agg(*aggs)))
+    qexprs = [
+        F.expr(quantize_case_sql(c, f"_lo{i}", f"_hi{i}")).alias(f"_q{i}")
+        for i, c in enumerate(cols)
+    ]
     staged = j.select(*[df[c2] for c2 in df.columns], *qexprs)
     qrefs = [F.col(f"_q{i}") for i in range(len(cols))]
-    return staged.select(
-        *df.columns, zvalue(qrefs, bits).cast("long").alias(out)
-    )
+    return staged.select(*df.columns, zvalue(qrefs).cast("long").alias("zval"))

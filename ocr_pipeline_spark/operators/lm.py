@@ -157,12 +157,12 @@ def head_split(docs: DataFrame, n_splits: int = 3) -> DataFrame:
     )
 
 
-def _hash_arrays(docs: DataFrame, text_col: str) -> DataFrame:
+def _hash_arrays(docs: DataFrame) -> DataFrame:
     """(doc_id, _h token-hash array) — ONE tokenize+hash pass staged as
     a checkpoint boundary; both the counting aggregations and the
     per-doc scoring read the materialized arrays (no logical CSE)."""
     return docs.select(
-        "doc_id", F.transform(tokens(F.col(text_col)), token_hash).alias("_h")
+        "doc_id", F.transform(tokens(F.col("text")), token_hash).alias("_h")
     ).localCheckpoint(eager=False)
 
 
@@ -248,7 +248,7 @@ def bigram_surprisal(docs: DataFrame) -> DataFrame:
     joins/groupBys move 16-hex hashes and bigint counts. Output:
     (doc_id, n_toks, sum_bits, surprisal_bp), all bigint.
     """
-    staged = _hash_arrays(docs, "text")
+    staged = _hash_arrays(docs)
     u_bits = _unigram_bits(_array_counts(staged))
     # the per-position pair stream feeds BOTH the bigram counts and the
     # per-doc scoring join — materialize the explode once (measured 6.2
@@ -336,9 +336,7 @@ def head_split_approx(docs: DataFrame, n_splits: int = 3) -> DataFrame:
     )
 
 
-def dsir_weights(
-    docs: DataFrame, target_pred: Column, text_col: str = "text"
-) -> DataFrame:
+def dsir_weights(docs: DataFrame, target_pred: Column) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023,
     arXiv:2302.03169, "Data Selection for Language Models via
     Importance Resampling"): score every raw document by how much more
@@ -374,7 +372,7 @@ def dsir_weights(
     thash) and bigint counts only; token text never crosses an
     exchange; per-token bits are computed once per vocab entry.
     """
-    keyed = token_hashes(docs, "doc_id", text_col).localCheckpoint(eager=False)
+    keyed = token_hashes(docs, "doc_id", "text").localCheckpoint(eager=False)
     raw_counts = token_counts(keyed)
     tgt_ids = docs.filter(target_pred).select("doc_id")
     tgt_counts = (
@@ -411,7 +409,6 @@ def dsir_weights(
 def stupid_backoff(
     docs: DataFrame,
     lm_docs: DataFrame | None = None,
-    text_col: str = "text",
     penalty_bits: int = 1,
 ) -> DataFrame:
     """Stupid-backoff bigram scoring (Brants et al., EMNLP 2007, "Large
@@ -461,9 +458,9 @@ def stupid_backoff(
     """
     if penalty_bits < 0:
         raise ValueError(f"penalty_bits must be >= 0, got {penalty_bits}")
-    staged_sc = _hash_arrays(docs, text_col)
+    staged_sc = _hash_arrays(docs)
     staged_lm = (
-        staged_sc if lm_docs is None else _hash_arrays(lm_docs, text_col)
+        staged_sc if lm_docs is None else _hash_arrays(lm_docs)
     )
     counts = _array_counts(staged_lm)
     stats = _corpus_stats(counts)
@@ -522,7 +519,6 @@ def stupid_backoff(
 def vocab_coverage(
     docs: DataFrame,
     ks: tuple[int, ...] = (1, 10, 100, 1000, 10000),
-    text_col: str = "text",
 ) -> DataFrame:
     """Vocabulary coverage curve — the tokenizer-sizing diagnostic of
     subword-vocabulary design (Sennrich et al. 2016 motivate BPE by
@@ -552,7 +548,7 @@ def vocab_coverage(
     """
     if not ks or any(k < 1 for k in ks) or len(set(ks)) != len(ks):
         raise ValueError(f"ks must be distinct positive ints, got {ks}")
-    counts = token_counts(token_hashes(docs, "doc_id", text_col))
+    counts = token_counts(token_hashes(docs, "doc_id", "text"))
     stats = _corpus_stats(counts)
     top = counts.orderBy(F.desc("cnt"), "thash").limit(max(ks))
     w = (

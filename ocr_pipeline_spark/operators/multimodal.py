@@ -170,8 +170,9 @@ def decode_media_meta(media: DataFrame) -> DataFrame:
 FRAME_EVERY_K = 2
 
 
-def frame_sample(media: DataFrame, every_k: int = FRAME_EVERY_K) -> DataFrame:
-    """Video fan-out: one row per sampled frame (frames 0, k, 2k, …) —
+def frame_sample(media: DataFrame) -> DataFrame:
+    """Video fan-out: one row per sampled frame (frames 0, k, 2k, … for
+    k = FRAME_EVERY_K) —
     the A1 explode analogue for binary payloads; frame bytes are sliced
     views of the payload, sized by the header, never re-encoded."""
 
@@ -184,7 +185,7 @@ def frame_sample(media: DataFrame, every_k: int = FRAME_EVERY_K) -> DataFrame:
                     continue
                 w, h, f = meta["width"], meta["height"], meta["n_frames"]
                 body = bytes(payload)[19:]
-                for idx in range(0, f, every_k):
+                for idx in range(0, f, FRAME_EVERY_K):
                     rows.append(
                         (mid, idx, w, h, body[idx * w * h : (idx + 1) * w * h])
                     )

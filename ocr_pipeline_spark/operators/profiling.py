@@ -24,10 +24,10 @@ from pyspark.sql import functions as F
 __all__ = ["corpus_report", "profile_table"]
 
 
-def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def profile_table(df: DataFrame) -> DataFrame:
     """(col_name, n_rows, n_nulls, n_distinct, min_value, max_value)
-    for every requested column, computed in ONE aggregate pass."""
-    cols = list(cols) if cols is not None else list(df.columns)
+    for every column, computed in ONE aggregate pass."""
+    cols = list(df.columns)
     if not cols:
         raise ValueError("profile_table needs at least one column")
     if len(set(cols)) != len(cols):
@@ -72,7 +72,7 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     )
 
 
-def corpus_report(df: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_report(df: DataFrame) -> DataFrame:
     """The dataset-card numbers a corpus release ships — doc/token
     totals, quality rate, exact-duplicate count, lang/source breadth —
     as (metric, value) rows from ONE corpus scan (staged narrow
@@ -80,13 +80,13 @@ def corpus_report(df: DataFrame, text_col: str = "text") -> DataFrame:
     bigint-exact so the driver oracle checks them verbatim)."""
     from .textstats import annotate_quality, fingerprint
 
-    ann = annotate_quality(df, text_col=text_col)
+    ann = annotate_quality(df)
     staged = ann.select(
         "lang",
         "source",
         F.col("n_tokens").cast("long").alias("n_toks"),
         "is_quality",
-        fingerprint(F.col(text_col)).alias("fp"),
+        fingerprint(F.col("text")).alias("fp"),
     )
     one = staged.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -90,38 +90,6 @@ def _sim4(a: Column, b: Column) -> Column:
     return F.nanvl(F.round(cosine(a, b), 4), F.lit(0.0))
 
 
-# Widest vectors whose pair cosine cosine_near_dup unrolls. At 64 dims
-# the unrolled expression passes Spark's 64 KB generated-method limit,
-# whole-stage codegen is disabled, and the fold wins (local[4], sf0.01:
-# 2.9-6.2 s unrolled vs 0.9-2.4 s folded).
-_UNROLL_MAX_DIM = 16
-
-
-def _sim4_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """_sim4 with the folds UNROLLED to dim explicit element_at terms —
-    whole-stage-codegen arithmetic instead of interpreted higher-order
-    lambdas (CodegenFallback). Left-associated addition starting from
-    the first product reproduces the aggregate fold's doubles exactly
-    (0.0 + x1 == x1 in IEEE), so oracles are unaffected. Worth it when
-    the cosine runs per CANDIDATE PAIR on narrow vectors (near-dup
-    joins: measured ~4x at sf0.1 on 16-dim text embeddings); pointless
-    per-row."""
-
-    def dot(u: Column, v: Column) -> Column:
-        terms = [
-            F.element_at(u, i).cast("double")
-            * F.element_at(v, i).cast("double")
-            for i in range(1, dim + 1)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out
-
-    cos = dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-    return F.nanvl(F.round(cos, 4), F.lit(0.0))
-
-
 def brute_force_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -215,7 +183,6 @@ def ivf_topk(
     emb: DataFrame,
     query_ids: list[int],
     k: int = TOP_K,
-    n_cells: int = IVF_CELLS,
     n_probe: int = IVF_PROBE,
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
@@ -225,7 +192,7 @@ def ivf_topk(
     only those cells' rows.
 
     The scale shape at 10^12 rows: the cell id is a small int — write the
-    corpus partitioned by cell and a query touches n_probe/n_cells of the
+    corpus partitioned by cell and a query touches n_probe/IVF_CELLS of the
     data (partition pruning does the skipping). Recall is tunable via
     n_probe; the pytest suite measures it against brute force.
 
@@ -236,7 +203,7 @@ def ivf_topk(
     cents = (
         [list(map(float, c)) for c in centroids]
         if centroids is not None
-        else _centroids(n_cells)
+        else _centroids(IVF_CELLS)
     )
     if n_probe > len(cents):
         raise ValueError(
@@ -286,21 +253,17 @@ def ivf_topk(
 def cosine_near_dup(
     emb: DataFrame,
     threshold: float = 0.7,
-    n_planes: int = NEAR_DUP_PLANES,
-    dim: int = VEC_DIM,
-    seed: int = 0,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, LSH-bucketed.
 
     Self-join restricted to rows sharing a hyperplane sign-bucket: an
     equi-join on a small int key instead of the O(N²) cross product —
-    with 2^n_planes uniform buckets the pair count drops by that factor,
-    and the bucket key shuffles evenly by construction. Candidates are
-    verified with exact cosine ≥ threshold. Recall trades off via
-    n_planes exactly as in ann_topk (single-table here: near-dup pairs
-    are overwhelmingly same-bucket because near-parallel vectors agree on
-    most hyperplane signs). The pair cosine is unrolled for
-    ``dim <= 16`` and a fold above that (see ``_UNROLL_MAX_DIM``)."""
+    with 2^NEAR_DUP_PLANES uniform buckets the pair count drops by that
+    factor, and the bucket key shuffles evenly by construction.
+    Candidates are verified with exact cosine ≥ threshold. Recall trades
+    off via the plane count exactly as in ann_topk (single-table here:
+    near-dup pairs are overwhelmingly same-bucket because near-parallel
+    vectors agree on most hyperplane signs)."""
     # coalesce → non-nullable key: stops the join's inferred isnotnull
     # filter from being pushed below the projection with the whole
     # hyperplane expression inlined (evaluated twice per row otherwise)
@@ -308,7 +271,8 @@ def cosine_near_dup(
         F.col("vec_id"),
         F.col("embedding"),
         F.coalesce(
-            hyperplane_bucket(F.col("embedding"), n_planes, dim, seed), F.lit(-1)
+            hyperplane_bucket(F.col("embedding"), NEAR_DUP_PLANES, VEC_DIM),
+            F.lit(-1),
         ).alias("bucket"),
     )
     a, b = keyed.alias("a"), keyed.alias("b")
@@ -319,11 +283,7 @@ def cosine_near_dup(
     ).select(
         F.col("a.vec_id").alias("vec_a"),
         F.col("b.vec_id").alias("vec_b"),
-        (
-            _sim4_unrolled(F.col("a.embedding"), F.col("b.embedding"), dim)
-            if dim <= _UNROLL_MAX_DIM
-            else _sim4(F.col("a.embedding"), F.col("b.embedding"))
-        ).alias("cos_sim"),
+        _sim4(F.col("a.embedding"), F.col("b.embedding")).alias("cos_sim"),
     )
     return pairs.filter(F.col("cos_sim") >= threshold)
 
@@ -430,14 +390,12 @@ def semantic_dedup(
     k: int = KM_CELLS,
     iters: int = KM_ITERS,
     threshold: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): k-means-cluster the embeddings, then inside each
     cluster mark a row as a duplicate iff some SMALLER-ID row in the
     same cell has exact cosine >= threshold to it. Output:
-    (id_col, cell int, keep boolean), one row per input row.
+    (vec_id, cell int, keep boolean), one row per input row.
 
     Keep rule: the paper keeps the point farthest from the cluster
     centroid inside each epsilon-ball; this uses greedy smallest-id
@@ -460,7 +418,7 @@ def semantic_dedup(
     hyperplane_bucket as a sub-key, before corpus-scale runs. Training
     cost is kmeans_centroids' bounded k x dim driver collect per round.
     """
-    assign = kmeans_assign(emb, k, iters, id_col, vec_col)
+    assign = kmeans_assign(emb, k, iters)
     # coalesce -> non-nullable cell: keeps the self-join's inferred
     # isnotnull from pushing the assignment expression tree into a
     # per-side filter (the cosine_near_dup bucket precedent).
@@ -471,12 +429,12 @@ def semantic_dedup(
     # precedent; kmeans' quantized table is already checkpointed the
     # same way).
     keyed = (
-        emb.select(id_col, vec_col)
-        .join(assign.select(id_col, "cell"), id_col)
+        emb.select("vec_id", "embedding")
+        .join(assign, "vec_id")
         .select(
-            F.col(id_col).alias("_id"),
+            F.col("vec_id").alias("_id"),
             F.coalesce(F.col("cell"), F.lit(-1)).alias("cell"),
-            _dbl(F.col(vec_col)).alias("_v"),
+            _dbl(F.col("embedding")).alias("_v"),
         )
         .localCheckpoint(eager=True)
     )
@@ -494,7 +452,7 @@ def semantic_dedup(
     return (
         keyed.join(dropped, keyed["_id"] == dropped["_dropped_id"], "left")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("vec_id"),
             F.col("cell"),
             F.col("_dropped_id").isNull().alias("keep"),
         )

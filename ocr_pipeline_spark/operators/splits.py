@@ -33,19 +33,21 @@ __all__ = [
 ]
 
 _MOD = 10_000
+# Hash-key prefixes of split_label and reservoir_per_stratum.
+SPLIT_SEED = "split0"
+RESERVOIR_SEED = "resv0"
+# curriculum_order's shards per phase, and the epoch its key is drawn for.
+CURRICULUM_SHARDS = 4
+CURRICULUM_EPOCH = 0
 
 
-def split_label(
-    key: Column,
-    fractions: dict[str, float],
-    seed: str = "split0",
-) -> Column:
+def split_label(key: Column, fractions: dict[str, float]) -> Column:
     """Label column: deterministic assignment of ``key`` to a named split
     with the given fractions (must sum to ≤ 1; remainder → 'rest').
     Hash = the engine's shared portable 48-bit md5 recipe
-    (hashing.md5_int) over '{seed}_{key}', mod 10_000."""
+    (hashing.md5_int) over '{SPLIT_SEED}_{key}', mod 10_000."""
     bucket = (
-        md5_int(F.concat(F.lit(f"{seed}_"), key.cast("string"))) % _MOD
+        md5_int(F.concat(F.lit(f"{SPLIT_SEED}_"), key.cast("string"))) % _MOD
     )
     expr: Column | None = None
     acc = 0
@@ -59,13 +61,10 @@ def split_label(
 
 
 def hash_split(
-    df: DataFrame,
-    id_col: str,
-    fractions: dict[str, float],
-    seed: str = "split0",
+    df: DataFrame, id_col: str, fractions: dict[str, float]
 ) -> DataFrame:
     """df + 'split' column keyed on the row id."""
-    return df.withColumn("split", split_label(F.col(id_col), fractions, seed))
+    return df.withColumn("split", split_label(F.col(id_col), fractions))
 
 
 def stratified_sample(
@@ -108,7 +107,6 @@ def reservoir_per_stratum(
     id_col: str,
     strata_col: str,
     k: int,
-    seed: str = "resv0",
 ) -> DataFrame:
     """Deterministic fixed-SIZE per-stratum sample — exactly ``k`` rows
     per stratum (fewer if the stratum is smaller), the eval-set-carving
@@ -123,7 +121,9 @@ def reservoir_per_stratum(
     downstream (CLAUDE.md shuffle rule). The window sorts each stratum
     partition; strata counts are corpus-scale but per-stratum top-k
     never needs the full sort to ship anywhere."""
-    h = md5_int(F.concat(F.lit(f"{seed}_"), F.col(id_col).cast("string")))
+    h = md5_int(
+        F.concat(F.lit(f"{RESERVOIR_SEED}_"), F.col(id_col).cast("string"))
+    )
     base = df.select(
         F.col(id_col), F.col(strata_col), h.alias("_h")
     )
@@ -385,12 +385,7 @@ def temperature_shares(docs: DataFrame, temperature_x2: int = 4) -> DataFrame:
     )
 
 
-def curriculum_order(
-    docs: DataFrame,
-    n_phases: int = 3,
-    n_shards: int = 4,
-    epoch: int = 0,
-) -> DataFrame:
+def curriculum_order(docs: DataFrame) -> DataFrame:
     """Curriculum training order (Bengio et al. 2009, "Curriculum
     Learning"): stream 'easy' documents first — phases are surprisal
     bands from the corpus-trained LM (phase 1 = the fluent
@@ -401,36 +396,32 @@ def curriculum_order(
     order and a shuffled stream within each.
 
     phase  = head_split ntile band;
-    _k     = md5(doc_id ':curriculum' epoch)  (32-hex, per-epoch);
-    shard  = first-48-bits(_k) mod n_shards;
+    _k     = md5(doc_id ':curriculum' CURRICULUM_EPOCH)  (32-hex);
+    shard  = first-48-bits(_k) mod CURRICULUM_SHARDS;
     pos    = rank within (phase, shard) by (_k, doc_id).
 
     Output: (doc_id, phase, shard, pos). Writers emit one file per
-    (phase, shard) in pos order; n_shards bounds the within-group sort
-    exactly as in epoch_shuffle (pick it so a shard's (id, 32-hex)
+    (phase, shard) in pos order; the shard count bounds the within-group
+    sort exactly as in epoch_shuffle (pick it so a shard's (id, 32-hex)
     shorts fit a partition).
 
     DuckDB oracle: `q: sp_curriculum`.
     """
-    if n_phases < 1 or n_shards < 1:
-        raise ValueError(
-            f"n_phases/n_shards must be >= 1, got {n_phases}/{n_shards}"
-        )
     from .lm import head_split
 
-    split = head_split(docs, n_splits=n_phases)
+    split = head_split(docs)
     keyed = split.select(
         "doc_id",
         F.col("split").alias("phase"),
         md5_hex(
             F.concat(
                 F.col("doc_id").cast("string"),
-                F.lit(f":curriculum{epoch}"),
+                F.lit(f":curriculum{CURRICULUM_EPOCH}"),
             )
         ).alias("_k"),
     ).withColumn(
         "shard",
-        (hex_int(F.col("_k"), 12) % F.lit(n_shards)).cast("long"),
+        (hex_int(F.col("_k"), 12) % F.lit(CURRICULUM_SHARDS)).cast("long"),
     )
     w = Window.partitionBy("phase", "shard").orderBy("_k", "doc_id")
     return keyed.select(

@@ -36,10 +36,13 @@ __all__ = [
     "ewma_values",
 ]
 
-# Inactivity gap that ends a session, and event_funnel's window from
-# the first step.
+# Inactivity gap that ends a session, event_funnel's ordered steps and
+# its window from the first step, and ewma_values' smoothing factor in
+# basis points.
 SESSION_GAP = "30 minutes"
+FUNNEL_STEPS = ("signup", "view", "purchase")
 FUNNEL_WINDOW_S = 7 * 86400
+EWMA_ALPHA_BP = 2000
 
 
 def asof_join(
@@ -122,12 +125,14 @@ def interval_join_count(
     ).agg(F.count(F.col(f"r.{ts_col}")).alias("n_in_window"))
 
 
-def sessionize(events: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessions per key (built-in session_window — works on a
-    stream with a watermark too). Session end = last event + gap."""
+    stream with a watermark too). Session end = last event +
+    SESSION_GAP."""
     return (
         events.groupBy(
-            F.session_window(F.col("ts"), gap).alias("sw"), F.col("user_id")
+            F.session_window(F.col("ts"), SESSION_GAP).alias("sw"),
+            F.col("user_id"),
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -139,33 +144,29 @@ def sessionize(events: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
     )
 
 
-def event_funnel(
-    events: DataFrame,
-    steps: tuple[str, ...] = ("signup", "view", "purchase"),
-) -> DataFrame:
+def event_funnel(events: DataFrame) -> DataFrame:
     """Ordered-funnel analysis (the windowFunnel of event-analytics
     engines — ClickHouse windowFunnel, Amplitude funnels): per key, the
-    number of ``steps`` completed IN ORDER within ``FUNNEL_WINDOW_S`` of
-    the first step, using greedy earliest-completion semantics — step k
-    is satisfied by the EARLIEST step-k event strictly after the chosen
-    step-(k-1) event and within the window anchored at step 1.
+    number of ``FUNNEL_STEPS`` completed IN ORDER within
+    ``FUNNEL_WINDOW_S`` of the first step, using greedy
+    earliest-completion semantics — step k is satisfied by the EARLIEST
+    step-k event strictly after the chosen step-(k-1) event and within
+    the window anchored at step 1.
 
     Output: (key, funnel_level, t1..tN epoch-second bigints, NULL past
     the reached level) — one row per key that performed step 1;
-    funnel_level in 1..len(steps).
+    funnel_level in 1..len(FUNNEL_STEPS).
 
     Scale shape: one filtered groupBy per step (map-side min over
     (key, epoch) shorts) chained by equi-joins on the key — no window
     over the raw event stream, no per-key event materialization;
-    len(steps) shuffles of key-sized frames. Greedy-earliest is the
+    len(FUNNEL_STEPS) shuffles of key-sized frames. Greedy-earliest is the
     standard semantics because it is prefix-monotone: a user's level
     never depends on events after their window.
 
     DuckDB oracle: `q: t_funnel` (same CTE chain, same strict
     inequalities, epoch-second integers on both sides).
     """
-    if len(steps) < 2:
-        raise ValueError(f"need >= 2 steps, got {steps!r}")
     # NTZ -> TIMESTAMP -> long = UTC epoch seconds (session timezone
     # is pinned to UTC in session.get_spark, so this matches DuckDB's
     # epoch() exactly; Spark 4 refuses the direct NTZ->BIGINT cast)
@@ -176,11 +177,11 @@ def event_funnel(
         ep.alias("e"),
     )
     cur = (
-        base.filter(F.col("et") == steps[0])
+        base.filter(F.col("et") == FUNNEL_STEPS[0])
         .groupBy("k")
         .agg(F.min("e").alias("t1"))
     )
-    for i, step in enumerate(steps[1:], start=2):
+    for i, step in enumerate(FUNNEL_STEPS[1:], start=2):
         nxt = base.filter(F.col("et") == step).select(
             "k", F.col("e").alias("_e")
         )
@@ -209,12 +210,12 @@ def event_funnel(
     # funnel_level counts the non-null prefix (gaps cannot be skipped
     # by construction above)
     lvl = F.lit(1)
-    for i in range(2, len(steps) + 1):
+    for i in range(2, len(FUNNEL_STEPS) + 1):
         lvl = lvl + F.col(f"t{i}").isNotNull().cast("long")
     return cur.select(
         F.col("k").alias("user_id"),
         lvl.cast("long").alias("funnel_level"),
-        *[F.col(f"t{i}").cast("long").alias(f"t{i}") for i in range(1, len(steps) + 1)],
+        *[F.col(f"t{i}").cast("long").alias(f"t{i}") for i in range(1, len(FUNNEL_STEPS) + 1)],
     )
 
 
@@ -288,10 +289,7 @@ def session_values(events: DataFrame) -> DataFrame:
     )
 
 
-def ewma_values(
-    events: DataFrame,
-    alpha_bp: int = 2000,
-) -> DataFrame:
+def ewma_values(events: DataFrame) -> DataFrame:
     """Per-key exponentially-weighted moving average of a value stream
     in event-time order — the streaming-metrics smoother (alerting
     baselines, per-user spend trend) expressed as ONE deterministic
@@ -299,7 +297,7 @@ def ewma_values(
 
         s_1 = x_1;   s_i = s_{i-1} + alpha * (x_i - s_{i-1})
 
-    with alpha = alpha_bp / 10000. The fold runs over the key's
+    with alpha = EWMA_ALPHA_BP / 10000. The fold runs over the key's
     time-ordered value array (sort_array over collect_list of
     (ts, id, value) structs, ts at full precision — the
     deterministic-order recipe; ties break by the id column), and the
@@ -317,9 +315,7 @@ def ewma_values(
     keys, window the stream first and chain EWMAs across windows
     driver-side).
     """
-    if not 0 < alpha_bp <= 10000:
-        raise ValueError(f"alpha_bp must be in (0, 10000], got {alpha_bp}")
-    alpha = alpha_bp / 10000.0
+    alpha = EWMA_ALPHA_BP / 10000.0
     arr = (
         events.select(
             F.col("user_id").alias("k"),

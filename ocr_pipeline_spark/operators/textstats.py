@@ -283,14 +283,14 @@ def lang_id_multi(docs: DataFrame) -> DataFrame:
     )
 
 
-def annotate_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def annotate_quality(docs: DataFrame) -> DataFrame:
     """All original columns + (n_tokens, is_quality, lang_guess) computed
     as NARROW columns (staged projections, zero shuffle) — the curation
     path's annotator. Same predicates as quality_flags/lang_id; those
     stay as standalone per-doc stat tables, this one rides along with
     the full row so the heavy text column never crosses an exchange."""
     g = _gopher_gate()
-    return _staged_tokens(docs, text_col, keep=docs.columns).select(
+    return _staged_tokens(docs, "text", keep=docs.columns).select(
         *docs.columns,
         *[g[c].alias(c) for c in ("n_tokens", "is_quality", "lang_guess")],
     )
@@ -298,6 +298,8 @@ def annotate_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 # Word-n-gram length repetition_stats counts.
 REP_GRAM = 2
+# Terms tfidf_top_terms keeps per document.
+TFIDF_TOP_K = 5
 
 
 def repetition_stats(docs: DataFrame) -> DataFrame:
@@ -343,10 +345,10 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
-    """Per-doc top-k terms by tf·idf — the cross-doc pooling operator
-    (corpus statistics feeding a per-doc score; keyword metadata for a
-    training corpus). Output: (doc_id, rank, term, tf, df, score).
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Per-doc top-``TFIDF_TOP_K`` terms by tf·idf — the cross-doc
+    pooling operator (corpus statistics feeding a per-doc score; keyword
+    metadata for a training corpus). Output: (doc_id, rank, term, tf, df, score).
 
     Relational shape: explode tokens → tf by (doc_id, term) [shuffle on
     short token keys, partial agg]; tf is lazily localCheckpoint-ed so
@@ -391,7 +393,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TFIDF_TOP_K)
         .select("doc_id", "rank", "term", "tf", "df", "score")
     )
 

@@ -10,7 +10,6 @@ from .stream_extract import (
     stream_dedup,
     stream_window_counts,
 )
-from .bucket_state import bucket_batch
 
 __all__ = [
     "read_pages_stream",
@@ -19,5 +18,4 @@ __all__ = [
     "stream_curate",
     "stream_dedup",
     "stream_window_counts",
-    "bucket_batch",
 ]

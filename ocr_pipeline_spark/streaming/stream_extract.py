@@ -4,6 +4,9 @@ Mapping from the reference's hand-built micro-batch loop (SURVEY.md §2.8):
 
 - B1/B5 size trigger  → ``maxFilesPerTrigger`` on the file source (a
   micro-batch fires when enough input accumulates);
+- B2 fixed-size bucket → the Arrow record batch the kernel receives
+  (``session.ARROW_MAX_RECORDS_PER_BATCH`` rows, the remainder riding
+  in the partition's last batch);
 - B6 time trigger     → ``trigger(processingTime=...)``;
 - B7 hybrid           → both at once (Spark's trigger loop IS hybrid:
   every interval it takes *up to* the size cap);
@@ -43,6 +46,9 @@ __all__ = [
 
 # The documents table with an event-time column, as the streams read it.
 DOCS_SCHEMA = "doc_id long, warc_ts timestamp, text string, lang string"
+# stream_window_counts' event-time window and its late-data bound.
+STREAM_WINDOW = "1 hour"
+STREAM_WATERMARK = "2 hours"
 
 
 def stream_dedup(
@@ -55,26 +61,9 @@ def stream_dedup(
     older than the watermark are evicted, so state is O(keys per window),
     not O(all keys ever)). The Common-Crawl shape: recrawls of a url
     within the window are duplicates; across windows they are new
-    versions. Works on a batch DataFrame too — there "first" is the
-    deterministic earliest-``warc_ts`` row (content-hash tie-break), never
-    partition-order-dependent."""
-    if df.isStreaming:
-        return df.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-            list(key_cols)
-        )
-    # batch path: deterministic "first" = earliest event time, ties broken
-    # by a content hash of the remaining columns (dropDuplicates alone
-    # keeps an arbitrary partition-order-dependent row)
-    from pyspark.sql import Window
-
-    other = [c for c in df.columns if c not in key_cols]
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("warc_ts").asc(), F.xxhash64(*other).asc()
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    versions."""
+    return df.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
+        list(key_cols)
     )
 
 
@@ -134,19 +123,19 @@ def stream_window_counts(
     events: DataFrame,
     ts_col: str = "warc_ts",
     key_col: str = "lang",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Event-time windowed counts with a watermark (late-data bound).
 
     Works identically on a streaming or batch DataFrame (watermark is a
     no-op in batch) — the per-stage docs/sec metrics rollup of the north
-    rule, windowed by ingestion time. Late rows beyond ``watermark`` are
-    dropped instead of blocking forever (the reference's failure mode,
-    pipeline/app.py:253)."""
+    rule, windowed by ingestion time. Late rows beyond
+    ``STREAM_WATERMARK`` are dropped instead of blocking forever (the
+    reference's failure mode, pipeline/app.py:253)."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col(key_col))
+        events.withWatermark(ts_col, STREAM_WATERMARK)
+        .groupBy(
+            F.window(F.col(ts_col), STREAM_WINDOW).alias("w"), F.col(key_col)
+        )
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -167,13 +156,7 @@ def stream_curate(
     then watermark-bounded exact dedup on the content fingerprint
     (state = distinct fingerprints per window, evicted past the
     watermark; a recrawl of identical content inside the window is a
-    duplicate, across windows a new version).
-
-    Works identically on a batch DataFrame (the stream_dedup batch path
-    keeps the deterministic earliest row per fingerprint), so one
-    definition serves the backfill job and the live stream — the same
-    batch/streaming duality as stream_window_counts.
-    """
+    duplicate, across windows a new version)."""
     from ..operators.textstats import annotate_quality, fingerprint
 
     kept = annotate_quality(docs).filter(F.col("is_quality"))

@@ -28,6 +28,7 @@ def test_parser_subcommands():
         ["dsir", "--input", "a", "--out", "b",
          "--target-where", "lang = 'en'"],
         ["dupspans", "--input", "a", "--out", "b", "--n", "4"],
+        ["search", "--input", "a", "--k", "3", "spark", "merge"],
         ["stream-curate", "--input", "a", "--out", "b",
          "--checkpoint", "c"],
     ):
@@ -184,3 +185,17 @@ def test_dsir_cli(spark, tmp_path, capfd):
     assert set(got.columns) == {"doc_id", "n_toks", "logw_bits", "logw_bp"}
     assert got.count() > 0
     assert "importance weights" in capfd.readouterr().out
+
+
+def test_search_cli(spark, capfd):
+    from ocr_pipeline_spark.operators.index import bm25_search
+
+    src = "/root/testdata/sf0.001/documents.parquet"
+    terms = ["spark", "merge"]
+    main(["search", "--input", src, "--k", "3", *terms])
+    lines = capfd.readouterr().out.strip().splitlines()
+    want = bm25_search(spark.read.parquet(src), tuple(terms), k=3).collect()
+    assert len(lines) == len(want) == 3
+    for line, r in zip(lines, want):
+        assert line.split()[:4] == ["doc", str(r["doc_id"]), "score", str(r["score"])]
+        assert line.endswith(f"({r['n_terms_hit']}/2 terms)")

@@ -38,9 +38,8 @@ def test_dup_clusters_partition_independent(spark):
 
 
 def test_dup_clusters_cap_is_not_silent(spark, caplog):
-    """An adversarial long chain with max_iter too small must SIGNAL —
-    warn by default, raise on request — never return possibly-split
-    labels silently."""
+    """An adversarial long chain with max_iter too small must SIGNAL a
+    warning — never return possibly-split labels silently."""
     import logging
 
     pairs = spark.createDataFrame(
@@ -51,9 +50,6 @@ def test_dup_clusters_cap_is_not_silent(spark, caplog):
     ):
         dup_clusters(pairs, max_iter=1).collect()
     assert any("did not converge" in r.message for r in caplog.records)
-
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dup_clusters(pairs, max_iter=1, on_nonconverged="raise")
 
     # converged runs stay quiet
     caplog.clear()
@@ -80,14 +76,14 @@ def test_ivf_recall_vs_brute_force(spark, emb):
     }
     got = {
         (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(emb, qids, k=5, n_cells=16, n_probe=8).collect()
+        for r in ivf_topk(emb, qids, k=5, n_probe=8).collect()
     }
     recall = len(truth & got) / len(truth)
     assert recall >= 0.5, f"IVF recall too low: {recall}"
     # more probes → recall can only improve (monotonicity)
     full = {
         (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(emb, qids, k=5, n_cells=16, n_probe=16).collect()
+        for r in ivf_topk(emb, qids, k=5, n_probe=16).collect()
     }
     assert full == truth  # probing all cells == exact
 

@@ -111,19 +111,9 @@ def test_simhash_pairs_exact_recall_at_threshold(spark):
     assert ham(sigs[4][1], sigs[0][1]) == 4
 
 
-def test_simhash_pairs_rejects_invalid_block_config(spark):
-    """Non-divisible sig_bits/blocks would silently drop the top bits
-    and void the recall guarantee — must raise, not truncate."""
-    sigs = spark.createDataFrame([(1, 7)], "doc_id long, simhash long")
-    with pytest.raises(ValueError, match="divisible"):
-        simhash_candidate_pairs(sigs, blocks=7, sig_bits=60)
-    with pytest.raises(ValueError, match="max_hamming"):
-        simhash_candidate_pairs(sigs, blocks=6, max_hamming=6)
-
-
 def test_simhash_table_combos_cover_threshold():
     # C(6, 3) tables of 3 blocks each — the Manku WWW'07 configuration
-    combos = simhash_table_combos(6, 3)
+    combos = simhash_table_combos()
     assert len(combos) == 20
     assert all(len(c) == 3 for c in combos)
 
@@ -288,12 +278,6 @@ def test_chunk_dedup_partition_independent(spark):
     assert a == b
 
 
-def test_chunk_dedup_rejects_bad_k(spark):
-    docs = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        chunk_dedup(docs, k=0)
-
-
 def test_chunk_dedup_preserves_content_invariants(spark):
     """Corpus-level properties on real data: (a) the number of kept
     chunks equals the number of DISTINCT chunks corpus-wide; (b) every
@@ -366,20 +350,28 @@ class TestContainment:
         assert (2, 0) not in got and (0, 2) not in got
 
     def test_max_fp_df_drops_ubiquitous_fingerprints(self, spark):
-        from ocr_pipeline_spark.operators.dedup import containment_pairs
+        from ocr_pipeline_spark.operators.dedup import (
+            CONTAINMENT_MAX_FP_DF,
+            containment_pairs,
+        )
 
         shared = "common boilerplate footer text repeated on every page"
-        docs = spark.createDataFrame(
-            [(i, f"{shared} unique{i} tail{i}") for i in range(10)],
-            "doc_id long, text string",
-        )
-        # cap below the corpus df of the boilerplate fingerprints:
-        # no candidate pairs survive
-        none = containment_pairs(docs, threshold_bp=0, max_fp_df=5)
-        assert none.count() == 0
-        # uncapped, the boilerplate links every pair
-        some = containment_pairs(docs, threshold_bp=0, max_fp_df=None)
-        assert some.count() > 0
+
+        def pairs(n_docs):
+            # identical pages: every fingerprint has df == n_docs (a
+            # unique tail would let winnowing pick boundary fingerprints
+            # in only some of the pages)
+            docs = spark.createDataFrame(
+                [(i, shared) for i in range(n_docs)], "doc_id long, text string"
+            )
+            return containment_pairs(docs, threshold_bp=0).count()
+
+        # one page more than the cap: the boilerplate fingerprints are
+        # dropped and no candidate pairs survive
+        assert pairs(CONTAINMENT_MAX_FP_DF + 1) == 0
+        # at the cap, the boilerplate links every ordered pair
+        n = CONTAINMENT_MAX_FP_DF
+        assert pairs(n) == n * (n - 1)
 
     def test_candidate_join_moves_no_text(self, spark):
         from ocr_pipeline_spark.operators.dedup import containment_pairs

@@ -67,8 +67,6 @@ def test_single_iteration_formula(spark, edges):
 
 
 def test_param_guards(spark, edges):
-    with pytest.raises(ValueError, match="damping_bp"):
-        pagerank(edges, damping_bp=10001)
     with pytest.raises(ValueError, match="n_iters"):
         pagerank(edges, n_iters=0)
 

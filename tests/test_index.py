@@ -70,11 +70,6 @@ def test_sharding_is_lossless(spark, docs):
 def test_min_df_and_max_df_bounds(spark, docs):
     got = _rows(term_postings(docs, n_shards=1, min_df=2))
     assert set(t for t, _ in got) == {"the", "cat", "sat", "dog"}
-    # max_df_frac drops the stopword head: "the" is in 3 of 6 docs
-    got = _rows(
-        term_postings(docs, n_shards=1, min_df=2, max_df_frac=0.4)
-    )
-    assert set(t for t, _ in got) == {"cat", "sat", "dog"}
 
 
 def test_n_shards_guard(spark, docs):

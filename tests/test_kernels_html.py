@@ -99,14 +99,19 @@ def test_materialize_deterministic_separator():
 
 
 def test_payload_cap_truncates_deterministically():
-    from ocr_pipeline_spark.kernels.extract import extract_document
+    from ocr_pipeline_spark.kernels.extract import (
+        DEFAULT_MAX_PAYLOAD_BYTES as CAP,
+        extract_document,
+    )
 
-    big = (b"<p>" + b"word " * 2000 + b"</p>") * 50
-    a = extract_document(big, max_payload_bytes=10_000)
-    b = extract_document(big[:10_000], max_payload_bytes=None)
+    para = b"<p>" + b"word " * 2000 + b"</p>"
+    big = para * (CAP // len(para) + 2)
+    assert len(big) > CAP
+    a = extract_document(big)
+    b = extract_document(big[:CAP])
     assert a.text == b.text and a.text_sha256 == b.text_sha256
-    full = extract_document(big, max_payload_bytes=None)
-    assert len(full.text) > len(a.text)
+    # the cut dropped whole paragraphs of the payload
+    assert a.text.count("word") < big.count(b"word") - 2000
 
 
 def test_unquoted_attr_trailing_slash_not_selfclosing():

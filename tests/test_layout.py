@@ -1,5 +1,5 @@
-"""Z-order layout: cross-engine z-value parity, bounds handling and
-plan shape."""
+"""Z-order layout: cross-engine z-value parity, wide spans and plan
+shape."""
 
 from __future__ import annotations
 
@@ -38,14 +38,15 @@ def grid_df(spark):
 def test_zvalue_matches_python_reference(grid_df):
     got = {
         r["id"]: r["zval"]
-        for r in with_zvalue(grid_df, ["a", "b"], bits=8).collect()
+        for r in with_zvalue(grid_df, ["a", "b"]).collect()
     }
     rows = grid_df.collect()
     alo, ahi = min(r.a for r in rows), max(r.a for r in rows)
     blo, bhi = min(r.b for r in rows), max(r.b for r in rows)
     for r in rows:
         want = _morton_ref(
-            [_quant_ref(r.a, alo, ahi, 8), _quant_ref(r.b, blo, bhi, 8)], 8
+            [_quant_ref(r.a, alo, ahi, ZBITS), _quant_ref(r.b, blo, bhi, ZBITS)],
+            ZBITS,
         )
         assert got[r.id] == want
 
@@ -57,7 +58,7 @@ def test_zvalue_matches_duckdb_sql(grid_df):
     pdf = grid_df.toPandas()
     con = duckdb.connect()
     con.register("t", pdf)
-    zsql = zvalue_sql(["_q0", "_q1"], ZBITS)
+    zsql = zvalue_sql(["_q0", "_q1"])
     mask = (1 << ZBITS) - 1
     oracle = {
         int(i): int(z)
@@ -81,66 +82,37 @@ def test_zvalue_matches_duckdb_sql(grid_df):
     assert got == oracle
 
 
-def test_explicit_bounds_single_scan(grid_df):
-    """bounds=... must not add the min/max pre-scan (no join at all)."""
-    df = with_zvalue(grid_df, ["a", "b"], bounds=[(0, 100), (0, 210)])
+def test_bounds_are_one_scalar_join(grid_df):
+    """The min/max pre-scan joins back as exactly one scalar join."""
+    df = with_zvalue(grid_df, ["a", "b"])
     plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" not in plan
-    # and the computed-bounds path is exactly one broadcast scalar join
-    df2 = with_zvalue(grid_df, ["a", "b"])
-    plan2 = df2._jdf.queryExecution().optimizedPlan().toString()
-    assert plan2.count("Join") == 1
+    assert plan.count("Join") == 1
 
 
 def test_zvalue_sql_term_count():
-    sql = zvalue_sql(["x", "y", "w"], 4)
-    assert sql.count("|") == 3 * 4 - 1
-
-
-def test_bounds_arity_checked(grid_df):
-    with pytest.raises(ValueError):
-        with_zvalue(grid_df, ["a", "b"], bounds=[(0, 1)])
+    sql = zvalue_sql(["x", "y", "w"])
+    assert sql.count("|") == 3 * ZBITS - 1
 
 
 def test_width_guard(grid_df):
     """Spark shiftleft masks shifts mod 64 (silently wrong) where
     DuckDB raises — configs past 63 z-bits must fail loudly instead."""
     with pytest.raises(ValueError, match="63"):
-        with_zvalue(grid_df, ["a", "b"], bits=32)
+        with_zvalue(grid_df, ["a", "b", "a", "b"])
     with pytest.raises(ValueError, match="63"):
-        zvalue_sql(["q0", "q1", "q2", "q3", "q4"], 16)
-
-
-def test_explicit_bounds_clamp(spark):
-    """Stragglers outside declared bounds must clamp to the edge cells,
-    never overflow into other columns' interleave bits."""
-    df = spark.createDataFrame(
-        [(1, -50, 5), (2, 500, 5), (3, 100, 5)], "id long, a long, b long"
-    )
-    got = {
-        r["id"]: r["zval"]
-        for r in with_zvalue(df, ["a", "b"], bits=8, bounds=[(0, 255), (0, 255)]).collect()
-    }
-    lo = _morton_ref([0, 5], 8)
-    hi = _morton_ref([255, 5], 8)
-    assert got[1] == lo and got[2] == hi
-    assert got[1] < got[3] < got[2]
+        zvalue_sql(["q0", "q1", "q2", "q3"])
 
 
 def test_wide_span_divide_first(spark):
-    """Spans past 2^46 switch to the overflow-free divide-first form on
-    BOTH bounds paths (ANSI mode would abort the multiply)."""
+    """Spans past 2^46 switch to the overflow-free divide-first form
+    (ANSI mode would abort the multiply)."""
     lo, hi = 0, 1 << 55
     vals = [0, 1 << 40, 1 << 54, hi]
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "id long, a long")
     step = ((hi - lo) // (1 << ZBITS)) + 1
     want = {i: _morton_ref([(v - lo) // step], ZBITS) for i, v in enumerate(vals)}
-    for kwargs in ({"bounds": [(lo, hi)]}, {}):
-        got = {
-            r["id"]: r["zval"]
-            for r in with_zvalue(df, ["a"], **kwargs).collect()
-        }
-        assert got == want, kwargs
+    got = {r["id"]: r["zval"] for r in with_zvalue(df, ["a"]).collect()}
+    assert got == want
 
 
 def test_internal_name_collision_checked(spark):

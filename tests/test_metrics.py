@@ -96,7 +96,7 @@ def test_profile_table_stats(spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        profile_table(df, cols=[])
+        profile_table(df.select())
 
 
 def test_profile_table_rejects_unquotable_names(spark):
@@ -109,7 +109,7 @@ def test_profile_table_rejects_unquotable_names(spark):
     with _pytest.raises(ValueError, match="not profilable"):
         profile_table(bad)
     with _pytest.raises(ValueError, match="duplicate"):
-        profile_table(df, cols=["id", "id"])
+        profile_table(df.select("id", "id"))
 
 
 def test_corpus_report_values(spark):

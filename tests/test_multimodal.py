@@ -59,7 +59,7 @@ def test_frame_sample_counts(spark, media_df):
     expected = sum(
         (r["n_frames"] + 1) // 2 for r in meta.collect()
     )  # frames 0,2,4,..
-    frames = frame_sample(media_df, every_k=2)
+    frames = frame_sample(media_df)  # FRAME_EVERY_K == 2
     assert frames.count() == expected
     r = frames.first()
     assert len(r["frame"]) == r["width"] * r["height"]

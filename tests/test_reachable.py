@@ -22,13 +22,6 @@ from collections import defaultdict
 from entry_files import CLI, PACKAGE, ROOT, entry_files
 
 KEEP = {
-    ("ocr_pipeline_spark.streaming.bucket_state", "bucket_batch"):
-        "the only reproduction of the reference's STDBucket; whether it "
-        "stays is an open decision in ROADMAP.md",
-    ("ocr_pipeline_spark.streaming.bucket_state", "BUCKET_OUTPUT_SCHEMA"):
-        "bucket_batch's output schema",
-    ("ocr_pipeline_spark.streaming.bucket_state", "BUCKET_STATE_SCHEMA"):
-        "bucket_batch's state schema",
     ("ocr_pipeline_spark.sources.warc", "write_warc_bytes"):
         "the WARC fixture writer the ingestion tests build their input with",
     ("ocr_pipeline_spark", "__version__"): "package metadata",

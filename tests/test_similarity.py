@@ -241,8 +241,11 @@ def test_hashed_embedding_is_scan_local(spark):
 def test_text_near_dup_end_to_end(spark):
     """The documents->hashed-embedding->LSH-cosine chain must flag a
     lightly-edited copy and not an unrelated doc, and the plan must
-    stay the bucketed equi-join (never all-pairs)."""
+    stay the bucketed equi-join (never all-pairs). The hashed vectors
+    are zero-padded to the VEC_DIM width the join buckets on."""
     from ocr_pipeline_spark.operators.similarity import (
+        EMBED_DIM,
+        VEC_DIM,
         cosine_near_dup,
         hashed_embedding,
     )
@@ -256,9 +259,10 @@ def test_text_near_dup_end_to_end(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     vecs = hashed_embedding(docs).selectExpr(
         "doc_id AS vec_id",
-        "transform(split(embed, ','), x -> cast(x as double)) AS embedding",
+        "concat(transform(split(embed, ','), x -> cast(x as double)), "
+        f"array_repeat(0D, {VEC_DIM - EMBED_DIM})) AS embedding",
     )
-    out = cosine_near_dup(vecs, threshold=0.8, n_planes=4, dim=16, seed=0)
+    out = cosine_near_dup(vecs, threshold=0.8)
     pairs = {(r["vec_a"], r["vec_b"]) for r in out.collect()}
     assert (1, 2) in pairs
     assert not any(3 in p for p in pairs)

@@ -3,8 +3,6 @@
 - availableNow extraction stream ≡ batch extraction (same kernel, same
   bytes) — the drain-trigger path B3;
 - maxFilesPerTrigger bounds micro-batch size — the size-trigger path B5;
-- bucket_batch stateful op reproduces STDBucket exact-slice +
-  remainder-carry semantics (B2) with checkpointed state;
 - windowed counts with watermark run identically in batch mode (B8).
 """
 
@@ -18,7 +16,6 @@ from pyspark.sql import functions as F
 from ocr_pipeline_spark.operators.extraction import extract_pages
 from ocr_pipeline_spark.sources.synth_pages import PAGES_SCHEMA, synth_pages
 from ocr_pipeline_spark.streaming import (
-    bucket_batch,
     start_extract_stream,
     stream_dedup,
     stream_window_counts,
@@ -82,74 +79,6 @@ def test_max_files_per_trigger_bounds_batches(spark, pages_src, tmp_path):
     assert spark.read.parquet(out).count() == n_in
 
 
-def test_bucket_batch_exact_slice_and_remainder(spark, tmp_path):
-    """25 items for key 'a', 7 for 'b', max_batch_size=10 → exactly two
-    'size' batches for a (10+10, remainder 5 held in state), none for b —
-    STDBucket.get_batch semantics (bucket.py:72-76)."""
-    src = str(tmp_path / "src")
-    rows = [("a", f"a{i:03d}") for i in range(25)] + [
-        ("b", f"b{i:03d}") for i in range(7)
-    ]
-    spark.createDataFrame(rows, "key string, item string").coalesce(
-        1
-    ).write.parquet(src)
-    stream = spark.readStream.schema("key string, item string").parquet(src)
-    batches = bucket_batch(stream, max_batch_size=10, wait_timeout_ms=None)
-    q = (
-        batches.writeStream.format("memory")
-        .queryName("bucket_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _wait(q)
-    got = {
-        (r["key"], r["batch_seq"]): (r["items"], r["reason"])
-        for r in spark.table("bucket_out").collect()
-    }
-    assert set(got) == {("a", 0), ("a", 1)}
-    items0, reason0 = got[("a", 0)]
-    items1, reason1 = got[("a", 1)]
-    assert reason0 == reason1 == "size"
-    # exact slices in arrival order, remainder (a020..a024) not emitted
-    assert items0 == [f"a{i:03d}" for i in range(10)]
-    assert items1 == [f"a{i:03d}" for i in range(10, 20)]
-
-
-def test_bucket_batch_timeout_flushes_remainder(spark, tmp_path):
-    """The time half of the hybrid trigger (B7): 7 items < max_batch_size
-    sit in state until the processing-time timeout fires (via Spark's
-    no-data micro-batches) and flush with reason='timeout'."""
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [("a", f"a{i}") for i in range(7)], "key string, item string"
-    ).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema("key string, item string").parquet(src)
-    q = (
-        bucket_batch(stream, max_batch_size=10, wait_timeout_ms=3000)
-        .writeStream.format("memory")
-        .queryName("bucket_timeout_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        rows = []
-        while time.time() < deadline and not rows:
-            assert q.exception() is None, q.exception()
-            rows = spark.table("bucket_timeout_out").collect()
-            time.sleep(1)
-    finally:
-        q.stop()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["reason"] == "timeout"
-    assert r["items"] == [f"a{i}" for i in range(7)]
-
-
 def test_stream_kill_resume_exactly_once(spark, pages_src, tmp_path):
     """Durability (the reference's dead RabbitMQ path, done right): stop
     the stream mid-backlog, restart from the same checkpoint — the final
@@ -205,14 +134,9 @@ def test_stream_dedup_drops_recrawls(spark, tmp_path):
     assert got.select("url").distinct().count() == 20
 
 
-def test_stream_dedup_batch_mode(spark, pages_df):
-    doubled = pages_df.unionByName(pages_df)
-    assert stream_dedup(doubled).count() == pages_df.count()
-
-
 def test_window_counts_batch_semantics(spark, pages_df):
     """Watermarked windowed agg runs in batch mode and totals match."""
-    wc = stream_window_counts(pages_df, window="30 days", watermark="1 hour")
+    wc = stream_window_counts(pages_df)
     total = wc.agg(F.sum("n_docs")).first()[0]
     assert total == pages_df.count()
     one = wc.first()
@@ -220,9 +144,7 @@ def test_window_counts_batch_semantics(spark, pages_df):
 
 
 def test_stream_curate_gates_and_dedups(spark, tmp_path):
-    """Streaming curation: quality gate + watermark dedup in one query;
-    the same definition in batch mode keeps the earliest row per
-    fingerprint after identical gating."""
+    """Streaming curation: quality gate + watermark dedup in one query."""
     import datetime
 
     from ocr_pipeline_spark.streaming import stream_curate
@@ -260,11 +182,6 @@ def test_stream_curate_gates_and_dedups(spark, tmp_path):
     assert set(
         r["doc_id"] for r in got.collect()
     ) <= {1, 2, 4}
-
-    # batch mode: deterministic earliest-ts winner per fingerprint
-    batch = stream_curate(spark.createDataFrame(rows, schema))
-    ids = sorted(r["doc_id"] for r in batch.collect())
-    assert ids == [1, 4]
 
 
 def test_start_curate_stream_end_to_end(spark, tmp_path):
